@@ -36,17 +36,29 @@ object Bench {
     dir.toString
   }
 
+  /** True when scratch whose dir and immediate children were last
+    * modified at `mtimes` has sat untouched for longer than `maxAgeMs`
+    * at `now`. A long replay writes only inside its own subdirs (table,
+    * checkpoint, local dir), which moves the CHILDREN's mtimes while the
+    * top-level dir's stays at the replay's start — judging by the
+    * top-level mtime alone could sweep a live run. */
+  private[graft] def isStale(mtimes: Seq[Long], now: Long,
+      maxAgeMs: Long): Boolean =
+    mtimes.nonEmpty && mtimes.max < now - maxAgeMs
+
   /** Killed bench runs leave multi-GB scratch under /dev/shm; a
     * graft-bench-* dir untouched for 30+ minutes cannot belong to a live
-    * run (live runs create per-replay subdirs every few minutes), so
-    * sweep it before this run competes with the corpse for tmpfs. */
+    * run, so sweep it before this run competes with the corpse for
+    * tmpfs. */
   private def sweepStaleScratch(): Unit = {
     val base = new java.io.File("/dev/shm")
     if (!base.isDirectory) return
-    val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-    Option(base.listFiles()).getOrElse(Array.empty)
+    def ls(d: java.io.File) = Option(d.listFiles()).getOrElse(Array.empty)
+    val now = System.currentTimeMillis()
+    ls(base)
       .filter(f => f.isDirectory && f.getName.startsWith("graft-bench") &&
-        f.lastModified < cutoff)
+        isStale((f +: ls(f).toSeq).map(_.lastModified), now,
+          30L * 60 * 1000))
       .foreach { f =>
         System.err.println(s"[bench] sweeping stale scratch ${f.getPath}")
         org.apache.commons.io.FileUtils.deleteQuietly(f): Unit
@@ -258,6 +270,9 @@ object Bench {
         val calSpread =
           if (calSeries.isEmpty) 0.0
           else (calSeries.max - calSeries.min) / median(calSeries.toSeq)
+        // the series the spread and drift describe — the skew section
+        // below calibrates again and appends to calSeries
+        val calRuns = calSeries.toSeq
         val phaseDrift = u1.size < m1.size || u4.size < m4.size ||
           acc1.isEmpty || acc4.isEmpty || calSpread > driftTol
         // efficiency is a RATIO of two noisy measurements (±15-20% on
@@ -301,7 +316,7 @@ object Bench {
           val sEff = median(sRatios)
           f""","cdc_skewed":{"events":$skewEvents,"hot_fraction":$skewHot%.2f,"reps":$skewReps,"eps_n_median":${median(s1.toSeq.map(_.eps))}%.1f,"eps_4n_median":${median(s4.toSeq.map(_.eps))}%.1f,"scaling_efficiency":$sEff%.3f,"runs_n":[${s1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${s4.map(v => f"${v.eps}%.1f").mkString(",")}],"cal_n":[${s1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${s4.map(v => f"${v.cal}%.1f").mkString(",")}]}"""
         } else ""
-        f""","cdc":{"events":$cdcEvents,"batches":$batches,"cores_n":$n1,"cores_4n":$n4,"eps_n_median":${median(r1)}%.1f,"eps_4n_median":${median(r4)}%.1f,"scaling_efficiency":$effHl%.3f,"scaling_efficiency_paired":$effPaired%.3f,"scaling_efficiency_unpaired":$effUnpaired%.3f,"eps_n_best":${r1.max}%.1f,"eps_4n_best":${r4.max}%.1f,"scaling_efficiency_best_of":$effBest%.3f,"paired_ratios":[${paired.map(v => f"$v%.3f").mkString(",")}],"runs_n":[${m1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${m4.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_n_applied":[${m1.map(v => f"${v.applied}%.1f").mkString(",")}],"runs_4n_applied":[${m4.map(v => f"${v.applied}%.1f").mkString(",")}],"cal_events":$calEvents,"cal_runs":[${calSeries.map(v => f"$v%.1f").mkString(",")}],"cal_n":[${m1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${m4.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_spread":$calSpread%.3f,"cal_drift_tol":$driftTol%.2f,"phase_drift":$phaseDrift,"redo_runs":$redos,"used_n":${u1.size},"used_4n":${u4.size},"cores_peak":$peakCores,"eps_peak":$peakFinal%.1f,"eps_peak_applied":$peakApplied%.1f}$skewJson"""
+        f""","cdc":{"events":$cdcEvents,"batches":$batches,"cores_n":$n1,"cores_4n":$n4,"eps_n_median":${median(r1)}%.1f,"eps_4n_median":${median(r4)}%.1f,"scaling_efficiency":$effHl%.3f,"scaling_efficiency_paired":$effPaired%.3f,"scaling_efficiency_unpaired":$effUnpaired%.3f,"eps_n_best":${r1.max}%.1f,"eps_4n_best":${r4.max}%.1f,"scaling_efficiency_best_of":$effBest%.3f,"paired_ratios":[${paired.map(v => f"$v%.3f").mkString(",")}],"runs_n":[${m1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${m4.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_n_applied":[${m1.map(v => f"${v.applied}%.1f").mkString(",")}],"runs_4n_applied":[${m4.map(v => f"${v.applied}%.1f").mkString(",")}],"cal_events":$calEvents,"cal_runs":[${calRuns.map(v => f"$v%.1f").mkString(",")}],"cal_n":[${m1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${m4.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_spread":$calSpread%.3f,"cal_drift_tol":$driftTol%.2f,"phase_drift":$phaseDrift,"redo_runs":$redos,"used_n":${u1.size},"used_4n":${u4.size},"cores_peak":$peakCores,"eps_peak":$peakFinal%.1f,"eps_peak_applied":$peakApplied%.1f}$skewJson"""
       } finally org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(work))
     } else ""

@@ -34,6 +34,22 @@ object Verify {
     } else err
   }
 
+  /** Rename a successful attempt's output `tmpDir` into the graded path
+    * `dstDir`, replacing any earlier result. When the rename fails, both
+    * directories are removed: the query costs its own row — never the
+    * rest of the loop, the same isolation contract [[runIsolated]]
+    * provides for hangs — and no attempt dir is left behind. Returns
+    * whether the result landed. */
+  private[graft] def promote(tmpDir: java.io.File,
+      dstDir: java.io.File): Boolean = {
+    org.apache.commons.io.FileUtils.deleteQuietly(dstDir): Unit
+    tmpDir.renameTo(dstDir) || {
+      org.apache.commons.io.FileUtils.deleteQuietly(tmpDir)
+      org.apache.commons.io.FileUtils.deleteQuietly(dstDir)
+      false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -63,14 +79,9 @@ object Verify {
           .parquet(tmpDir.getPath)
       } match {
         case None =>
-          org.apache.commons.io.FileUtils.deleteQuietly(dstDir): Unit
-          if (!tmpDir.renameTo(dstDir)) {
-            // cost THIS query its row, never the rest of the loop — the
-            // same isolation contract runIsolated provides for hangs
+          if (!promote(tmpDir, dstDir))
             System.err.println(
               s"[verify] $name failed: rename $tmpDir -> $dstDir failed")
-            org.apache.commons.io.FileUtils.deleteQuietly(dstDir): Unit
-          }
         case Some(msg) =>
           System.err.println(s"[verify] $name failed: $msg")
           // stale results must not survive under the graded name — a

@@ -117,18 +117,20 @@ object AggView {
         properties = Map(SumsProp -> fp),
         columnDocs = Map(
           "n_turns" -> "live turns in the conversation (AggView-maintained)"))
-    } else dst.snapshot.properties.get(SumsProp) match {
+    } else {
       // redefining an expression under an unchanged column name would
       // otherwise add deltas of the NEW expression to stored sums of the
       // OLD one — a silent mixture equal to neither definition. The
       // defining expressions are stamped on create and must match on
       // every refresh; changing a definition means a new view table (or
-      // dropping the old one).
-      case Some(have) => require(have == fp,
-        s"view ${dst.dir} was created with sums [$have], this refresh " +
+      // dropping the old one). A table without the stamp was not created
+      // by this refresh path and is refused the same way.
+      val have = dst.snapshot.properties.get(SumsProp)
+      require(have.contains(fp),
+        s"view ${dst.dir} was created with sums " +
+          s"[${have.getOrElse("<no stamp>")}], this refresh " +
           s"passes [$fp] - incremental maintenance over a changed " +
           "definition silently corrupts; recreate the view to redefine")
-      case None => dst.setProperty(SumsProp, fp): Unit // legacy: stamp now
     }
     val lastV = dst.snapshot.txns.get(app).map(_.batch)
     lastV match {

@@ -113,6 +113,7 @@ object CdcPipeline {
   private def auditedEpoch(table: LakeTable, batch: DataFrame, epochId: Long,
       cfg: PipelineConfig,
       gate: (LakeTable, String, Long) => Boolean): MergeResult = {
+    val t0 = System.nanoTime()
     val wapId = f"wap-$epochId%012d"
     val res = MergeApply.merge(table, batch, epochId,
       cfg.merge.copy(wapId = Some(wapId)))
@@ -127,24 +128,7 @@ object CdcPipeline {
       res.copy(applied = true, version = c.version, staged = false)
     } else {
       table.abortStaged(wapId)
-      // quarantine: the epoch id must still land (contiguous watermark;
-      // the rejection is auditable — rowsInBatch > 0, rowsApplied = 0)
-      val snap = table.snapshot
-      val entry = graft.lake.LineageEntry(epochId, snap.version + 1,
-        res.rowsInBatch, 0L, Nil, 0, snap.files.size, -1L, "", 0L)
-      val (eid, txn) = cfg.merge.txnApp match {
-        case Some(app) => (None, Some(app -> epochId))
-        case None => (Some(epochId), None)
-      }
-      try {
-        val c = table.commit(snap, Nil, Set.empty, eid, Some(entry),
-          txn = txn)
-        res.copy(applied = false, version = c.version, staged = false)
-      } catch {
-        case _: graft.lake.EpochSupersededException =>
-          res.copy(applied = false, version = table.snapshot.version,
-            staged = false)
-      }
+      MergeApply.quarantine(table, epochId, cfg.merge, t0, res)
     }
   }
 

@@ -52,7 +52,12 @@ final case class MergeConfig(
       *    whole touched bucket every epoch — O(table) write
       *    amplification when batches scatter across buckets.
       *  - "cow" (copy-on-write): each epoch fully rewrites touched
-      *    buckets; reads are zero-cost (one version per key on disk). */
+      *    buckets; reads are zero-cost (one version per key on disk).
+      *    ONE shuffle of current∪batch to (__bucket, __salt), a lag-window
+      *    LWW under that same partitioning, files written straight from
+      *    the shuffled partitions — valid because a key group
+      *    (conv_id, turn_idx) never spans buckets (bucket is a function
+      *    of conv_id alone). */
     writeMode: String = "mor",
     /** MoR compaction trigger: max files per bucket before that bucket is
       * folded back to a single base file. */
@@ -62,22 +67,6 @@ final case class MergeConfig(
       * bounded fold, so a 1000-executor deployment compacting thousands
       * of buckets wants this well above the local default. */
     compactParallelism: Int = 8,
-    /** LWW dedup strategy — all three are semantically identical
-      * (MergeSpec asserts it); they differ in shuffle shape:
-      *  - "bucket" (default, the scale path): ONE shuffle of
-      *    current∪batch to (__bucket, __salt), sort within partition,
-      *    lag-window dedup under that same partitioning, files written
-      *    directly from the shuffled partitions. Valid because a key
-      *    group (conv_id, turn_idx) can never span buckets — bucket is a
-      *    function of conv_id alone.
-      *  - "aggregate": max_by hash aggregate keyed on (conv_id,
-      *    turn_idx); map-side partial aggregation collapses
-      *    duplicate-heavy feeds before the shuffle, but the write needs
-      *    a second shuffle back to bucket layout.
-      *  - "window": textbook row_number() over (partition by key order
-      *    by lsn desc) — shuffles by key AND sorts, plus the write
-      *    shuffle. Kept for A/B verification. */
-    dedup: String = "bucket",
     /** Duplicate-INPUT suppression (the reference's checksum-gated
       * re-runs, reference: engine/wprdc_etl/pipeline/connectors.py:73-93,
       * pipeline.py:338-341): when on, each batch's content fingerprint
@@ -133,32 +122,32 @@ final case class MergeConfig(
     wapId: Option[String] = None)
 
 /** The MERGE kernel (SURVEY.md §4 item 1, §7.1 item 4): applies one
-  * micro-batch of change events to a [[LakeTable]] as an idempotent,
-  * copy-on-write upsert keyed on `(conv_id, turn_idx)`.
+  * micro-batch of change events to a [[LakeTable]] as an idempotent
+  * upsert keyed on `(conv_id, turn_idx)`, last-writer-wins by `__lsn`.
   *
   * Replaces the reference's server-side Postgres `datastore_upsert`
   * (reference: engine/wprdc_etl/pipeline/loaders.py:507-533) with a
   * distributed plan of built-in operators:
   *
-  *  1. **LWW dedup** of the batch: keep the max-LSN event per key. Done as
-  *     `max_by(struct(*), __lsn)` under `groupBy(key)` — a hash aggregate
-  *     with map-side partial aggregation, so duplicate-heavy or hot-key
-  *     batches collapse *before* the shuffle (a window sort — the textbook
-  *     formulation — shuffles every row; the aggregate is semantically
-  *     identical and strictly cheaper; both are implemented and tested
-  *     equal).
-  *  2. **Bucket pruning**: only the hash-buckets of `conv_id` present in
-  *     the batch are read back; all other files carry over by reference.
-  *  3. **Cross-batch LWW**: union current bucket contents (which retain
-  *     `__lsn` and `D` tombstones) with the batch and re-apply max_by — so
-  *     out-of-order delivery across batches resolves correctly, and a
-  *     delete cannot be resurrected by a late lower-LSN update.
-  *  4. **Salted write**: per-bucket output sizes are known *before* the
-  *     write (manifest row counts + batch per-bucket counts), so hot
-  *     buckets get extra write parallelism deterministically rather than
-  *     reactively.
-  *  5. **Idempotent commit**: the epoch guard makes redelivered epochs
-  *     no-ops (exactly-once on top of at-least-once).
+  *  1. **Merge-on-read (default)**: the batch is shuffled once,
+  *     bucket-aligned (`repartition(nBuckets, conv_id)` IS the bucket
+  *     function), and written as per-bucket delta files — nothing
+  *     existing is read. Readers LWW-resolve a bucket's files; buckets
+  *     past [[MergeConfig.maxDeltaFilesPerBucket]] are folded back to
+  *     base files by per-bucket compaction. Tombstones (`D`) are kept,
+  *     so a late lower-LSN update can never resurrect a delete.
+  *  2. **Copy-on-write**: only the hash-buckets present in the batch are
+  *     read back (all other files carry over by reference); current ∪
+  *     batch goes through ONE shuffle to bucket layout and a lag-window
+  *     LWW ([[dedupLwwBucketed]]), salted for hot buckets whose output
+  *     size — known before the write from manifest + batch counts —
+  *     exceeds [[MergeConfig.maxRowsPerFile]].
+  *  3. **One outcome path**: every epoch — applied, zero-output,
+  *     checksum-skipped, audit-quarantined — and every compaction or
+  *     rebucket records its lineage row and result through [[outcome]],
+  *     which commits (or stages, under WAP) under the epoch guard:
+  *     redelivered epochs are no-ops (exactly-once on top of
+  *     at-least-once).
   */
 object MergeApply {
 
@@ -196,18 +185,10 @@ object MergeApply {
     * (see [[mergeAttempt]]). */
   def applySchemaEvents(table: LakeTable, batch: DataFrame): DataFrame = {
     if (!batch.columns.contains("extras")) return batch
-    val events = batch.filter(col("op") === "S")
-      .select(col("lsn"), col("text")).collect().sortBy(_.getLong(0))
-    events.foreach(r => SchemaRegistry(table, r.getString(1)))
+    val events = schemaEventRows(batch).sortBy(_._1)
+    events.foreach(e => SchemaRegistry(table, e._2))
     if (events.isEmpty) batch else batch.filter(col("op") =!= "S")
   }
-
-  /** The table's event-time column for watermark/late-data stats —
-    * [[Snapshot.eventTimeColumn]], shared with the batch relation's
-    * time pruning. Feeds with no event-time column simply carry no
-    * event-time lineage stats. */
-  private def eventTimeCol(snap: Snapshot): Option[String] =
-    snap.eventTimeColumn
 
   /** Apply the table's opt-in bloom indexing
     * ([[graft.lake.LakeTable.BloomColumnsProp]]) to a FILE-GROUP-REWRITE
@@ -251,23 +232,36 @@ object MergeApply {
     case None => snap.isCommitted(epochId)
   }
 
-  /** Route an epoch id into the commit's global-epoch or app-txn slot. */
-  private def epochArgs(cfg: MergeConfig, epochId: Long)
-      : (Option[Long], Option[(String, Long)]) = cfg.txnApp match {
-    case Some(app) => (None, Some(app -> epochId))
-    case None => (Some(epochId), None)
-  }
+  private def elapsedMs(t0: Long): Long = (System.nanoTime() - t0) / 1000000L
 
-  /** The one commit seam every merge path funnels through: publish the
-    * outcome, or — under [[MergeConfig.wapId]] — park it as a staged WAP
-    * intent. Returns (resulting version, staged?); staged outcomes leave
-    * the table at `snap.version`. */
+  /** What an outcome's lineage row records about its batch beyond the
+    * commit's shape: rows, the buckets touched, the LSN range, the
+    * event-time watermark (+ its column) and late events, and the
+    * per-bucket breakdown. The defaults describe an empty batch. */
+  private final case class BatchStats(rows: Long = 0L,
+      buckets: Seq[Int] = Nil, maxLsn: Long = -1L, minLsn: Long = -1L,
+      maxTs: String = "", late: Long = 0L,
+      partitions: Seq[BucketLineage] = Nil, watermarkCol: String = "")
+
+  private def bucketsOf(files: Seq[DataFileEntry]): Seq[Int] =
+    files.map(_.bucket).distinct.sorted
+
+  /** The one commit seam every outcome funnels through: publish it, or —
+    * under [[MergeConfig.wapId]] — park it as a staged WAP intent.
+    * Maintenance commits (`epochId < 0`: compaction, rebucket) carry no
+    * epoch and are never staged. Returns (resulting version, staged?);
+    * staged outcomes leave the table at `snap.version`. */
   private def stageOrCommit(table: LakeTable, snap: Snapshot,
-      files: Seq[graft.lake.DataFileEntry], replaced: Set[Int],
-      epochId: Long, cfg: MergeConfig,
-      entry: graft.lake.LineageEntry): (Long, Boolean) = {
-    val (eid, txn) = epochArgs(cfg, epochId)
-    cfg.wapId match {
+      files: Seq[DataFileEntry], replaced: Set[Int], epochId: Long,
+      cfg: MergeConfig, entry: LineageEntry,
+      newNBuckets: Option[Int]): (Long, Boolean) = {
+    val (eid, txn) =
+      if (epochId < 0) (None, None)
+      else cfg.txnApp match {
+        case Some(app) => (None, Some(app -> epochId))
+        case None => (Some(epochId), None)
+      }
+    cfg.wapId.filter(_ => epochId >= 0) match {
       case Some(id) =>
         table.stageIntent(graft.lake.StagedIntent(id, snap.version,
           snap.nBuckets, files, replaced.toSeq.sorted, eid,
@@ -275,10 +269,55 @@ object MergeApply {
           System.currentTimeMillis()))
         (snap.version, true)
       case None =>
-        (table.commit(snap, files, replaced, eid, Some(entry),
-          txn = txn).version, false)
+        (table.commit(snap, files, replaced, eid, Some(entry), txn = txn,
+          newNBuckets = newNBuckets).version, false)
     }
   }
+
+  /** The one epoch-outcome path: build the lineage row for `files`
+    * (retiring the `replaced` buckets) on top of `snap`, commit or stage
+    * it, and return the [[MergeResult]]. `applies = false` records a
+    * withheld batch — checksum skip, audit quarantine: its rows count in
+    * `rowsInBatch` but none are applied, and the result reports
+    * `applied = false` although the epoch id lands. */
+  private def outcome(table: LakeTable, snap: Snapshot, epochId: Long,
+      cfg: MergeConfig, t0: Long, files: Seq[DataFileEntry] = Nil,
+      replaced: Set[Int] = Set.empty, stats: BatchStats = BatchStats(),
+      checksum: String = "", rejected: Long = 0L, applies: Boolean = true,
+      newNBuckets: Option[Int] = None): MergeResult = {
+    val applied = if (applies) stats.rows else 0L
+    val entry = LineageEntry(epochId, snap.version + 1, stats.rows, applied,
+      stats.buckets, files.size,
+      snap.files.count(f => !replaced.contains(f.bucket)), stats.maxLsn,
+      stats.maxTs, elapsedMs(t0), lateEvents = stats.late,
+      rejectedEvents = rejected, minLsn = stats.minLsn,
+      partitions = stats.partitions, inputChecksum = checksum,
+      watermarkCol = stats.watermarkCol)
+    val (v, staged) = stageOrCommit(table, snap, files, replaced, epochId,
+      cfg, entry, newNBuckets)
+    MergeResult(applies && !staged, v, stats.rows, applied, stats.buckets,
+      elapsedMs(t0), staged = staged, rejectedEvents = rejected)
+  }
+
+  /** The result of an epoch that changed nothing: already committed,
+    * superseded by a concurrent writer, or an adopted WAP intent. */
+  private def noop(version: Long, t0: Long): MergeResult =
+    MergeResult(applied = false, version, 0L, 0L, Nil, elapsedMs(t0))
+
+  /** Audit-gate quarantine ([[PipelineConfig.auditGate]]): the staged
+    * intent was aborted, but the epoch id must still land — the
+    * committed-epoch watermark stays contiguous — as a withheld 0-row
+    * outcome (`rowsInBatch` > 0, `rowsApplied` = 0) that keeps the
+    * audit trail. `t0` is the epoch's start. */
+  private[cdc] def quarantine(table: LakeTable, epochId: Long,
+      cfg: MergeConfig, t0: Long, staged: MergeResult): MergeResult =
+    try outcome(table, table.snapshot, epochId, cfg.copy(wapId = None), t0,
+      stats = BatchStats(staged.rowsInBatch), rejected = staged.rejectedEvents,
+      applies = false)
+    catch {
+      case _: graft.lake.EpochSupersededException =>
+        noop(table.snapshot.version, t0)
+    }
 
   /** Read the schema-event probe: (lsn, payload) of every op="S" row the
     * observed action saw. Collecting registry rows on the driver is
@@ -333,44 +372,67 @@ object MergeApply {
     }
   }
 
-  /** Attach envelope validation ([[MergeConfig.invalidRows]]) to the
-    * batch: an `observe` metric counting invalid events — it rides the
-    * merge's own first action, no extra Spark job — plus a codegen'd
-    * filter dropping them from the plan. Returns the guarded frame and
-    * the observation (`None` when validation is off). */
-  private def validationWrap(dataBatch: DataFrame, userSchema: StructType,
-      cfg: MergeConfig)
-      : (DataFrame, Option[org.apache.spark.sql.Observation]) = {
+  /** Envelope validation ([[MergeConfig.invalidRows]]) of one attempt's
+    * data rows `raw`: [[valid]] carries an `observe` metric counting
+    * invalid events — it rides the attempt's own first action, no extra
+    * Spark job — plus a codegen'd filter dropping them from the plan. */
+  private final class Validation(table: LakeTable, snap: Snapshot,
+      epochId: Long, cfg: MergeConfig, raw: DataFrame) {
     require(Set("fail", "quarantine", "off").contains(cfg.invalidRows),
       s"invalidRows must be fail, quarantine, or off, got " +
         s"'${cfg.invalidRows}'")
-    if (cfg.invalidRows == "off") (dataBatch, None)
-    else {
-      val bad = invalidReasonExpr(dataBatch, userSchema).isNotNull
-      val io = org.apache.spark.sql.Observation()
-      (dataBatch.observe(io, count(when(bad, lit(1))).as("invalid"))
-        .filter(!bad), Some(io))
-    }
+    private val obs =
+      if (cfg.invalidRows == "off") None
+      else Some(org.apache.spark.sql.Observation())
+    private def bad: Column = invalidReasonExpr(raw, snap.userSchema).isNotNull
+    val valid: DataFrame = obs.fold(raw)(o =>
+      raw.observe(o, count(when(bad, lit(1))).as("invalid")).filter(!bad))
+
+    /** Resolve the count AFTER the first action wrote `written` (see
+      * [[resolveInvalid]]). A zero-output action may have run zero tasks,
+      * resolving the observation to an empty map (a local-relation batch
+      * even folds its filters at optimization time) — a poison row must
+      * not vanish into a 0-row commit, so that case re-counts with a
+      * dedicated (tiny) action; the non-empty hot path never does. */
+    def rejected(written: Seq[DataFileEntry], zeroOutput: Boolean): Long =
+      obs.fold(0L) { o =>
+        val n =
+          if (zeroOutput) raw.where(bad).count()
+          else o.get.get("invalid").flatMap(Option(_))
+            .map(_.asInstanceOf[Long]).getOrElse(0L)
+        resolveInvalid(table, raw, snap.userSchema, epochId, cfg, n, written)
+      }
   }
 
-  /** Resolve the validation observation AFTER the merge's first action.
-    * Clean batch (or validation off): returns 0. Fail mode: reclaims
-    * `written` (uncommitted output files) and throws
-    * [[PoisonEventException]] — nothing was committed. Quarantine mode:
-    * writes the invalid events with their `reject_reason` to
-    * `<table>/_rejects/<app>/epoch=<id>/` — an OVERWRITE per epoch, so a
-    * replayed epoch re-quarantines to the identical dead-letter set —
-    * and returns the count for the commit's lineage row. */
+  /** Delete an aborted attempt's uncommitted output (its `commit-*` dir). */
+  private def discard(table: LakeTable, written: Seq[DataFileEntry]): Unit =
+    written.headOption.foreach { f =>
+      val dir = new Path(f.path).getParent.getParent
+      dir.getFileSystem(table.spark.sessionState.newHadoopConf())
+        .delete(dir, true)
+    }
+
+  /** (lsn, payload) of every schema-registry row (op = "S") in `batch`, by
+    * a dedicated action — bounded by design: schema changes are a handful
+    * of events in 10^10. */
+  private def schemaEventRows(batch: DataFrame): Seq[(Long, String)] =
+    batch.filter(col("op") === "S").select(col("lsn"), col("text"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  /** Act on `n` invalid events AFTER the merge's first action. Clean
+    * batch: returns 0. Fail mode: reclaims `written` (uncommitted output
+    * files) and throws [[PoisonEventException]] — nothing was committed.
+    * Quarantine mode: writes the invalid events with their
+    * `reject_reason` to `<table>/_rejects/<app>/epoch=<id>/` — an
+    * OVERWRITE per epoch, so a replayed epoch re-quarantines to the
+    * identical dead-letter set — and returns the count for the commit's
+    * lineage row. */
   private def resolveInvalid(table: LakeTable, rawBatch: DataFrame,
       userSchema: StructType, epochId: Long, cfg: MergeConfig,
-      n: Long, written: Seq[graft.lake.DataFileEntry]): Long = {
+      n: Long, written: Seq[DataFileEntry]): Long = {
     if (n == 0L) return 0L
     if (cfg.invalidRows != "quarantine") {
-      if (written.nonEmpty) {
-        val dir = new Path(written.head.path).getParent.getParent
-        dir.getFileSystem(table.spark.sessionState.newHadoopConf())
-          .delete(dir, true)
-      }
+      discard(table, written)
       throw new PoisonEventException(n, epochId)
     }
     // writer identities can be arbitrary strings (the sink derives them
@@ -421,21 +483,6 @@ object MergeApply {
     snap.lineage.reverseIterator.find(_.inputChecksum.nonEmpty)
       .map(_.inputChecksum)
 
-  /** LWW by key shuffle: one row per key, the max-__lsn one ("aggregate"
-    * and "window" strategies; see [[MergeConfig.dedup]]). */
-  def dedupLww(df: DataFrame, cfg: MergeConfig): DataFrame = {
-    if (cfg.dedup == "window") {
-      val w = Window.partitionBy(KEY.map(col): _*).orderBy(col("__lsn").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    } else {
-      val payload = df.columns.toSeq
-      df.groupBy(KEY.map(col): _*)
-        .agg(max_by(struct(payload.map(col): _*), col("__lsn")).as("__r"))
-        .select(col("__r.*"))
-    }
-  }
-
   /** LWW under bucket partitioning — the single-shuffle scale path. Input
     * must carry `__bucket`; each output partition is sorted, so the
     * subsequent `partitionBy("__bucket")` write needs no further
@@ -482,23 +529,29 @@ object MergeApply {
     * as [[graft.lake.EpochSupersededException]]; the loser's unpublished
     * files are vacuumOrphans' to reclaim). */
   def merge(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig = MergeConfig()): MergeResult = {
-    val t0 = System.nanoTime()
-    val snap0 = table.snapshot
-    if (alreadyCommitted(snap0, epochId, cfg)) {
-      return MergeResult(applied = false, snap0.version, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
+      cfg: MergeConfig = MergeConfig()): MergeResult =
+    runEpoch(table, batch, epochId, cfg) { (t0, fp) =>
+      mergeGuarded(table, batch, epochId, cfg, t0, fp)
     }
+
+  /** The epoch driver [[merge]] and [[appendOrReplace]] share: the
+    * exactly-once guard, WAP-intent adoption, the input-checksum gate and
+    * the conflict-retry loop around `attempt(t0, checksum)`. */
+  private def runEpoch(table: LakeTable, batch: DataFrame, epochId: Long,
+      cfg: MergeConfig)(attempt: (Long, String) => MergeResult)
+      : MergeResult = {
+    val t0 = System.nanoTime()
+    var snap = table.snapshot
+    if (alreadyCommitted(snap, epochId, cfg)) return noop(snap.version, t0)
     // WAP crash-retry: a pending intent under this wapId IS this merge's
     // outcome (stageIntent is create-if-absent — the physical work
     // already ran). Adopt it instead of re-writing files the intent
     // doesn't reference.
     cfg.wapId.filter(table.stagedIds.contains).foreach { id =>
       val it = table.stagedIntent(id)
-      return MergeResult(applied = false, snap0.version,
-        it.lineage.map(_.rowsInBatch).getOrElse(0L),
-        0L, it.files.map(_.bucket).distinct.sorted,
-        (System.nanoTime() - t0) / 1000000L, staged = true)
+      return noop(snap.version, t0).copy(
+        rowsInBatch = it.lineage.map(_.rowsInBatch).getOrElse(0L),
+        bucketsTouched = bucketsOf(it.files), staged = true)
     }
     // duplicate-INPUT suppression: identical batch content (even under a
     // new epoch id / feed file name) commits a 0-row skip entry — the
@@ -507,41 +560,35 @@ object MergeApply {
     // connectors.py:73-93, pipeline.py:338-341)
     val (fpRows, fp) =
       if (cfg.inputChecksumGate) batchFingerprint(batch) else (0L, "")
-    // a copy-on-write attempt that raced another writer into the same
-    // buckets must RECOMPUTE, not rebase — the bucket contents it merged
-    // are stale. Recompute is the whole-operation retry of the Iceberg
-    // commit model; each attempt reads a fresh snapshot. Two COW writers
-    // in steady contention can invalidate each other indefinitely (a
-    // recompute takes about as long as the peer's commit interval), so
-    // the retry backs off with jitter to desynchronize them. (MoR appends
-    // never take this path — they rebase inside commit.) The checksum-gate
-    // skip commit sits INSIDE the loop so a conflict on the 0-row commit
-    // retries like every other path instead of escaping to the caller —
-    // and each attempt re-reads the snapshot, so a racer's checksum or
-    // epoch commit is honored.
+    // an attempt that raced another writer into the same buckets (a
+    // copy-on-write rewrite, a replace), or lost a schema change, must
+    // RECOMPUTE, not rebase — the contents it merged are stale. Recompute
+    // is the whole-operation retry of the Iceberg commit model; each
+    // attempt reads a fresh snapshot. Two COW writers in steady contention
+    // can invalidate each other indefinitely (a recompute takes about as
+    // long as the peer's commit interval), so the retry backs off with
+    // jitter to desynchronize them. (MoR appends never take this path —
+    // they rebase inside commit.) The checksum-gate skip commit sits
+    // INSIDE the loop so a conflict on the 0-row commit retries like every
+    // other path instead of escaping to the caller; a retry (and the
+    // gate, after its fingerprint action) re-reads the snapshot, so a
+    // racer's checksum or epoch commit is honored. A failed attempt's
+    // written files are unpublished orphans — vacuumOrphans' job.
     var conflictRetries = 0
     while (true) {
       try {
-        if (fp.nonEmpty) {
-          val snap = table.snapshot
+        if (fp.nonEmpty || conflictRetries > 0) {
+          snap = table.snapshot
           if (alreadyCommitted(snap, epochId, cfg))
-            return MergeResult(applied = false, snap.version, 0L, 0L, Nil,
-              (System.nanoTime() - t0) / 1000000L)
-          if (lastChecksum(snap).contains(fp)) {
-            val entry = LineageEntry(epochId, snap.version + 1, fpRows, 0L,
-              Nil, 0, snap.files.size, -1L, "",
-              (System.nanoTime() - t0) / 1000000L, inputChecksum = fp)
-            val (v, staged) = stageOrCommit(table, snap, Nil, Set.empty,
-              epochId, cfg, entry)
-            return MergeResult(applied = false, v, fpRows, 0L, Nil,
-              (System.nanoTime() - t0) / 1000000L, staged = staged)
-          }
+            return noop(snap.version, t0)
         }
-        return mergeGuarded(table, batch, epochId, cfg, t0, fp)
+        if (fp.nonEmpty && lastChecksum(snap).contains(fp))
+          return outcome(table, snap, epochId, cfg, t0,
+            stats = BatchStats(fpRows), checksum = fp, applies = false)
+        return attempt(t0, fp)
       } catch {
         case _: graft.lake.EpochSupersededException =>
-          return MergeResult(applied = false, table.snapshot.version, 0L, 0L,
-            Nil, (System.nanoTime() - t0) / 1000000L)
+          return noop(table.snapshot.version, t0)
         case e: graft.lake.CommitConflictException =>
           conflictRetries += 1
           if (conflictRetries > 8) throw e
@@ -553,7 +600,7 @@ object MergeApply {
   }
 
   private def mergeGuarded(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, checksum: String = ""): MergeResult = {
+      cfg: MergeConfig, t0: Long, checksum: String): MergeResult = {
     val hasExtras = batch.columns.contains("extras")
     val attempt =
       try mergeAttempt(table, batch, epochId, cfg, t0, probe = hasExtras,
@@ -571,9 +618,7 @@ object MergeApply {
           // concurrency exceptions are EXCLUDED: they mean the attempt
           // lost a commit race, not that the probe failed — they must
           // reach merge()'s retry loop, not trigger a duplicate attempt.
-          val events = batch.filter(col("op") === "S")
-            .select(col("lsn"), col("text")).collect()
-            .map(r => (r.getLong(0), r.getString(1))).toSeq
+          val events = schemaEventRows(batch)
           if (events.isEmpty) throw e
           Left(events)
       }
@@ -592,6 +637,58 @@ object MergeApply {
     }
   }
 
+  /** An attempt either surfaces schema-registry events — to apply, then
+    * redo the attempt under the evolved schema — or finishes. */
+  private type AttemptResult = Either[Seq[(Long, String)], MergeResult]
+
+  /** One merge attempt's inputs, shared by the copy-on-write and
+    * merge-on-read bodies: `batch` is the raw batch, `probe` observes its
+    * schema-registry rows on the first action (see [[mergeAttempt]]), and
+    * `validation` guards its data rows. */
+  private final class Attempt(val table: LakeTable, val snap: Snapshot,
+      val epochId: Long, val cfg: MergeConfig, val t0: Long,
+      val checksum: String, batch: DataFrame,
+      probe: Option[org.apache.spark.sql.Observation],
+      val validation: Validation) {
+    private val timing = sys.env.contains("GRAFT_MERGE_TIMING")
+    private var tPhase = System.nanoTime()
+    def lap(name: String): Unit = if (timing) {
+      System.err.println(f"[merge-timing] epoch=$epochId $name ${(System.nanoTime() - tPhase) / 1e9}%.2f s")
+      tPhase = System.nanoTime()
+    }
+
+    /** Settle what the attempt's first action observed, before anything
+      * commits. Schema-registry rows end the attempt (Left), discarding
+      * its uncommitted output `written`. So does a zero-output action —
+      * a truly empty micro-batch (streaming restarts trigger those for
+      * metadata-only offset changes) OR a batch whose rows the
+      * S/validation filters all consumed: it may have run zero tasks,
+      * resolving both observations to empty maps, so schema events and
+      * poison rows are re-checked eagerly before the epoch commits its
+      * 0-row entry. A widen event arriving in the same batch as the first
+      * value needing it is EXACTLY this shape (the value is invalid
+      * pre-widen, so the filter empties the batch). The epoch must still
+      * land — the committed-epoch watermark stays CONTIGUOUS (a skipped
+      * epoch id would hold it back forever and defeat the bounded
+      * recent-set guard). Otherwise returns the rejected-event count
+      * (Right): fail mode reclaims `written` and throws, quarantine mode
+      * dead-letters the invalid events and the valid remainder applies. */
+    def settle(written: Seq[DataFileEntry], zeroOutput: Boolean)
+        : Either[AttemptResult, Long] = {
+      val sev = probeEvents(probe)
+      if (sev.nonEmpty) {
+        discard(table, written)
+        Left(Left(sev))
+      } else if (zeroOutput) {
+        val sevE = if (probe.isEmpty) Nil else schemaEventRows(batch)
+        if (sevE.nonEmpty) Left(Left(sevE)) // nothing written: no cleanup
+        else Left(Right(outcome(table, snap, epochId, cfg, t0,
+          checksum = checksum,
+          rejected = validation.rejected(Nil, zeroOutput = true))))
+      } else Right(validation.rejected(written, zeroOutput = false))
+    }
+  }
+
   /** One merge attempt. When `probe` is set the batch MAY contain
     * schema-registry rows (op = "S"): rather than paying a dedicated
     * detection action up front (one extra Spark job per v2 batch, schema
@@ -602,10 +699,10 @@ object MergeApply {
     * and retry. Schema events are a handful in 10^10, so the common v2
     * path pays zero extra actions and the rare path pays one redo. */
   private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String = "")
-      : Either[Seq[(Long, String)], MergeResult] = {
+      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String)
+      : AttemptResult = {
     val hasExtras = batch.columns.contains("extras")
-    val (dataBatch0, probeObs) =
+    val (dataBatch, probeObs) =
       if (!hasExtras) (batch, None)
       else if (probe) {
         val obs = org.apache.spark.sql.Observation()
@@ -614,178 +711,105 @@ object MergeApply {
         (observed.filter(col("op") =!= "S"), Some(obs))
       } else (batch.filter(col("op") =!= "S"), None)
     val snap = table.snapshot
-    val spark = table.spark
-    val nB = snap.nBuckets
-
-    // envelope validation rides the first action (observe + filter — no
-    // extra job); resolved by invalidAfterAction once that action ran
-    val (dataBatch, invalidObs) =
-      validationWrap(dataBatch0, snap.userSchema, cfg)
-    def invalidAfterAction(written: Seq[graft.lake.DataFileEntry]): Long =
-      resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-        invalidObs.flatMap(_.get.get("invalid")).flatMap(Option(_))
-          .map(_.asInstanceOf[Long]).getOrElse(0L), written)
-    // ZERO-OUTPUT paths only: when the validation/S filters leave nothing
-    // to write, the action may run zero tasks and BOTH observations
-    // resolve to empty maps (a local-relation batch even folds its
-    // filters at optimization time) — an S event or a poison row must
-    // not vanish into a 0-row commit. These eager twins re-check with
-    // dedicated (tiny) actions; the non-empty hot path never calls them.
-    def eagerSEvents(): Seq[(Long, String)] =
-      if (probeObs.isEmpty) Nil
-      else batch.filter(col("op") === "S").select(col("lsn"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    def invalidEager(): Long =
-      if (invalidObs.isEmpty) 0L
-      else resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-        dataBatch0.where(
-          invalidReasonExpr(dataBatch0, snap.userSchema).isNotNull).count(),
-        Nil)
-
-    val timing = sys.env.contains("GRAFT_MERGE_TIMING")
-    var tPhase = System.nanoTime()
-    def lap(name: String): Unit = if (timing) {
-      System.err.println(f"[merge-timing] epoch=$epochId $name ${(System.nanoTime() - tPhase) / 1e9}%.2f s")
-      tPhase = System.nanoTime()
-    }
-
-    val useBucket = cfg.dedup == "bucket"
-    val batchNorm = normalize(dataBatch, snap.userSchema)
-      .withColumn("__bucket", LakeTable.bucketExpr(nB))
-
-    if (cfg.writeMode == "mor")
-      return mergeMor(table, batchNorm, epochId, cfg, snap, t0, lap, probeObs,
-        checksum, invalidAfterAction, () => eagerSEvents(), () => invalidEager())
-
-    // bucket strategy: no pre-dedup of the batch — intra-batch duplicates
-    // collapse in the single bucket-level pass below (stats then count
-    // delivered events, which is what lineage should record anyway).
-    // Also no persist: the batch is consumed exactly twice (stats + the
-    // merge shuffle) and a second columnar parquet scan is cheaper than
-    // materializing a row cache (measured: caching 2M-row batches cost
-    // seconds of GC-driven driver stall per epoch).
-    val deduped =
-      if (useBucket) batchNorm
-      else dedupLww(batchNorm, cfg).persist()
-    try {
-      // one job: per-bucket batch stats (buckets touched + sizes + lineage)
-      val tsCol = eventTimeCol(snap)
-      val prevWm = snap.lineage.reverseIterator
-        .find(e => e.epochId >= 0 && e.watermarkTs.nonEmpty).map(_.watermarkTs)
-      val lateCol = (for { c <- tsCol; w <- prevWm } yield
-        count(when(col(c) < lit(w).cast(TimestampType), 1)))
-        .getOrElse(lit(0L)).as("late")
-      val maxTsCol = tsCol.map(c => date_format(max(col(c)), TsFmt))
-        .getOrElse(max(lit(null).cast(TimestampType)).cast(StringType))
-        .as("maxTs")
-      val stats = deduped.groupBy(col("__bucket"))
-        .agg(count(lit(1)).as("n"), max(col("__lsn")).as("maxLsn"),
-          maxTsCol, lateCol,
-          min(col("__lsn")).as("minLsn"))
-        .collect()
-      lap("dedup+stats")
-      // probe rides the stats action: in COW the abort costs nothing —
-      // no files have been written yet
-      val sev = probeEvents(probeObs)
-      if (sev.nonEmpty) return Left(sev)
-      if (stats.isEmpty) {
-        // zero stats groups ⇒ the action may have run zero tasks and the
-        // observations resolved empty — re-check schema events and poison
-        // rows eagerly, exactly like the MoR zero-output branch
-        val sevE = eagerSEvents()
-        if (sevE.nonEmpty) return Left(sevE)
-        val rejected = invalidEager()
-        val entry = LineageEntry(epochId, snap.version + 1, 0L, 0L, Nil, 0,
-          snap.files.size, -1L, "", (System.nanoTime() - t0) / 1000000L,
-          inputChecksum = checksum, rejectedEvents = rejected)
-        val (v, staged) = stageOrCommit(table, snap, Nil, Set.empty,
-          epochId, cfg, entry)
-        return Right(MergeResult(applied = !staged, v, 0L, 0L,
-          Nil, (System.nanoTime() - t0) / 1000000L, staged = staged,
-          rejectedEvents = rejected))
-      }
-      // envelope validation resolved on the same stats action; COW has
-      // written nothing yet, so fail mode has nothing to reclaim
-      val rejected = invalidAfterAction(Nil)
-      val buckets = stats.map(_.getInt(0)).toSet
-      val batchRows = stats.map(_.getLong(1)).sum
-      val maxLsn = stats.map(_.getLong(2)).max
-      val tsVals = stats.flatMap(r => Option(r.get(3))).map(_.toString)
-      val maxTs = if (tsVals.isEmpty) "" else tsVals.max
-      val late = stats.map(r => if (r.isNullAt(4)) 0L else r.getLong(4)).sum
-      val minLsn = stats.map(_.getLong(5)).min
-
-      val currentPerBucket: Map[Int, Long] = snap.files
-        .filter(f => buckets.contains(f.bucket))
-        .groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum }
-      val batchPerBucket: Map[Int, Long] =
-        stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val worstBucket = buckets.map(b =>
-        currentPerBucket.getOrElse(b, 0L) + batchPerBucket(b)).max
-      val salt = math.max(1L,
-        (worstBucket + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
-
-      val current = table.readRawSnap(snap, Some(buckets))
-        .withColumn("__bucket", LakeTable.bucketExpr(nB))
-      val unioned = current.unionByName(deduped)
-      val merged =
-        if (useBucket) dedupLwwBucketed(unioned, salt, nB)
-        else dedupLww(unioned, cfg)
-
-      val newFiles = writeBuckets(table, merged, salt, snap,
-        prePartitioned = useBucket)
-        .map(_.copy(rewrite = true)) // COW carries old rows into new files
-      lap("cow-write")
-      val entry = LineageEntry(epochId, snap.version + 1,
-        batchRows, batchRows, buckets.toSeq.sorted, newFiles.size,
-        snap.files.count(f => !buckets.contains(f.bucket)), maxLsn, maxTs,
-        (System.nanoTime() - t0) / 1000000L, lateEvents = late,
-        minLsn = minLsn,
-        // from the per-bucket stats pass, NOT the written files: COW
-        // rewrites whole buckets, so file rows include carried-over
-        // rows — the batch's share per bucket is what lineage records
-        partitions = stats.map(r => BucketLineage(r.getInt(0),
-          r.getLong(1), r.getLong(5), r.getLong(2))).toSeq.sortBy(_.bucket),
-        inputChecksum = checksum,
-        watermarkCol = tsCol.getOrElse(""), rejectedEvents = rejected)
-      val (v, staged) = stageOrCommit(table, snap, newFiles, buckets,
-        epochId, cfg, entry)
-      Right(MergeResult(applied = !staged, v, batchRows,
-        batchRows, buckets.toSeq.sorted,
-        (System.nanoTime() - t0) / 1000000L, staged = staged,
-        rejectedEvents = rejected))
-    } finally if (!useBucket) deduped.unpersist()
+    val a = new Attempt(table, snap, epochId, cfg, t0, checksum, batch,
+      probeObs, new Validation(table, snap, epochId, cfg, dataBatch))
+    val batchNorm = normalize(a.validation.valid, snap.userSchema)
+      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
+    if (cfg.writeMode == "mor") mergeMor(a, batchNorm)
+    else mergeCow(a, batchNorm)
   }
 
-  /** Merge-on-read apply: ONE Spark action per epoch — LWW-dedup the
-    * batch under bucket partitioning and write it as per-bucket delta
-    * files; nothing existing is read or rewritten. Batch statistics for
-    * lineage ride on the same action via `observe` (no separate stats
-    * job — per-epoch driver constants were measured to cap local scaling
-    * long before CPU did). Buckets whose file count then exceeds the
-    * compaction threshold are folded back to base files. */
-  private def mergeMor(table: LakeTable, batchNorm: DataFrame, epochId: Long,
-      cfg: MergeConfig, snap: Snapshot, t0: Long, lap: String => Unit,
-      probeObs: Option[org.apache.spark.sql.Observation] = None,
-      checksum: String = "",
-      invalidAfterAction: Seq[DataFileEntry] => Long = _ => 0L,
-      eagerSEvents: () => Seq[(Long, String)] = () => Nil,
-      invalidEager: () => Long = () => 0L)
-      : Either[Seq[(Long, String)], MergeResult] = {
-    // previous commit's event-time high-watermark -> late-data metric
-    // (rides on the same observe; no extra job). Compaction entries
-    // (epochId = -1) carry no watermark and are skipped.
-    val tsCol = eventTimeCol(snap)
+  /** A batch's lineage statistics as aggregate columns: `rows`, the
+    * `minLsn`/`maxLsn` range, `maxTs` (rendered in the session zone, see
+    * [[TsFmt]]) and — when the table has an event-time column and an
+    * earlier epoch left a watermark — `late`, the events below that
+    * watermark. Compaction entries (epochId = -1) carry no watermark and
+    * are skipped. */
+  private def statAggs(snap: Snapshot): Seq[Column] = {
+    val tsCol = snap.eventTimeColumn
     val prevWm = snap.lineage.reverseIterator
       .find(e => e.epochId >= 0 && e.watermarkTs.nonEmpty).map(_.watermarkTs)
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = Seq(count(lit(1)).as("rows"), max(col("__lsn")).as("maxLsn"),
+    Seq(count(lit(1)).as("rows"), max(col("__lsn")).as("maxLsn"),
       min(col("__lsn")).as("minLsn"),
       tsCol.map(c => date_format(max(col(c)), TsFmt))
         .getOrElse(max(lit(null).cast(TimestampType)).cast(StringType))
         .as("maxTs")) ++
       (for { c <- tsCol; w <- prevWm } yield
         count(when(col(c) < lit(w).cast(TimestampType), 1)).as("late"))
+  }
+
+  /** A long [[statAggs]] metric; `dflt` when absent or null. */
+  private def metric(m: collection.Map[String, Any], k: String,
+      dflt: Long): Long =
+    m.get(k).flatMap(Option(_)).fold(dflt)(_.asInstanceOf[Long])
+
+  /** Copy-on-write apply: read back the touched buckets and rewrite them
+    * through one bucket-partitioned lag-window LWW
+    * ([[dedupLwwBucketed]]). No pre-dedup of the batch — intra-batch
+    * duplicates collapse in that single pass (stats then count delivered
+    * events, which is what lineage should record anyway). No persist
+    * either: the batch is consumed exactly twice (stats + the merge
+    * shuffle) and a second columnar parquet scan is cheaper than
+    * materializing a row cache (measured: caching 2M-row batches cost
+    * seconds of GC-driven driver stall per epoch). */
+  private def mergeCow(a: Attempt, batchNorm: DataFrame): AttemptResult = {
+    import a._
+    // one job: per-bucket batch stats (buckets touched + sizes + lineage)
+    val aggs = statAggs(snap)
+    val stats = batchNorm.groupBy(col("__bucket")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map(r => r.getValuesMap[Any](r.schema.fieldNames))
+    lap("dedup+stats")
+    // the probe and validation ride the stats action: COW has written
+    // nothing yet, so an abort costs nothing
+    val rejected = settle(Nil, zeroOutput = stats.isEmpty) match {
+      case Left(done) => return done
+      case Right(n) => n
+    }
+    // from the per-bucket stats pass, NOT the written files: COW rewrites
+    // whole buckets, so file rows include carried-over rows — the batch's
+    // share per bucket is what lineage records
+    val parts = stats.map(m => BucketLineage(m("__bucket").asInstanceOf[Int],
+      metric(m, "rows", 0L), metric(m, "minLsn", -1L),
+      metric(m, "maxLsn", -1L))).sortBy(_.bucket)
+    val buckets = parts.map(_.bucket).toSet
+    val currentPerBucket: Map[Int, Long] = snap.files
+      .filter(f => buckets.contains(f.bucket))
+      .groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum }
+    val worstBucket =
+      parts.map(p => currentPerBucket.getOrElse(p.bucket, 0L) + p.rows).max
+    val salt = math.max(1L,
+      (worstBucket + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
+
+    val current = table.readRawSnap(snap, Some(buckets))
+      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
+    val merged =
+      dedupLwwBucketed(current.unionByName(batchNorm), salt, snap.nBuckets)
+    val newFiles = writeBuckets(table, merged, salt, snap,
+      prePartitioned = true)
+      .map(_.copy(rewrite = true)) // COW carries old rows into new files
+    lap("cow-write")
+    Right(outcome(table, snap, epochId, cfg, t0, newFiles, buckets,
+      BatchStats(parts.map(_.rows).sum, parts.map(_.bucket),
+        parts.map(_.maxLsn).max, parts.map(_.minLsn).min,
+        stats.flatMap(m => Option(m("maxTs"))).map(_.toString).maxOption
+          .getOrElse(""),
+        stats.map(metric(_, "late", 0L)).sum, parts,
+        snap.eventTimeColumn.getOrElse("")),
+      checksum, rejected))
+  }
+
+  /** Merge-on-read apply: ONE Spark action per epoch — shuffle the batch
+    * to bucket layout and write it as per-bucket delta files; nothing
+    * existing is read or rewritten. Batch statistics for lineage ride on
+    * the same action via `observe` (no separate stats job — per-epoch
+    * driver constants were measured to cap local scaling long before CPU
+    * did). Buckets whose file count then exceeds the compaction threshold
+    * are folded back to base files; the result's duration includes the
+    * fold. */
+  private def mergeMor(a: Attempt, batchNorm: DataFrame): AttemptResult = {
+    import a._
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = statAggs(snap)
     val observed = batchNorm.observe(obs, aggs.head, aggs.tail: _*)
     // no dedup, no sort: a delta file may hold several versions of a key
     // (even intra-batch) — the read path LWW-resolves and compaction
@@ -803,92 +827,41 @@ object MergeApply {
       observed.repartition(snap.nBuckets, col("conv_id")), salt = 1, snap,
       prePartitioned = true, kind = "delta")
     lap("mor-delta-write")
-    // the schema probe rode the same write action; abort before commit
-    // if registry rows surfaced, discarding the uncommitted delta files
-    val sev = probeEvents(probeObs)
-    if (sev.nonEmpty) {
-      if (deltaFiles.nonEmpty) {
-        val dir = new Path(deltaFiles.head.path).getParent.getParent
-        dir.getFileSystem(table.spark.sessionState.newHadoopConf())
-          .delete(dir, true)
-      }
-      return Left(sev)
+    // the probe and validation rode the write action (files exist, so
+    // tasks ran and the observations are authoritative)
+    val rejected = settle(deltaFiles, zeroOutput = deltaFiles.isEmpty) match {
+      case Left(done) => return done
+      case Right(n) => n
     }
-    // a zero-output batch (a truly empty micro-batch — streaming restarts
-    // trigger those for metadata-only offset changes — OR a batch whose
-    // rows were ALL consumed by the S/validation filters) may have run
-    // zero tasks, resolving both observations to empty maps. Re-check
-    // schema events and poison rows with the eager twins before
-    // committing the 0-row entry: a widen event arriving in the same
-    // batch as the first value needing it is EXACTLY this shape (the
-    // value is invalid pre-widen, so the filter empties the batch). The
-    // epoch must still land — the committed-epoch watermark stays
-    // CONTIGUOUS (a skipped epoch id would hold the watermark back
-    // forever and defeat the bounded recent-set guard); the COW path
-    // (stats.isEmpty) does the same.
-    if (deltaFiles.isEmpty) {
-      val sevE = eagerSEvents()
-      if (sevE.nonEmpty) return Left(sevE) // nothing written: no cleanup
-      val rejected = invalidEager()
-      val entry = LineageEntry(epochId, snap.version + 1, 0L, 0L, Nil, 0,
-        snap.files.size, -1L, "", (System.nanoTime() - t0) / 1000000L,
-        inputChecksum = checksum, rejectedEvents = rejected)
-      val (v, staged) = stageOrCommit(table, snap, Nil, Set.empty,
-        epochId, cfg, entry)
-      return Right(MergeResult(applied = !staged, v, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L, staged = staged,
-        rejectedEvents = rejected))
-    }
-    // envelope validation resolved on the write action (files exist, so
-    // tasks ran and the observation is authoritative): fail mode reclaims
-    // the uncommitted deltas and throws; quarantine mode dead-letters the
-    // invalid events and applies the valid remainder
-    val rejected = invalidAfterAction(deltaFiles)
     val m = obs.get
-    val batchRows = m("rows").asInstanceOf[Long]
-    val maxLsn = Option(m("maxLsn")).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val minLsn = Option(m("minLsn")).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val maxTs = Option(m("maxTs")).map(_.toString).getOrElse("")
-    val late = m.get("late").flatMap(Option(_)).map(_.asInstanceOf[Long])
-      .getOrElse(0L)
-    val buckets = deltaFiles.map(_.bucket).distinct.sorted
-    val entry = LineageEntry(epochId, snap.version + 1, batchRows, batchRows,
-      buckets, deltaFiles.size, snap.files.size, maxLsn, maxTs,
-      (System.nanoTime() - t0) / 1000000L, lateEvents = late, minLsn = minLsn,
-      // delta files hold exactly this batch, so the manifest entries ARE
-      // the per-partition applied rows + LSN ranges (footer stats)
-      partitions = partitionsOf(deltaFiles), inputChecksum = checksum,
-      watermarkCol = tsCol.getOrElse(""), rejectedEvents = rejected)
-    if (cfg.wapId.nonEmpty) {
-      val (v, _) = stageOrCommit(table, snap, deltaFiles, Set.empty,
-        epochId, cfg, entry)
-      // no compaction: nothing committed — the staged deltas fold (if
-      // over threshold) in the first post-publish epoch's sweep
-      return Right(MergeResult(applied = false, v, batchRows, batchRows,
-        buckets, (System.nanoTime() - t0) / 1000000L, staged = true,
-        rejectedEvents = rejected))
-    }
-    val (eid, txn) = epochArgs(cfg, epochId)
-    val committed = table.commit(snap, deltaFiles, Set.empty, eid,
-      Some(entry), txn = txn)
+    // delta files hold exactly this batch, so the manifest entries ARE
+    // the per-partition applied rows + LSN ranges (footer stats)
+    val res = outcome(table, snap, epochId, cfg, t0, deltaFiles,
+      stats = BatchStats(metric(m, "rows", 0L), bucketsOf(deltaFiles),
+        metric(m, "maxLsn", -1L), metric(m, "minLsn", -1L),
+        Option(m("maxTs")).fold("")(_.toString), metric(m, "late", 0L),
+        partitionsOf(deltaFiles), snap.eventTimeColumn.getOrElse("")),
+      checksum = checksum, rejected = rejected)
+    // staged: nothing committed — the staged deltas fold (if over
+    // threshold) in the first post-publish epoch's sweep
+    if (res.staged) return Right(res)
 
     // amortized compaction: fold over-threshold buckets back to base
-    val perBucket = committed.files.groupBy(_.bucket)
-    val toCompact = perBucket.collect {
+    val now = table.snapshot
+    val toCompact = now.files.groupBy(_.bucket).collect {
       case (b, fs) if fs.size > cfg.maxDeltaFilesPerBucket => b
     }.toSet
-    if (toCompact.nonEmpty) {
+    val version =
+      if (toCompact.isEmpty) now.version
       // compaction is state-neutral housekeeping: if a concurrent writer
       // lands a delta in a bucket mid-fold, yield — the ingest wins, and
       // the still-over-threshold bucket retriggers next epoch
-      try {
-        compactBuckets(table, toCompact, cfg, at = Some(committed))
+      else try {
+        val c = compactBuckets(table, toCompact, cfg, at = Some(now))
         lap(s"mor-compact(${toCompact.size})")
-      } catch { case _: graft.lake.CommitConflictException => () }
-    }
-    Right(MergeResult(applied = true, table.snapshot.version, batchRows,
-      batchRows, buckets, (System.nanoTime() - t0) / 1000000L,
-      rejectedEvents = rejected))
+        c.version
+      } catch { case _: graft.lake.CommitConflictException => now.version }
+    Right(res.copy(version = version, durationMs = elapsedMs(t0)))
   }
 
   /** Fold all files of the given buckets back to base files (per-bucket
@@ -932,6 +905,7 @@ object MergeApply {
         * tombstones). A bucket whose rows all drop retires with no
         * replacement files. */
       purgeRewrite: Option[DataFrame => DataFrame] = None): Snapshot = {
+    val t0 = System.nanoTime()
     val snap = at.getOrElse(table.snapshot)
     val spark = table.spark
     val outDir = s"${table.dir}/data/compact-${snap.version + 1}-" +
@@ -962,7 +936,7 @@ object MergeApply {
       }.foreach(_.get())
     } finally pool.shutdown()
     val files = listDataFiles(spark, outDir, snap.currentSchemaVersion,
-      "base", tsCol = eventTimeCol(snap))
+      "base", tsCol = snap.eventTimeColumn)
       // folds carry ONLY old rows into new files (state-neutral rewrite);
       // fold=true lets arrival windows starting at this commit's parent
       // skip them outright instead of re-upserting the whole bucket.
@@ -970,11 +944,8 @@ object MergeApply {
       // retire the bucket with no replacement instead of an empty file
       .filter(_.rows > 0)
       .map(_.copy(rewrite = true, fold = true))
-    val entry = LineageEntry(-1L, snap.version + 1, 0L, 0L,
-      buckets.toSeq.sorted, files.size,
-      snap.files.count(f => !buckets.contains(f.bucket)), -1L, "",
-      0L)
-    table.commit(snap, files, buckets, None, Some(entry))
+    table.snapshotAt(outcome(table, snap, -1L, cfg, t0, files, buckets,
+      BatchStats(buckets = buckets.toSeq.sorted)).version)
   }
 
   /** Change the table's bucket count — partition-layout evolution, the
@@ -1009,6 +980,7 @@ object MergeApply {
     */
   def rebucket(table: LakeTable, newN: Int,
       cfg: MergeConfig = MergeConfig()): Snapshot = {
+    val t0 = System.nanoTime()
     val snap = table.snapshot
     require(newN > 0, s"bucket count must be positive, got $newN")
     if (newN == snap.nBuckets) return snap
@@ -1058,7 +1030,7 @@ object MergeApply {
           }.foreach(_.get())
         } finally pool.shutdown()
         listDataFiles(spark, outDir, snap.currentSchemaVersion, "base",
-          tsCol = eventTimeCol(snap))
+          tsCol = snap.eventTimeColumn)
       } else {
         // misaligned target: one table-wide bucket exchange
         val folded = foldToNew(table.readRawSnap(snap, None))
@@ -1073,10 +1045,9 @@ object MergeApply {
       }
 
     val stamped = newFiles.map(_.copy(rewrite = true, fold = true))
-    val entry = LineageEntry(-1L, snap.version + 1, 0L, 0L,
-      stamped.map(_.bucket).distinct.sorted, stamped.size, 0, -1L, "", 0L)
-    table.commit(snap, stamped, snap.files.map(_.bucket).toSet, None,
-      Some(entry), newNBuckets = Some(newN))
+    table.snapshotAt(outcome(table, snap, -1L, cfg, t0, stamped,
+      snap.files.map(_.bucket).toSet, BatchStats(buckets = bucketsOf(stamped)),
+      newNBuckets = Some(newN)).version)
   }
 
   /** Insert-only fast path (≈ the reference's Express-Loader bulk append,
@@ -1107,95 +1078,37 @@ object MergeApply {
     require(cfg.wapId.isEmpty,
       "write-audit-publish staging is a merge-path feature (wapId is " +
         "ignored nowhere): route audited loads through merge()")
-    val t0 = System.nanoTime()
-    val snap0 = table.snapshot
-    if (alreadyCommitted(snap0, epochId, cfg))
-      return MergeResult(applied = false, snap0.version, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
-    // duplicate-INPUT suppression — same gate as [[merge]], and the same
-    // conflict-retry loop: a CommitConflictException (schema-version
-    // change mid-flight, retry exhaustion in the rebase) must retry with
-    // a fresh snapshot like every other path, not escape through
-    // foreachBatch and kill the stream. A failed attempt's written files
-    // are unpublished orphans — vacuumOrphans' job, same as COW retries.
-    val (fpRows, fp) =
-      if (cfg.inputChecksumGate) batchFingerprint(batch) else (0L, "")
-    var conflictRetries = 0
-    while (true) {
-      try return appendOnce(table, batch, epochId, cfg, t0, fpRows, fp,
-        replaceExisting)
-      catch {
-        case _: graft.lake.EpochSupersededException =>
-          return MergeResult(applied = false, table.snapshot.version, 0L, 0L,
-            Nil, (System.nanoTime() - t0) / 1000000L)
-        case e: graft.lake.CommitConflictException =>
-          conflictRetries += 1
-          if (conflictRetries > 8) throw e
-          Thread.sleep(
-            (math.min(400, 25 << (conflictRetries - 1)) * math.random()).toLong)
-      }
+    // the same epoch driver as [[merge]]: a CommitConflictException
+    // (schema-version change mid-flight, retry exhaustion in the rebase)
+    // must retry with a fresh snapshot like every other path, not escape
+    // through foreachBatch and kill the stream
+    runEpoch(table, batch, epochId, cfg) { (t0, fp) =>
+      appendOnce(table, batch, epochId, cfg, t0, fp, replaceExisting)
     }
-    sys.error("unreachable")
   }
 
   private def appendOnce(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, fpRows: Long, fp: String,
-      replaceExisting: Boolean = false): MergeResult = {
-    // every attempt re-reads the snapshot: a racer's epoch or checksum
-    // commit between attempts is honored
-    val snap0 = table.snapshot
-    if (alreadyCommitted(snap0, epochId, cfg))
-      return MergeResult(applied = false, snap0.version, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
-    if (fp.nonEmpty && lastChecksum(snap0).contains(fp)) {
-      val entry = LineageEntry(epochId, snap0.version + 1, fpRows, 0L, Nil,
-        0, snap0.files.size, -1L, "",
-        (System.nanoTime() - t0) / 1000000L, inputChecksum = fp)
-      val (eid, txn) = epochArgs(cfg, epochId)
-      val c = table.commit(snap0, Nil, Set.empty, eid, Some(entry), txn = txn)
-      return MergeResult(applied = false, c.version, fpRows, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
-    }
-    val dataBatch0 = applySchemaEvents(table, batch)
+      cfg: MergeConfig, t0: Long, fp: String,
+      replaceExisting: Boolean): MergeResult = {
+    val dataBatch = applySchemaEvents(table, batch)
     val snap = table.snapshot
     // same envelope-validation contract as merge(): the insert fast path
     // must not silently append a null-keyed or op-garbage event either
-    val (dataBatch, invalidObs) =
-      validationWrap(dataBatch0, snap.userSchema, cfg)
-    val norm = normalize(dataBatch, snap.userSchema)
+    val validation = new Validation(table, snap, epochId, cfg, dataBatch)
+    val norm = normalize(validation.valid, snap.userSchema)
       .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
-    val useBucket = cfg.dedup == "bucket"
-    val deduped =
-      if (useBucket) dedupLwwBucketed(norm, 1, snap.nBuckets)
-      else dedupLww(norm, cfg)
     // registered as deltas: append guarantees nothing about key overlap
     // with existing files, so readers must LWW-resolve (and compaction
     // may fold) — identical to the reference's insert method being
     // correct only "because date-gap logic makes it idempotent per-day"
     // (reference: engine/payload/united_way/211.py:286-293)
-    val newFiles = writeBuckets(table, deduped, 1, snap,
-      prePartitioned = useBucket,
+    val newFiles = writeBuckets(table,
+      dedupLwwBucketed(norm, 1, snap.nBuckets), 1, snap,
+      prePartitioned = true,
       kind = if (replaceExisting) "base" else "delta")
-    val rejected =
-      if (newFiles.nonEmpty)
-        resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-          invalidObs.flatMap(_.get.get("invalid")).flatMap(Option(_))
-            .map(_.asInstanceOf[Long]).getOrElse(0L), newFiles)
-      else if (invalidObs.isEmpty) 0L
-      else // zero-output write: observations may be unresolved (see merge)
-        resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-          dataBatch0.where(invalidReasonExpr(dataBatch0, snap.userSchema)
-            .isNotNull).count(), Nil)
-    val rows = newFiles.map(_.rows).sum
+    val rejected = validation.rejected(newFiles, zeroOutput = newFiles.isEmpty)
     val parts = partitionsOf(newFiles)
-    val appMins = parts.map(_.minLsn).filter(_ >= 0)
-    val entry = LineageEntry(epochId, snap.version + 1, rows, rows,
-      newFiles.map(_.bucket).distinct.sorted, newFiles.size, snap.files.size,
-      if (parts.isEmpty) -1L else parts.map(_.maxLsn).max, "",
-      (System.nanoTime() - t0) / 1000000L,
-      minLsn = if (appMins.isEmpty) -1L else appMins.min,
-      partitions = parts, inputChecksum = fp, rejectedEvents = rejected)
-    // EpochSuperseded/CommitConflict propagate to append()'s retry loop.
+    val mins = parts.map(_.minLsn).filter(_ >= 0)
     // replaceExisting retires the FULL bucket space, not just buckets
     // with live files at the read snapshot: rebase's conflict signature
     // covers exactly the retired buckets, so a concurrent append into a
@@ -1207,11 +1120,12 @@ object MergeApply {
     val replaced =
       if (replaceExisting) (0 until snap.nBuckets).toSet
       else Set.empty[Int]
-    val (eid, txn) = epochArgs(cfg, epochId)
-    val c = table.commit(snap, newFiles, replaced, eid, Some(entry), txn = txn)
-    MergeResult(applied = true, c.version, rows, rows,
-      newFiles.map(_.bucket).distinct.sorted,
-      (System.nanoTime() - t0) / 1000000L, rejectedEvents = rejected)
+    // EpochSuperseded/CommitConflict propagate to runEpoch's retry loop
+    outcome(table, snap, epochId, cfg, t0, newFiles, replaced,
+      BatchStats(parts.map(_.rows).sum, bucketsOf(newFiles),
+        if (parts.isEmpty) -1L else parts.map(_.maxLsn).max,
+        if (mins.isEmpty) -1L else mins.min, partitions = parts),
+      fp, rejected)
   }
 
   /** Write `df` (user cols + __lsn + __op + __bucket) under
@@ -1246,7 +1160,7 @@ object MergeApply {
       .parquet(outDir)
     val tL = System.nanoTime()
     val files = listDataFiles(spark, outDir, snap.currentSchemaVersion, kind,
-      tsCol = eventTimeCol(snap))
+      tsCol = snap.eventTimeColumn)
     if (sys.env.contains("GRAFT_MERGE_TIMING"))
       System.err.println(f"[merge-timing]   write ${(tL - tW) / 1e9}%.2f s, list-footers ${(System.nanoTime() - tL) / 1e9}%.2f s")
     files

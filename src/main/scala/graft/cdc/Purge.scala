@@ -300,10 +300,13 @@ object Purge {
         else {
           val payloadCols = df.columns.toSeq
             .filterNot(Set("conv_id", "turn_idx", "__lsn", "__op"))
+          // a null `__op` would make the fold null — counted as neither
+          // kind, so a file of such rows would read as erased: it counts
+          // as payload
           val keyOnly =
             if (!keyed || !df.columns.contains("__op")) lit(false)
-            else payloadCols.map(col(_).isNull)
-              .foldLeft(col("__op") === "D")(_ && _)
+            else coalesce(payloadCols.map(col(_).isNull)
+              .foldLeft(col("__op") === "D")(_ && _), lit(false))
           df.filter(col("conv_id").isInCollection(convIds))
             .groupBy(input_file_name().as("__file"))
             .agg(

@@ -414,9 +414,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     readSnapshot(new Path(snapsPath, f"v$version%012d.json"))
 
   private def readSnapshot(p: Path): Snapshot = {
-    // TxnSlotCompat: slots briefly serialized as bare batch longs before
-    // they carried the committing version — read those as version 0
-    implicit val fmt: Formats = DefaultFormats + LakeTable.TxnSlotCompat
+    // a txn slot missing `batch` or `v` fails extraction: zero-filling it
+    // would silently disable the idempotence guard (batch=0 ⇒ nothing
+    // ever looks committed)
+    implicit val fmt: Formats = DefaultFormats
     val in = fs.open(p)
     val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -1960,26 +1961,6 @@ object LakeTable {
     * concurrent writers on one table; the bound keeps snapshot JSON
     * O(active writers), not O(every checkpoint path ever attached). */
   val maxTxnSlots = 256
-
-  /** Read-compat for [[TxnSlot]]: accept the transitional bare-long form
-    * (batch id only) as `TxnSlot(batch, 0)`. */
-  object TxnSlotCompat extends org.json4s.CustomSerializer[TxnSlot](fmt => (
-    {
-      case org.json4s.JInt(b) => TxnSlot(b.toLong, 0L)
-      // accept ONLY the well-formed object shape — zero-filling a
-      // malformed slot would silently disable the idempotence guard
-      // (batch=0 ⇒ nothing ever looks committed) instead of failing loudly
-      case org.json4s.JObject(fields)
-          if fields.toMap.get("batch").exists(_.isInstanceOf[org.json4s.JInt]) =>
-        val m = fields.toMap
-        TxnSlot(m("batch").asInstanceOf[org.json4s.JInt].num.toLong,
-          m.get("v") match {
-            case Some(org.json4s.JInt(n)) => n.toLong
-            case _ => 0L
-          })
-    },
-    { case s: TxnSlot => org.json4s.JObject(
-        "batch" -> org.json4s.JInt(s.batch), "v" -> org.json4s.JInt(s.v)) }))
 
   /** True when `e` is a genuine JSON-parse failure (a torn/truncated
     * snapshot write), as opposed to a transient read IOException or a

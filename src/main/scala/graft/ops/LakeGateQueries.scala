@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.io.File
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,8 +36,8 @@ import graft.model.Schemas
   *
   * Scale shape: both run the engine's real write path (hash-bucketed
   * shuffle, per-bucket merge); nothing here collects to the driver. The
-  * scratch tables live under java.io.tmpdir and are recreated per call —
-  * the gate measures the engine, not leftover state.
+  * scratch tables live under java.io.tmpdir, fresh per call — the gate
+  * measures the engine, not leftover state.
   */
 object LakeGateQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -44,19 +45,20 @@ object LakeGateQueries {
   private def events(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")
 
-  /** Scratch table dir, unique per (gate, input dir), wiped per call. */
-  private def scratch(tag: String, d: String): String = {
-    val h = Integer.toHexString(d.hashCode & 0x7fffffff)
-    val f = new File(new File(sys.props("java.io.tmpdir")),
-      s"graft-gate-$tag-$h")
-    org.apache.commons.io.FileUtils.deleteQuietly(f): Unit
-    f.getAbsolutePath
+  /** A fresh scratch table dir for one call: a not-yet-existing child of
+    * its own new temp directory, so no two calls — whatever their input
+    * paths — share or wipe each other's tables. The result frame reads
+    * the table lazily, so the directory is removed at JVM exit. */
+  private def scratch(tag: String): String = {
+    val root = Files.createTempDirectory(s"graft-gate-$tag").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root): Unit)
+    new File(root, "table").getAbsolutePath
   }
 
   /** q49: events through the batch-relation write + read, then the q42
     * assembly over the read-back rows. */
   private val q49: Q = (s, d) => {
-    val dir = scratch("roundtrip", d)
+    val dir = scratch("roundtrip")
     events(s, d)
       .select(
         col("user_id").cast(StringType).as("conv_id"),
@@ -82,7 +84,7 @@ object LakeGateQueries {
     * by `lsn mod 4`, so every epoch carries keys the others also touch
     * and LSNs arrive out of order across epochs. */
   private val q50: Q = (s, d) => {
-    val dir = scratch("lww", d)
+    val dir = scratch("lww")
     val t = LakeTable.createTable(s, dir, Schemas.transcript, 8)
     val env = events(s, d).select(
       col("event_id").cast(LongType).as("lsn"),

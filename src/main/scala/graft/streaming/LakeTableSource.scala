@@ -580,13 +580,7 @@ class LakeTableSourceProvider extends StreamSourceProvider
     // <= cut — inside the pinned snapshot yet filtered from bootstrap,
     // and in no later window; a crash between two file writes would
     // re-resolve the second value against the live table. "cut:version"
-    // in a single atomically-published file closes both. Legacy
-    // metadata (a bare cut, written before the combined record): the
-    // intermediate build froze the version in a SEPARATE
-    // graft-attach-version file — honor it if present (discarding it
-    // would revert those checkpoints to the unpinned first-trigger cut
-    // and re-open the out-of-order loss the pin closed); with neither,
-    // fall back to attachVersion = None, the oldest builds' behavior.
+    // in a single atomically-published file closes both.
     val (startLsn, attachV): (Option[Long], Option[Long]) =
       parameters.get("startingLsn") match {
         case None => (None, None)
@@ -599,9 +593,10 @@ class LakeTableSourceProvider extends StreamSourceProvider
             }
           rec.split(':') match {
             case Array(l, v) => (Some(l.toLong), Some(v.toLong))
-            case _ => (Some(rec.toLong), // legacy: cut only
-              readMeta(sqlContext, metadataPath, "graft-attach-version")
-                .map(_.toLong))
+            case _ => throw new IllegalStateException(
+              s"$metadataPath/graft-starting-lsn holds '$rec', not a " +
+                "'cut:version' record — restart the stream from a fresh " +
+                "checkpoint")
           }
         case Some(n) =>
           // numeric cut: the value is the user's, only the version needs
@@ -625,22 +620,6 @@ class LakeTableSourceProvider extends StreamSourceProvider
     * (one combined record — atomicity matters, see createSource).
     * Direct Source-API users with no metadata path get a live resolve
     * (single-instance use). */
-  /** Read an already-frozen per-stream record, never resolving one — the
-    * read-only probe for legacy metadata layouts. */
-  private def readMeta(sqlContext: SQLContext, metadataPath: String,
-      name: String): Option[String] = {
-    if (metadataPath == null || metadataPath.isEmpty) return None
-    val p = new org.apache.hadoop.fs.Path(metadataPath, name)
-    val fs = p.getFileSystem(
-      sqlContext.sparkSession.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
   private def resolveOnce(sqlContext: SQLContext, metadataPath: String,
       name: String)(live: => String): String = {
     if (metadataPath == null || metadataPath.isEmpty) return live

@@ -40,4 +40,29 @@ class VerifySpec extends SparkSpec {
     }
     assert(err.exists(_.contains("timed out")))
   }
+
+  test("promote: a result lands; a failed rename leaves neither directory") {
+    import java.io.File
+    import java.nio.file.Files
+    val base = new File(tmpDir("verify-promote"))
+    def attempt(name: String): File = {
+      val d = new File(base, s".attempt-$name")
+      d.mkdirs()
+      Files.writeString(new File(d, "part-0.parquet").toPath, "x")
+      d
+    }
+    val okDst = new File(base, "q_ok")
+    assert(Verify.promote(attempt("q_ok"), okDst))
+    assert(new File(okDst, "part-0.parquet").isFile)
+    assert(!new File(base, ".attempt-q_ok").exists())
+
+    // the destination's parent is a regular file: the rename cannot succeed
+    val blocker = new File(base, "blocker")
+    Files.writeString(blocker.toPath, "not a directory")
+    val tmp = attempt("q_bad")
+    val dst = new File(blocker, "q_bad")
+    assert(!Verify.promote(tmp, dst))
+    assert(!tmp.exists(), "attempt dir leaked")
+    assert(!dst.exists())
+  }
 }

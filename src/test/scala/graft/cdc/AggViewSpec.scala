@@ -286,6 +286,13 @@ class AggViewSpec extends SparkSpec {
     }
     assert(changed.getMessage.contains("recreate the view"))
 
+    // a destination table that carries no definition stamp is refused
+    // the same way — it was not created by this refresh path
+    val plain = LakeTable.createTable(spark, tmpDir("av-dst-nostamp"),
+      Schemas.transcript, 4)
+    val unstamped = intercept[IllegalArgumentException](refresh(src, plain))
+    assert(unstamped.getMessage.contains("recreate the view"))
+
     // the original definition still refreshes incrementally
     val r = refresh(src, dst)
     assert(r.mode == "incremental")

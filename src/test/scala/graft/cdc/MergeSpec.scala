@@ -83,14 +83,12 @@ class MergeSpec extends SparkSpec {
     assert(table.read().select("text").as[String].collect().toSeq == Seq("v40"))
   }
 
-  test("all write modes and dedup strategies agree with the oracle") {
+  test("merge-on-read and copy-on-write agree with the oracle") {
     val small = cfg.copy(nEvents = 5000L)
     val log = ChangeLogGen.changeLogDF(spark, small)
     val configs = Seq(
       "mor" -> MergeConfig(writeMode = "mor"),
-      "cow-bucket" -> MergeConfig(writeMode = "cow", dedup = "bucket"),
-      "cow-window" -> MergeConfig(writeMode = "cow", dedup = "window"),
-      "cow-agg" -> MergeConfig(writeMode = "cow", dedup = "aggregate"))
+      "cow" -> MergeConfig(writeMode = "cow"))
     val states = configs.map { case (name, mc) =>
       val t = LakeTable.createTable(spark, tmpDir(s"lake-$name"),
         Schemas.transcript, 4)

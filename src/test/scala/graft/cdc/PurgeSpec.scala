@@ -366,6 +366,23 @@ class PurgeSpec extends SparkSpec {
       "live data files not attributed to snapshot versions")
   }
 
+  test("verifyErasure counts a null-__op residual row as payload") {
+    val t = seeded("purge-verify-nullop")
+    val victim = someConvs(t, 1).head
+    // every payload column null AND a null __op: the key-only test
+    // evaluates to null for this row, which must not read as erased
+    Seq((victim, 0, 1L)).toDF("conv_id", "turn_idx", "__lsn")
+      .withColumn("role", lit(null).cast("string"))
+      .withColumn("text", lit(null).cast("string"))
+      .withColumn("tool", lit(null).cast("string"))
+      .withColumn("ts", lit(null).cast("timestamp"))
+      .withColumn("__op", lit(null).cast("string"))
+      .coalesce(1).write.parquet(s"${t.dir}/data/stray-nullop")
+    val stray = Purge.verifyErasure(t, Set(victim)).residuals
+      .filter(_.path.contains("stray-nullop"))
+    assert(stray.size == 1 && stray.head.payloadRows >= 1, stray)
+  }
+
   test("the purge delivers exactly its deletes through the change feed") {
     val t = seeded("purge-feed")
     val victims = someConvs(t, 1)

@@ -18,6 +18,36 @@ class LakeTableSpec extends SparkSpec {
     t
   }
 
+  test("a snapshot whose txn slot lacks batch or v fails loudly") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val t = LakeTable.createTable(spark, tmpDir("lt-txnslot"),
+      Schemas.transcript, 4)
+    MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg).limit(100), 0L,
+      MergeConfig(txnApp = Some("w")))
+    assert(t.snapshot.txns.contains("w"))
+    val f = java.nio.file.Paths.get(s"${t.dir}/_snapshots",
+      f"v${t.snapshot.version}%012d.json")
+    val good = JsonMethods.parse(java.nio.file.Files.readString(f))
+    def withSlot(fix: JValue => JValue): JValue = good.transformField {
+      case ("txns", JObject(slots)) =>
+        ("txns", JObject(slots.map { case (k, v) => (k, fix(v)) }))
+    }
+    def drop(field: String): JValue => JValue = {
+      case JObject(fs) => JObject(fs.filterNot(_._1 == field))
+      case other => other
+    }
+    // a bare batch number: the form no released build writes
+    val bare: JValue => JValue = {
+      case JObject(fs) => fs.toMap.getOrElse("batch", JNothing)
+      case other => other
+    }
+    Seq(drop("v"), drop("batch"), bare).foreach { fix =>
+      java.nio.file.Files.writeString(f, JsonMethods.compact(withSlot(fix)))
+      intercept[IllegalStateException](t.snapshot)
+    }
+  }
+
   test("truncate keeps schema and column docs (wipe_data semantics)") {
     val dir = tmpDir("lt-trunc")
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4,

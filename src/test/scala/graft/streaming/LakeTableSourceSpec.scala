@@ -363,6 +363,19 @@ class LakeTableSourceSpec extends SparkSpec {
     assert(rows == Set(3L), s"expected only the gap row, got $rows")
   }
 
+  test("a bare-cut startingLsn record (no attach version) is refused") {
+    val srcDir = tmpDir("lts-barecut-src")
+    LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
+    val mp = tmpDir("lts-barecut-meta")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(mp, "graft-starting-lsn"), "7")
+    val e = intercept[IllegalStateException] {
+      new LakeTableSourceProvider().createSource(spark.sqlContext, mp, None,
+        "graft-table", Map("path" -> srcDir, "startingLsn" -> "latest"))
+    }
+    assert(e.getMessage.contains("cut:version"))
+  }
+
   test("low-LSN arrival inside the batch-0 crash window survives the frozen cut") {
     // the attach-version freeze's reason to exist: a commit landing
     // between source creation and the first trigger whose LSNs sit BELOW
