@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.lake.LakeTable
 

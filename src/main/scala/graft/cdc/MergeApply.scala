@@ -2,7 +2,6 @@ package graft.cdc
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,28 +38,12 @@ final class PoisonEventException(val count: Long, val epochId: Long)
       "to dead-letter them")
 
 final case class MergeConfig(
-    /** Target max rows per output file; buckets whose merged size exceeds
-      * this are salted into multiple write tasks (skew defense). */
+    /** Target max rows per base file written by compaction and rebucket;
+      * a bucket whose fold exceeds this is split across several files
+      * (skew defense). */
     maxRowsPerFile: Long = 4L * 1000 * 1000,
-    /** Physical write mode:
-      *  - "mor" (default, merge-on-read): an epoch writes ONLY its batch
-      *    as sorted per-bucket delta files — O(batch) bytes per epoch —
-      *    and readers resolve LWW across a bucket's files; buckets whose
-      *    delta count exceeds [[maxDeltaFilesPerBucket]] are compacted
-      *    back to a single base file. This is the update-heavy-CDC shape
-      *    (Hudi MoR / Iceberg v2 deletes): copy-on-write rewrites the
-      *    whole touched bucket every epoch — O(table) write
-      *    amplification when batches scatter across buckets.
-      *  - "cow" (copy-on-write): each epoch fully rewrites touched
-      *    buckets; reads are zero-cost (one version per key on disk).
-      *    ONE shuffle of current∪batch to (__bucket, __salt), a lag-window
-      *    LWW under that same partitioning, files written straight from
-      *    the shuffled partitions — valid because a key group
-      *    (conv_id, turn_idx) never spans buckets (bucket is a function
-      *    of conv_id alone). */
-    writeMode: String = "mor",
-    /** MoR compaction trigger: max files per bucket before that bucket is
-      * folded back to a single base file. */
+    /** Compaction trigger: max files per bucket before that bucket is
+      * folded back to base files. */
     maxDeltaFilesPerBucket: Int = 8,
     /** Concurrent per-bucket compaction jobs (driver-pool width). Size to
       * keep the cluster's task slots fed: each job is one bucket's
@@ -116,9 +99,8 @@ final case class MergeConfig(
       * through the ordinary commit protocol (or `abortStaged` discards
       * it). Audit reads: `table.readStaged(id)` / `stagedChanges(id)`.
       * Restaging an id that already has a pending intent adopts the
-      * existing intent (idempotent under crash-retry); MoR delta stages
-      * compose with commits that land in between (LWW by LSN), COW bucket
-      * rewrites conflict at publish if their buckets moved. */
+      * existing intent (idempotent under crash-retry); staged deltas
+      * compose with commits that land in between (LWW by LSN). */
     wapId: Option[String] = None)
 
 /** The MERGE kernel (SURVEY.md §4 item 1, §7.1 item 4): applies one
@@ -129,20 +111,16 @@ final case class MergeConfig(
   * (reference: engine/wprdc_etl/pipeline/loaders.py:507-533) with a
   * distributed plan of built-in operators:
   *
-  *  1. **Merge-on-read (default)**: the batch is shuffled once,
+  *  1. **Merge-on-read**: the batch is shuffled once,
   *     bucket-aligned (`repartition(nBuckets, conv_id)` IS the bucket
   *     function), and written as per-bucket delta files — nothing
-  *     existing is read. Readers LWW-resolve a bucket's files; buckets
+  *     existing is read, so an epoch writes O(batch) bytes whatever the
+  *     table size (the Hudi MoR / Iceberg v2 shape for update-heavy
+  *     CDC). Readers LWW-resolve a bucket's files; buckets
   *     past [[MergeConfig.maxDeltaFilesPerBucket]] are folded back to
   *     base files by per-bucket compaction. Tombstones (`D`) are kept,
   *     so a late lower-LSN update can never resurrect a delete.
-  *  2. **Copy-on-write**: only the hash-buckets present in the batch are
-  *     read back (all other files carry over by reference); current ∪
-  *     batch goes through ONE shuffle to bucket layout and a lag-window
-  *     LWW ([[dedupLwwBucketed]]), salted for hot buckets whose output
-  *     size — known before the write from manifest + batch counts —
-  *     exceeds [[MergeConfig.maxRowsPerFile]].
-  *  3. **One outcome path**: every epoch — applied, zero-output,
+  *  2. **One outcome path**: every epoch — applied, zero-output,
   *     checksum-skipped, audit-quarantined — and every compaction or
   *     rebucket records its lineage row and result through [[outcome]],
   *     which commits (or stages, under WAP) under the epoch guard:
@@ -193,7 +171,7 @@ object MergeApply {
   /** Apply the table's opt-in bloom indexing
     * ([[graft.lake.LakeTable.BloomColumnsProp]]) to a FILE-GROUP-REWRITE
     * writer (compaction / rebucket base files — never the per-epoch
-    * delta/COW hot path, which must stay lean). Adaptive sizing: parquet
+    * delta hot path, which must stay lean). Adaptive sizing: parquet
     * builds candidate blooms and keeps the one matching the file's
     * actual NDV, so small buckets don't pay a fixed-size filter.
     * Unknown/dropped column names are ignored (schema evolution may
@@ -483,45 +461,6 @@ object MergeApply {
     snap.lineage.reverseIterator.find(_.inputChecksum.nonEmpty)
       .map(_.inputChecksum)
 
-  /** LWW under bucket partitioning — the single-shuffle scale path. Input
-    * must carry `__bucket`; each output partition is sorted, so the
-    * subsequent `partitionBy("__bucket")` write needs no further
-    * exchange. `salt` splits hot buckets by hash(turn_idx) — a key group
-    * still maps to exactly one (bucket, salt) pair, so dedup stays
-    * correct.
-    *
-    * Unsalted shuffle target: `repartition(nBuckets, conv_id)` — the
-    * exact bucket function (see the mergeMor scaladoc), so partition i
-    * holds exactly bucket i: no balls-in-bins imbalance, and the lag
-    * window clusters by conv_id (HashPartitioning(conv_id) satisfies it
-    * with NO extra exchange; a key group lives inside its conv group).
-    * Salted: the (bucket, salt) cell layout is kept — a cell must map
-    * to one write task for the per-file size bound, and with nB·salt
-    * cells over the partitions the imbalance averages out. An explicit
-    * partition count in both cases: an AQE-coalesced exchange would
-    * re-merge cells and undo the bound. */
-  def dedupLwwBucketed(df: DataFrame, salt: Int, nBuckets: Int): DataFrame = {
-    val shufP = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (salt <= 1) {
-      val w = Window.partitionBy(col("conv_id"))
-        .orderBy(col("turn_idx").asc, col("__lsn").desc)
-      df.repartition(nBuckets, col("conv_id"))
-        .withColumn("__prev", lag(col("turn_idx"), 1).over(w))
-        .filter(col("__prev").isNull || col("__prev") =!= col("turn_idx"))
-        .drop("__prev")
-    } else {
-      val saltCol = pmod(hash(col("turn_idx")), lit(salt))
-      val w = Window.partitionBy(col("__bucket"), col("__salt"))
-        .orderBy(col("conv_id").asc, col("turn_idx").asc, col("__lsn").desc)
-      val k = struct(col("conv_id"), col("turn_idx"))
-      df.withColumn("__salt", saltCol)
-        .repartition(math.max(shufP, salt), col("__bucket"), col("__salt"))
-        .withColumn("__prev", lag(k, 1).over(w))
-        .filter(col("__prev").isNull || col("__prev") =!= k)
-        .drop("__prev", "__salt")
-    }
-  }
-
   /** Apply one batch. `batch` must have the change-event envelope columns
     * (`lsn`, `op`, key + payload). Returns a no-op result if `epochId` was
     * already committed (exactly-once guard) — including when a CONCURRENT
@@ -560,20 +499,21 @@ object MergeApply {
     // connectors.py:73-93, pipeline.py:338-341)
     val (fpRows, fp) =
       if (cfg.inputChecksumGate) batchFingerprint(batch) else (0L, "")
-    // an attempt that raced another writer into the same buckets (a
-    // copy-on-write rewrite, a replace), or lost a schema change, must
-    // RECOMPUTE, not rebase — the contents it merged are stale. Recompute
-    // is the whole-operation retry of the Iceberg commit model; each
-    // attempt reads a fresh snapshot. Two COW writers in steady contention
-    // can invalidate each other indefinitely (a recompute takes about as
-    // long as the peer's commit interval), so the retry backs off with
-    // jitter to desynchronize them. (MoR appends never take this path —
-    // they rebase inside commit.) The checksum-gate skip commit sits
-    // INSIDE the loop so a conflict on the 0-row commit retries like every
-    // other path instead of escaping to the caller; a retry (and the
-    // gate, after its fingerprint action) re-reads the snapshot, so a
-    // racer's checksum or epoch commit is honored. A failed attempt's
-    // written files are unpublished orphans — vacuumOrphans' job.
+    // an attempt that raced another writer into buckets it retires (a
+    // replace retires every bucket), or lost a schema or bucket-layout
+    // change, must RECOMPUTE, not rebase — the contents it wrote are
+    // stale. Recompute is the whole-operation retry of the Iceberg commit
+    // model; each attempt reads a fresh snapshot. Two replace writers in
+    // steady contention can invalidate each other indefinitely (a
+    // recompute takes about as long as the peer's commit interval), so
+    // the retry backs off with jitter to desynchronize them. (Delta
+    // appends never take this path — they rebase inside commit.) The
+    // checksum-gate skip commit sits INSIDE the loop so a conflict on the
+    // 0-row commit retries like every other path instead of escaping to
+    // the caller; a retry (and the gate, after its fingerprint action)
+    // re-reads the snapshot, so a racer's checksum or epoch commit is
+    // honored. A failed attempt's written files are unpublished orphans
+    // — vacuumOrphans' job.
     var conflictRetries = 0
     while (true) {
       try {
@@ -641,84 +581,6 @@ object MergeApply {
     * redo the attempt under the evolved schema — or finishes. */
   private type AttemptResult = Either[Seq[(Long, String)], MergeResult]
 
-  /** One merge attempt's inputs, shared by the copy-on-write and
-    * merge-on-read bodies: `batch` is the raw batch, `probe` observes its
-    * schema-registry rows on the first action (see [[mergeAttempt]]), and
-    * `validation` guards its data rows. */
-  private final class Attempt(val table: LakeTable, val snap: Snapshot,
-      val epochId: Long, val cfg: MergeConfig, val t0: Long,
-      val checksum: String, batch: DataFrame,
-      probe: Option[org.apache.spark.sql.Observation],
-      val validation: Validation) {
-    private val timing = sys.env.contains("GRAFT_MERGE_TIMING")
-    private var tPhase = System.nanoTime()
-    def lap(name: String): Unit = if (timing) {
-      System.err.println(f"[merge-timing] epoch=$epochId $name ${(System.nanoTime() - tPhase) / 1e9}%.2f s")
-      tPhase = System.nanoTime()
-    }
-
-    /** Settle what the attempt's first action observed, before anything
-      * commits. Schema-registry rows end the attempt (Left), discarding
-      * its uncommitted output `written`. So does a zero-output action —
-      * a truly empty micro-batch (streaming restarts trigger those for
-      * metadata-only offset changes) OR a batch whose rows the
-      * S/validation filters all consumed: it may have run zero tasks,
-      * resolving both observations to empty maps, so schema events and
-      * poison rows are re-checked eagerly before the epoch commits its
-      * 0-row entry. A widen event arriving in the same batch as the first
-      * value needing it is EXACTLY this shape (the value is invalid
-      * pre-widen, so the filter empties the batch). The epoch must still
-      * land — the committed-epoch watermark stays CONTIGUOUS (a skipped
-      * epoch id would hold it back forever and defeat the bounded
-      * recent-set guard). Otherwise returns the rejected-event count
-      * (Right): fail mode reclaims `written` and throws, quarantine mode
-      * dead-letters the invalid events and the valid remainder applies. */
-    def settle(written: Seq[DataFileEntry], zeroOutput: Boolean)
-        : Either[AttemptResult, Long] = {
-      val sev = probeEvents(probe)
-      if (sev.nonEmpty) {
-        discard(table, written)
-        Left(Left(sev))
-      } else if (zeroOutput) {
-        val sevE = if (probe.isEmpty) Nil else schemaEventRows(batch)
-        if (sevE.nonEmpty) Left(Left(sevE)) // nothing written: no cleanup
-        else Left(Right(outcome(table, snap, epochId, cfg, t0,
-          checksum = checksum,
-          rejected = validation.rejected(Nil, zeroOutput = true))))
-      } else Right(validation.rejected(written, zeroOutput = false))
-    }
-  }
-
-  /** One merge attempt. When `probe` is set the batch MAY contain
-    * schema-registry rows (op = "S"): rather than paying a dedicated
-    * detection action up front (one extra Spark job per v2 batch, schema
-    * events present or not), their (lsn, payload) ride an `Observation`
-    * on the first action the merge already runs. A non-empty observation
-    * aborts the attempt BEFORE anything commits — any uncommitted delta
-    * files are discarded — and returns the events for [[merge]] to apply
-    * and retry. Schema events are a handful in 10^10, so the common v2
-    * path pays zero extra actions and the rare path pays one redo. */
-  private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String)
-      : AttemptResult = {
-    val hasExtras = batch.columns.contains("extras")
-    val (dataBatch, probeObs) =
-      if (!hasExtras) (batch, None)
-      else if (probe) {
-        val obs = org.apache.spark.sql.Observation()
-        val observed = batch.observe(obs, collect_list(when(
-          col("op") === "S", struct(col("lsn"), col("text")))).as("sevents"))
-        (observed.filter(col("op") =!= "S"), Some(obs))
-      } else (batch.filter(col("op") =!= "S"), None)
-    val snap = table.snapshot
-    val a = new Attempt(table, snap, epochId, cfg, t0, checksum, batch,
-      probeObs, new Validation(table, snap, epochId, cfg, dataBatch))
-    val batchNorm = normalize(a.validation.valid, snap.userSchema)
-      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
-    if (cfg.writeMode == "mor") mergeMor(a, batchNorm)
-    else mergeCow(a, batchNorm)
-  }
-
   /** A batch's lineage statistics as aggregate columns: `rows`, the
     * `minLsn`/`maxLsn` range, `maxTs` (rendered in the session zone, see
     * [[TsFmt]]) and — when the table has an event-time column and an
@@ -743,74 +605,49 @@ object MergeApply {
       dflt: Long): Long =
     m.get(k).flatMap(Option(_)).fold(dflt)(_.asInstanceOf[Long])
 
-  /** Copy-on-write apply: read back the touched buckets and rewrite them
-    * through one bucket-partitioned lag-window LWW
-    * ([[dedupLwwBucketed]]). No pre-dedup of the batch — intra-batch
-    * duplicates collapse in that single pass (stats then count delivered
-    * events, which is what lineage should record anyway). No persist
-    * either: the batch is consumed exactly twice (stats + the merge
-    * shuffle) and a second columnar parquet scan is cheaper than
-    * materializing a row cache (measured: caching 2M-row batches cost
-    * seconds of GC-driven driver stall per epoch). */
-  private def mergeCow(a: Attempt, batchNorm: DataFrame): AttemptResult = {
-    import a._
-    // one job: per-bucket batch stats (buckets touched + sizes + lineage)
-    val aggs = statAggs(snap)
-    val stats = batchNorm.groupBy(col("__bucket")).agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map(r => r.getValuesMap[Any](r.schema.fieldNames))
-    lap("dedup+stats")
-    // the probe and validation ride the stats action: COW has written
-    // nothing yet, so an abort costs nothing
-    val rejected = settle(Nil, zeroOutput = stats.isEmpty) match {
-      case Left(done) => return done
-      case Right(n) => n
-    }
-    // from the per-bucket stats pass, NOT the written files: COW rewrites
-    // whole buckets, so file rows include carried-over rows — the batch's
-    // share per bucket is what lineage records
-    val parts = stats.map(m => BucketLineage(m("__bucket").asInstanceOf[Int],
-      metric(m, "rows", 0L), metric(m, "minLsn", -1L),
-      metric(m, "maxLsn", -1L))).sortBy(_.bucket)
-    val buckets = parts.map(_.bucket).toSet
-    val currentPerBucket: Map[Int, Long] = snap.files
-      .filter(f => buckets.contains(f.bucket))
-      .groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum }
-    val worstBucket =
-      parts.map(p => currentPerBucket.getOrElse(p.bucket, 0L) + p.rows).max
-    val salt = math.max(1L,
-      (worstBucket + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
-
-    val current = table.readRawSnap(snap, Some(buckets))
-      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
-    val merged =
-      dedupLwwBucketed(current.unionByName(batchNorm), salt, snap.nBuckets)
-    val newFiles = writeBuckets(table, merged, salt, snap,
-      prePartitioned = true)
-      .map(_.copy(rewrite = true)) // COW carries old rows into new files
-    lap("cow-write")
-    Right(outcome(table, snap, epochId, cfg, t0, newFiles, buckets,
-      BatchStats(parts.map(_.rows).sum, parts.map(_.bucket),
-        parts.map(_.maxLsn).max, parts.map(_.minLsn).min,
-        stats.flatMap(m => Option(m("maxTs"))).map(_.toString).maxOption
-          .getOrElse(""),
-        stats.map(metric(_, "late", 0L)).sum, parts,
-        snap.eventTimeColumn.getOrElse("")),
-      checksum, rejected))
-  }
-
-  /** Merge-on-read apply: ONE Spark action per epoch — shuffle the batch
-    * to bucket layout and write it as per-bucket delta files; nothing
+  /** One merge attempt: ONE Spark action per epoch — shuffle the batch to
+    * bucket layout and write it as per-bucket delta files; nothing
     * existing is read or rewritten. Batch statistics for lineage ride on
     * the same action via `observe` (no separate stats job — per-epoch
     * driver constants were measured to cap local scaling long before CPU
     * did). Buckets whose file count then exceeds the compaction threshold
     * are folded back to base files; the result's duration includes the
-    * fold. */
-  private def mergeMor(a: Attempt, batchNorm: DataFrame): AttemptResult = {
-    import a._
+    * fold.
+    *
+    * When `probe` is set the batch MAY contain schema-registry rows
+    * (op = "S"): rather than paying a dedicated detection action up front
+    * (one extra Spark job per v2 batch, schema events present or not),
+    * their (lsn, payload) ride an `Observation` on the write action. A
+    * non-empty observation aborts the attempt BEFORE anything commits —
+    * the uncommitted delta files are discarded — and returns the events
+    * for [[merge]] to apply and retry. Schema events are a handful in
+    * 10^10, so the common v2 path pays zero extra actions and the rare
+    * path pays one redo. */
+  private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
+      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String)
+      : AttemptResult = {
+    val timing = sys.env.contains("GRAFT_MERGE_TIMING")
+    var tPhase = System.nanoTime()
+    def lap(name: String): Unit = if (timing) {
+      System.err.println(f"[merge-timing] epoch=$epochId $name ${(System.nanoTime() - tPhase) / 1e9}%.2f s")
+      tPhase = System.nanoTime()
+    }
+    val hasExtras = batch.columns.contains("extras")
+    val (dataBatch, probeObs) =
+      if (!hasExtras) (batch, None)
+      else if (probe) {
+        val obs = org.apache.spark.sql.Observation()
+        val observed = batch.observe(obs, collect_list(when(
+          col("op") === "S", struct(col("lsn"), col("text")))).as("sevents"))
+        (observed.filter(col("op") =!= "S"), Some(obs))
+      } else (batch.filter(col("op") =!= "S"), None)
+    val snap = table.snapshot
+    val validation = new Validation(table, snap, epochId, cfg, dataBatch)
     val obs = org.apache.spark.sql.Observation()
     val aggs = statAggs(snap)
-    val observed = batchNorm.observe(obs, aggs.head, aggs.tail: _*)
+    val observed = normalize(validation.valid, snap.userSchema)
+      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
+      .observe(obs, aggs.head, aggs.tail: _*)
     // no dedup, no sort: a delta file may hold several versions of a key
     // (even intra-batch) — the read path LWW-resolves and compaction
     // folds, both by __lsn, so deferring is exactly as correct and the
@@ -827,12 +664,37 @@ object MergeApply {
       observed.repartition(snap.nBuckets, col("conv_id")), salt = 1, snap,
       prePartitioned = true, kind = "delta")
     lap("mor-delta-write")
-    // the probe and validation rode the write action (files exist, so
-    // tasks ran and the observations are authoritative)
-    val rejected = settle(deltaFiles, zeroOutput = deltaFiles.isEmpty) match {
-      case Left(done) => return done
-      case Right(n) => n
+
+    // Settle what the write observed, before anything commits.
+    // Schema-registry rows end the attempt (Left), discarding its
+    // uncommitted delta files.
+    val sev = probeEvents(probeObs)
+    if (sev.nonEmpty) {
+      discard(table, deltaFiles)
+      return Left(sev)
     }
+    // So does a zero-output write — a truly empty micro-batch (streaming
+    // restarts trigger those for metadata-only offset changes) OR a batch
+    // whose rows the S/validation filters all consumed: it may have run
+    // zero tasks, resolving both observations to empty maps, so schema
+    // events and poison rows are re-checked eagerly before the epoch
+    // commits its 0-row entry. A widen event arriving in the same batch
+    // as the first value needing it is EXACTLY this shape (the value is
+    // invalid pre-widen, so the filter empties the batch). The epoch must
+    // still land — the committed-epoch watermark stays CONTIGUOUS (a
+    // skipped epoch id would hold it back forever and defeat the bounded
+    // recent-set guard).
+    if (deltaFiles.isEmpty) {
+      val sevE = if (probeObs.isEmpty) Nil else schemaEventRows(batch)
+      if (sevE.nonEmpty) return Left(sevE) // nothing written: no cleanup
+      return Right(outcome(table, snap, epochId, cfg, t0, checksum = checksum,
+        rejected = validation.rejected(Nil, zeroOutput = true)))
+    }
+    // Otherwise files exist, so tasks ran and the observations are
+    // authoritative: fail mode reclaims the delta files and throws,
+    // quarantine mode dead-letters the invalid events and the valid
+    // remainder applies.
+    val rejected = validation.rejected(deltaFiles, zeroOutput = false)
     val m = obs.get
     // delta files hold exactly this batch, so the manifest entries ARE
     // the per-partition applied rows + LSN ranges (footer stats)
@@ -863,6 +725,15 @@ object MergeApply {
       } catch { case _: graft.lake.CommitConflictException => now.version }
     Right(res.copy(version = version, durationMs = elapsedMs(t0)))
   }
+
+  /** The per-key LWW fold compaction and rebucket share: one row per
+    * (conv_id, turn_idx), the max-`__lsn` version of all its columns
+    * (tombstones included). A hash aggregate — no window sort. */
+  private def foldWinners(raw: DataFrame): DataFrame =
+    raw.groupBy(KEY.map(col): _*)
+      .agg(max_by(struct(raw.columns.toSeq.map(col): _*), col("__lsn"))
+        .as("__r"))
+      .select(col("__r.*"))
 
   /** Fold all files of the given buckets back to base files (per-bucket
     * LWW; tombstones are retained — a tombstone may still out-LSN a late
@@ -919,13 +790,8 @@ object MergeApply {
       perBucket.toSeq.map { case (b, fs) =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
-            val raw0 = table.readFiles(snap, fs)
-            val raw = purgeRewrite.fold(raw0)(f => f(raw0))
-            val payload = raw.columns.toSeq
-            val folded = raw.groupBy(KEY.map(col): _*)
-              .agg(max_by(struct(payload.map(col): _*), col("__lsn"))
-                .as("__r"))
-              .select(col("__r.*"))
+            val raw = table.readFiles(snap, fs)
+            val folded = foldWinners(purgeRewrite.fold(raw)(f => f(raw)))
             val preRows = fs.map(_.rows).sum // upper bound on folded rows
             val nFiles = math.max(1L,
               (preRows + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
@@ -943,7 +809,7 @@ object MergeApply {
       // rows == 0 happens only under purgeRows (a bucket fully erased):
       // retire the bucket with no replacement instead of an empty file
       .filter(_.rows > 0)
-      .map(_.copy(rewrite = true, fold = true))
+      .map(_.copy(fold = true))
     table.snapshotAt(outcome(table, snap, -1L, cfg, t0, files, buckets,
       BatchStats(buckets = buckets.toSeq.sorted)).version)
   }
@@ -952,7 +818,7 @@ object MergeApply {
     * lever that keeps per-bucket work bounded as a table grows 1000×
     * (Iceberg's partition-spec evolution; a 10^10-row table created with
     * 32 buckets holds ~3·10^8 rows per bucket — every bucket-sized unit
-    * of work, compaction, MoR resolve, COW rewrite, has outgrown memory
+    * of work, compaction, MoR resolve, has outgrown memory
     * and must be re-split). Rewrites the whole table once (the
     * operation's intrinsic cost) into `newN` hash buckets of the SAME
     * key function, folding to per-key winners — tombstones retained, a
@@ -990,15 +856,8 @@ object MergeApply {
     val hfs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-    def readGroup(group: Seq[graft.lake.DataFileEntry]): DataFrame =
-      table.readFiles(snap, group)
-    def foldToNew(raw: DataFrame): DataFrame = {
-      val payload = raw.columns.toSeq
-      raw.groupBy(KEY.map(col): _*)
-        .agg(max_by(struct(payload.map(col): _*), col("__lsn")).as("__r"))
-        .select(col("__r.*"))
-        .withColumn("__bucket", LakeTable.bucketExpr(newN))
-    }
+    def foldToNew(raw: DataFrame): DataFrame =
+      foldWinners(raw).withColumn("__bucket", LakeTable.bucketExpr(newN))
 
     val newFiles: Seq[graft.lake.DataFileEntry] =
       if (snap.files.isEmpty) Seq.empty
@@ -1014,7 +873,7 @@ object MergeApply {
                 // dirs (exclusively this job's — the fan-out sets are
                 // disjoint across old buckets) to the shared root
                 val tmp = new org.apache.hadoop.fs.Path(s"$outDir/stage-$b")
-                withBloom(foldToNew(readGroup(group)).write, snap)
+                withBloom(foldToNew(table.readFiles(snap, group)).write, snap)
                   .partitionBy("__bucket").mode("overwrite")
                   .parquet(tmp.toString)
                 hfs.listStatus(tmp)
@@ -1044,7 +903,7 @@ object MergeApply {
           bloom = true)
       }
 
-    val stamped = newFiles.map(_.copy(rewrite = true, fold = true))
+    val stamped = newFiles.map(_.copy(fold = true))
     table.snapshotAt(outcome(table, snap, -1L, cfg, t0, stamped,
       snap.files.map(_.bucket).toSet, BatchStats(buckets = bucketsOf(stamped)),
       newNBuckets = Some(newN)).version)
@@ -1103,7 +962,7 @@ object MergeApply {
     // correct only "because date-gap logic makes it idempotent per-day"
     // (reference: engine/payload/united_way/211.py:286-293)
     val newFiles = writeBuckets(table,
-      dedupLwwBucketed(norm, 1, snap.nBuckets), 1, snap,
+      table.lwwResolve(norm, snap.nBuckets), 1, snap,
       prePartitioned = true,
       kind = if (replaceExisting) "base" else "delta")
     val rejected = validation.rejected(newFiles, zeroOutput = newFiles.isEmpty)
@@ -1137,7 +996,7 @@ object MergeApply {
       kind: String = "base", targetBuckets: Int = -1,
       /** Apply the table's opt-in bloom indexing — set ONLY by
         * file-group-rewrite callers (misaligned rebucket); the per-epoch
-        * delta/COW paths leave it false to stay lean. */
+        * delta and append paths leave it false to stay lean. */
       bloom: Boolean = false): Seq[DataFileEntry] = {
     val spark = table.spark
     val outDir = s"${table.dir}/data/commit-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -1146,7 +1005,7 @@ object MergeApply {
     // re-merging salt cells and silently defeating the maxRowsPerFile
     // skew defense the caller computed `salt` for. The unsalted path
     // partitions by conv_id — pmod(murmur3(conv_id), nB) IS the bucket
-    // function, so partition i holds exactly bucket i (see mergeMor).
+    // function, so partition i holds exactly bucket i (see mergeAttempt).
     val nB = if (targetBuckets > 0) targetBuckets else snap.nBuckets
     val writeDf =
       if (prePartitioned) df // bucket dedup already exchanged to (__bucket, __salt)

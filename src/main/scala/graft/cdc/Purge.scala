@@ -271,13 +271,7 @@ object Purge {
 
     // file path -> snapshot versions referencing it, across ALL existing
     // snapshot jsons (current, historical, expired-but-present)
-    val snapsDir = new Path(tableRoot, "_snapshots")
-    val versions =
-      if (!fs.exists(snapsDir)) Nil
-      else fs.listStatus(snapsDir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(_.stripPrefix("v").stripSuffix(".json").toLong).sorted
-    val fileVersions: Map[String, Seq[Long]] = versions
+    val fileVersions: Map[String, Seq[Long]] = table.versionsOnDisk
       .flatMap(v => table.snapshotAt(v).files
         .map(f => new Path(f.path).toUri.getPath -> v))
       .groupMap(_._1)(_._2)

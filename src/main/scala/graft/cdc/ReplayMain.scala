@@ -23,7 +23,7 @@ object ReplayMain {
     val check = args.lift(5).forall(_.toBoolean)
     val filesPerBatch = args.lift(6).map(_.toInt).getOrElse(8)
 
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft-replay")
       // 4x cores: keeps per-task sorts memory-resident and smooths task
@@ -31,15 +31,10 @@ object ReplayMain {
       .config("spark.sql.shuffle.partitions", (cores * 4).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "false"))
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides for A/B runs: GRAFT_CONF="k=v;k=v"
-    sys.env.get("GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.contains("GRAFT_STAGE_LOG"))
       spark.sparkContext.addSparkListener(
@@ -61,14 +56,10 @@ object ReplayMain {
       val tableDir = s"$workDir/table"
       val ckpt = s"$workDir/ckpt"
 
-      if (new java.io.File(feed).isDirectory && sys.env.contains("GRAFT_REUSE_FEED")) {
-        println(s"[replay] reusing existing feed at $feed")
-      } else {
-        println(s"[replay] generating $nEvents events into $nBatches batches x $filesPerBatch files …")
-        val tGen = System.nanoTime()
-        ChangeLogGen.writeBatches(spark, cfg, feed, nBatches, filesPerBatch)
-        println(f"[replay] feed written in ${(System.nanoTime() - tGen) / 1e9}%.1f s")
-      }
+      println(s"[replay] generating $nEvents events into $nBatches batches x $filesPerBatch files …")
+      val tGen = System.nanoTime()
+      ChangeLogGen.writeBatches(spark, cfg, feed, nBatches, filesPerBatch)
+      println(f"[replay] feed written in ${(System.nanoTime() - tGen) / 1e9}%.1f s")
 
       val existing = LakeTable.load(spark, tableDir)
       val table =

@@ -3,9 +3,8 @@ package graft.gen
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.model.{ChangeEvent, Schemas}
+import graft.model.ChangeEvent
 
 /** Deterministic, seeded change-log generator (SURVEY.md §7.1 item 2,
   * FIXTURES.md §2.2). No external data and no wall-clock anywhere: every

@@ -145,8 +145,8 @@ final class GraftBatchRelation(
   /** `INSERT INTO <view>` / `INSERT OVERWRITE <view>` over a
     * `USING graft-table` view — SQL's route into [[GraftBatchWrite]]
     * (plain rows: auto-LSN key replacement; overwrite: the atomic
-    * whole-table replace). The view's declared OPTIONS (writeMode,
-    * invalidRows, method, txnAppId/batchId, …) travel with the write —
+    * whole-table replace). The view's declared OPTIONS (invalidRows,
+    * method, txnAppId/batchId, …) travel with the write —
     * accepting an option at view creation and dropping it at write
     * time would silently change semantics. An `at`-pinned (release)
     * view is read-only. */
@@ -334,11 +334,11 @@ final class GraftMetaRelation(
           .getOrElse(table.snapshot)
         snap.files
           .map(f => (f.path, f.bucket, f.rows, f.kind, f.schemaVersion,
-            f.minLsn, f.maxLsn, f.addedV, f.rewrite, f.fold,
-            f.minTs, f.maxTs, f.tsCol))
+            f.minLsn, f.maxLsn, f.addedV, f.fold, f.minTs, f.maxTs,
+            f.tsCol))
           .toDF("path", "bucket", "rows", "kind", "schema_version",
-            "min_lsn", "max_lsn", "added_v", "rewrite", "fold",
-            "min_ts", "max_ts", "ts_col")
+            "min_lsn", "max_lsn", "added_v", "fold", "min_ts", "max_ts",
+            "ts_col")
       case "tags" =>
         table.tags.toSeq.sortBy(_._1).toDF("tag", "version")
       case other => throw new IllegalArgumentException(
@@ -388,19 +388,19 @@ object GraftBatchWrite {
     // ---- validate EVERY option before any state change: a typo'd
     // option (or a malformed batchId) must cost an error, never a table.
     // That includes unknown KEYS, not just bad values — a misspelled
-    // .option("writeMod", "cow") or "mergeShema" silently applying the
+    // .option("invalidRow", "off") or "mergeShema" silently applying the
     // default would change write semantics without any error. Read-side
     // keys are admitted because a view's options travel with INSERT INTO
     // (GraftBatchRelation.insert forwards viewOptions here).
     val knownKeys = Set(
-      "path", "method", "writemode", "invalidrows", "nbuckets",
+      "path", "method", "invalidrows", "nbuckets",
       "mergeschema", "txnappid", "batchid",
       "at", "meta", "sincelsn", "changesfrom", "changesto")
     val unknownKeys =
       parameters.keys.filterNot(k => knownKeys(k.toLowerCase)).toSeq.sorted
     require(unknownKeys.isEmpty,
       s"unknown graft-table write option(s): ${unknownKeys.mkString(", ")}" +
-        " — known: path, method, writeMode, invalidRows, nBuckets, " +
+        " — known: path, method, invalidRows, nBuckets, " +
         "mergeSchema, txnAppId, batchId (plus read-side at/meta/" +
         "sinceLsn/changesFrom/changesTo on a view)")
     val hasLsn = data.columns.contains("lsn")
@@ -416,9 +416,6 @@ object GraftBatchWrite {
       parameters.getOrElse("method", if (hasEnvelope) "upsert" else "insert")
     require(method == "upsert" || method == "insert",
       s"method must be upsert or insert, got '$method'")
-    val writeMode = parameters.getOrElse("writeMode", "mor")
-    require(writeMode == "mor" || writeMode == "cow",
-      s"writeMode must be mor or cow, got '$writeMode'")
     val invalid = parameters.getOrElse("invalidRows", "fail")
     require(Set("fail", "quarantine", "off").contains(invalid),
       s"invalidRows must be fail, quarantine, or off, got '$invalid'")
@@ -512,8 +509,7 @@ object GraftBatchWrite {
         // retention evicts the oldest identities, so churn is bounded
         (Some("batch:" + java.util.UUID.randomUUID().toString), 0L)
     }
-    val cfg = graft.cdc.MergeConfig(writeMode = writeMode, txnApp = txnApp,
-      invalidRows = invalid)
+    val cfg = graft.cdc.MergeConfig(txnApp = txnApp, invalidRows = invalid)
     // Overwrite on an existing table is ONE atomic commit (retire every
     // live file + register the batch) — never truncate-then-load, which
     // publishes an empty table to concurrent readers and, under a

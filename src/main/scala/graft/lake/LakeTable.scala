@@ -25,8 +25,8 @@ class EpochSupersededException(msg: String) extends RuntimeException(msg)
 
 /** One data file registered in a snapshot. `bucket` is the hash-bucket of
   * `conv_id` the file belongs to (all rows in the file share it) — the unit
-  * of copy-on-write pruning. `schemaVersion` names the schema the file was
-  * written under (schema evolution never rewrites old files). `kind` is
+  * of read pruning and compaction. `schemaVersion` names the schema the
+  * file was written under (schema evolution never rewrites old files). `kind` is
   * "base" (one version per key within the bucket) or "delta" (a
   * merge-on-read increment: the key's winning version is resolved at read
   * time by LWW over all of the bucket's files, until compaction folds the
@@ -51,19 +51,14 @@ final case class DataFileEntry(
       * key whose winning event arrives out-of-order BELOW an
       * already-consumed LSN high-water mark (the event is in no
       * `__lsn > cut` range), while every arrival is in exactly one
-      * commit. -1 on manifests written before this field existed —
-      * consumers must treat unknown as "possibly in any window". */
+      * commit. -1 only on an entry not yet committed; a manifest entry
+      * without a stamp (written before this field existed) fails
+      * [[LakeTable.snapshot]] with an `IllegalStateException` — such a
+      * table must be recreated. */
     addedV: Long = -1L,
-    /** True when the file's rows may PREDATE its commit — compaction
-      * folds and copy-on-write bucket rewrites carry old rows into new
-      * files. Change windows must not read a rewrite file's keys as
-      * "changed at addedV"; they fall back to bucket-level candidacy
-      * (exact after the change feed's value-equality suppression). */
-    rewrite: Boolean = false,
-    /** True for PURE rewrites — compaction folds whose rows ALL predate
-      * their commit (the fold is state-neutral: it carries no arrivals of
-      * its own, unlike a COW bucket rewrite, which mixes the commit's new
-      * rows into the rewritten file). An arrival window that starts at
+    /** True for PURE rewrites — compaction and rebucket folds, whose rows
+      * ALL predate their commit (the fold is state-neutral: it carries no
+      * arrivals of its own). An arrival window that starts at
       * the fold's parent version (`sinceV == addedV - 1`) has, by
       * definition, already consumed everything the fold carries, so
       * [[LakeTable.arrivalFiles]] skips exactly that case — the Iceberg
@@ -193,7 +188,7 @@ final case class LineageEntry(
 final case class StagedIntent(
     wapId: String,
     /** Version the stage was computed against — the audit read's pin, and
-      * the staleness baseline for copy-on-write bucket rewrites. */
+      * the staleness baseline for an intent that replaces buckets. */
     baseVersion: Long,
     /** Bucket layout at stage time: a rebucket between stage and publish
       * invalidates the files' bucket ids (conflict at publish). */
@@ -311,10 +306,12 @@ final case class Snapshot(
   *   - **O(delta) commits**: a commit writes one manifest file listing the
   *     files it adds (plus the buckets it replaces) and a small snapshot
   *     JSON of bounded manifest refs — never the full table manifest.
-  *   - **Copy-on-write at bucket granularity**: `conv_id` is hash-bucketed
-  *     into `nBuckets`; a merge rewrites only files of touched buckets and
-  *     carries the rest over by reference. At 100 TB / 4096 buckets a batch
-  *     touching k buckets rewrites ~k/4096 of the data, not all of it.
+  *   - **Bucket-granular compaction and pruning**: `conv_id` is
+  *     hash-bucketed into `nBuckets`; a merge appends delta files to the
+  *     buckets it touches, compaction folds one bucket's files at a time
+  *     and carries the rest over by reference, and a key read scans only
+  *     its bucket. At 100 TB / 4096 buckets a fold of k buckets rewrites
+  *     ~k/4096 of the data, not all of it.
   *   - **Schema evolution without rewrite**: add-column and type widening
   *     bump `currentSchemaVersion`; old files keep their version and are
   *     projected (null-fill / upcast) at read time. Column docs survive —
@@ -335,6 +332,14 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   private val currentPtr = new Path(snapsPath, "CURRENT")
   private def fs: FileSystem =
     tablePath.getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Versions whose snapshot file ([[LakeTable.versionFile]]) is on
+    * disk, ascending — published or not (a crashed commit's orphan
+    * counts). */
+  private[graft] def versionsOnDisk: Seq[Long] =
+    fs.listStatus(snapsPath).toSeq.map(_.getPath.getName)
+      .filter(n => n.startsWith("v") && n.endsWith(".json"))
+      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong).sorted
 
   /** Manifest files are immutable once written → cache by path. Bounded:
     * cleared wholesale past 256 entries (old manifests die after
@@ -374,10 +379,6 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         java.nio.file.Paths.get(snapsPath.toUri.getPath, "CURRENT"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // a sidecar left by a pre-raw-pointer writer would poison any
-      // checksummed reader; reads below go raw, but clean it up anyway
-      val crc = new Path(snapsPath, ".CURRENT.crc")
-      if (pfs.exists(crc)) pfs.delete(crc, false)
     } else {
       // FileContext.rename supports atomic overwrite (FileSystem's doesn't)
       val fc = FileContext.getFileContext(tablePath.toUri,
@@ -411,7 +412,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   }
 
   def snapshotAt(version: Long): Snapshot =
-    readSnapshot(new Path(snapsPath, f"v$version%012d.json"))
+    readSnapshot(new Path(snapsPath, versionFile(version)))
 
   private def readSnapshot(p: Path): Snapshot = {
     // a txn slot missing `batch` or `v` fails extraction: zero-filling it
@@ -453,6 +454,11 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
     val entries = JsonMethods.parse(s).extract[Seq[DataFileEntry]]
+    // every committed entry carries its arrival stamp; change windows
+    // cannot place an unstamped one (written before `addedV` existed)
+    if (entries.exists(_.addedV < 0)) throw new IllegalStateException(
+      s"manifest $path holds entries without an arrival version " +
+        "(addedV), written by a pre-addedV layout — recreate the table")
     if (manifestCache.size > 256) manifestCache.clear()
     manifestCache.put(path, entries)
     entries
@@ -498,7 +504,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * `files` view is stripped — only the bounded manifest refs persist. */
   private[graft] def writeSnapshot(snap: Snapshot): Unit = {
     implicit val fmt: Formats = DefaultFormats
-    val p = new Path(snapsPath, f"v${snap.version}%012d.json")
+    val p = new Path(snapsPath, versionFile(snap.version))
     // atomic create-if-absent (the commit race arbiter)
     val out = createExclusive(p)
     try out.write(Serialization.write(snap.copy(files = Nil)).getBytes("UTF-8"))
@@ -532,14 +538,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   def recover(graceMs: Long = 300000L): Long = {
     val cur = snapshot
     val cutoff = System.currentTimeMillis() - graceMs
-    val beyond = fs.listStatus(snapsPath).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .filter(_ > cur.version).sorted
+    val beyond = versionsOnDisk.filter(_ > cur.version)
     var landed = cur.version
     beyond.foreach { v =>
-      val p = new Path(snapsPath, f"v$v%012d.json")
+      val p = new Path(snapsPath, versionFile(v))
       try { readSnapshot(p); landed = v }
       catch {
         case e: Exception if LakeTable.isTornJson(e) =>
@@ -553,7 +555,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       }
     }
     if (landed > cur.version)
-      swapPointer(f"v$landed%012d.json", s"rec.$landed")
+      swapPointer(versionFile(landed), s"rec.$landed")
     landed
   }
 
@@ -568,8 +570,9 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * version-file create is the race arbiter; on losing it the commit
     * REBASES onto the winner and retries — metadata only, the data files
     * are already on disk and stay valid — unless it genuinely conflicts:
-    *  - a bucket this commit REPLACES changed under it (the copy-on-write
-    *    rewrite folded a stale view) → [[CommitConflictException]];
+    *  - a bucket this commit REPLACES changed under it (a compaction
+    *    fold or a replace built on a stale view)
+    *    → [[CommitConflictException]];
     *  - the schema changed under it, or it carries a schema change itself
     *    → [[CommitConflictException]] (schema edits are serialized);
     *  - its `epochId` landed via a concurrent writer
@@ -629,7 +632,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * race (or this writer's own torn write, which the rebase path then
     * surfaces as a conflict after its read deadline). */
   private def versionTaken(version: Long): Boolean =
-    fs.exists(new Path(snapsPath, f"v$version%012d.json"))
+    fs.exists(new Path(snapsPath, versionFile(version)))
 
   /** Wait for the racing writer's snapshot to become readable (it may
     * still be mid-write when we lose the create race) and return the
@@ -657,13 +660,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     val t0 = System.currentTimeMillis() - 30000L
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
     while (true) {
-      val beyond = fs.listStatus(snapsPath).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-        .filter(_ > version).sorted(Ordering[Long].reverse)
+      val beyond = versionsOnDisk.filter(_ > version).reverse
       var allTornAndOld = beyond.nonEmpty
       beyond.foreach { v =>
-        val p = new Path(snapsPath, f"v$v%012d.json")
+        val p = new Path(snapsPath, versionFile(v))
         try return Some(readSnapshot(p))
         catch {
           case e if scala.util.control.NonFatal(e) => // mid-write?
@@ -676,7 +676,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       if (System.nanoTime() > deadline) {
         if (allTornAndOld) {
           beyond.foreach(v =>
-            fs.delete(new Path(snapsPath, f"v$v%012d.json"), false))
+            fs.delete(new Path(snapsPath, versionFile(v)), false))
           return None
         }
         throw new CommitConflictException(
@@ -693,8 +693,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   private def rebase(base: Snapshot, nb: Snapshot,
       replacedBuckets: Set[Int], epochId: Option[Long],
       schemaUpdate: Option[(Int, StructType)],
-      txn: Option[(String, Long)] = None,
-      newNBuckets: Option[Int] = None): Snapshot = {
+      txn: Option[(String, Long)],
+      newNBuckets: Option[Int]): Snapshot = {
     // bucket-layout edits are serialized, both ways: a commit built in
     // the OLD bucket space carries stale bucket ids (even a pure MoR
     // delta append would land files under the wrong layout), and a
@@ -734,43 +734,26 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       lineage: Option[LineageEntry],
       schemaUpdate: Option[(Int, StructType)],
       newColumnDocs: Map[String, String],
-      txn: Option[(String, Long)] = None,
-      newNBuckets: Option[Int] = None): Snapshot = {
+      txn: Option[(String, Long)],
+      newNBuckets: Option[Int]): Snapshot = {
     val v = base.version + 1
     // stamp arrival: this attempt's version (a rebase retry re-stamps)
     val stamped = newFiles.map(_.copy(addedV = v))
     // a bucket-count change rewrites the whole table: nothing carries
-    val carried0 =
+    val carried =
       if (newNBuckets.nonEmpty) Seq.empty
       else base.files.filterNot(f => replacedBuckets.contains(f.bucket))
-    // one-time upgrade: entries from pre-addedV manifests (addedV < 0)
-    // would otherwise be RE-delivered in every change window forever —
-    // O(table) per window, exempt from row caps. Stamp them here as a
-    // fold at this commit (their content is exactly rows live at the
-    // parent version, the same contract as a compaction fold: consumers
-    // at the parent skip them, consumers further behind absorb them once
-    // as idempotent re-upserts) and force manifest consolidation below
-    // so the stamp persists across reloads.
-    val hadUnstamped = carried0.exists(_.addedV < 0)
-    val carried =
-      if (!hadUnstamped) carried0
-      else carried0.map(f =>
-        if (f.addedV >= 0) f
-        else f.copy(addedV = v, rewrite = true, fold = true))
     val liveFiles = carried ++ stamped
 
     var manifests = base.manifests
     // consolidation is decided BEFORE any manifest write — deciding it
     // after would write a delta manifest and delete it within the same
-    // commit on every size-triggered consolidation. hadUnstamped forces
-    // consolidation: the reset manifest is what persists the one-time
-    // restamping above across reloads.
-    val appendDelta =
-      (stamped.nonEmpty || replacedBuckets.nonEmpty) && !hadUnstamped
+    // commit on every size-triggered consolidation
+    val appendDelta = stamped.nonEmpty || replacedBuckets.nonEmpty
     val sizeAfterAppend =
       if (appendDelta && newNBuckets.nonEmpty) 1 // rebucket delta RESETS
       else manifests.size + (if (appendDelta) 1 else 0)
-    if (sizeAfterAppend > manifestCompactThreshold || hadUnstamped) {
+    if (sizeAfterAppend > manifestCompactThreshold) {
       // consolidate: one reset manifest holding the resolved live set
       manifests = Seq(ManifestRef(writeManifest(liveFiles, v),
         liveFiles.size, Nil, reset = true))
@@ -886,7 +869,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   private def writeLineageMirror(entry: LineageEntry, version: Long): Unit = {
     implicit val fmt: Formats = DefaultFormats
     val dir = new Path(tablePath, "_lineage")
-    val p = new Path(dir, f"v$version%012d.json")
+    val p = new Path(dir, versionFile(version))
     fs.mkdirs(dir)
     if (fs.exists(p)) return // replayed commit: row already mirrored
     try {
@@ -953,7 +936,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * partitioning satisfies with NO further exchange. Partitions stay
     * bucket-sized (never millions of tiny per-key exchanges), and a key
     * group can never span its conv group. */
-  private def lwwResolve(raw: DataFrame, nBuckets: Int): DataFrame = {
+  private[graft] def lwwResolve(raw: DataFrame, nBuckets: Int): DataFrame = {
     import org.apache.spark.sql.functions.lag
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("conv_id"))
@@ -1070,7 +1053,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * below the cut are filtered after resolution. A bucket whose single
     * candidate is a base file skips resolution (compaction leaves one
     * version per key); delta files may hold several versions of a key
-    * (MergeApply.mergeMor defers dedup to read), so delta candidates
+    * (MergeApply.mergeAttempt defers dedup to read), so delta candidates
     * always resolve — an exchange over the NEW rows only. */
   def readSince(sinceLsn: Long, asOf: Option[Long] = None): DataFrame =
     readSinceSnap(sinceLsn, asOf.map(snapshotAt).getOrElse(snapshot))
@@ -1102,26 +1085,19 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     else readRawSnap(snap, None).agg(max(col("__lsn"))).head().getLong(0)
 
   /** Files that hold (or may hold) rows which ARRIVED after snapshot
-    * version `sinceV`: exact files (`!rewrite`, stamped `addedV`) contain
-    * only their commit's arrivals; rewrite files (compaction folds, COW
-    * bucket rewrites) and pre-`addedV` manifests contain carried-over
-    * rows too — a superset the consumer must absorb. The pre-`addedV`
-    * case (`addedV < 0`) is BOUNDED: the first DATA-PATH commit after
-    * upgrade (anything through [[commitOnce]] — merge, append, compact,
-    * truncate, addColumn; NOT the metadata-only publishes like
-    * setProperty/linkResource, which bypass stamping) stamps every
-    * unstamped entry as a fold at that commit, so the conservative
-    * every-window inclusion here only lasts until the table is written
-    * once through the commit path. One provable
-    * exclusion: a compaction fold committed at exactly `sinceV + 1` is a
-    * state-neutral rewrite of rows live at `sinceV` — all already inside
-    * the consumer's watermark — so it is skipped outright (the Iceberg
-    * "ignore replace snapshots" rule; window-splitting consumers like the
-    * streaming source end their windows just before a fold precisely so
-    * the next window starts at its parent and hits this case). */
+    * version `sinceV`: a delta or append file (stamped `addedV`) contains
+    * only its commit's arrivals; a fold file (compaction, rebucket)
+    * contains carried-over rows too — a superset the consumer must
+    * absorb. One provable exclusion: a fold committed at exactly
+    * `sinceV + 1` is a state-neutral rewrite of rows live at `sinceV` —
+    * all already inside the consumer's watermark — so it is skipped
+    * outright (the Iceberg "ignore replace snapshots" rule;
+    * window-splitting consumers like the streaming source end their
+    * windows just before a fold precisely so the next window starts at
+    * its parent and hits this case). */
   private[graft] def arrivalFiles(snap: Snapshot, sinceV: Long)
       : Seq[DataFileEntry] =
-    snap.files.filter(f => f.addedV > sinceV || f.addedV < 0)
+    snap.files.filter(_.addedV > sinceV)
       .filterNot(f => f.fold && f.addedV == sinceV + 1)
 
   /** The change events that ARRIVED in commits `(sinceVersion, asOf]` —
@@ -1132,8 +1108,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * already-consumed LSN high-water mark (no `__lsn > cut` range ever
     * covers it), while every arrival lies in exactly one commit.
     *
-    * Scale shape: exact arrival files contribute only their own rows —
-    * O(new data), file-pruned from the manifest alone. Rewrite files in
+    * Scale shape: delta and append files contribute only their own rows —
+    * O(new data), file-pruned from the manifest alone. Fold files in
     * the window contribute their full content: idempotent re-upserts of
     * current winners that LWW-merging consumers absorb (and tombstone
     * winners ride along, so deletes still propagate through a fold). */
@@ -1445,14 +1421,13 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       } finally pool.shutdown()
     }
     snap.lineage.foreach { e =>
-      val p = new Path(new Path(tablePath, "_lineage"),
-        f"v${e.version}%012d.json")
+      val p = new Path(new Path(tablePath, "_lineage"), versionFile(e.version))
       if (!fs.exists(p))
         problems += s"lineage mirror row missing for v${e.version}"
     }
     snap.properties.foreach { case (k, v) if k.startsWith("tag.") =>
       val ok = scala.util.Try(v.toLong).toOption
-        .exists(ver => fs.exists(new Path(snapsPath, f"v$ver%012d.json")))
+        .exists(ver => fs.exists(new Path(snapsPath, versionFile(ver))))
       if (!ok) problems +=
         s"dangling tag ${k.stripPrefix("tag.")} -> v$v (snapshot missing)"
     case _ => ()
@@ -1462,7 +1437,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         case scala.util.Failure(e) =>
           problems += s"unreadable staged intent $id (${e.getMessage})"
         case scala.util.Success(it) =>
-          if (!fs.exists(new Path(snapsPath, f"v${it.baseVersion}%012d.json")))
+          if (!fs.exists(new Path(snapsPath, versionFile(it.baseVersion))))
             problems += s"staged intent $id pins missing base " +
               s"v${it.baseVersion} (audit/staleness checks would fail)"
           val conf = spark.sessionState.newHadoopConf()
@@ -1672,11 +1647,13 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     *    intent's files are live and must stay);
     *  - bucket layout changed since stage (rebucket): conflict — the
     *    staged files' bucket ids are in a dead space; abort and restage;
-    *  - copy-on-write staleness: a staged BUCKET REWRITE built on
-    *    `baseVersion` loses any rows a later commit put in those buckets,
+    *  - staleness: an intent that REPLACES buckets, built on
+    *    `baseVersion`, loses any rows a later commit put in those buckets,
     *    so publish conflicts unless the buckets are byte-identical to the
-    *    stage-time base. MoR delta intents (`replacedBuckets` empty)
-    *    compose by LWW and publish cleanly at any later version. */
+    *    stage-time base. The merge stages only delta intents
+    *    (`replacedBuckets` empty), which compose by LWW and publish
+    *    cleanly at any later version; the check guards bucket-replacing
+    *    intents written through [[stageIntent]]. */
   def publishStaged(wapId: String): Snapshot = {
     val it = stagedIntent(wapId)
     val snap = snapshot
@@ -1836,8 +1813,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
 
   /** Expire old snapshots and delete data files no snapshot references
     * anymore — the maintenance operation every snapshot-log table needs
-    * at scale (COW/compaction replace files in the manifest but leave
-    * the bytes for time travel; unbounded retention is unbounded
+    * at scale (compaction and replace retire files in the manifest but
+    * leave the bytes for time travel; unbounded retention is unbounded
     * storage). Keeps the newest `keepSnapshots` EXISTING versions (plus
     * CURRENT) — retention counts snapshots actually on disk, not version
     * numbers, so sparse version sets after a prior vacuum are honored —
@@ -1850,11 +1827,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   def vacuum(keepSnapshots: Int = 1): (Int, Int) = {
     require(keepSnapshots >= 1, "must keep at least the current snapshot")
     val cur = snapshot
-    val all = fs.listStatus(snapsPath).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
+    val all = versionsOnDisk
     // tagged versions are pinned; a tag whose snapshot file is already
     // gone, or whose value is not a version number (both only reachable
     // by manual edits — fsck flags them), cannot pin anything. A tag
@@ -1864,7 +1837,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       case (k, v) if k.startsWith("tag.") => scala.util.Try(v.toLong).toOption
     }.flatten.toSeq.filter(all.contains)
     // staged intents pin their base version: the audit read
-    // ([[readStaged]]) and the COW staleness check at publish both
+    // ([[readStaged]]) and the staleness check at publish both
     // resolve it — expiring it would wedge a pending stage
     val stagedBases = stagedIds.flatMap(id =>
       scala.util.Try(stagedIntent(id).baseVersion).toOption)
@@ -1885,7 +1858,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     deadManifests.foreach { p =>
       fs.delete(new Path(p), false); manifestCache.remove(p)
     }
-    expire.foreach(v => fs.delete(new Path(snapsPath, f"v$v%012d.json"), false))
+    expire.foreach(v => fs.delete(new Path(snapsPath, versionFile(v)), false))
     (expire.size, dead.size)
   }
 
@@ -1899,10 +1872,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * commit (Iceberg's remove_orphan_files makes the same age argument).
     * Returns directories deleted. */
   def vacuumOrphans(graceMs: Long = 3600000L): Int = {
-    val live: Set[String] = (fs.listStatus(snapsPath).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
+    val live: Set[String] = (versionsOnDisk
       .map(snapshotAt).flatMap(_.files.map(_.path)) ++
       // staged WAP intents reference files no snapshot sees yet — a
       // stage pending audit past the grace window is NOT an orphan
@@ -1945,6 +1915,13 @@ class LakeTable(val spark: SparkSession, val dir: String) {
 }
 
 object LakeTable {
+  /** File name of version `version` in the snapshot chain
+    * (`_snapshots/`) and in the `_lineage` mirror — the one place the
+    * zero-padded naming is spelled, so lexicographic and numeric order
+    * agree. */
+  private[graft] def versionFile(version: Long): String =
+    f"v$version%012d.json"
+
   /** Lineage kept inline in the snapshot; older entries age out (the
     * `_lineage` mirror is the complete log). Small on purpose: every
     * commit reserializes the inline log, so its size is a direct tax on
@@ -2012,7 +1989,7 @@ object LakeTable {
 
   /** Table property: comma-separated user columns to bloom-index in
     * parquet at file-group-rewrite time (compaction / rebucket — NOT the
-    * per-epoch delta/COW writes, which stay lean; the Delta/Iceberg
+    * per-epoch delta writes, which stay lean; the Delta/Iceberg
     * opt-in shape). Point lookups on a hash-distributed key
     * ([[LakeTable.readConv]]) prune to one bucket from the manifest, but
     * min/max row-group stats are useless INSIDE the bucket (a hash key

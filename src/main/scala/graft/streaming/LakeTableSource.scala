@@ -101,11 +101,7 @@ object GraftOffset {
   * skipped outright (state-neutral — everything it carries is already
   * inside the watermark), and the source SPLITS windows just before any
   * deeper fold so the next window starts at the fold's parent and hits
-  * that rule — compaction never re-delivers the table. A copy-on-write
-  * bucket rewrite, by contrast, mixes its commit's new rows into the
-  * rewritten file, so its full content is delivered as idempotent
-  * re-upserts the merge sink absorbs; tables tailed by streams should
-  * run merge-on-read (the default), the mode whose deltas are exact.
+  * that rule — compaction never re-delivers the table.
   *
   * Operational contract (same as Iceberg/Delta streaming reads):
   *  - vacuum retention bounds restartability — a checkpointed end
@@ -272,7 +268,7 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
     files.filter(f => f.fold && f.addedV > sinceV + 1).map(_.addedV)
       .reduceOption(_ min _).foreach(fv => endV = math.min(endV, fv - 1))
     maxRowsPerTrigger.foreach { cap =>
-      val perV = files.filter(f => f.addedV >= 0 && f.addedV <= endV)
+      val perV = files.filter(_.addedV <= endV)
         .groupBy(_.addedV).view.mapValues(_.map(_.rows).sum)
         .toSeq.sortBy(_._1)
       var last = -1L; var tot = 0L; var stopped = false
@@ -488,9 +484,6 @@ class LakeTableSourceProvider extends StreamSourceProvider
     val method = parameters.getOrElse("method", "upsert")
     require(method == "upsert" || method == "insert",
       s"method must be upsert or insert, got '$method'")
-    val mode = parameters.getOrElse("writeMode", "mor")
-    require(mode == "mor" || mode == "cow",
-      s"writeMode must be mor or cow, got '$mode'")
     // writer identity for app-scoped idempotence (Delta's txnAppId): the
     // sink's batch ids start at 0 per checkpoint, so they must live in
     // their own txn slot — in the GLOBAL epoch space they would collide
@@ -534,8 +527,7 @@ class LakeTableSourceProvider extends StreamSourceProvider
     require(Set("fail", "quarantine", "off").contains(invalid),
       s"invalidRows must be fail, quarantine, or off, got '$invalid'")
     new LakeTableSink(sqlContext, d, method,
-      graft.cdc.MergeConfig(writeMode = mode, txnApp = txnApp,
-        invalidRows = invalid))
+      graft.cdc.MergeConfig(txnApp = txnApp, invalidRows = invalid))
   }
 
   override def sourceSchema(sqlContext: SQLContext,

@@ -25,7 +25,7 @@ class FollowSpec extends SparkSpec {
     val maxLsn = full.agg(max("lsn")).as[Long].head()
     val cut = maxLsn / 2
     MergeApply.merge(src, full.filter(col("lsn") <= cut), 0L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
 
     // first round: fresh destination does a full copy
     val r1 = CdcPipeline.followOnce(src, dst)
@@ -40,7 +40,7 @@ class FollowSpec extends SparkSpec {
 
     // new source epoch (with deletes): only the gap flows downstream
     MergeApply.merge(src, full.filter(col("lsn") > cut), 1L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     val srcSnap = src.snapshot
     assert(src.arrivalFiles(srcSnap, r1.toVersion).size < srcSnap.files.size)
     val r2 = CdcPipeline.followOnce(src, dst)
@@ -118,7 +118,7 @@ class FollowSpec extends SparkSpec {
     val src = LakeTable.createTable(spark, tmpDir("flt-src"), Schemas.transcript, 4)
     val dst = LakeTable.createTable(spark, tmpDir("flt-dst"), Schemas.transcript, 4)
     val full = ChangeLogGen.changeLogDF(spark, cfg.copy(nEvents = 3000L))
-    MergeApply.merge(src, full, 0L, MergeConfig(writeMode = "mor"))
+    MergeApply.merge(src, full, 0L, MergeConfig())
     val rounds = CdcPipeline.followAvailable(src, dst,
       transform = _.withColumn("role", upper(col("role"))))
     assert(rounds.size == 1)

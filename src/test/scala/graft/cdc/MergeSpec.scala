@@ -83,41 +83,35 @@ class MergeSpec extends SparkSpec {
     assert(table.read().select("text").as[String].collect().toSeq == Seq("v40"))
   }
 
-  test("merge-on-read and copy-on-write agree with the oracle") {
+  test("merge-on-read agrees with the oracle") {
     val small = cfg.copy(nEvents = 5000L)
     val log = ChangeLogGen.changeLogDF(spark, small)
-    val configs = Seq(
-      "mor" -> MergeConfig(writeMode = "mor"),
-      "cow" -> MergeConfig(writeMode = "cow"))
-    val states = configs.map { case (name, mc) =>
-      val t = LakeTable.createTable(spark, tmpDir(s"lake-$name"),
-        Schemas.transcript, 4)
-      // two batches so every path also exercises cross-batch LWW
-      MergeApply.merge(t, log.limit(3000), 0L, mc)
-      MergeApply.merge(t, log, 1L, mc)
-      finalState(t)
-    }
-    assert(states.distinct.size == 1)
-    assert(states.head == ChangeLogGen.oracleFinalState(small))
+    val t = LakeTable.createTable(spark, tmpDir("lake-mor"),
+      Schemas.transcript, 4)
+    // two batches so the read also exercises cross-batch LWW
+    MergeApply.merge(t, log.limit(3000), 0L)
+    MergeApply.merge(t, log, 1L)
+    assert(t.snapshot.files.exists(_.kind == "delta"))
+    assert(finalState(t) == ChangeLogGen.oracleFinalState(small))
   }
 
-  test("bucket pruning: untouched buckets carry over by reference (cow)") {
+  test("bucket pruning: compacting one bucket carries the others over by reference") {
     val dir = tmpDir("lake-prune")
-    val cow = MergeConfig(writeMode = "cow")
     val table = LakeTable.createTable(spark, dir, Schemas.transcript, nBuckets = 16)
-    MergeApply.merge(table, ChangeLogGen.changeLogDF(spark, cfg), 0L, cow)
+    MergeApply.merge(table, ChangeLogGen.changeLogDF(spark, cfg), 0L)
     val before = table.snapshot.files.map(f => f.path -> f.bucket).toMap
-    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val one = Seq((999999L, "I", "conv_0000000001", 0, "user", "solo", null: String, ts))
-      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-    MergeApply.merge(table, one, 1L, cow)
+    val bucket = before.values.min
+    MergeApply.compactBuckets(table, Set(bucket))
     val after = table.snapshot
-    val touched = after.lineage.last.bucketsTouched.toSet
-    assert(touched.size == 1)
-    val carried = after.files.filter(f => !touched.contains(f.bucket))
-    // carried files are the exact same objects (paths) as before
-    assert(carried.forall(f => before.get(f.path).contains(f.bucket)))
+    assert(after.lineage.last.bucketsTouched == Seq(bucket))
+    // the folded bucket got new files; every other bucket's files are
+    // the exact same objects (paths) as before
+    val (folded, carried) = after.files.partition(_.bucket == bucket)
+    assert(folded.nonEmpty && folded.forall(f => !before.contains(f.path)))
+    assert(carried.map(f => f.path -> f.bucket).toMap ==
+      before.filter(_._2 != bucket))
     assert(carried.nonEmpty)
+    assert(finalState(table) == ChangeLogGen.oracleFinalState(cfg))
   }
 
   test("hot-key skew: one conv holding ~50% of events stays correct " +
@@ -127,23 +121,23 @@ class MergeSpec extends SparkSpec {
     val skewed = GenConfig(nEvents = 20000L, nConvs = 300L, maxTurns = 20,
       hotFraction = 0.5)
     val log = ChangeLogGen.changeLogDF(spark, skewed)
-    // tiny maxRowsPerFile forces the deterministic salt to kick in
-    val mc = MergeConfig(writeMode = "cow", maxRowsPerFile = 500L)
+    // tiny maxRowsPerFile forces compaction to split each bucket's fold
+    val mc = MergeConfig(maxRowsPerFile = 500L)
     val t = LakeTable.createTable(spark, tmpDir("lake-skew"),
       Schemas.transcript, 8)
+    // delta files are per-shuffle-task sized; resolution is
+    // bucket-partitioned
     MergeApply.merge(t, log, 0L, mc)
     assert(finalState(t) == ChangeLogGen.oracleFinalState(skewed))
+    val hot = t.snapshot.files.groupBy(_.bucket)
+      .maxBy(_._2.map(_.rows).sum)._1
+    MergeApply.compactBuckets(t, (0 until 8).toSet, mc)
+    assert(finalState(t) == ChangeLogGen.oracleFinalState(skewed))
     val files = t.snapshot.files
-    val hotBucket = files.groupBy(_.bucket).maxBy(_._2.map(_.rows).sum)
-    // the hot bucket was split across multiple salted files, each bounded
-    assert(hotBucket._2.size > 1)
+    assert(files.forall(_.kind == "base"))
+    // the hot bucket's fold was split across multiple files, each bounded
+    assert(files.count(_.bucket == hot) > 1)
     assert(files.forall(_.rows <= 500L))
-    // MoR mode handles the same skew (delta files are per-shuffle-task
-    // sized; resolution is bucket-partitioned)
-    val tm = LakeTable.createTable(spark, tmpDir("lake-skew-mor"),
-      Schemas.transcript, 8)
-    MergeApply.merge(tm, log, 0L, MergeConfig(writeMode = "mor"))
-    assert(finalState(tm) == ChangeLogGen.oracleFinalState(skewed))
   }
 
   test("lineage rows recorded per commit") {

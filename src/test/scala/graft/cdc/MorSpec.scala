@@ -18,7 +18,7 @@ class MorSpec extends SparkSpec {
   test("MoR epochs write only deltas; compaction folds them and preserves state") {
     val table = LakeTable.createTable(spark, tmpDir("mor"),
       Schemas.transcript, nBuckets = 2)
-    val mc = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 4)
+    val mc = MergeConfig(maxDeltaFilesPerBucket = 4)
     val c = cfg
     val parts = 6
     (0 until parts).foreach { b =>
@@ -41,7 +41,7 @@ class MorSpec extends SparkSpec {
   test("explicit compaction of every bucket yields pure base files, same state") {
     val table = LakeTable.createTable(spark, tmpDir("mor-full"),
       Schemas.transcript, nBuckets = 4)
-    val mc = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100)
+    val mc = MergeConfig(maxDeltaFilesPerBucket = 100)
     val log = ChangeLogGen.changeLogDF(spark, cfg)
     MergeApply.merge(table, log.limit(6000), 0L, mc)
     MergeApply.merge(table, log, 1L, mc)
@@ -62,13 +62,15 @@ class MorSpec extends SparkSpec {
     val base = (0 until 12).map(i =>
       (i.toLong, "I", s"conv-$i", 0, "user", s"text-$i", null: String, ts))
     MergeApply.merge(table, base.toDF(
-      "lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"),
-      0L, MergeConfig(writeMode = "cow"))
+      "lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"), 0L)
+    // fold the seed to base files
+    MergeApply.compactBuckets(table, (0 until 4).toSet)
+    assert(table.snapshot.files.forall(_.kind == "base"))
     // one MoR delta updating a single conversation -> one delta bucket
     val upd = Seq((100L, "U", "conv-3", 0, "user", "updated", null: String, ts))
     MergeApply.merge(table, upd.toDF(
       "lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"),
-      1L, MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100))
+      1L, MergeConfig(maxDeltaFilesPerBucket = 100))
     val deltaBuckets =
       table.snapshot.files.filter(_.kind == "delta").map(_.bucket).toSet
     assert(deltaBuckets.size == 1)
@@ -89,7 +91,7 @@ class MorSpec extends SparkSpec {
   test("time travel: pre-compaction snapshots remain readable") {
     val table = LakeTable.createTable(spark, tmpDir("mor-tt"),
       Schemas.transcript, nBuckets = 2)
-    val mc = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100)
+    val mc = MergeConfig(maxDeltaFilesPerBucket = 100)
     val log = ChangeLogGen.changeLogDF(spark, cfg)
     MergeApply.merge(table, log.limit(4000), 0L, mc)
     val v1 = table.snapshot.version

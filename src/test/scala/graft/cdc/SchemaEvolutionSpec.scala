@@ -59,7 +59,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   test("compaction folds MoR deltas written under different schema versions") {
     val table = LakeTable.createTable(spark, tmpDir("evo-compact"),
       Schemas.transcript, nBuckets = 2)
-    val mor = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100)
+    val mor = MergeConfig(maxDeltaFilesPerBucket = 100)
     // epoch 0 under schema v0; registry event + more deltas under v1
     MergeApply.merge(table, v2(Seq(
       (1L, "I", "c1", 0, "old-schema row", "user", null))), 0L, mor)
@@ -150,7 +150,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   test("v2 batch without registry rows pays no schema-detection job") {
     val table = LakeTable.createTable(spark, tmpDir("evo-nojob"),
       Schemas.transcript, nBuckets = 2)
-    val mor = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100)
+    val mor = MergeConfig(maxDeltaFilesPerBucket = 100)
     MergeApply.merge(table, v2(Seq(
       (1L, "I", "c1", 0, "a", "user", null))), 0L, mor)
     val jobs = new java.util.concurrent.atomic.AtomicInteger

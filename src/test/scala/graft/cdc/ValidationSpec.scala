@@ -62,20 +62,6 @@ class ValidationSpec extends SparkSpec {
     assert(r.applied)
   }
 
-  test("fail aborts the COW path too, before its write") {
-    val dir = tmpDir("val-fail-cow")
-    val table = LakeTable.createTable(spark, dir, Schemas.transcript,
-      nBuckets = 4)
-    val cow = MergeConfig(writeMode = "cow")
-    MergeApply.merge(table, ChangeLogGen.changeLogDF(spark, cfg), 0L, cow)
-    val v0 = table.snapshot.version
-    intercept[PoisonEventException] {
-      MergeApply.merge(table, poisoned(2), 1L, cow)
-    }
-    assert(table.snapshot.version == v0)
-    assert(table.vacuumOrphans(graceMs = 0L) == 0)
-  }
-
   test("quarantine: invalid events dead-letter with reasons; the rest applies") {
     val dir = tmpDir("val-quar")
     val table = LakeTable.createTable(spark, dir, Schemas.transcript,

@@ -168,8 +168,12 @@ class BatchRelationSpec extends SparkSpec {
       spark.read.format("graft-table").option("meta", "tags")
         .option("at", "r1").load(dir).count()
     }
-    assert(spark.read.format("graft-table").option("meta", "files")
-      .option("at", "r1").load(dir).count() == t.snapshotAt(tagged).files.size)
+    val pinned = spark.read.format("graft-table").option("meta", "files")
+      .option("at", "r1").load(dir)
+    assert(pinned.count() == t.snapshotAt(tagged).files.size)
+    assert(pinned.columns.toSeq == Seq("path", "bucket", "rows", "kind",
+      "schema_version", "min_lsn", "max_lsn", "added_v", "fold", "min_ts",
+      "max_ts", "ts_col"))
   }
 
   test("plain SQL over a graft-table view, with key pushdown") {
@@ -443,10 +447,17 @@ class BatchRelationSpec extends SparkSpec {
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
     // a misspelled KEY must error, not silently apply the default
     val e = intercept[IllegalArgumentException] {
-      rows.write.format("graft-table").option("writeMod", "cow")
+      rows.write.format("graft-table").option("invalidRow", "off")
         .mode(SaveMode.Append).save(dir)
     }
-    assert(e.getMessage.toLowerCase.contains("writemod"))
+    assert(e.getMessage.toLowerCase.contains("invalidrow"))
+    // so must a retired one: there is one write path, no write mode
+    val e1 = intercept[IllegalArgumentException] {
+      rows.write.format("graft-table").option("writeMode", "cow")
+        .mode(SaveMode.Append).save(dir)
+    }
+    assert(e1.getMessage.toLowerCase.contains("unknown graft-table write option"))
+    assert(e1.getMessage.toLowerCase.contains("writemode"))
     val e2 = intercept[IllegalArgumentException] {
       rows.write.format("graft-table").option("mergeShema", "true")
         .mode(SaveMode.Append).save(dir)
@@ -457,7 +468,7 @@ class BatchRelationSpec extends SparkSpec {
     // nothing was created by the failed writes
     assert(!LakeTable.load(spark, dir).exists)
     // correctly-spelled options still work (case-insensitive match)
-    rows.write.format("graft-table").option("writeMode", "cow")
+    rows.write.format("graft-table").option("invalidRows", "fail")
       .mode(SaveMode.Append).save(dir)
     assert(LakeTable.load(spark, dir).read().count() == 1)
   }

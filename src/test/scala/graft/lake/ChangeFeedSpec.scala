@@ -66,7 +66,7 @@ class ChangeFeedSpec extends SparkSpec {
   test("applying the feed to the from-state reproduces the to-state (MoR both sides)") {
     val t = LakeTable.createTable(spark, tmpDir("cf-replay"),
       Schemas.transcript, 4)
-    val mor = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100)
+    val mor = MergeConfig(maxDeltaFilesPerBucket = 100)
     val full = ChangeLogGen.changeLogDF(spark,
       GenConfig(nEvents = 6000L, nConvs = 80L, maxTurns = 8)).cache()
     val maxLsn = full.agg(max("lsn")).as[Long].head()

@@ -10,7 +10,7 @@ import graft.model.Schemas
 
 /** Multi-writer snapshot isolation (the Iceberg commit model): losing the
   * version-file race rebases metadata-only commits onto the winner; a
-  * commit that rewrote buckets a concurrent writer touched — or raced a
+  * commit that replaced buckets a concurrent writer touched — or raced a
   * schema change — conflicts instead of silently losing rows; an epoch
   * committed by a concurrent writer supersedes the in-flight duplicate
   * (exactly-once across WRITERS, not just sequential replays). */
@@ -19,8 +19,8 @@ class ConcurrencySpec extends SparkSpec {
   private def fresh(name: String, nBuckets: Int = 4): LakeTable =
     LakeTable.createTable(spark, tmpDir(name), Schemas.transcript, nBuckets)
 
-  test("copy-on-write rewrites of the same bucket conflict, winner intact") {
-    val t = fresh("occ-cow")
+  test("bucket-replacing commits of the same bucket conflict, winner intact") {
+    val t = fresh("occ-replace")
     t.commit(t.snapshot, Seq(DataFileEntry("seed", 0, 1L, 0)), Set.empty, Some(0L), None)
     val base = t.snapshot // both writers plan a rewrite of bucket 0 from v1
     t.commit(base, Seq(DataFileEntry("a1", 0, 1L, 0)), Set(0), Some(1L), None)
@@ -108,7 +108,7 @@ class ConcurrencySpec extends SparkSpec {
     LakeTable.createTable(spark, dir, Schemas.transcript, 4)
     // no inline compaction: keep every race on the pure-delta-append path,
     // which must ALWAYS rebase cleanly (replacedBuckets is empty)
-    val cfg = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 1000)
+    val cfg = MergeConfig(maxDeltaFilesPerBucket = 1000)
     val epochsPer = 6
     val keys = (0 until 16).map(i => s"conv_$i")
     def events(epoch: Int): Seq[(Long, String, String, Int, String)] =
@@ -149,13 +149,12 @@ class ConcurrencySpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("two COW writers contend on the same buckets: conflicts recompute, LWW exact") {
-    val dir = tmpDir("occ-cow-writers")
+  test("two replace writers contend on the same buckets: conflicts recompute, last batch wins") {
+    val dir = tmpDir("occ-replace-writers")
     LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-    // copy-on-write rewrites the touched buckets, so every concurrent
-    // epoch pair collides; the loser must RECOMPUTE from the winner's
-    // snapshot (merge's conflict retry), never silently drop rows
-    val cfg = MergeConfig(writeMode = "cow")
+    // a replace retires every bucket, so every concurrent epoch pair
+    // collides; the loser must RECOMPUTE from the winner's snapshot
+    // (runEpoch's conflict retry), never rebase onto rows it would drop
     val epochsPer = 4
     val keys = (0 until 16).map(i => s"conv_$i") // 16 keys over all 4 buckets
     def events(epoch: Int): Seq[(Long, String, String, Int, String)] =
@@ -171,7 +170,7 @@ class ConcurrencySpec extends SparkSpec {
           start.await()
           (0 until epochsPer).map { i =>
             val e = i * 2 + w
-            MergeApply.merge(handle, batch(events(e)), e, cfg).applied
+            MergeApply.replace(handle, batch(events(e)), e).applied
           }
         }
       })
@@ -181,19 +180,21 @@ class ConcurrencySpec extends SparkSpec {
     pool.shutdown()
     assert(applied.flatten.forall(identity))
     val t = LakeTable.load(spark, dir)
-    assert(t.snapshot.epochWatermark == epochsPer * 2 - 1L)
+    assert(t.snapshot.epochWatermark == epochsPer * 2 - 1L) // contiguous
+    // the table holds exactly ONE writer's last batch — whichever replace
+    // committed last — never a mix of the two
     val got = t.read().select("conv_id", "turn_idx", "text")
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
-    val want = keys.zipWithIndex.map { case (k, i) =>
-      (k, i % 4) -> s"e${epochsPer * 2 - 1} k$k"
+    def lastBatchOf(w: Int) = keys.zipWithIndex.map { case (k, i) =>
+      (k, i % 4) -> s"e${(epochsPer - 1) * 2 + w} k$k"
     }.toMap
-    assert(got == want)
+    assert(got == lastBatchOf(0) || got == lastBatchOf(1), got)
   }
 
   test("reader concurrent with a writer sees only whole commits (atomic visibility)") {
     val dir = tmpDir("occ-reader")
     LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-    val cfg = MergeConfig(writeMode = "mor")
+    val cfg = MergeConfig()
     val nEpochs = 12
     val keys = (0 until 16).map(i => s"conv_$i")
     // every epoch rewrites ALL keys with its own tag, so a consistent
@@ -250,8 +251,8 @@ class ConcurrencySpec extends SparkSpec {
       pool.submit(new java.util.concurrent.Callable[Seq[Boolean]] {
         def call(): Seq[Boolean] = {
           val handle = LakeTable.load(spark, dir)
-          val cfg = MergeConfig(writeMode = "mor",
-            maxDeltaFilesPerBucket = 1000, txnApp = Some(s"app$app"))
+          val cfg = MergeConfig(maxDeltaFilesPerBucket = 1000,
+            txnApp = Some(s"app$app"))
           start.await()
           (0 until epochsPer).map(i =>
             MergeApply.merge(handle, batch(events(app, i)), i, cfg).applied)
@@ -281,7 +282,7 @@ class ConcurrencySpec extends SparkSpec {
   test("two writers race the SAME epoch: exactly one applies, state unduplicated") {
     val dir = tmpDir("occ-same-epoch")
     LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-    val cfg = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 1000)
+    val cfg = MergeConfig(maxDeltaFilesPerBucket = 1000)
     val b = batch((0 until 8).map(i => (i.toLong, "U", s"c$i", 0, s"t$i")))
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)

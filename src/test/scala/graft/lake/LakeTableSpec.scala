@@ -134,11 +134,12 @@ class LakeTableSpec extends SparkSpec {
   test("vacuum expires old snapshots and deletes unreferenced files") {
     val dir = tmpDir("lt-vacuum")
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-    val cow = MergeConfig(writeMode = "cow")
-    // 3 COW merges over the same keys -> each replaces the previous files
+    // 3 merges over the same keys, each compacted -> each fold replaces
+    // the previous files
     (0 to 2).foreach { e =>
       MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg).limit(2000),
-        e.toLong, cow)
+        e.toLong)
+      MergeApply.compactBuckets(t, (0 until 4).toSet)
     }
     val preCount = t.read().count()
     val vOld = t.snapshot.version - 2
@@ -251,11 +252,11 @@ class LakeTableSpec extends SparkSpec {
     val (cut1, cut2) = (maxLsn / 3, 2 * maxLsn / 3)
     // three epochs with disjoint LSN ranges -> disjoint footer ranges
     MergeApply.merge(t, full.filter(col("lsn") <= cut1), 0L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     MergeApply.merge(t, full.filter(col("lsn") > cut1 && col("lsn") <= cut2),
-      1L, MergeConfig(writeMode = "mor"))
+      1L, MergeConfig())
     MergeApply.merge(t, full.filter(col("lsn") > cut2), 2L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
 
     def winners(since: Long): Set[(String, Int, Long, String, String)] = {
       val w = org.apache.spark.sql.expressions.Window
@@ -300,28 +301,32 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("lineage carries reconciling per-partition rows in both write modes") {
-    Seq("mor", "cow").foreach { mode =>
-      val dir = tmpDir(s"lt-partlineage-$mode")
-      val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-      MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg).limit(2000), 0L,
-        MergeConfig(writeMode = mode))
-      val e = t.lineage.filter(_.epochId == 0L).head
-      assert(e.partitions.nonEmpty)
-      // per-partition rows sum to the commit's applied rows; every
-      // partition's LSN range nests inside the commit's range
-      assert(e.partitions.map(_.rows).sum == e.rowsApplied)
-      assert(e.partitions.forall(p =>
-        p.minLsn >= e.minLsn && p.maxLsn <= e.maxLsn && p.minLsn <= p.maxLsn))
-      assert(e.partitions.map(_.bucket) == e.partitions.map(_.bucket).sorted)
-      // manifest entries carry footer-derived LSN ranges for file skipping
-      assert(t.snapshot.files.forall(f => f.minLsn >= 0 && f.maxLsn >= f.minLsn))
-      // the breakdown is queryable from the mirror table
-      val exploded = t.lineageTable
-        .select(col("epochId"), explode(col("partitions")).as("p"))
-        .select(col("p.bucket"), col("p.rows"))
-        .collect()
-      assert(exploded.map(_.getAs[Long]("rows")).sum == e.rowsApplied)
-    }
+    val dir = tmpDir("lt-partlineage")
+    val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4)
+    MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg).limit(2000), 0L)
+    // the merge writes delta files; compaction rewrites them as base files
+    MergeApply.compactBuckets(t, (0 until 4).toSet)
+    assert(t.snapshot.files.forall(_.kind == "base"))
+    val e = t.lineage.filter(_.epochId == 0L).head
+    assert(e.partitions.nonEmpty)
+    // per-partition rows sum to the commit's applied rows; every
+    // partition's LSN range nests inside the commit's range
+    assert(e.partitions.map(_.rows).sum == e.rowsApplied)
+    assert(e.partitions.forall(p =>
+      p.minLsn >= e.minLsn && p.maxLsn <= e.maxLsn && p.minLsn <= p.maxLsn))
+    assert(e.partitions.map(_.bucket) == e.partitions.map(_.bucket).sorted)
+    // manifest entries of both kinds carry footer-derived LSN ranges for
+    // file skipping
+    assert(t.snapshot.files.forall(f => f.minLsn >= 0 && f.maxLsn >= f.minLsn))
+    assert(t.snapshotAt(e.version).files.forall(f =>
+      f.kind == "delta" && f.minLsn >= 0 && f.maxLsn >= f.minLsn))
+    // the breakdown is queryable from the mirror table
+    val exploded = t.lineageTable
+      .where(col("epochId") === 0L)
+      .select(col("epochId"), explode(col("partitions")).as("p"))
+      .select(col("p.bucket"), col("p.rows"))
+      .collect()
+    assert(exploded.map(_.getAs[Long]("rows")).sum == e.rowsApplied)
   }
 
   test("bucketOf is the exact driver-side twin of bucketExpr") {
@@ -343,8 +348,7 @@ class LakeTableSpec extends SparkSpec {
       (8000001L, "U", someConv, 0, "user", "updated!", null: String, ts),
       (8000002L, "D", someConv, 1, "user", "", null: String, ts))
       .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-    MergeApply.merge(t, b, 1L, MergeConfig(writeMode = "mor",
-      maxDeltaFilesPerBucket = 1000))
+    MergeApply.merge(t, b, 1L, MergeConfig(maxDeltaFilesPerBucket = 1000))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("conv_id", "turn_idx", "text").collect()
         .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet

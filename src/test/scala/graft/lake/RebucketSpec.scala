@@ -32,11 +32,11 @@ class RebucketSpec extends SparkSpec {
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, nBuckets)
     MergeApply.merge(t, ev((1 to 12).map(i =>
       (i.toLong, "U", s"c${i % 5}", i / 5, s"v$i"))), 0L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     MergeApply.merge(t, ev(Seq(
       (20L, "U", "c1", 0, "updated"),
       (21L, "D", "c2", 0, ""), // tombstone with the highest LSN so far
-      (22L, "U", "fresh", 0, "new"))), 1L, MergeConfig(writeMode = "mor"))
+      (22L, "U", "fresh", 0, "new"))), 1L, MergeConfig())
     t
   }
 
@@ -47,7 +47,7 @@ class RebucketSpec extends SparkSpec {
     val snap = MergeApply.rebucket(t, 8)
     assert(snap.nBuckets == 8 && t.snapshot.nBuckets == 8)
     assert(state(t) == before)
-    assert(snap.files.forall(f => f.fold && f.rewrite),
+    assert(snap.files.forall(_.fold),
       "rebucket output must be marked a pure rewrite")
     assert(snap.files.forall(f => f.bucket >= 0 && f.bucket < 8))
     // every row actually lives in its new-space bucket (readConv prunes
@@ -66,7 +66,7 @@ class RebucketSpec extends SparkSpec {
     MergeApply.rebucket(t, 8)
     // c2@0 was deleted at LSN 21; a late arrival at LSN 15 must lose
     MergeApply.merge(t, ev(Seq((15L, "U", "c2", 0, "late-loser"))), 2L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     assert(!state(t).exists(r => r._1 == "c2" && r._2 == 0),
       "rebucket dropped the tombstone — late event resurrected the key")
   }
@@ -95,7 +95,7 @@ class RebucketSpec extends SparkSpec {
     }
     // and merges computed from the CURRENT snapshot keep working
     MergeApply.merge(t, ev(Seq((30L, "U", "post", 0, "ok"))), 2L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     assert(state(t).exists(_._1 == "post"))
   }
 
@@ -104,7 +104,7 @@ class RebucketSpec extends SparkSpec {
     val v1 = t.snapshot.version
     MergeApply.rebucket(t, 8)
     MergeApply.merge(t, ev(Seq((40L, "U", "c1", 0, "post-rebucket"))), 2L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     val feed = t.changeFeed(v1)
       .select("conv_id", "turn_idx", "_change_type").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
@@ -139,7 +139,7 @@ class RebucketSpec extends SparkSpec {
     assert(afterRebucket.map(_.rowsApplied).sum == 0,
       s"rebucket re-delivered rows through the stream: $afterRebucket")
     MergeApply.merge(src, ev(Seq((60L, "U", "s", 0, "post"))), 2L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     val tail = drain()
     assert(tail.map(_.rowsApplied).sum == 1)
     assert(state(dst) == state(src))
@@ -155,7 +155,7 @@ class RebucketSpec extends SparkSpec {
     graft.cdc.CdcPipeline.followOnce(src, dst)
     assert(state(dst) == state(src))
     MergeApply.merge(src, ev(Seq((50L, "U", "tail", 0, "after"))), 2L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     val r = graft.cdc.CdcPipeline.followOnce(src, dst)
     assert(r.applied && state(dst) == state(src))
     assert(dst.snapshot.nBuckets == 2, "follow must not rebucket the mirror")

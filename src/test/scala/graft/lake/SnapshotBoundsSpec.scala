@@ -51,51 +51,32 @@ class SnapshotBoundsSpec extends SparkSpec {
       s"snapshot not flat: $sizeAt260 -> $sizeNow bytes over 40 commits")
   }
 
-  test("pre-addedV manifest entries are stamped once, not re-delivered forever") {
-    // upgrade path: a table whose manifests predate the addedV field
-    // reads every entry as addedV = -1 — conservatively in EVERY change
-    // window. The first commit must stamp them as a fold (content = rows
-    // live at the parent), force manifest consolidation so the stamp
-    // survives reload, and thereafter windows are O(new data) again.
+  test("pre-addedV manifest entries are refused: recreate the table") {
+    // a manifest entry without an arrival stamp cannot be placed in any
+    // change window; the snapshot read refuses it instead of guessing
     val dir = tmpDir("pre-addedv")
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, 2)
     val cfg = GenConfig(nEvents = 40L, nConvs = 8L, seed = 7L)
     val log = ChangeLogGen.changeLogDF(spark, cfg)
     MergeApply.merge(t, log.limit(20), 0L)
     MergeApply.merge(t, log, 1L)
+    assert(t.snapshot.files.forall(_.addedV > 0))
     val vBefore = t.snapshot.version
-    val stateBefore = t.read().collect().map(_.toString).sorted.toSeq
-    // simulate the pre-upgrade era: strip the stamps from every manifest
+    // simulate the pre-addedV layout: strip the stamps from every manifest
     val mdir = new java.io.File(s"$dir/_snapshots/manifests")
     mdir.listFiles().filter(_.getName.endsWith(".json")).foreach { f =>
       val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       java.nio.file.Files.write(f.toPath,
-        txt.replaceAll("\"addedV\":\\d+", "\"addedV\":-1").getBytes("UTF-8"))
+        txt.replaceAll(",?\"addedV\":\\d+", "").getBytes("UTF-8"))
       // drop the LocalFileSystem checksum sidecar the raw edit invalidated
       new java.io.File(mdir, s".${f.getName}.crc").delete()
     }
     val t2 = LakeTable.load(spark, dir) // fresh manifest cache
-    assert(t2.snapshot.files.forall(_.addedV < 0))
-    // the pathology this guards: unstamped entries sit in EVERY window
-    assert(t2.arrivalsSince(vBefore).count() > 0)
-    // one ordinary commit stamps the carried set and consolidates
-    val epoch2 = log.limit(20)
-    MergeApply.merge(t2, epoch2, 2L)
-    val t3 = LakeTable.load(spark, dir)
-    assert(t3.snapshot.files.forall(_.addedV >= 0),
-      "stamp did not survive reload — consolidation missing")
-    val vAfter = t3.snapshot.version
-    // consumer AT the stamping commit's parent: the fold rule skips the
-    // stamped carriers outright — the window holds only epoch 2's own
-    // delta, not the whole table
-    val w = t3.arrivalsSince(vAfter - 1).count()
-    assert(w > 0 && w <= epoch2.count(),
-      s"stamped carriers leaked into the parent window ($w rows)")
-    // and once consumed, windows are empty again — no forever re-delivery
-    assert(t3.arrivalsSince(vAfter).count() == 0)
-    // a consumer further behind absorbs the carriers once as idempotent
-    // re-upserts; table state is untouched
-    assert(t3.read().collect().map(_.toString).sorted.toSeq == stateBefore)
+    val e = intercept[IllegalStateException](t2.snapshot)
+    assert(e.getMessage.contains("recreate the table"))
+    // no write starts from the refused read: nothing is restamped
+    intercept[IllegalStateException](MergeApply.merge(t2, log.limit(20), 2L))
+    assert(t2.versionsOnDisk.last == vBefore)
   }
 
   test("out-of-order epochs park in the recent-set until contiguity absorbs them") {

@@ -16,7 +16,7 @@ class TableMainSpec extends SparkSpec {
   /** A table with MoR deltas in some buckets, via two merge epochs. */
   private def morTable(dir: String): LakeTable = {
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, nBuckets = 4)
-    val mc = MergeConfig(writeMode = "mor", maxDeltaFilesPerBucket = 100)
+    val mc = MergeConfig(maxDeltaFilesPerBucket = 100)
     val log = ChangeLogGen.changeLogDF(spark, cfg)
     MergeApply.merge(t, log.limit(2500), 0L, mc)
     MergeApply.merge(t, log, 1L, mc)

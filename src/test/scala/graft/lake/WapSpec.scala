@@ -133,22 +133,28 @@ class WapSpec extends SparkSpec {
     assert(t.fsck().isEmpty)
   }
 
-  test("COW staged rewrite conflicts when its buckets moved since stage") {
-    val t = LakeTable.createTable(spark, tmpDir("wap-cowstale"),
+  test("a staged bucket replacement conflicts when its buckets moved since stage") {
+    val t = LakeTable.createTable(spark, tmpDir("wap-replstale"),
       Schemas.transcript, nBuckets = 2)
-    val cow = MergeConfig(writeMode = "cow")
-    MergeApply.merge(t, slice(cfg, 0L, 2000L), 0L, cow)
-    val r = MergeApply.merge(t, slice(cfg, 2000L, 4000L), 1L,
-      cow.copy(wapId = Some("stale")))
-    assert(r.staged)
-    // another writer rewrites the same buckets before publish
-    MergeApply.merge(t, slice(cfg, 4000L, 6000L), 2L, cow)
+    MergeApply.merge(t, slice(cfg, 0L, 2000L), 0L)
+    // an intent that retires both buckets, parked against the current
+    // snapshot (the merge itself only stages deltas)
+    def replacing(id: String, base: Snapshot) =
+      StagedIntent(id, base.version, base.nBuckets, files = Nil,
+        replacedBuckets = Seq(0, 1), epochId = Some(1L))
+    t.stageIntent(replacing("stale", t.snapshot))
+    // another writer lands rows in those buckets before publish
+    MergeApply.merge(t, slice(cfg, 2000L, 4000L), 2L)
+    val v = t.snapshot.version
     intercept[CommitConflictException](t.publishStaged("stale"))
+    assert(t.snapshot.version == v && !t.snapshot.isCommitted(1L))
     t.abortStaged("stale")
-    // MoR deltas in the SAME situation publish fine (composition test
-    // above); COW must restage from current
-    val r2 = MergeApply.merge(t, slice(cfg, 2000L, 4000L), 1L, cow)
-    assert(r2.applied)
+    assert(t.stagedIds.isEmpty)
+    // restaged from current, the same replacement publishes
+    t.stageIntent(replacing("fresh", t.snapshot))
+    t.publishStaged("fresh")
+    assert(t.snapshot.isCommitted(1L))
+    assert(t.read().count() == 0)
   }
 
   test("bucket-layout change between stage and publish conflicts") {

@@ -429,7 +429,7 @@ class LakeTableSourceSpec extends SparkSpec {
     val ckpt = tmpDir("lts-fold-ckpt")
     MergeApply.merge(src, batch((1 to 8).map(i =>
       (i.toLong, "U", s"k$i", 0, s"v$i"))), 0L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     drain(srcDir, dst, ckpt)
     assert(state(dst).size == 8)
 
@@ -443,7 +443,7 @@ class LakeTableSourceSpec extends SparkSpec {
     // split the window before the fold — total delivered rows equal the
     // new batch alone, never the folded table
     MergeApply.merge(src, batch(Seq((9L, "U", "k9", 0, "v9"))), 1L,
-      MergeConfig(writeMode = "mor"))
+      MergeConfig())
     MergeApply.compactBuckets(src, src.snapshot.files.map(_.bucket).toSet)
     val catchUp = drain(srcDir, dst, ckpt)
     assert(catchUp.map(_.rowsApplied).sum == 1,
