@@ -38,18 +38,14 @@ final class PoisonEventException(val count: Long, val epochId: Long)
       "to dead-letter them")
 
 final case class MergeConfig(
-    /** Target max rows per base file written by compaction and rebucket;
-      * a bucket whose fold exceeds this is split across several files
-      * (skew defense). */
+    /** Max rows per base file written by compaction and rebucket. One
+      * task writes each bucket, so a skewed (hot-key) bucket is still
+      * one task's work, but it lands in several files capped at this
+      * many rows (Spark's `maxRecordsPerFile`). */
     maxRowsPerFile: Long = 4L * 1000 * 1000,
     /** Compaction trigger: max files per bucket before that bucket is
       * folded back to base files. */
     maxDeltaFilesPerBucket: Int = 8,
-    /** Concurrent per-bucket compaction jobs (driver-pool width). Size to
-      * keep the cluster's task slots fed: each job is one bucket's
-      * bounded fold, so a 1000-executor deployment compacting thousands
-      * of buckets wants this well above the local default. */
-    compactParallelism: Int = 8,
     /** Duplicate-INPUT suppression (the reference's checksum-gated
       * re-runs, reference: engine/wprdc_etl/pipeline/connectors.py:73-93,
       * pipeline.py:338-341): when on, each batch's content fingerprint
@@ -118,8 +114,9 @@ final case class MergeConfig(
   *     table size (the Hudi MoR / Iceberg v2 shape for update-heavy
   *     CDC). Readers LWW-resolve a bucket's files; buckets
   *     past [[MergeConfig.maxDeltaFilesPerBucket]] are folded back to
-  *     base files by per-bucket compaction. Tombstones (`D`) are kept,
-  *     so a late lower-LSN update can never resurrect a delete.
+  *     base files by one bucket-aligned compaction job. Tombstones (`D`)
+  *     are kept, so a late lower-LSN update can never resurrect a
+  *     delete.
   *  2. **One outcome path**: every epoch — applied, zero-output,
   *     checksum-skipped, audit-quarantined — and every compaction or
   *     rebucket records its lineage row and result through [[outcome]],
@@ -661,8 +658,7 @@ object MergeApply {
     // epoch's dominant stage; identity alignment keeps every write task
     // equally loaded and each task writes exactly one __bucket=N dir.
     val deltaFiles = writeBuckets(table,
-      observed.repartition(snap.nBuckets, col("conv_id")), salt = 1, snap,
-      prePartitioned = true, kind = "delta")
+      observed.repartition(snap.nBuckets, col("conv_id")), snap, "delta")
     lap("mor-delta-write")
 
     // Settle what the write observed, before anything commits.
@@ -726,37 +722,34 @@ object MergeApply {
     Right(res.copy(version = version, durationMs = elapsedMs(t0)))
   }
 
-  /** The per-key LWW fold compaction and rebucket share: one row per
-    * (conv_id, turn_idx), the max-`__lsn` version of all its columns
-    * (tombstones included). A hash aggregate — no window sort. */
-  private def foldWinners(raw: DataFrame): DataFrame =
-    raw.groupBy(KEY.map(col): _*)
-      .agg(max_by(struct(raw.columns.toSeq.map(col): _*), col("__lsn"))
-        .as("__r"))
-      .select(col("__r.*"))
-
-  /** Fold all files of the given buckets back to base files (per-bucket
+  /** Fold all files of the given buckets back to base files (per-key
     * LWW; tombstones are retained — a tombstone may still out-LSN a late
     * update from a not-yet-seen epoch). Commits its own snapshot (no
     * epoch id: compaction is state-neutral).
     *
-    * Plan shape: one INDEPENDENT job per bucket, submitted concurrently
-    * from a bounded driver pool. A bucket's rows live only in that
-    * bucket's files, so folding it needs no data from anywhere else — a
-    * global scan + repartition(__bucket) + window (the naive plan) would
-    * shuffle the union of all buckets through one exchange and, at low
-    * parallelism, push multi-GB partitions into external sort (measured:
-    * the global fold cost 2-3x the whole streaming replay at 1-4 cores).
-    * Per-bucket jobs keep each unit at ~bucket size (bounded, in-memory
-    * hash agg), overlap scheduling latency across the pool, and write
-    * straight into the `__bucket=N` layout with no exchange wider than
-    * one bucket. This mirrors how production lakehouses compact: file
-    * groups rewritten independently, fanned out over the cluster.
-    * A/B'd against a single-job fold with an explicit
-    * one-partition-per-bucket floor (bounded sort, same memory story):
-    * per-bucket jobs win at every core count on this box — compaction
-    * seconds 54/17.5/13.2 vs 64/25.7/13.5 at 1/4/8 cores, 8M events —
-    * because the hash-agg fold skips the window sort entirely. */
+    * Plan shape: ONE Spark job however many buckets are selected — scan
+    * the selected files, one bucket-aligned exchange and the read path's
+    * LWW window ([[LakeTable.lwwResolve]]: shuffle partition i holds
+    * exactly bucket i, so a key group never leaves its bucket; the
+    * partitions of unselected buckets are empty), then one partitioned
+    * write in which each task writes its own `__bucket=N` dir, capped at
+    * [[MergeConfig.maxRowsPerFile]] rows per file. Measured against one
+    * job per bucket from an 8-wide driver pool (which paid 32 jobs'
+    * scheduling and shuffled each bucket twice: its fold's exchange,
+    * then a file-count repartition), on a 32-bucket table of 3 MoR
+    * epochs (96 delta files) on a 4-core host, `compactBuckets` call
+    * time over all buckets: 180k events 1.3-1.7 s against 5.2 s, 1.8M
+    * events 4.2 s against 7.8 s (medians of 5); 8M events 18.2 s against
+    * 26.0 s at 4 cores and 51.3-59.0 s against 65.7-69.2 s at 1 core
+    * (medians of 3; two alternations at 1 core). Scale limit: one task
+    * sorts and writes a whole bucket, so the measured range ends at
+    * ~250k events per bucket (8M events, 32 buckets); past that, raise
+    * the bucket count ([[rebucket]]). A fold of 1 bucket of 32 is slower
+    * than the pool's single small job (0.60-0.72 s against 0.44-0.48 s,
+    * medians of 5, two alternations): the 31 empty partitions still run
+    * write tasks. A failing task fails the one job, so nothing keeps
+    * writing after the call throws; the uncommitted dir is an orphan
+    * for `vacuumOrphans`. */
   def compactBuckets(table: LakeTable, buckets: Set[Int],
       cfg: MergeConfig = MergeConfig(),
       /** Fold against THIS snapshot instead of re-reading CURRENT —
@@ -778,38 +771,14 @@ object MergeApply {
       purgeRewrite: Option[DataFrame => DataFrame] = None): Snapshot = {
     val t0 = System.nanoTime()
     val snap = at.getOrElse(table.snapshot)
-    val spark = table.spark
-    val outDir = s"${table.dir}/data/compact-${snap.version + 1}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val perBucket: Map[Int, Seq[DataFileEntry]] = snap.files
-      .filter(f => buckets.contains(f.bucket)).groupBy(_.bucket)
-    if (perBucket.isEmpty) return snap
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(math.max(1, cfg.compactParallelism), perBucket.size))
-    try {
-      perBucket.toSeq.map { case (b, fs) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val raw = table.readFiles(snap, fs)
-            val folded = foldWinners(purgeRewrite.fold(raw)(f => f(raw)))
-            val preRows = fs.map(_.rows).sum // upper bound on folded rows
-            val nFiles = math.max(1L,
-              (preRows + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
-            withBloom(folded.repartition(nFiles).write, snap)
-              .mode("overwrite").parquet(s"$outDir/__bucket=$b")
-          }
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
-    val files = listDataFiles(spark, outDir, snap.currentSchemaVersion,
-      "base", tsCol = snap.eventTimeColumn)
-      // folds carry ONLY old rows into new files (state-neutral rewrite);
-      // fold=true lets arrival windows starting at this commit's parent
-      // skip them outright instead of re-upserting the whole bucket.
-      // rows == 0 happens only under purgeRows (a bucket fully erased):
-      // retire the bucket with no replacement instead of an empty file
+    val picked = snap.files.filter(f => buckets.contains(f.bucket))
+    if (picked.isEmpty) return snap
+    val raw = table.readFiles(snap, picked)
+    val files = foldToBase(table, purgeRewrite.fold(raw)(f => f(raw)), snap,
+      snap.nBuckets, cfg, "compact")
+      // a bucket whose rows all dropped (purge) retires: no zero-row
+      // file is ever registered in its place
       .filter(_.rows > 0)
-      .map(_.copy(fold = true))
     table.snapshotAt(outcome(table, snap, -1L, cfg, t0, files, buckets,
       BatchStats(buckets = buckets.toSeq.sorted)).version)
   }
@@ -826,14 +795,11 @@ object MergeApply {
     * RESET manifest and the new bucket count; old snapshots stay
     * readable under their own layout (nBuckets is per-snapshot).
     *
-    * Plan shape: for ALIGNED growth (`newN % oldN == 0`, the production
-    * path — always grow by an integer factor) `h mod oldN = b` pins
-    * `h mod newN` to `{b, b+oldN, …}`, so each OLD bucket fans out into
-    * its own k = newN/oldN NEW buckets and no other: one independent
-    * bucket-sized job per old bucket from a bounded driver pool (the
-    * compaction plan shape) — NO global exchange, bounded task memory,
-    * disjoint output dirs by construction. Any other `newN` falls back
-    * to one table-wide bucket exchange over the folded winners.
+    * Plan shape: the [[compactBuckets]] job over every file, with `newN`
+    * partitions. `repartition(newN, conv_id)` is pmod(murmur3(conv_id),
+    * newN) — the bucket function of the NEW space for ANY `newN`,
+    * integer growth factor or not — so shuffle partition i holds exactly
+    * new bucket i and each write task fills one new `__bucket=N` dir.
     *
     * Concurrency: bucket-layout edits are serialized by the commit
     * protocol — a concurrent writer's commit built in the old space
@@ -850,64 +816,27 @@ object MergeApply {
     val snap = table.snapshot
     require(newN > 0, s"bucket count must be positive, got $newN")
     if (newN == snap.nBuckets) return snap
-    val spark = table.spark
-    val outDir = s"${table.dir}/data/rebucket-${snap.version + 1}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val hfs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-    def foldToNew(raw: DataFrame): DataFrame =
-      foldWinners(raw).withColumn("__bucket", LakeTable.bucketExpr(newN))
-
-    val newFiles: Seq[graft.lake.DataFileEntry] =
+    val files =
       if (snap.files.isEmpty) Seq.empty
-      else if (newN % snap.nBuckets == 0) {
-        val perBucket = snap.files.groupBy(_.bucket)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(math.max(1, cfg.compactParallelism), perBucket.size))
-        try {
-          perBucket.toSeq.map { case (b, group) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                // stage under a per-job dir, then promote the new-bucket
-                // dirs (exclusively this job's — the fan-out sets are
-                // disjoint across old buckets) to the shared root
-                val tmp = new org.apache.hadoop.fs.Path(s"$outDir/stage-$b")
-                withBloom(foldToNew(table.readFiles(snap, group)).write, snap)
-                  .partitionBy("__bucket").mode("overwrite")
-                  .parquet(tmp.toString)
-                hfs.listStatus(tmp)
-                  .filter(_.getPath.getName.startsWith("__bucket="))
-                  .foreach { d =>
-                    if (!hfs.rename(d.getPath, new org.apache.hadoop.fs
-                        .Path(outDir, d.getPath.getName)))
-                      sys.error(s"could not promote ${d.getPath}")
-                  }
-                hfs.delete(tmp, true): Unit
-              }
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
-        listDataFiles(spark, outDir, snap.currentSchemaVersion, "base",
-          tsCol = snap.eventTimeColumn)
-      } else {
-        // misaligned target: one table-wide bucket exchange
-        val folded = foldToNew(table.readRawSnap(snap, None))
-        val totalRows = snap.files.map(_.rows).sum
-        val salt = math.max(1L, (totalRows / math.max(1, newN) +
-          cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
-        // __bucket here lives in the NEW space — size partitions by newN;
-        // these are base-file rewrites, so the bloom opt-in applies here
-        // exactly like the aligned path
-        writeBuckets(table, folded, salt, snap, targetBuckets = newN,
-          bloom = true)
-      }
-
-    val stamped = newFiles.map(_.copy(fold = true))
-    table.snapshotAt(outcome(table, snap, -1L, cfg, t0, stamped,
-      snap.files.map(_.bucket).toSet, BatchStats(buckets = bucketsOf(stamped)),
+      else foldToBase(table, table.readFiles(snap, snap.files), snap, newN,
+        cfg, "rebucket")
+    table.snapshotAt(outcome(table, snap, -1L, cfg, t0, files,
+      snap.files.map(_.bucket).toSet, BatchStats(buckets = bucketsOf(files)),
       newNBuckets = Some(newN)).version)
   }
+
+  /** The fold [[compactBuckets]] and [[rebucket]] share, as one Spark
+    * job: LWW-resolve `raw` into one partition per bucket of the
+    * `nBuckets` layout and write them as base files, stamped `fold`
+    * (they carry only old rows, so arrival windows starting at the
+    * commit's parent skip them instead of re-upserting whole buckets). */
+  private def foldToBase(table: LakeTable, raw: DataFrame, snap: Snapshot,
+      nBuckets: Int, cfg: MergeConfig, dirPrefix: String): Seq[DataFileEntry] =
+    writeBuckets(table,
+      table.lwwResolve(raw, nBuckets)
+        .withColumn("__bucket", LakeTable.bucketExpr(nBuckets)),
+      snap, "base", dirPrefix, rewriteMaxRows = Some(cfg.maxRowsPerFile))
+      .map(_.copy(fold = true))
 
   /** Insert-only fast path (≈ the reference's Express-Loader bulk append,
     * reference: engine/post_processors.py:18-63, and `method='insert'`,
@@ -962,9 +891,8 @@ object MergeApply {
     // correct only "because date-gap logic makes it idempotent per-day"
     // (reference: engine/payload/united_way/211.py:286-293)
     val newFiles = writeBuckets(table,
-      table.lwwResolve(norm, snap.nBuckets), 1, snap,
-      prePartitioned = true,
-      kind = if (replaceExisting) "base" else "delta")
+      table.lwwResolve(norm, snap.nBuckets), snap,
+      if (replaceExisting) "base" else "delta")
     val rejected = validation.rejected(newFiles, zeroOutput = newFiles.isEmpty)
     val parts = partitionsOf(newFiles)
     val mins = parts.map(_.minLsn).filter(_ >= 0)
@@ -988,32 +916,26 @@ object MergeApply {
   }
 
   /** Write `df` (user cols + __lsn + __op + __bucket) under
-    * `data/commit-<v>/`, one directory per bucket via partitionBy, with
-    * `salt`-way intra-bucket write parallelism. Returns the manifest
-    * entries (rows per file read from parquet footers — metadata only). */
-  private def writeBuckets(table: LakeTable, df: DataFrame, salt: Int,
-      snap: Snapshot, prePartitioned: Boolean = false,
-      kind: String = "base", targetBuckets: Int = -1,
-      /** Apply the table's opt-in bloom indexing — set ONLY by
-        * file-group-rewrite callers (misaligned rebucket); the per-epoch
-        * delta and append paths leave it false to stay lean. */
-      bloom: Boolean = false): Seq[DataFileEntry] = {
+    * `data/<dirPrefix>-<v>-<id>/`, one directory per bucket via
+    * partitionBy. `df` must arrive ALREADY exchanged bucket-aligned, one
+    * bucket per partition, so each task writes one dir:
+    * `repartition(nBuckets, conv_id)` — pmod(murmur3(conv_id), nBuckets)
+    * IS the bucket function (see mergeAttempt) — or `lwwResolve`'s
+    * exchange. The count is explicit, so AQE never coalesces buckets
+    * into one task. Returns the manifest entries (rows per file read
+    * from parquet footers — metadata only). */
+  private def writeBuckets(table: LakeTable, df: DataFrame, snap: Snapshot,
+      kind: String, dirPrefix: String = "commit",
+      /** `Some(maxRowsPerFile)` marks a file-group rewrite (compaction,
+        * rebucket): it applies the table's bloom opt-in and caps each
+        * file's rows. The per-epoch delta and append writes pass None to
+        * stay lean. */
+      rewriteMaxRows: Option[Long] = None): Seq[DataFileEntry] = {
     val spark = table.spark
-    val outDir = s"${table.dir}/data/commit-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
-    // EXPLICIT partition counts everywhere: a count-less repartition gets
-    // shuffle.partitions and — worse — AQE is allowed to coalesce it,
-    // re-merging salt cells and silently defeating the maxRowsPerFile
-    // skew defense the caller computed `salt` for. The unsalted path
-    // partitions by conv_id — pmod(murmur3(conv_id), nB) IS the bucket
-    // function, so partition i holds exactly bucket i (see mergeAttempt).
-    val nB = if (targetBuckets > 0) targetBuckets else snap.nBuckets
-    val writeDf =
-      if (prePartitioned) df // bucket dedup already exchanged to (__bucket, __salt)
-      else if (salt <= 1) df.repartition(nB, col("conv_id"))
-      else df.repartition(nB * salt, col("__bucket"),
-        pmod(hash(col("turn_idx")), lit(salt)))
+    val outDir = s"${table.dir}/data/$dirPrefix-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
     val tW = System.nanoTime()
-    (if (bloom) withBloom(writeDf.write, snap) else writeDf.write)
+    rewriteMaxRows.fold(df.write)(n =>
+        withBloom(df.write, snap).option("maxRecordsPerFile", n))
       .partitionBy("__bucket")
       .mode("overwrite")
       .parquet(outDir)

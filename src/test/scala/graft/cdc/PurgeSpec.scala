@@ -260,6 +260,28 @@ class PurgeSpec extends SparkSpec {
     }
   }
 
+  test("purging every conversation of a bucket retires the bucket with no files") {
+    val t = seeded("purge-erase-bucket")
+    val snap = t.snapshot
+    val b = snap.files.map(_.bucket).min
+    // every conversation with any trace in bucket b, tombstone-only ones
+    // included, so the scrub pass leaves the bucket no row at all
+    val victims = t.readFiles(snap, snap.files.filter(_.bucket == b))
+      .select("conv_id").distinct().as[String].collect().toSet
+    assert(victims.nonEmpty)
+    Purge.purgeConversations(t, victims)
+    assert(t.snapshot.files.exists(_.bucket == b),
+      "the first pass keeps key-only tombstones in the bucket")
+    Purge.purgeConversations(t, victims, scrubTombstones = true)
+    assert(!t.snapshot.files.exists(_.bucket == b),
+      s"bucket $b was fully erased but still has files")
+    assert(t.snapshot.files.forall(_.rows > 0))
+    val got = t.read().as[graft.model.TranscriptRow].collect().toSet
+    val want = ChangeLogGen.oracleFinalState(cfg)
+      .filterNot(r => victims(r.conv_id)).toSet
+    assert(got == want)
+  }
+
   test("a superseded tombstone merge fails the purge loudly (deletes must land)") {
     val t = seeded("purge-superseded")
     val victims = someConvs(t, 1)

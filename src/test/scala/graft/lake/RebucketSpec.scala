@@ -71,11 +71,11 @@ class RebucketSpec extends SparkSpec {
       "rebucket dropped the tombstone — late event resurrected the key")
   }
 
-  test("misaligned target falls back to the exchange path with identical results") {
+  test("aligned (4 -> 8) and misaligned (4 -> 6) targets give identical results") {
     val a = seed(tmpDir("rb-mis-a"))
     val b = seed(tmpDir("rb-mis-b"))
-    MergeApply.rebucket(a, 8) // aligned
-    MergeApply.rebucket(b, 6) // misaligned: table-wide exchange
+    MergeApply.rebucket(a, 8) // an integer growth factor
+    MergeApply.rebucket(b, 6) // not one: the same one-job plan
     assert(state(a) == state(b))
     assert(b.snapshot.nBuckets == 6)
     assert(b.snapshot.files.forall(f => f.fold && f.bucket < 6))
