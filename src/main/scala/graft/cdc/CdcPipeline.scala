@@ -10,9 +10,6 @@ final case class PipelineConfig(
     checkpointDir: String,
     maxFilesPerTrigger: Int = 8,
     merge: MergeConfig = MergeConfig(),
-    /** `upsert` = MERGE; `insert` = blind append (reference upload methods,
-      * reference: engine/wprdc_etl/pipeline/loaders.py:370-379). */
-    method: String = "upsert",
     /** Read the v2 envelope (open `extras` map + op="S" schema-registry
       * events, see [[SchemaRegistry]]). v1 feeds skip the per-batch
       * registry scan entirely. */
@@ -53,7 +50,7 @@ final case class PipelineConfig(
       * stays contiguous and the rejection is audited (rowsInBatch > 0,
       * rowsApplied = 0). A gate that THROWS fails the stream; the restart
       * re-adopts the pending intent and re-audits — no re-merge, no
-      * duplicate apply. Upsert method only. */
+      * duplicate apply. */
     auditGate: Option[(LakeTable, String, Long) => Boolean] = None)
 
 /** The always-on ingest loop (SURVEY.md §7.1 item 5): a Structured
@@ -78,27 +75,15 @@ object CdcPipeline {
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(feedDir)
 
-  /** One epoch against one destination: method dispatch, retention
-    * maintenance, post hook — shared by the single-sink and fan-out
-    * queries so every PipelineConfig seam behaves identically on both. */
+  /** One epoch against one destination: the (optionally audit-gated)
+    * merge, retention maintenance, post hook — shared by the single-sink
+    * and fan-out queries so every PipelineConfig seam behaves identically
+    * on both. */
   private def applyEpoch(table: LakeTable, batch: DataFrame, epochId: Long,
-      method: String, cfg: PipelineConfig): Unit = {
-    // same validation as the graft-table sink: anything-but-insert
-    // silently running MERGE would turn a typo ("append", "Insert") into
-    // a different semantics with an O(touched-buckets) read-back bill
-    require(method == "upsert" || method == "insert",
-      s"unknown upload method '$method' - use 'upsert' (MERGE) or " +
-        "'insert' (blind append)")
-    require(cfg.auditGate.isEmpty || method == "upsert",
-      "auditGate stages through the merge kernel - insert destinations " +
-        "cannot be WAP-gated")
+      cfg: PipelineConfig): Unit = {
     val res = cfg.auditGate match {
-      case Some(gate) if method == "upsert" =>
-        auditedEpoch(table, batch, epochId, cfg, gate)
-      case _ =>
-        if (method == "insert")
-          MergeApply.append(table, batch, epochId, cfg.merge)
-        else MergeApply.merge(table, batch, epochId, cfg.merge)
+      case Some(gate) => auditedEpoch(table, batch, epochId, cfg, gate)
+      case None => MergeApply.merge(table, batch, epochId, cfg.merge)
     }
     if (cfg.vacuumEveryEpochs > 0 && res.applied &&
         epochId > 0 && epochId % cfg.vacuumEveryEpochs == 0)
@@ -146,8 +131,7 @@ object CdcPipeline {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(trigger(cfg))
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyEpoch(table, cfg.preBatch(batch, epochId), epochId,
-          cfg.method, cfg)
+        applyEpoch(table, cfg.preBatch(batch, epochId), epochId, cfg)
       }
       .start()
   }
@@ -161,15 +145,15 @@ object CdcPipeline {
     table.snapshot.version
   }
 
-  /** Destination fan-out: one change feed applied to several sinks, each
-    * with its own upload method (the reference's
-    * `locators_by_destination` multi-sink dispatch, reference:
+  /** Destination fan-out: one change feed merged into several tables
+    * (the reference's `locators_by_destination` multi-sink dispatch,
+    * reference:
     * engine/etl_util.py:671, 779-784). One streaming query, one source
     * scan; each destination's epoch guard makes partial-failure restarts
     * safe per-table (a table that committed epoch e skips it on
     * redelivery while the others catch up). */
   def startFanOut(spark: SparkSession, feedDir: String,
-      dests: Seq[(LakeTable, String)], cfg: PipelineConfig): StreamingQuery =
+      dests: Seq[LakeTable], cfg: PipelineConfig): StreamingQuery =
     readChangeFeed(spark, feedDir, cfg).writeStream
       .queryName(s"cdc-fanout-${feedDir.hashCode.toHexString}")
       .option("checkpointLocation", cfg.checkpointDir)
@@ -182,14 +166,13 @@ object CdcPipeline {
         // plan construction. Single-sink fan-outs skip the cache (merge
         // itself is the only consumer there).
         val cached = if (dests.sizeIs > 1) b.persist() else b
-        try dests.foreach { case (table, method) =>
-          applyEpoch(table, cached, epochId, method, cfg)
-        } finally if (dests.sizeIs > 1) { cached.unpersist(); () }
+        try dests.foreach(applyEpoch(_, cached, epochId, cfg))
+        finally if (dests.sizeIs > 1) { cached.unpersist(); () }
       }
       .start()
 
   def replayFanOutAvailable(spark: SparkSession, feedDir: String,
-      dests: Seq[(LakeTable, String)], cfg: PipelineConfig): Unit = {
+      dests: Seq[LakeTable], cfg: PipelineConfig): Unit = {
     val q = startFanOut(spark, feedDir, dests, cfg)
     try q.awaitTermination() finally if (q.isActive) q.stop()
   }

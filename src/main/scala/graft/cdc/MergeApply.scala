@@ -117,7 +117,14 @@ final case class MergeConfig(
   *     base files by one bucket-aligned compaction job. Tombstones (`D`)
   *     are kept, so a late lower-LSN update can never resurrect a
   *     delete.
-  *  2. **One outcome path**: every epoch — applied, zero-output,
+  *  2. **One write kernel**: every epoch's data files are written by
+  *     `mergeAttempt`, behind one validation / observe / schema-probe
+  *     sequence. [[merge]] is the upsert; [[replace]] is the same
+  *     attempt in its replace mode (LWW-resolved `base` files, every
+  *     bucket retired, no compaction sweep). Insert-only loads (the
+  *     reference's `method='insert'`, loaders.py:370) are merges: a
+  *     merge reads nothing existing either.
+  *  3. **One outcome path**: every epoch — applied, zero-output,
   *     checksum-skipped, audit-quarantined — and every compaction or
   *     rebucket records its lineage row and result through [[outcome]],
   *     which commits (or stages, under WAP) under the epoch guard:
@@ -145,24 +152,6 @@ object MergeApply {
     batch.select(cols ++ Seq(
       col("lsn").cast(LongType).as("__lsn"),
       when(col("op") === "D", lit("D")).otherwise(lit("U")).as("__op")): _*)
-  }
-
-  /** Extract schema-registry events (op = "S") from a v2 batch and apply
-    * them to the table in LSN order (idempotently — safe under
-    * redelivery). Returns the data-only remainder of the batch. Feeds
-    * without the `extras` envelope column skip the scan entirely, so the
-    * v1 hot path is untouched.
-    *
-    * This EAGER detection pays one dedicated Spark action per v2 batch;
-    * it is used by the bulk [[append]] path, where one extra planning
-    * action is noise against the load itself. The per-epoch [[merge]]
-    * hot path instead piggybacks detection on an action it already runs
-    * (see [[mergeAttempt]]). */
-  def applySchemaEvents(table: LakeTable, batch: DataFrame): DataFrame = {
-    if (!batch.columns.contains("extras")) return batch
-    val events = schemaEventRows(batch).sortBy(_._1)
-    events.foreach(e => SchemaRegistry(table, e._2))
-    if (events.isEmpty) batch else batch.filter(col("op") =!= "S")
   }
 
   /** Apply the table's opt-in bloom indexing
@@ -297,7 +286,7 @@ object MergeApply {
   /** Read the schema-event probe: (lsn, payload) of every op="S" row the
     * observed action saw. Collecting registry rows on the driver is
     * bounded by design — schema changes are a handful of events in
-    * 10^10, the same assumption the eager path's collect makes. */
+    * 10^10, the same assumption the fallback's collect makes. */
   private def probeEvents(obs: Option[org.apache.spark.sql.Observation])
       : Seq[(Long, String)] =
     // a zero-row batch runs zero tasks, so the observation resolves to an
@@ -466,16 +455,30 @@ object MergeApply {
     * files are vacuumOrphans' to reclaim). */
   def merge(table: LakeTable, batch: DataFrame, epochId: Long,
       cfg: MergeConfig = MergeConfig()): MergeResult =
-    runEpoch(table, batch, epochId, cfg) { (t0, fp) =>
-      mergeGuarded(table, batch, epochId, cfg, t0, fp)
-    }
+    runEpoch(table, batch, epochId, cfg, replaceAll = false)
 
-  /** The epoch driver [[merge]] and [[appendOrReplace]] share: the
-    * exactly-once guard, WAP-intent adoption, the input-checksum gate and
-    * the conflict-retry loop around `attempt(t0, checksum)`. */
+  /** Atomic whole-table overwrite: ONE commit that both retires every
+    * bucket and registers the batch's winners (the truncate-then-load
+    * two-commit shape publishes an empty table to concurrent readers
+    * between the commits, and a crash between them loses the data).
+    * The [[merge]] kernel in its replace mode: same envelope, validation,
+    * schema-event probe and epoch guard, but the batch is LWW-resolved
+    * on its way to the write, so one version per key lands as `base`
+    * files (no MoR resolution on read) and no compaction sweep follows.
+    * Backs `SaveMode.Overwrite` in [[graft.lake.GraftBatchWrite]]. */
+  def replace(table: LakeTable, batch: DataFrame, epochId: Long,
+      cfg: MergeConfig = MergeConfig()): MergeResult = {
+    require(cfg.wapId.isEmpty,
+      "write-audit-publish staging is a merge-path feature: route " +
+        "audited loads through merge()")
+    runEpoch(table, batch, epochId, cfg, replaceAll = true)
+  }
+
+  /** The epoch driver of [[merge]] and [[replace]]: the exactly-once
+    * guard, WAP-intent adoption, the input-checksum gate and the
+    * conflict-retry loop around one [[mergeGuarded]] attempt. */
   private def runEpoch(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig)(attempt: (Long, String) => MergeResult)
-      : MergeResult = {
+      cfg: MergeConfig, replaceAll: Boolean): MergeResult = {
     val t0 = System.nanoTime()
     var snap = table.snapshot
     if (alreadyCommitted(snap, epochId, cfg)) return noop(snap.version, t0)
@@ -522,7 +525,7 @@ object MergeApply {
         if (fp.nonEmpty && lastChecksum(snap).contains(fp))
           return outcome(table, snap, epochId, cfg, t0,
             stats = BatchStats(fpRows), checksum = fp, applies = false)
-        return attempt(t0, fp)
+        return mergeGuarded(table, batch, epochId, cfg, t0, fp, replaceAll)
       } catch {
         case _: graft.lake.EpochSupersededException =>
           return noop(table.snapshot.version, t0)
@@ -537,11 +540,12 @@ object MergeApply {
   }
 
   private def mergeGuarded(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, checksum: String): MergeResult = {
+      cfg: MergeConfig, t0: Long, checksum: String,
+      replaceAll: Boolean): MergeResult = {
     val hasExtras = batch.columns.contains("extras")
     val attempt =
       try mergeAttempt(table, batch, epochId, cfg, t0, probe = hasExtras,
-        checksum = checksum)
+        checksum = checksum, replaceAll = replaceAll)
       catch {
         case e: Throwable
             if hasExtras && scala.util.control.NonFatal(e) &&
@@ -554,7 +558,7 @@ object MergeApply {
           // a genuine failure (no registry rows) is rethrown. The lake
           // concurrency exceptions are EXCLUDED: they mean the attempt
           // lost a commit race, not that the probe failed — they must
-          // reach merge()'s retry loop, not trigger a duplicate attempt.
+          // reach runEpoch's retry loop, not trigger a duplicate attempt.
           val events = schemaEventRows(batch)
           if (events.isEmpty) throw e
           Left(events)
@@ -568,7 +572,7 @@ object MergeApply {
         // attempt was committed.
         events.sortBy(_._1).foreach(e => SchemaRegistry(table, e._2))
         mergeAttempt(table, batch, epochId, cfg, t0, probe = false,
-          checksum = checksum)
+          checksum = checksum, replaceAll = replaceAll)
           .getOrElse(throw new IllegalStateException(
             "schema probe fired on the retry attempt"))
     }
@@ -619,16 +623,16 @@ object MergeApply {
     * the uncommitted delta files are discarded — and returns the events
     * for [[merge]] to apply and retry. Schema events are a handful in
     * 10^10, so the common v2 path pays zero extra actions and the rare
-    * path pays one redo. */
+    * path pays one redo.
+    *
+    * `replaceAll` is [[replace]]'s mode: the batch's exchange is
+    * [[LakeTable.lwwResolve]] instead of the plain bucket repartition, so
+    * one version per key lands as `base` files; the commit retires every
+    * bucket, and no compaction sweep follows (the fresh table holds one
+    * file per bucket). */
   private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String)
-      : AttemptResult = {
-    val timing = sys.env.contains("GRAFT_MERGE_TIMING")
-    var tPhase = System.nanoTime()
-    def lap(name: String): Unit = if (timing) {
-      System.err.println(f"[merge-timing] epoch=$epochId $name ${(System.nanoTime() - tPhase) / 1e9}%.2f s")
-      tPhase = System.nanoTime()
-    }
+      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String,
+      replaceAll: Boolean): AttemptResult = {
     val hasExtras = batch.columns.contains("extras")
     val (dataBatch, probeObs) =
       if (!hasExtras) (batch, None)
@@ -645,10 +649,10 @@ object MergeApply {
     val observed = normalize(validation.valid, snap.userSchema)
       .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
       .observe(obs, aggs.head, aggs.tail: _*)
-    // no dedup, no sort: a delta file may hold several versions of a key
-    // (even intra-batch) — the read path LWW-resolves and compaction
-    // folds, both by __lsn, so deferring is exactly as correct and the
-    // epoch's critical path is scan -> shuffle-to-bucket -> write.
+    // merge: no dedup, no sort — a delta file may hold several versions
+    // of a key (even intra-batch); the read path LWW-resolves and
+    // compaction folds, both by __lsn, so deferring is exactly as correct
+    // and the epoch's critical path is scan -> shuffle-to-bucket -> write.
     // Shuffle TARGET: repartition(nBuckets, conv_id) — Spark's hash
     // partitioning computes pmod(murmur3(conv_id), nBuckets), the exact
     // bucket function, so shuffle partition i holds exactly bucket i.
@@ -657,16 +661,27 @@ object MergeApply {
     // empty, the largest carrying 3-4 buckets — idling cores in the
     // epoch's dominant stage; identity alignment keeps every write task
     // equally loaded and each task writes exactly one __bucket=N dir.
-    val deltaFiles = writeBuckets(table,
-      observed.repartition(snap.nBuckets, col("conv_id")), snap, "delta")
-    lap("mor-delta-write")
+    val written =
+      if (replaceAll)
+        writeBuckets(table, table.lwwResolve(observed, snap.nBuckets), snap,
+          "base")
+      else writeBuckets(table,
+        observed.repartition(snap.nBuckets, col("conv_id")), snap, "delta")
+    // a replace retires the FULL bucket space, not just buckets with live
+    // files at the read snapshot: rebase's conflict signature covers
+    // exactly the retired buckets, so a concurrent write into a bucket
+    // that was EMPTY here must land in the signature too — otherwise its
+    // rows would silently survive the atomic whole-table-replace contract
+    // while the same write into a populated bucket gets conflict-retried
+    val replaced =
+      if (replaceAll) (0 until snap.nBuckets).toSet else Set.empty[Int]
 
     // Settle what the write observed, before anything commits.
     // Schema-registry rows end the attempt (Left), discarding its
-    // uncommitted delta files.
+    // uncommitted files.
     val sev = probeEvents(probeObs)
     if (sev.nonEmpty) {
-      discard(table, deltaFiles)
+      discard(table, written)
       return Left(sev)
     }
     // So does a zero-output write — a truly empty micro-batch (streaming
@@ -680,29 +695,31 @@ object MergeApply {
     // still land — the committed-epoch watermark stays CONTIGUOUS (a
     // skipped epoch id would hold it back forever and defeat the bounded
     // recent-set guard).
-    if (deltaFiles.isEmpty) {
+    if (written.isEmpty) {
       val sevE = if (probeObs.isEmpty) Nil else schemaEventRows(batch)
       if (sevE.nonEmpty) return Left(sevE) // nothing written: no cleanup
-      return Right(outcome(table, snap, epochId, cfg, t0, checksum = checksum,
+      return Right(outcome(table, snap, epochId, cfg, t0, replaced = replaced,
+        checksum = checksum,
         rejected = validation.rejected(Nil, zeroOutput = true)))
     }
     // Otherwise files exist, so tasks ran and the observations are
-    // authoritative: fail mode reclaims the delta files and throws,
+    // authoritative: fail mode reclaims the written files and throws,
     // quarantine mode dead-letters the invalid events and the valid
     // remainder applies.
-    val rejected = validation.rejected(deltaFiles, zeroOutput = false)
+    val rejected = validation.rejected(written, zeroOutput = false)
     val m = obs.get
-    // delta files hold exactly this batch, so the manifest entries ARE
-    // the per-partition applied rows + LSN ranges (footer stats)
-    val res = outcome(table, snap, epochId, cfg, t0, deltaFiles,
-      stats = BatchStats(metric(m, "rows", 0L), bucketsOf(deltaFiles),
+    // the written files hold exactly this batch (LWW-resolved under
+    // replace), so the manifest entries ARE the per-partition applied
+    // rows + LSN ranges (footer stats)
+    val res = outcome(table, snap, epochId, cfg, t0, written, replaced,
+      BatchStats(metric(m, "rows", 0L), bucketsOf(written),
         metric(m, "maxLsn", -1L), metric(m, "minLsn", -1L),
         Option(m("maxTs")).fold("")(_.toString), metric(m, "late", 0L),
-        partitionsOf(deltaFiles), snap.eventTimeColumn.getOrElse("")),
+        partitionsOf(written), snap.eventTimeColumn.getOrElse("")),
       checksum = checksum, rejected = rejected)
     // staged: nothing committed — the staged deltas fold (if over
     // threshold) in the first post-publish epoch's sweep
-    if (res.staged) return Right(res)
+    if (res.staged || replaceAll) return Right(res)
 
     // amortized compaction: fold over-threshold buckets back to base
     val now = table.snapshot
@@ -714,11 +731,8 @@ object MergeApply {
       // compaction is state-neutral housekeeping: if a concurrent writer
       // lands a delta in a bucket mid-fold, yield — the ingest wins, and
       // the still-over-threshold bucket retriggers next epoch
-      else try {
-        val c = compactBuckets(table, toCompact, cfg, at = Some(now))
-        lap(s"mor-compact(${toCompact.size})")
-        c.version
-      } catch { case _: graft.lake.CommitConflictException => now.version }
+      else try compactBuckets(table, toCompact, cfg, at = Some(now)).version
+      catch { case _: graft.lake.CommitConflictException => now.version }
     Right(res.copy(version = version, durationMs = elapsedMs(t0)))
   }
 
@@ -838,83 +852,6 @@ object MergeApply {
       snap, "base", dirPrefix, rewriteMaxRows = Some(cfg.maxRowsPerFile))
       .map(_.copy(fold = true))
 
-  /** Insert-only fast path (≈ the reference's Express-Loader bulk append,
-    * reference: engine/post_processors.py:18-63, and `method='insert'`,
-    * reference: engine/wprdc_etl/pipeline/loaders.py:370): write the batch
-    * as new files without reading current data. Correct only when keys are
-    * known fresh (e.g. time-gap incremental loads). Still LWW-dedups within
-    * the batch and keeps the epoch guard. */
-  def append(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig = MergeConfig()): MergeResult =
-    appendOrReplace(table, batch, epochId, cfg, replaceExisting = false)
-
-  /** Atomic whole-table overwrite: ONE commit that both retires every
-    * live file and registers the batch's winners (the truncate-then-load
-    * two-commit shape publishes an empty table to concurrent readers
-    * between the commits, and a crash between them loses the data).
-    * Same envelope/validation/epoch-guard contract as [[append]]; the
-    * within-batch LWW dedup leaves one version per key, so the files
-    * land as `base` (no MoR resolution needed on read). Backs
-    * `SaveMode.Overwrite` in [[graft.lake.GraftBatchWrite]]. */
-  def replace(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig = MergeConfig()): MergeResult =
-    appendOrReplace(table, batch, epochId, cfg, replaceExisting = true)
-
-  private def appendOrReplace(table: LakeTable, batch: DataFrame,
-      epochId: Long, cfg: MergeConfig, replaceExisting: Boolean)
-      : MergeResult = {
-    require(cfg.wapId.isEmpty,
-      "write-audit-publish staging is a merge-path feature (wapId is " +
-        "ignored nowhere): route audited loads through merge()")
-    // the same epoch driver as [[merge]]: a CommitConflictException
-    // (schema-version change mid-flight, retry exhaustion in the rebase)
-    // must retry with a fresh snapshot like every other path, not escape
-    // through foreachBatch and kill the stream
-    runEpoch(table, batch, epochId, cfg) { (t0, fp) =>
-      appendOnce(table, batch, epochId, cfg, t0, fp, replaceExisting)
-    }
-  }
-
-  private def appendOnce(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, fp: String,
-      replaceExisting: Boolean): MergeResult = {
-    val dataBatch = applySchemaEvents(table, batch)
-    val snap = table.snapshot
-    // same envelope-validation contract as merge(): the insert fast path
-    // must not silently append a null-keyed or op-garbage event either
-    val validation = new Validation(table, snap, epochId, cfg, dataBatch)
-    val norm = normalize(validation.valid, snap.userSchema)
-      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
-    // registered as deltas: append guarantees nothing about key overlap
-    // with existing files, so readers must LWW-resolve (and compaction
-    // may fold) — identical to the reference's insert method being
-    // correct only "because date-gap logic makes it idempotent per-day"
-    // (reference: engine/payload/united_way/211.py:286-293)
-    val newFiles = writeBuckets(table,
-      table.lwwResolve(norm, snap.nBuckets), snap,
-      if (replaceExisting) "base" else "delta")
-    val rejected = validation.rejected(newFiles, zeroOutput = newFiles.isEmpty)
-    val parts = partitionsOf(newFiles)
-    val mins = parts.map(_.minLsn).filter(_ >= 0)
-    // replaceExisting retires the FULL bucket space, not just buckets
-    // with live files at the read snapshot: rebase's conflict signature
-    // covers exactly the retired buckets, so a concurrent append into a
-    // bucket that was EMPTY here must land in the signature too —
-    // otherwise its rows would silently survive the atomic
-    // whole-table-replace contract of [[replace]] while the same append
-    // into a populated bucket gets conflict-retried. Retiring an empty
-    // bucket is free (no files dropped) and makes the outcome uniform.
-    val replaced =
-      if (replaceExisting) (0 until snap.nBuckets).toSet
-      else Set.empty[Int]
-    // EpochSuperseded/CommitConflict propagate to runEpoch's retry loop
-    outcome(table, snap, epochId, cfg, t0, newFiles, replaced,
-      BatchStats(parts.map(_.rows).sum, bucketsOf(newFiles),
-        if (parts.isEmpty) -1L else parts.map(_.maxLsn).max,
-        if (mins.isEmpty) -1L else mins.min, partitions = parts),
-      fp, rejected)
-  }
-
   /** Write `df` (user cols + __lsn + __op + __bucket) under
     * `data/<dirPrefix>-<v>-<id>/`, one directory per bucket via
     * partitionBy. `df` must arrive ALREADY exchanged bucket-aligned, one
@@ -928,23 +865,18 @@ object MergeApply {
       kind: String, dirPrefix: String = "commit",
       /** `Some(maxRowsPerFile)` marks a file-group rewrite (compaction,
         * rebucket): it applies the table's bloom opt-in and caps each
-        * file's rows. The per-epoch delta and append writes pass None to
+        * file's rows. The per-epoch merge and replace writes pass None to
         * stay lean. */
       rewriteMaxRows: Option[Long] = None): Seq[DataFileEntry] = {
     val spark = table.spark
     val outDir = s"${table.dir}/data/$dirPrefix-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
-    val tW = System.nanoTime()
     rewriteMaxRows.fold(df.write)(n =>
         withBloom(df.write, snap).option("maxRecordsPerFile", n))
       .partitionBy("__bucket")
       .mode("overwrite")
       .parquet(outDir)
-    val tL = System.nanoTime()
-    val files = listDataFiles(spark, outDir, snap.currentSchemaVersion, kind,
+    listDataFiles(spark, outDir, snap.currentSchemaVersion, kind,
       tsCol = snap.eventTimeColumn)
-    if (sys.env.contains("GRAFT_MERGE_TIMING"))
-      System.err.println(f"[merge-timing]   write ${(tL - tW) / 1e9}%.2f s, list-footers ${(System.nanoTime() - tL) / 1e9}%.2f s")
-    files
   }
 
   /** Enumerate part files under a partitionBy(__bucket) output dir and read

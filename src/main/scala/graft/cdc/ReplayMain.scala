@@ -36,19 +36,6 @@ object ReplayMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_STAGE_LOG"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val ms = for {
-              a <- i.completionTime; b <- i.submissionTime
-            } yield a - b
-            System.err.println(s"[stage] id=${i.stageId} tasks=${i.numTasks} " +
-              s"wall=${ms.getOrElse(-1L)}ms name=${i.name.takeWhile(_ != '\n').take(60)}")
-          }
-        })
     try {
       val cfg = GenConfig(nEvents = nEvents,
         nConvs = math.max(4L, nEvents / 50), maxTurns = 40)

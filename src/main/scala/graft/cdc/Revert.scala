@@ -47,8 +47,8 @@ import graft.lake.LakeTable
   * is that the upstream tail is already past the table's high water (true
   * of any in-order WAL/binlog); an upstream event arriving LATER with
   * `lsn <= highWater + 1` for a compensated key would lose to the
-  * compensation — the same precondition [[LakeTable.changesBetween]]
-  * documents for LSN cuts.
+  * compensation — the precondition of every LSN cut: per-key arrival
+  * respects LSN order.
   *
   * Schema is NOT reverted (Iceberg rollback keeps table schema too):
   * preimages are projected onto the CURRENT schema — columns added since

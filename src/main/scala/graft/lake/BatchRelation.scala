@@ -146,7 +146,7 @@ final class GraftBatchRelation(
     * `USING graft-table` view — SQL's route into [[GraftBatchWrite]]
     * (plain rows: auto-LSN key replacement; overwrite: the atomic
     * whole-table replace). The view's declared OPTIONS (invalidRows,
-    * method, txnAppId/batchId, …) travel with the write —
+    * txnAppId/batchId, …) travel with the write —
     * accepting an option at view creation and dropping it at write
     * time would silently change semantics. An `at`-pinned (release)
     * view is read-only. */
@@ -354,14 +354,14 @@ final class GraftMetaRelation(
   *
   * Two input shapes:
   *  - **change-event envelope** (columns `lsn` + `op` present): applied
-  *    verbatim through [[graft.cdc.MergeApply.merge]] (default) or the
-  *    insert fast path (`.option("method", "insert")`).
+  *    verbatim through [[graft.cdc.MergeApply.merge]].
   *  - **plain rows** (no envelope): wrapped as insert events with LSNs
   *    assigned above the table's high-water mark, so under LWW the
   *    written rows replace any existing versions of their keys — the
   *    reference's Express-Loader bulk load shape (reference:
-  *    engine/post_processors.py:18-63). The fast path registers delta
-  *    files, so readers LWW-resolve key overlap correctly.
+  *    engine/post_processors.py:18-63) — and merged like any batch:
+  *    delta files that readers LWW-resolve, folded by the merge's
+  *    compaction sweep.
   *
   * `SaveMode` semantics: `Append` loads into the (possibly new) table;
   * `Overwrite` replaces the table's contents in ONE atomic commit
@@ -393,14 +393,14 @@ object GraftBatchWrite {
     // keys are admitted because a view's options travel with INSERT INTO
     // (GraftBatchRelation.insert forwards viewOptions here).
     val knownKeys = Set(
-      "path", "method", "invalidrows", "nbuckets",
+      "path", "invalidrows", "nbuckets",
       "mergeschema", "txnappid", "batchid",
       "at", "meta", "sincelsn", "changesfrom", "changesto")
     val unknownKeys =
       parameters.keys.filterNot(k => knownKeys(k.toLowerCase)).toSeq.sorted
     require(unknownKeys.isEmpty,
       s"unknown graft-table write option(s): ${unknownKeys.mkString(", ")}" +
-        " — known: path, method, invalidRows, nBuckets, " +
+        " — known: path, invalidRows, nBuckets, " +
         "mergeSchema, txnAppId, batchId (plus read-side at/meta/" +
         "sinceLsn/changesFrom/changesTo on a view)")
     val hasLsn = data.columns.contains("lsn")
@@ -412,10 +412,6 @@ object GraftBatchWrite {
         "the stray column writes it as plain data (auto-envelope would " +
         "silently overwrite its values)")
     val hasEnvelope = hasLsn && hasOp
-    val method =
-      parameters.getOrElse("method", if (hasEnvelope) "upsert" else "insert")
-    require(method == "upsert" || method == "insert",
-      s"method must be upsert or insert, got '$method'")
     val invalid = parameters.getOrElse("invalidRows", "fail")
     require(Set("fail", "quarantine", "off").contains(invalid),
       s"invalidRows must be fail, quarantine, or off, got '$invalid'")
@@ -519,8 +515,6 @@ object GraftBatchWrite {
     // no-op, data intact.
     if (existed && mode == SaveMode.Overwrite)
       graft.cdc.MergeApply.replace(table, batch, batchId, cfg)
-    else if (method == "insert")
-      graft.cdc.MergeApply.append(table, batch, batchId, cfg)
     else graft.cdc.MergeApply.merge(table, batch, batchId, cfg)
     new GraftBatchRelation(sqlContext, dir, None, parameters)
   }

@@ -951,7 +951,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     *
     * The table's one LWW kernel. Callers: the MoR reads ([[read]],
     * [[readConv]], [[readSince]], change-feed windows, staged reads),
-    * append/replace's in-batch dedup, and the one-job fold of
+    * `MergeApply.replace`'s in-batch dedup, and the one-job fold of
     * `MergeApply.compactBuckets` and `MergeApply.rebucket` (there
     * `nBuckets` is the target layout, so partition i becomes new bucket
     * i's files). */
@@ -1142,25 +1142,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       : DataFrame =
     readFiles(snap, arrivalFiles(snap, sinceVersion))
 
-  /** Time-travel diff: every key whose winning version changed between
-    * snapshot `fromVersion` and snapshot `toVersion` (default: current),
-    * with `__lsn`/`__op` retained. Exactly [[readSince]] cut at the older
-    * snapshot's high LSN — LSNs are the table's total modification order,
-    * so "changed after v1" ⇔ "winner's LSN above v1's high".
-    *
-    * PRECONDITION (inherited from the LSN cut): per-key arrival order
-    * must respect LSN order — a key's winning event must never arrive in
-    * a commit AFTER `fromVersion` carrying an LSN at or below
-    * `fromVersion`'s high water (true of any in-order WAL/binlog tail;
-    * NOT true of arbitrarily shuffled redelivery). For windows robust to
-    * arbitrary disorder use [[changeFeed]] / [[arrivalsSince]], which cut
-    * by commit version. */
-  def changesBetween(fromVersion: Long, toVersion: Option[Long] = None)
-      : DataFrame =
-    readSince(highLsn(snapshotAt(fromVersion)), toVersion)
-
   /** Typed change feed between two snapshots — the Delta-CDF / Debezium
-    * envelope shape of [[changesBetween]]: each changed key is emitted as
+    * envelope shape of a time-travel diff: each changed key is emitted as
     * row(s) in `toVersion`'s user schema plus `_change_type` ∈
     * {`insert`, `update_preimage`, `update_postimage`, `delete`} and
     * `_lsn` (the LSN of the change winner — pre- and post-image rows of
@@ -1359,11 +1342,6 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   }
 
   def lineage: Seq[LineageEntry] = snapshot.lineage
-
-  def lineageDF: DataFrame = {
-    import spark.implicits._
-    spark.createDataset(snapshot.lineage).toDF()
-  }
 
   /** The lineage MIRROR table: one JSON-lines row per commit under
     * `_lineage/`, written by [[commit]] at zero per-epoch Spark-job cost

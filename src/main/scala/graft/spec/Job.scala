@@ -60,7 +60,8 @@ object JobExtractor {
 sealed trait JobDestination
 object JobDestination {
   /** MERGE into a [[graft.lake.LakeTable]] (the datastore-loader analog:
-    * upsert/insert with the epoch guard, schema on first create). */
+    * both upload methods merge under the epoch guard, schema on first
+    * create). */
   final case class Lake(dir: String, nBuckets: Int = 32) extends JobDestination
   /** Create-or-append CSV directory ([[graft.sources.TabularSink]]). */
   final case class CsvDir(dir: String) extends JobDestination
@@ -118,8 +119,10 @@ final case class JobSpec(
     /** Primary key of the feed (primary_key_fields). Required for the
       * Lake destination: the MERGE key derives from these columns. */
     keyFields: Seq[String] = Nil,
-    /** "upsert" (MERGE, LWW per key per run) or "insert" (blind append) —
-      * the reference upload methods (loaders.py:370-379). */
+    /** "upsert" or "insert" — the reference upload methods
+      * (loaders.py:370-379). Into a Lake table both merge (LWW per key
+      * per run): a merge reads nothing existing, so insert has no faster
+      * path. The insert-only `CsvDir` destination requires "insert". */
     method: String = "upsert",
     /** Truncate the destination before loading (always_wipe_data). */
     alwaysWipeData: Boolean = false,
@@ -464,16 +467,12 @@ object JobRunner {
         table.setProperty(KeyPackProp, wantStamp): Unit
       val epoch = table.snapshot.maxCommittedEpoch + 1
       val batch = envelope(out, spec.keyFields, epoch)
-      // BOTH methods dedup in-batch duplicates: a run's rows all carry
-      // lsn = epoch, so leaving duplicate keys in an insert batch would
-      // make the read-time LWW winner plan-order-dependent — the
-      // opposite of the total-order determinism dedupKeys establishes.
-      // (Across runs, the later epoch's higher lsn still wins.)
-      val deduped = dedupKeys(batch)
-      val res =
-        if (spec.method == "insert")
-          MergeApply.append(table, deduped, epoch, spec.merge)
-        else MergeApply.merge(table, deduped, epoch, spec.merge)
+      // dedup in-batch duplicates: a run's rows all carry lsn = epoch, so
+      // leaving duplicate keys in the batch would make the read-time LWW
+      // winner plan-order-dependent — the opposite of the total-order
+      // determinism dedupKeys establishes. (Across runs, the later
+      // epoch's higher lsn still wins.)
+      val res = MergeApply.merge(table, dedupKeys(batch), epoch, spec.merge)
       // applied=false here means the derived epoch was already committed
       // (a replayed run, or a concurrent job on the same table won the
       // epoch) — surface it as a skip, like the checksum gate does

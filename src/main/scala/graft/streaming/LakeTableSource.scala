@@ -377,16 +377,16 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
 
 /** `df.writeStream.format("graft-table").option("path", dir).start()` —
   * the sink half: every micro-batch lands through the engine's
-  * epoch-guarded MERGE (method `upsert`, default) or blind append
-  * (`insert`), exactly like [[graft.cdc.CdcPipeline]]'s foreachBatch but
-  * without writing one. Spark's micro-batch id is the epoch id, so
-  * checkpoint redelivery is a no-op — exactly-once end to end; chaining
-  * a `graft-table` source into a `graft-table` sink is complete
-  * table-to-table replication in one `readStream → writeStream` line.
+  * epoch-guarded MERGE, exactly like [[graft.cdc.CdcPipeline]]'s
+  * foreachBatch but without writing one. Spark's micro-batch id is the
+  * epoch id, so checkpoint redelivery is a no-op — exactly-once end to
+  * end; chaining a `graft-table` source into a `graft-table` sink is
+  * complete table-to-table replication in one `readStream → writeStream`
+  * line.
   * The batch must carry the change envelope (`lsn`, `op`, key/payload
   * columns) — which is exactly what the source emits. */
 class LakeTableSink(sqlContext: SQLContext, tableDir: String,
-    method: String, cfg: graft.cdc.MergeConfig)
+    cfg: graft.cdc.MergeConfig)
     extends org.apache.spark.sql.execution.streaming.Sink {
 
   private val table = LakeTable.load(sqlContext.sparkSession, tableDir)
@@ -394,9 +394,8 @@ class LakeTableSink(sqlContext: SQLContext, tableDir: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the engine hands a streaming-flagged frame; merge runs batch-only
     // operations (observe) on it — re-plan as a plain batch first
-    val b = GraftStreamShim.asPlainBatch(data)
-    if (method == "insert") graft.cdc.MergeApply.append(table, b, batchId, cfg)
-    else graft.cdc.MergeApply.merge(table, b, batchId, cfg)
+    graft.cdc.MergeApply.merge(table, GraftStreamShim.asPlainBatch(data),
+      batchId, cfg)
     ()
   }
 
@@ -405,7 +404,7 @@ class LakeTableSink(sqlContext: SQLContext, tableDir: String,
 
 /** Registers short name `graft-table` (META-INF/services). Serves all
   * four surfaces of the format: streaming source (CDF tail), streaming
-  * sink (merge/append per micro-batch), batch read
+  * sink (a merge per micro-batch), batch read
   * ([[graft.lake.GraftBatchRelation]] — pruned/pushed-down state reads,
   * time travel, metadata tables) and batch write
   * ([[graft.lake.GraftBatchWrite]]). */
@@ -481,9 +480,6 @@ class LakeTableSourceProvider extends StreamSourceProvider
     val d = dir(parameters)
     require(LakeTable.load(sqlContext.sparkSession, d).exists,
       s"no lake table at $d — create it first (LakeTable.createTable)")
-    val method = parameters.getOrElse("method", "upsert")
-    require(method == "upsert" || method == "insert",
-      s"method must be upsert or insert, got '$method'")
     // writer identity for app-scoped idempotence (Delta's txnAppId): the
     // sink's batch ids start at 0 per checkpoint, so they must live in
     // their own txn slot — in the GLOBAL epoch space they would collide
@@ -526,7 +522,7 @@ class LakeTableSourceProvider extends StreamSourceProvider
     val invalid = parameters.getOrElse("invalidRows", "fail")
     require(Set("fail", "quarantine", "off").contains(invalid),
       s"invalidRows must be fail, quarantine, or off, got '$invalid'")
-    new LakeTableSink(sqlContext, d, method,
+    new LakeTableSink(sqlContext, d,
       graft.cdc.MergeConfig(txnApp = txnApp, invalidRows = invalid))
   }
 

@@ -147,52 +147,95 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(table.read().count() == 1)
   }
 
+  /** `body`'s result and the stage names of every Spark job it starts,
+    * scoped by job group, with AQE off as in the replay pipeline (with
+    * AQE on, the write's shuffle map stage runs as its own job). */
+  private def jobsOf[T](group: String)(body: => T): (T, Seq[String]) = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        // scope by job group: the async listener bus can still deliver
+        // straggler events from the warm-up writes
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          descs.add(js.stageInfos.map(_.name).mkString("[", "; ", "]"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.sparkContext.setJobGroup(group, group)
+      val out = try body
+      finally {
+        spark.sparkContext.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      }
+      // listener bus is async: poll until the job count is stable
+      var stableMs = 0
+      while (stableMs < 500) {
+        val last = descs.size; Thread.sleep(100)
+        if (last == descs.size) stableMs += 100 else stableMs = 0
+      }
+      (out, descs.toArray.toSeq.map(_.toString))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("v2 batch without registry rows pays no schema-detection job") {
     val table = LakeTable.createTable(spark, tmpDir("evo-nojob"),
       Schemas.transcript, nBuckets = 2)
     val mor = MergeConfig(maxDeltaFilesPerBucket = 100)
     MergeApply.merge(table, v2(Seq(
       (1L, "I", "c1", 0, "a", "user", null))), 0L, mor)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val group = "probe-job-count"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        // scope by job group: the async listener bus can still deliver
-        // straggler events from the warm-up merge above
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet()
-          descs.add(js.stageInfos.map(_.name).mkString("[", "; ", "]"))
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // AQE off, as in the replay pipeline: with AQE on, the write's
-      // shuffle map stage runs as its own job and the count reads 2
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.sparkContext.setJobGroup(group, "v2 merge without S rows")
-      val r = MergeApply.merge(table, v2(Seq(
+    val (r, jobs) = jobsOf("probe-job-count") {
+      MergeApply.merge(table, v2(Seq(
         (2L, "I", "c1", 1, "b", "user", Map("x" -> "y")))), 1L, mor)
-      spark.sparkContext.clearJobGroup()
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      assert(r.applied && r.rowsApplied == 1L)
-      // listener bus is async: poll until the job count is stable
-      var last = -1
-      var stableMs = 0
-      while (stableMs < 500 && last != jobs.get()) {
-        last = jobs.get(); Thread.sleep(100)
-        if (last == jobs.get()) stableMs += 100 else stableMs = 0
-      }
-      // the schema probe rides the delta-write action, so a v2 batch with
-      // no op="S" rows runs exactly ONE job — the eager-detection shape
-      // would have run a second (filter+collect) job
-      assert(jobs.get() == 1,
-        s"expected 1 Spark job, saw ${jobs.get()}: " +
-          descs.toArray.mkString(" | "))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(r.applied && r.rowsApplied == 1L)
+    // the schema probe rides the delta-write action, so a v2 batch with
+    // no op="S" rows runs exactly ONE job — the eager-detection shape
+    // would have run a second (filter+collect) job
+    assert(jobs.size == 1,
+      s"expected 1 Spark job, saw ${jobs.size}: ${jobs.mkString(" | ")}")
+  }
+
+  test("replace applies an add-column registry event through the probe") {
+    val table = LakeTable.createTable(spark, tmpDir("evo-replace"),
+      Schemas.transcript, nBuckets = 2)
+    MergeApply.merge(table, v2(Seq(
+      (1L, "I", "c1", 0, "old", "user", null))), 0L)
+    val r = MergeApply.replace(table, v2(Seq(
+      (10L, "S", null, 0, """{"add":{"name":"score","type":"int"}}""", null, null),
+      (11L, "I", "c2", 0, "scored", "user", Map("score" -> "42")))), 1L)
+    assert(r.applied && r.rowsApplied == 1L)
+    assert(table.snapshot.userSchema("score").dataType == IntegerType)
+    assert(table.snapshot.files.nonEmpty &&
+      table.snapshot.files.forall(_.kind == "base"))
+    val got = table.read().select("conv_id", "turn_idx", "text", "score")
+      .as[(String, Int, String, Int)].collect().toSet
+    assert(got == Set(("c2", 0, "scored", 42)), "c1 is replaced away")
+  }
+
+  test("v2 replace without registry rows pays no schema-detection job") {
+    val table = LakeTable.createTable(spark, tmpDir("evo-replace-nojob"),
+      Schemas.transcript, nBuckets = 2)
+    MergeApply.merge(table, v2(Seq(
+      (1L, "I", "c1", 0, "a", "user", null))), 0L)
+    // a file-backed batch, as a feed is: over a local relation, Spark
+    // answers a filter+collect on the driver without starting a job
+    val feed = s"${tmpDir("evo-replace-nojob-feed")}/batch"
+    v2(Seq((2L, "I", "c2", 0, "b", "user", Map("x" -> "y"))))
+      .write.parquet(feed)
+    val batch = spark.read.parquet(feed)
+    val (r, jobs) = jobsOf("replace-probe-job-count") {
+      MergeApply.replace(table, batch, 1L)
+    }
+    assert(r.applied && r.rowsApplied == 1L)
+    assert(table.read().select("conv_id").as[String].collect().toSeq ==
+      Seq("c2"))
+    // one job: the LWW-resolving write, with the probe riding it
+    assert(jobs.size == 1,
+      s"expected 1 Spark job, saw ${jobs.size}: ${jobs.mkString(" | ")}")
   }
 
   test("streaming pipeline applies registry events mid-feed from checkpoint") {

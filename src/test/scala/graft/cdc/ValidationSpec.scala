@@ -85,6 +85,22 @@ class ValidationSpec extends SparkSpec {
     val r2 = MergeApply.merge(table, poisoned(3), epochId = 0L, q)
     assert(!r2.applied)
     assert(spark.read.parquet(s"$dir/_rejects/_global/epoch=0").count() == 3)
+
+    // a two-row batch into an EMPTY table: fail commits nothing,
+    // quarantine applies (and counts) exactly the valid row
+    val dir2 = tmpDir("val-quar-small")
+    val small = LakeTable.createTable(spark, dir2, Schemas.transcript,
+      nBuckets = 2)
+    val two = Seq((1L, "I", "a", 0, "user", "x"),
+      (2L, "I", null.asInstanceOf[String], 0, "user", "y"))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text")
+    intercept[PoisonEventException](MergeApply.merge(small, two, 0L))
+    assert(small.read().count() == 0L, "nothing may commit")
+    val r3 = MergeApply.merge(small, two, 0L, q)
+    assert(r3.applied && r3.rowsApplied == 1L && r3.rejectedEvents == 1L)
+    assert(small.read().count() == 1L)
+    assert(spark.read.parquet(s"$dir2/_rejects/_global/epoch=0")
+      .head().getAs[String]("reject_reason") == "null_key:conv_id")
   }
 
   test("quarantine: an uncastable envelope value is rejected, not a mid-write crash") {
@@ -158,31 +174,6 @@ class ValidationSpec extends SparkSpec {
     assert(graft.lake.TableMain.run(spark, Seq(dir2, "rejects"),
       lines2 += _) == 0)
     assert(lines2 == Seq("[table] no rejects"))
-  }
-
-  test("append (insert fast path) validates the same envelope contract") {
-    val dir = tmpDir("val-append")
-    val table = LakeTable.createTable(spark, dir, Schemas.transcript,
-      nBuckets = 2)
-    intercept[PoisonEventException] {
-      MergeApply.append(table,
-        Seq((1L, "I", "a", 0, "user", "x"),
-          (2L, "I", null.asInstanceOf[String], 0, "user", "y"))
-          .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text"),
-        epochId = 0L)
-    }
-    assert(table.read().count() == 0L, "nothing may commit")
-    // quarantine applies the valid remainder and dead-letters the rest
-    val q = MergeConfig(invalidRows = "quarantine")
-    val res = MergeApply.append(table,
-      Seq((1L, "I", "a", 0, "user", "x"),
-        (2L, "I", null.asInstanceOf[String], 0, "user", "y"))
-        .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text"),
-      epochId = 0L, q)
-    assert(res.applied && res.rowsApplied == 1L && res.rejectedEvents == 1L)
-    assert(table.read().count() == 1L)
-    assert(spark.read.parquet(s"$dir/_rejects/_global/epoch=0")
-      .head().getAs[String]("reject_reason") == "null_key:conv_id")
   }
 
   test("a clean feed pays no quarantine action and rejects nothing") {

@@ -369,14 +369,37 @@ class BatchRelationSpec extends SparkSpec {
     }
     // nothing was created by the failed writes
     assert(!LakeTable.load(spark, dir).exists)
-    // a typo'd option on an Overwrite fails BEFORE touching the table
+    // a bad option on an Overwrite fails BEFORE touching the table — the
+    // retired `method` is an unknown key (every write merges)
     rows.write.format("graft-table").mode(SaveMode.Append).save(dir)
     val t = LakeTable.load(spark, dir)
-    intercept[IllegalArgumentException] {
-      rows.write.format("graft-table").option("method", "upsertt")
+    val e = intercept[IllegalArgumentException] {
+      rows.write.format("graft-table").option("method", "upsert")
         .mode(SaveMode.Overwrite).save(dir)
     }
+    assert(e.getMessage.toLowerCase.contains("unknown graft-table write option"))
     assert(t.read().count() == 1)
+  }
+
+  test("plain-row appends past the compaction threshold fold their delta files") {
+    val dir = tmpDir("br-debt")
+    val max = graft.cdc.MergeConfig().maxDeltaFilesPerBucket
+    val n = max + 4
+    (1 to n).foreach { i =>
+      (0 until 6).map(k => (s"d$k", 0, "user", s"v$i", null: String,
+        Timestamp.valueOf("2026-03-12 00:00:00")))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+        .write.format("graft-table").option("nBuckets", "2")
+        .mode(SaveMode.Append).save(dir)
+    }
+    val t = LakeTable.load(spark, dir)
+    val deltas = t.snapshot.files.filter(_.kind == "delta")
+      .groupBy(_.bucket).map { case (b, fs) => b -> fs.size }
+    assert(deltas.values.forall(_ <= max),
+      s"delta files per bucket after $n appends: $deltas")
+    val got = t.read().select("conv_id", "text").as[(String, String)]
+      .collect().toSet
+    assert(got == (0 until 6).map(k => (s"d$k", s"v$n")).toSet)
   }
 
   test("replayed (txnAppId, batchId) Overwrite is a no-op with data intact") {

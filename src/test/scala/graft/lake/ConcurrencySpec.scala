@@ -53,7 +53,7 @@ class ConcurrencySpec extends SparkSpec {
     // a concurrent writer lands a delta in empty bucket 2 and wins the race
     t.commit(base, Seq(DataFileEntry("late", 2, 1L, 0, "delta")), Set.empty, Some(1L), None)
     // the replace built on the stale view retires every bucket (the
-    // appendOrReplace contract) — its conflict signature must cover
+    // MergeApply.replace contract) — its conflict signature must cover
     // bucket 2, so the stale replace cannot silently keep 'late' alive
     intercept[CommitConflictException] {
       t.commit(base, Seq(DataFileEntry("repl", 0, 1L, 0)),

@@ -112,13 +112,13 @@ class LakeTableSpec extends SparkSpec {
     assert(t.read(asOf = Some(v1)).count() == c1)
   }
 
-  test("append fast path registers files without rewriting") {
+  test("a merge registers new files without rewriting existing ones") {
     val dir = tmpDir("lt-append")
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-    MergeApply.append(t, ChangeLogGen.changeLogDF(spark, cfg)
+    MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg)
       .filter(col("op") =!= "D"), 0L)
     val files1 = t.snapshot.files.map(_.path).toSet
-    MergeApply.append(t, Seq((123456789L, "I", "apnd", 0, "user", "x",
+    MergeApply.merge(t, Seq((123456789L, "I", "apnd", 0, "user", "x",
       null: String, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
       .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"), 1L)
     val files2 = t.snapshot.files.map(_.path).toSet
@@ -286,12 +286,6 @@ class LakeTableSpec extends SparkSpec {
     val cand = t.sinceCandidates(snap, cut2)
     assert(cand.nonEmpty && cand.size < snap.files.size)
     assert(cand.forall(_.maxLsn > cut2))
-    // time-travel diff: epoch-1's snapshot (v2) has high LSN = cut2, so
-    // changesBetween(v2, current) is exactly the post-cut2 winner set
-    assert(t.changesBetween(2L)
-      .select("conv_id", "turn_idx", "__lsn", "__op", "text")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2),
-        r.getString(3), r.getString(4))).toSet == winners(cut2))
     // after full compaction the lone-base fast path answers the same cuts
     MergeApply.compactBuckets(t, (0 until 4).toSet)
     assert(t.snapshot.files.forall(_.kind == "base"))
