@@ -66,8 +66,9 @@ object Bench {
   }
 
   /** Two workload types, two right configs. The CDC replay runs AQE OFF:
-    * its merge plan is a fixed single shuffle (skew handled by
-    * deterministic salting) and AQE's per-stage materialization only
+    * its merge plan is a fixed single shuffle (one write task per
+    * bucket, so a hot bucket is one task's work; ROADMAP item 2 measures
+    * that) and AQE's per-stage materialization only
     * adds driver latency per epoch. The analytic query sweep runs AQE ON
     * (the production choice for ad-hoc plans): runtime partition
     * coalescing + skew-join handling sizes each exchange to the data —
@@ -294,10 +295,12 @@ object Bench {
         val effBest = r4.max / (4.0 * r1.max)
         // skew evidence: the same protocol over a feed with ONE hot
         // conversation taking `skewHot` of all events (the north rule's
-        // hot-conv_id case; the uniform feed already carries 5%) —
-        // deterministic salting should hold efficiency within ~0.1 of
-        // the uniform number. Fewer reps (disclosed): the skew DELTA is
-        // the signal, and the uniform section already bounds phase noise.
+        // hot-conv_id case; the uniform feed already carries 5%). The
+        // merge writes one task per bucket, so the hot bucket is one
+        // task's work; ROADMAP item 2 reads this number to decide whether
+        // that task is the critical path. Fewer reps (disclosed): the
+        // skew DELTA is the signal, and the uniform section already
+        // bounds phase noise.
         val skewReps =
           sys.env.getOrElse("SPARK_GRAFT_CDC_SKEW_REPS", "1").toInt
         val skewHot = 0.10

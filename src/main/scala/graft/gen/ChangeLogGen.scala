@@ -16,7 +16,7 @@ import graft.model.ChangeEvent
   * Properties (all tunable):
   *   - op mix I/U/D;
   *   - hot-key skew: `hotFraction` of events target a single conv_id
-  *     (exercises the salting path, SURVEY.md §4 item 3);
+  *     (its bucket is one write task's work; SURVEY.md §4 item 3);
   *   - out-of-order delivery: the delivery position is a bijective scramble
   *     of the LSN, so any contiguous delivery slice holds a scattered LSN
   *     set (late/early data across micro-batches);

@@ -885,32 +885,14 @@ class LakeTable(val spark: SparkSession, val dir: String) {
 
   // ----------------------------------------------------------------- read
 
-  /** Raw read (meta columns retained, tombstones retained), optionally
-    * pruned to a bucket subset and a snapshot version. */
-  def readRaw(buckets: Option[Set[Int]] = None,
-      asOf: Option[Long] = None): DataFrame = {
-    val snap = asOf.map(snapshotAt).getOrElse(snapshot)
-    readRawSnap(snap, buckets)
-  }
-
-  /** Raw read pinned to an already-resolved snapshot — the check-then-read
-    * paths (MoR resolution, merge) use this so a commit racing between two
-    * snapshot reads can never mix file lists across versions. Files are
-    * read grouped by schema version and projected to the current user
-    * schema (+meta), so add-column / widening never rewrites data. */
-  private[graft] def readRawSnap(snap: Snapshot,
-      buckets: Option[Set[Int]]): DataFrame = {
-    val files = buckets match {
-      case Some(bs) => snap.files.filter(f => bs.contains(f.bucket))
-      case None => snap.files
-    }
-    readFiles(snap, files)
-  }
-
-  /** Scan an explicit file subset of a snapshot, grouped by schema version
-    * and projected to the current user schema (+meta). The ONE place that
-    * knows how to read evolved files — compaction and rebucket call it
-    * too, so a schema-evolution rule change lands everywhere at once.
+  /** Scan an explicit file subset of a snapshot (meta columns and
+    * tombstones retained), grouped by schema version and projected to the
+    * current user schema (+meta), so add-column / widening never rewrites
+    * data. The ONE place that knows how to read evolved files — compaction
+    * and rebucket call it too, so a schema-evolution rule change lands
+    * everywhere at once. Callers pass files of an already-resolved
+    * snapshot, so a commit racing between two snapshot reads can never mix
+    * file lists across versions.
     *
     * Each scan names at most `parallelPartitionDiscovery.threshold` paths
     * (the chunks are unioned): past that count Spark's file index lists
@@ -949,8 +931,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * bucket-sized (never millions of tiny per-key exchanges), and a key
     * group can never span its conv group.
     *
-    * The table's one LWW kernel. Callers: the MoR reads ([[read]],
-    * [[readConv]], [[readSince]], change-feed windows, staged reads),
+    * The table's one LWW kernel. Callers: [[resolveMor]] (every snapshot
+    * read), the arrival side of [[changeFeed]] (files of several commits),
     * `MergeApply.replace`'s in-batch dedup, and the one-job fold of
     * `MergeApply.compactBuckets` and `MergeApply.rebucket` (there
     * `nBuckets` is the target layout, so partition i becomes new bucket
@@ -966,49 +948,47 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       .drop("__prev")
   }
 
-  /** User-facing read: merge-on-read resolution restricted to the buckets
-    * that actually hold delta files — base-only buckets stream straight
-    * from the scan with NO exchange (one stray delta used to trigger a
-    * full-table repartition; at 100 TB that is the difference between
-    * resolving one bucket and shuffling the world). Tombstones filtered,
-    * meta columns dropped. The whole plan is pinned to ONE snapshot. */
+  /** User-facing read: the table state at one snapshot through
+    * [[resolveMor]]. Tombstones filtered, meta columns dropped. */
   def read(asOf: Option[Long] = None): DataFrame = {
     val snap = asOf.map(snapshotAt).getOrElse(snapshot)
-    liveRows(snap, resolveBuckets(snap, None))
+    liveRows(snap, resolveMor(snap, snap.files))
   }
 
   /** [[read]] restricted to a bucket subset — the file pruning happens in
-    * the manifest (no data scan of other buckets), MoR resolution runs
-    * only where the SELECTED buckets hold deltas. This is the read the
+    * the manifest (no data scan of other buckets). This is the read the
     * incremental consumers use ([[graft.cdc.AggView]]): a refresh that
     * touched k of n buckets reads k/n of the table at any table size. */
   def readBuckets(buckets: Set[Int], asOf: Option[Long] = None): DataFrame = {
     val snap = asOf.map(snapshotAt).getOrElse(snapshot)
-    liveRows(snap, resolveBuckets(snap, Some(buckets)))
+    liveRows(snap, resolveMor(snap, snap.files.filter(f =>
+      buckets.contains(f.bucket))))
   }
 
-  /** Shared MoR resolution for [[read]]/[[readBuckets]]: base-only buckets
-    * stream straight from the scan with NO exchange (one stray delta used
-    * to trigger a full-table repartition; at 100 TB that is the
-    * difference between resolving one bucket and shuffling the world).
-    * The whole plan is pinned to ONE snapshot. */
-  private def resolveBuckets(snap: Snapshot,
-      restrict: Option[Set[Int]]): DataFrame = {
-    val inScope = restrict match {
-      case Some(bs) => (f: DataFileEntry) => bs.contains(f.bucket)
-      case None => (_: DataFileEntry) => true
-    }
-    resolveMor(snap, snap.files.filter(inScope))
-  }
-
-  /** MoR resolution over an EXPLICIT file subset — the shared engine under
-    * [[resolveBuckets]] and the zone-map-pruned reads. PRECONDITION: for
-    * every delta-bearing bucket present in `files`, the subset must hold
-    * ALL of that bucket's files (LWW picks the max-__lsn version per key;
-    * resolving over a partial version set would crown the wrong winner).
-    * [[resolveBuckets]] satisfies it by taking whole buckets;
-    * [[LakeTable.tsCandidates]] by construction. Base-only buckets stream
-    * straight from the scan with NO exchange. */
+  /** The merge-on-read rule, and the ONE place a snapshot read chooses
+    * between a plain scan and [[lwwResolve]]: a bucket that holds a delta
+    * file in `files` is LWW-resolved; every other bucket streams straight
+    * from the scan with NO exchange (one stray delta used to trigger a
+    * full-table repartition; at 100 TB that is the difference between
+    * resolving one bucket and shuffling the world).
+    *
+    * The plain scan is exact because the base files of one bucket in a
+    * live set are the output of ONE write that retired the whole bucket
+    * (a compaction, purge or rebucket fold, or a replace), so they hold
+    * one version per key. PRECONDITION, which every caller
+    * meets: `files` are files of `snap`'s live set, and for each bucket
+    * that holds a delta file in `files`, either
+    *  - `files` holds ALL of that bucket's files (whole buckets: [[read]],
+    *    [[readBuckets]], the pre side of [[changeFeed]], [[readStaged]];
+    *    [[LakeTable.tsCandidates]] keeps delta-bearing buckets whole), or
+    *  - `files` holds every file of the bucket with `maxLsn > cut` and the
+    *    caller filters `__lsn > cut` above the result ([[readSinceSnap]]):
+    *    a row that out-ranks a winner above the cut has a higher LSN, so
+    *    it lives in a candidate file too.
+    * LWW picks the max-__lsn version per key, so resolving any other
+    * partial version set could crown the wrong winner. [[stagedChanges]]
+    * passes a staged intent's files alone: they resolve to the batch's
+    * own winners, which is what that read returns. */
   private def resolveMor(snap: Snapshot,
       files: Seq[DataFileEntry]): DataFrame = {
     val deltaBuckets =
@@ -1030,24 +1010,19 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       .filter(col("__op") =!= lit("D"))
       .select(snap.userSchema.fieldNames.map(col).toSeq: _*)
 
-  /** Point read: the live turns of ONE conversation, touching only the
-    * key's bucket — file pruning from the manifest alone, so a lookup
-    * reads 1/nBuckets of the table regardless of table size (the
-    * operational "show me this conversation" query at 10^10 rows).
-    * LWW-resolves only if that bucket carries deltas; tombstones
-    * filtered like [[read]]. */
+  /** Point read: the live turns of ONE conversation — [[readBuckets]] of
+    * the key's bucket, so file pruning comes from the manifest alone and a
+    * lookup reads 1/nBuckets of the table regardless of table size (the
+    * operational "show me this conversation" query at 10^10 rows). The
+    * key filter sits above the resolve, and Catalyst pushes a predicate
+    * on the window's partition column (`conv_id`) below the window and
+    * the repartition into every scan, so only the key's rows are
+    * shuffled (LakeTableSpec pins that plan). */
   def readConv(convId: String, asOf: Option[Long] = None): DataFrame = {
     val snap = asOf.map(snapshotAt).getOrElse(snapshot)
     val b = LakeTable.bucketOf(convId, snap.nBuckets)
-    // filter BEFORE resolution: every version of the key lives in this
-    // bucket, so the filter keeps all of them and LWW stays exact
-    val raw = readRawSnap(snap, Some(Set(b)))
-      .filter(col("conv_id") === lit(convId))
-    val resolved =
-      if (snap.files.exists(f => f.bucket == b && f.kind == "delta"))
-        lwwResolve(raw, snap.nBuckets)
-      else raw
-    liveRows(snap, resolved)
+    liveRows(snap, resolveMor(snap, snap.files.filter(_.bucket == b))
+      .filter(col("conv_id") === lit(convId)))
   }
 
   /** Files that can hold a row with `__lsn > sinceLsn`, selected from the
@@ -1065,15 +1040,13 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * lineage entry, mirroring Iceberg's incremental read.
     *
     * Scale shape: the manifest LSN ranges prune the scan to candidate
-    * files BEFORE any Spark job — O(new data), not O(table). Pruned LWW
-    * is still exact: any row that out-ranks a candidate row for the same
-    * key has a higher LSN, hence also lives in a candidate file, so
-    * resolving the candidate set alone yields true winners; winners at or
-    * below the cut are filtered after resolution. A bucket whose single
-    * candidate is a base file skips resolution (compaction leaves one
-    * version per key); delta files may hold several versions of a key
-    * (MergeApply.mergeAttempt defers dedup to read), so delta candidates
-    * always resolve — an exchange over the NEW rows only. */
+    * files BEFORE any Spark job — O(new data), not O(table). The
+    * candidates go through [[resolveMor]] like every snapshot read: only
+    * buckets with a delta candidate pay an exchange, over the NEW rows
+    * only. Pruned LWW is still exact: any row that out-ranks a candidate
+    * row for the same key has a higher LSN, hence also lives in a
+    * candidate file, so resolving the candidate set alone yields true
+    * winners; winners at or below the cut are filtered after resolution. */
   def readSince(sinceLsn: Long, asOf: Option[Long] = None): DataFrame =
     readSinceSnap(sinceLsn, asOf.map(snapshotAt).getOrElse(snapshot))
 
@@ -1082,15 +1055,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * must not pay another version-JSON read + manifest fold per call. */
   private[graft] def readSinceSnap(sinceLsn: Long, snap: Snapshot)
       : DataFrame = {
-    val cand = sinceCandidates(snap, sinceLsn)
-    val (single, multi) = cand.groupBy(_.bucket).values
-      .partition(g => g.size == 1 && g.head.kind == "base")
-    val lone = readFiles(snap, single.flatten.toSeq)
-    val resolved =
-      if (multi.isEmpty) lone
-      else lwwResolve(readFiles(snap, multi.flatten.toSeq), snap.nBuckets)
-        .unionByName(lone)
-    resolved.filter(col("__lsn") > lit(sinceLsn))
+    resolveMor(snap, sinceCandidates(snap, sinceLsn))
+      .filter(col("__lsn") > lit(sinceLsn))
       .select((snap.userSchema.fieldNames.toSeq ++
         metaFields.map(_.name)).map(col): _*)
   }
@@ -1101,7 +1067,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   def highLsn(snap: Snapshot): Long =
     if (snap.files.isEmpty) -1L
     else if (snap.files.forall(_.maxLsn >= 0)) snap.files.map(_.maxLsn).max
-    else readRawSnap(snap, None).agg(max(col("__lsn"))).head().getLong(0)
+    else readFiles(snap, snap.files).agg(max(col("__lsn"))).head().getLong(0)
 
   /** Files that hold (or may hold) rows which ARRIVED after snapshot
     * version `sinceV`: a delta or append file (stamped `addedV`) contains
@@ -1169,13 +1135,16 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * Scale shape: the arrival side is O(new data) (exact files pruned
     * from the manifest; a compaction fold inside the window degrades its
     * bucket to full-content candidacy, absorbed by the suppressions
-    * above); the pre side reads `fromVersion` restricted to the BUCKETS
-    * the arrival files touch. The post-state winner is computed INSIDE
-    * the classify join — max-LSN of (window-arrival winner, pre winner) —
-    * so neither side is read twice. The per-row fan-out to change rows is
-    * one codegen'd CASE-to-array + explode. Schema evolution across the
-    * window is absorbed by projecting the pre side onto `toVersion`'s
-    * schema (added columns null in preimages, widened types upcast). */
+    * above). It always LWW-resolves: its files span several commits, so
+    * two base files from different folds may hold the same key. The pre
+    * side reads `fromVersion` restricted to the BUCKETS the arrival files
+    * touch, through [[resolveMor]] (whole buckets of one snapshot). The
+    * post-state winner is computed INSIDE the classify join — max-LSN of
+    * (window-arrival winner, pre winner) — so neither side is read twice.
+    * The per-row fan-out to change rows is one codegen'd CASE-to-array +
+    * explode. Schema evolution across the window is absorbed by
+    * projecting the pre side onto `toVersion`'s schema (added columns null
+    * in preimages, widened types upcast). */
   def changeFeed(fromVersion: Long, toVersion: Option[Long] = None)
       : DataFrame = {
     val fromSnap = snapshotAt(fromVersion)
@@ -1194,15 +1163,9 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       if (fromSnap.nBuckets == toSnap.nBuckets)
         arrFiles.map(_.bucket).toSet
       else fromSnap.files.map(_.bucket).toSet
-    val preRaw = readRawSnap(fromSnap,
-      Some(touched.intersect(fromSnap.files.map(_.bucket).toSet)))
-    val preResolved =
-      if (fromSnap.files.exists(f => touched.contains(f.bucket) &&
-          f.kind == "delta"))
-        lwwResolve(preRaw, fromSnap.nBuckets)
-      else preRaw
-    val want = LakeTable.withMeta(toSnap.userSchema)
-    val pre = LakeTable.align(preResolved, want)
+    val pre = LakeTable.align(resolveMor(fromSnap,
+        fromSnap.files.filter(f => touched.contains(f.bucket))),
+      LakeTable.withMeta(toSnap.userSchema))
 
     val u = toSnap.userSchema.fieldNames.toSeq
     val j = arrW.as("p").join(pre.as("q"),
@@ -1234,14 +1197,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         Seq(col("c._change_type").as("_change_type"), col("_lsn")): _*)
   }
 
-  /** The registered event-time column (`watermark.column` table property)
-    * — the reference's per-resource time-field registry
-    * (reference: engine/etl_util.py:314-348). */
-  def watermarkColumn: Option[String] =
-    snapshot.properties.get(graft.spec.TimeField.WatermarkColumn)
-
-  /** Time-gap incremental pull over the registered time column: live rows
-    * from the last `days` days relative to the table's event-time
+  /** Time-gap incremental pull over the registered time column (the
+    * `watermark.column` table property — the reference's per-resource
+    * time-field registry, reference: engine/etl_util.py:314-348): live
+    * rows from the last `days` days relative to the table's event-time
     * high-water mark. Fails fast if the table declared no
     * `watermark.column`.
     *
@@ -1263,9 +1222,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * A non-timestamp registered column falls back to the unpruned
     * full-read window (no stats exist for it). */
   def incrementalTail(days: Int): DataFrame = {
-    val c = watermarkColumn.getOrElse(throw new IllegalArgumentException(
-      s"table $dir has no '${graft.spec.TimeField.WatermarkColumn}' property"))
     val snap = snapshot
+    val c = snap.properties.get(graft.spec.TimeField.WatermarkColumn)
+      .getOrElse(throw new IllegalArgumentException(
+        s"table $dir has no '${graft.spec.TimeField.WatermarkColumn}' property"))
     val tsTyped = snap.userSchema.fields.exists(f =>
       f.name == c && f.dataType == org.apache.spark.sql.types.TimestampType)
     def lazyWindow = graft.spec.TimeField.timeGap(
@@ -1620,15 +1580,13 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     liveRows(synth, resolveMor(synth, synth.files))
   }
 
-  /** Just the staged CHANGES, LWW-resolved to one winner per key, with the
-    * `__op`/`__lsn` envelope retained — what the batch asserts, deletes
-    * included (the frame an audit gate usually wants). */
+  /** Just the staged CHANGES, resolved to one winner per key by
+    * [[resolveMor]] over the intent's files alone, with the `__op`/`__lsn`
+    * envelope retained — what the batch asserts, deletes included (the
+    * frame an audit gate usually wants). */
   def stagedChanges(wapId: String): DataFrame = {
     val it = stagedIntent(wapId)
-    val base = snapshotAt(it.baseVersion)
-    val raw = readFiles(base, it.files)
-    if (it.files.exists(_.kind == "delta")) lwwResolve(raw, it.nBuckets)
-    else raw
+    resolveMor(snapshotAt(it.baseVersion), it.files)
   }
 
   /** Publish a staged intent: replay it through the ORDINARY commit

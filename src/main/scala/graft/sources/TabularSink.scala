@@ -21,10 +21,10 @@ object TabularSink {
 
   /** Append `df` to `dir` as headerless CSV parts (the schema lives in
     * the sidecar, not per-file — files stay concatenable like the
-    * reference's single CSV). Creates the sink on first write. */
-  def append(df: DataFrame, dir: String, method: String = "insert"): Unit = {
-    require(method == "insert",
-      s"TabularSink is insert-only (reference loaders.py:671); got $method")
+    * reference's single CSV). Creates the sink on first write. Appending
+    * is the only write it offers: a `CsvDir` job refuses any other
+    * method before calling it. */
+  def append(df: DataFrame, dir: String): Unit = {
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)

@@ -187,9 +187,14 @@ class SchemaEvolutionSpec extends SparkSpec {
     val mor = MergeConfig(maxDeltaFilesPerBucket = 100)
     MergeApply.merge(table, v2(Seq(
       (1L, "I", "c1", 0, "a", "user", null))), 0L, mor)
+    // a file-backed batch, as a feed is: over a local relation, Spark
+    // answers a filter+collect on the driver without starting a job
+    val feed = s"${tmpDir("evo-nojob-feed")}/batch"
+    v2(Seq((2L, "I", "c1", 1, "b", "user", Map("x" -> "y"))))
+      .write.parquet(feed)
+    val batch = spark.read.parquet(feed)
     val (r, jobs) = jobsOf("probe-job-count") {
-      MergeApply.merge(table, v2(Seq(
-        (2L, "I", "c1", 1, "b", "user", Map("x" -> "y")))), 1L, mor)
+      MergeApply.merge(table, batch, 1L, mor)
     }
     assert(r.applied && r.rowsApplied == 1L)
     // the schema probe rides the delta-write action, so a v2 batch with

@@ -128,7 +128,7 @@ class LakeTableSpec extends SparkSpec {
   test("manifest row counts match data") {
     val t = freshTable()
     val manifestRows = t.snapshot.files.map(_.rows).sum
-    assert(manifestRows == t.readRaw().count())
+    assert(manifestRows == t.readFiles(t.snapshot, t.snapshot.files).count())
   }
 
   test("vacuum expires old snapshots and deletes unreferenced files") {
@@ -203,7 +203,7 @@ class LakeTableSpec extends SparkSpec {
     val dir = tmpDir("lt-wm")
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4,
       properties = Map(TimeField.WatermarkColumn -> "ts"))
-    assert(t.watermarkColumn.contains("ts"))
+    assert(t.snapshot.properties.get(TimeField.WatermarkColumn).contains("ts"))
     def ev(lsn: Long, conv: String, day: Int) =
       (lsn, "I", conv, 0, "user", "x", null: String,
         java.sql.Timestamp.valueOf(f"2026-01-$day%02d 12:00:00"))
@@ -261,7 +261,8 @@ class LakeTableSpec extends SparkSpec {
     def winners(since: Long): Set[(String, Int, Long, String, String)] = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("conv_id", "turn_idx").orderBy(col("__lsn").desc)
-      t.readRaw().withColumn("__rn", row_number().over(w))
+      val s = t.snapshot
+      t.readFiles(s, s.files).withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1 && col("__lsn") > since)
         .select("conv_id", "turn_idx", "__lsn", "__op", "text")
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2),
@@ -286,11 +287,23 @@ class LakeTableSpec extends SparkSpec {
     val cand = t.sinceCandidates(snap, cut2)
     assert(cand.nonEmpty && cand.size < snap.files.size)
     assert(cand.forall(_.maxLsn > cut2))
-    // after full compaction the lone-base fast path answers the same cuts
+    // after full compaction base-only buckets answer the same cuts
     MergeApply.compactBuckets(t, (0 until 4).toSet)
     assert(t.snapshot.files.forall(_.kind == "base"))
     assert(got(-1L) == winners(-1L))
     assert(got(cut2) == winners(cut2))
+    // a fold capped at a few rows per file leaves several base files per
+    // bucket: they hold one version per key, so the cut still needs no
+    // resolve and plans no exchange
+    MergeApply.compactBuckets(t, (0 until 4).toSet,
+      MergeConfig(maxRowsPerFile = 50))
+    val folded = t.snapshot
+    assert(folded.files.forall(_.kind == "base"))
+    assert(t.sinceCandidates(folded, cut2).groupBy(_.bucket).values
+      .exists(_.size > 1))
+    assert(got(cut2) == winners(cut2))
+    val plan = t.readSince(cut2).queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"base-only cut planned a shuffle:\n$plan")
     full.unpersist()
   }
 
@@ -343,6 +356,18 @@ class LakeTableSpec extends SparkSpec {
       (8000002L, "D", someConv, 1, "user", "", null: String, ts))
       .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
     MergeApply.merge(t, b, 1L, MergeConfig(maxDeltaFilesPerBucket = 1000))
+    // the key filter above the resolve reaches every scan of the
+    // delta-bearing bucket, and the resolve shuffles once
+    assert(t.snapshot.files.exists(f => f.kind == "delta" &&
+      f.bucket == LakeTable.bucketOf(someConv, t.snapshot.nBuckets)))
+    val plan = t.readConv(someConv).queryExecution.executedPlan.toString
+    val lines = plan.split("\n").toSeq
+    assert(lines.count(_.contains("Exchange")) == 1,
+      s"expected exactly one Exchange, plan:\n$plan")
+    val scans = lines.filter(_.contains("FileScan"))
+    assert(scans.nonEmpty && scans.forall(l => l.contains("PushedFilters") &&
+      l.contains(s"EqualTo(conv_id,$someConv)")),
+      s"conv_id equality did not reach every scan:\n$plan")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("conv_id", "turn_idx", "text").collect()
         .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet

@@ -143,7 +143,7 @@ class JobRunnerSpec extends SparkSpec {
     val r = JobRunner.run(spark, spec)
     assert(r.applied)
     val t = LakeTable.load(spark, lake)
-    assert(t.watermarkColumn.contains("ts"))
+    assert(t.snapshot.properties.get(TimeField.WatermarkColumn).contains("ts"))
     val got = t.readConv("c1").orderBy("turn_idx").collect()
     assert(got.map(_.getAs[Int]("turn_idx")).toSeq == Seq(0, 1))
     assert(got.map(_.getAs[String]("text")).toSeq == Seq("hello", "hi"))
@@ -221,6 +221,13 @@ class JobRunnerSpec extends SparkSpec {
     val back = graft.sources.TabularSink.read(spark, s"$work/out_csv")
     assert(back.count() == 3)
     assert(back.columns.toSet == Set("license_id", "breed", "color", "zip"))
+    // insert-only, like the reference's assert (loaders.py:671); the
+    // checksum gate is off so the unchanged input reaches that check
+    val refused = intercept[IllegalArgumentException] {
+      JobRunner.run(spark, csvSpec.copy(method = "upsert",
+        checksumGate = false))
+    }
+    assert(refused.getMessage.contains("CsvDir is insert-only"))
 
     // whole-file binary destination
     val binSpec = JobSpec(
