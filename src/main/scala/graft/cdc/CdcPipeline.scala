@@ -213,13 +213,19 @@ object CdcPipeline {
     * transforms drop those keys' changes entirely — including their
     * deletes — so filter on IMMUTABLE key attributes only.
     *
-    * With `evolveSchema` (default), source schema evolution propagates:
-    * columns the source added (with their column docs — the reference's
-    * data-dictionary preservation, reference: engine/etl_util.py:87-115)
-    * are added downstream, and type widenings are widened downstream,
-    * BEFORE the round's merge — otherwise the destination's align would
-    * silently drop the new columns. Disable it when `transform` reshapes
-    * the columns and the destination schema is authored by hand. */
+    * With `evolveSchema` (default), source schema evolution propagates
+    * BEFORE the round's merge, by the one rule of
+    * [[LakeTable.evolveSchema]] in at most one schema commit: columns the
+    * source added arrive with their column docs (the reference's
+    * data-dictionary preservation, reference: engine/etl_util.py:87-115),
+    * type widenings are widened downstream, and destination-only columns
+    * are left alone — otherwise the destination's align would silently
+    * drop the new columns. A destination column whose type neither
+    * widens to nor from the source's fails the round with
+    * `IllegalArgumentException` before anything merges. Idempotent: a
+    * crash between evolution and merge redoes a no-op. Disable it when
+    * `transform` reshapes the columns and the destination schema is
+    * authored by hand. */
   def followOnce(src: LakeTable, dst: LakeTable,
       transform: DataFrame => DataFrame = identity,
       cfg: MergeConfig = MergeConfig(),
@@ -247,11 +253,12 @@ object CdcPipeline {
       dst.setProperty(FollowSpaceProp, "version")
     }
     val snap = src.snapshot
-    val last = dst.snapshot.maxCommittedEpoch
+    // only a property may have been set since dstSnap was read
+    val last = dstSnap.maxCommittedEpoch
     if (snap.version <= last)
       return FollowResult(applied = false, last, last, None)
-    if (evolveSchema) propagateSchema(snap, dst)
-    val changes = src.arrivalsSince(last, asOf = Some(snap.version))
+    if (evolveSchema) dst.evolveSchema(snap.userSchema, snap.columnDocs)
+    val changes = src.arrivalsSinceSnap(last, snap)
       .withColumnRenamed("__lsn", "lsn")
       .withColumnRenamed("__op", "op")
     val res = MergeApply.merge(dst, transform(changes), snap.version, cfg)
@@ -262,27 +269,6 @@ object CdcPipeline {
   /** Table property recording that a destination's epoch watermark lives
     * in the consumed-source-version space (followOnce's contract). */
   val FollowSpaceProp = "graft.follow.space"
-
-  /** Evolve `dst` to cover the source snapshot's user schema: add missing
-    * columns (carrying the source's column docs) and widen narrower types.
-    * Destination-only columns are left alone. Idempotent — both ops
-    * no-change-skip via schema equality, so a crash between evolution and
-    * merge just redoes a no-op. */
-  private def propagateSchema(srcSnap: graft.lake.Snapshot,
-      dst: LakeTable): Unit = {
-    val want = srcSnap.userSchema
-    val have = dst.snapshot.userSchema
-    want.fields.foreach { f =>
-      if (!have.fieldNames.contains(f.name))
-        dst.addColumn(f.name, f.dataType,
-          srcSnap.columnDocs.getOrElse(f.name, null))
-      else {
-        val cur = have(f.name).dataType
-        if (cur != f.dataType && LakeTable.canWiden(cur, f.dataType))
-          dst.widenColumn(f.name, f.dataType)
-      }
-    }
-  }
 
   /** Drain: follow rounds until the destination has consumed everything
     * currently in the source. Returns the rounds that applied data.

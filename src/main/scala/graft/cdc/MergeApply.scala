@@ -99,6 +99,17 @@ final case class MergeConfig(
       * compose with commits that land in between (LWW by LSN). */
     wapId: Option[String] = None)
 
+object MergeConfig {
+  /** Refuse an [[MergeConfig.invalidRows]] mode outside fail, quarantine
+    * and off — the one check every surface accepting the option runs
+    * before any state changes. Returns `mode`. */
+  def checkInvalidRows(mode: String): String = {
+    require(Set("fail", "quarantine", "off").contains(mode),
+      s"invalidRows must be fail, quarantine, or off, got '$mode'")
+    mode
+  }
+}
+
 /** The MERGE kernel (SURVEY.md §4 item 1, §7.1 item 4): applies one
   * micro-batch of change events to a [[LakeTable]] as an idempotent
   * upsert keyed on `(conv_id, turn_idx)`, last-writer-wins by `__lsn`.
@@ -342,9 +353,7 @@ object MergeApply {
     * Spark job — plus a codegen'd filter dropping them from the plan. */
   private final class Validation(table: LakeTable, snap: Snapshot,
       epochId: Long, cfg: MergeConfig, raw: DataFrame) {
-    require(Set("fail", "quarantine", "off").contains(cfg.invalidRows),
-      s"invalidRows must be fail, quarantine, or off, got " +
-        s"'${cfg.invalidRows}'")
+    MergeConfig.checkInvalidRows(cfg.invalidRows)
     private val obs =
       if (cfg.invalidRows == "off") None
       else Some(org.apache.spark.sql.Observation())
@@ -566,11 +575,11 @@ object MergeApply {
     attempt match {
       case Right(r) => r
       case Left(events) =>
-        // rare path: the probe surfaced schema-registry rows — evolve the
-        // schema in LSN order (idempotent commits of their own), then
-        // redo the attempt under the new schema. Nothing from the first
-        // attempt was committed.
-        events.sortBy(_._1).foreach(e => SchemaRegistry(table, e._2))
+        // rare path: the probe surfaced schema-registry rows — fold them
+        // in LSN order into one idempotent schema commit, then redo the
+        // attempt under the new schema. Nothing from the first attempt
+        // was committed.
+        SchemaRegistry(table, events.sortBy(_._1).map(_._2))
         mergeAttempt(table, batch, epochId, cfg, t0, probe = false,
           checksum = checksum, replaceAll = replaceAll)
           .getOrElse(throw new IllegalStateException(

@@ -22,9 +22,15 @@ import graft.lake.LakeTable
   * `extras[name]::type` into the typed column. The static envelope stays
   * fully typed, so the hot path pays nothing when no evolution happened.
   *
-  * Application is IDEMPOTENT (add of an existing column / widen to the
-  * current type are no-ops), which makes the crash window between
-  * schema-apply and merge-commit safe under at-least-once redelivery.
+  * A batch's events fold in LSN order through the one evolution rule
+  * ([[LakeTable.evolvedSchema]]) and land as at most ONE schema commit
+  * ([[LakeTable.evolveSchema]]). Application is IDEMPOTENT because the
+  * rule is: a replayed event finds its column present with the same or a
+  * wider type and changes nothing, which makes the crash window between
+  * schema commit and merge commit safe under at-least-once redelivery.
+  * An `add` naming an existing column (in any letter case) evolves that
+  * column by the same rule; a `widen` naming a missing column is an
+  * error.
   *
   * This replaces the reference's destructive `migrate_schema` (drop +
   * recreate + data-dictionary stash/restore, reference:
@@ -66,24 +72,18 @@ object SchemaRegistry {
     }
   }
 
-  /** Apply one registry event to the table; no-op if already applied. */
-  def apply(table: LakeTable, json: String): Boolean = {
-    val c = parse(json)
-    val schema = table.snapshot.userSchema
-    c.kind match {
-      case "add" =>
-        if (schema.fieldNames.contains(c.name)) false
-        else { table.addColumn(c.name, c.dt, c.doc.orNull); true }
-      case "widen" =>
-        val current = schema(c.name).dataType
-        // no-op not only when the type already matches but when it has
-        // ALREADY BEEN WIDENED FURTHER: one redelivered batch can carry
-        // widen int->long AND widen long->double; after a crash between
-        // the schema apply and the data commit, the replayed first event
-        // sees double and re-widening to long would throw — a permanent
-        // poison-batch loop, breaking the idempotence contract above
-        if (current == c.dt || LakeTable.canWiden(c.dt, current)) false
-        else { table.widenColumn(c.name, c.dt); true }
+  /** Apply a batch's registry events (payloads in LSN order) in at most
+    * one schema commit; true when the schema changed. */
+  def apply(table: LakeTable, events: Seq[String]): Boolean = {
+    val changes = events.map(parse)
+    val cur = table.snapshot.userSchema
+    val target = changes.foldLeft(cur) { (s, c) =>
+      if (c.kind == "widen" && !s.fieldNames.exists(_.equalsIgnoreCase(c.name)))
+        throw new IllegalArgumentException(
+          s"widen of missing column ${c.name}: add it first")
+      LakeTable.evolvedSchema(s, StructType(Seq(StructField(c.name, c.dt))))
     }
+    table.evolveSchema(target, changes.flatMap(c => c.doc.map(c.name -> _)).toMap)
+    target != cur
   }
 }

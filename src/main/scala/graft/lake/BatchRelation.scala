@@ -412,9 +412,8 @@ object GraftBatchWrite {
         "the stray column writes it as plain data (auto-envelope would " +
         "silently overwrite its values)")
     val hasEnvelope = hasLsn && hasOp
-    val invalid = parameters.getOrElse("invalidRows", "fail")
-    require(Set("fail", "quarantine", "off").contains(invalid),
-      s"invalidRows must be fail, quarantine, or off, got '$invalid'")
+    val invalid = graft.cdc.MergeConfig.checkInvalidRows(
+      parameters.getOrElse("invalidRows", "fail"))
     val nBucketsOpt = parameters.get("nBuckets").map(_.toInt)
     val mergeSchema = parameters.get("mergeSchema").exists(_.toBoolean)
     // txnAppId/batchId travel as a pair — a lone batchId silently

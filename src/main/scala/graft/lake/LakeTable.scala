@@ -906,8 +906,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   private[graft] def readFiles(snap: Snapshot, files: Seq[DataFileEntry]): DataFrame = {
     val want = withMeta(snap.userSchema)
     if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        want)
+      // a local relation, not an empty RDD: Catalyst can prove it empty,
+      // so PropagateEmptyRelation drops it from unions and joins
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row], want)
     } else {
       val chunk = math.max(1,
         spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
@@ -1710,60 +1712,28 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     }, applied = b => b.files.isEmpty && b.manifests.isEmpty &&
       b.userSchema == schema)
 
-  /** Additive schema evolution: add a nullable column at the end. Old files
-    * are projected with nulls at read. */
-  def addColumn(name: String, dt: DataType, doc: String = null): Snapshot = {
-    val base = snapshot
-    require(!base.userSchema.fieldNames.contains(name), s"column $name exists")
-    val v = base.currentSchemaVersion + 1
-    val newSchema = StructType(base.userSchema.fields :+
-      StructField(name, dt, nullable = true))
-    commit(base, Nil, Set.empty, None, None,
-      schemaUpdate = Some((v, newSchema)),
-      newColumnDocs = Option(doc).map(name -> _).toMap)
-  }
-
-  /** Evolve the schema toward `incoming` in ONE commit: every incoming
-    * column absent from the current schema is ADDED nullable at the
-    * end; every matching column (case-insensitive, mirroring Spark's
-    * default analysis — a case-variant must never fork a duplicate
-    * column) whose incoming type differs is WIDENED when
-    * [[LakeTable.canWiden]] allows, REJECTED otherwise — an
-    * incompatible change must fail loud here, not resurface later as
-    * per-row cast nulls or errors. A narrower incoming type is fine
-    * (the write path upcasts). Dropping columns is out of scope
-    * (shrinking is [[replaceSchema]]'s destructive job). Returns
-    * without committing when nothing changes. One commit for any
-    * number of changes — not a commit per column. Backs the batch
-    * writer's `mergeSchema`; the streaming twin is the op="S" registry
-    * event path ([[graft.cdc.SchemaRegistry]]), which shares these
-    * evolution semantics. */
-  def evolveSchema(incoming: StructType): Snapshot = {
+  /** Evolve the schema toward `incoming` by [[LakeTable.evolvedSchema]]
+    * in at most ONE commit, whatever the number of added or widened
+    * columns; returns without committing when the rule changes nothing.
+    * `docs` (column name -> doc) are recorded for the columns this call
+    * ADDS only — an existing column keeps its doc. Dropping columns is
+    * out of scope (shrinking is [[replaceSchema]]'s destructive job).
+    * The one verb that adds or widens a column; its callers:
+    *  - the batch writer's `mergeSchema` ([[GraftBatchWrite]]);
+    *  - the op="S" registry events of a merge batch, folded in LSN order
+    *    ([[graft.cdc.SchemaRegistry]]);
+    *  - each follow round, toward the source's schema and docs
+    *    ([[graft.cdc.CdcPipeline.followOnce]]). */
+  def evolveSchema(incoming: StructType,
+      docs: Map[String, String] = Map.empty): Snapshot = {
     val base = snapshot
     val cur = base.userSchema
-    val widens = scala.collection.mutable.ListBuffer[(String, DataType)]()
-    val adds = scala.collection.mutable.ListBuffer[StructField]()
-    incoming.fields.foreach { f =>
-      cur.fields.find(_.name.equalsIgnoreCase(f.name)) match {
-        case None => adds += StructField(f.name, f.dataType, nullable = true)
-        case Some(old) if old.dataType == f.dataType => ()
-        case Some(old) if LakeTable.canWiden(old.dataType, f.dataType) =>
-          widens += old.name -> f.dataType // keep the existing spelling
-        case Some(old) if LakeTable.canWiden(f.dataType, old.dataType) =>
-          () // incoming is narrower: the write's upcast absorbs it
-        case Some(old) => throw new IllegalArgumentException(
-          s"incompatible type change for column ${old.name}: " +
-            s"${old.dataType.simpleString} -> ${f.dataType.simpleString} " +
-            "is neither a widening nor a narrowing — rewrite the feed " +
-            "or migrate with replaceSchema")
-      }
-    }
-    if (adds.isEmpty && widens.isEmpty) return base
-    val newSchema = StructType(cur.fields.map(f =>
-      widens.find(_._1 == f.name).map(w => f.copy(dataType = w._2))
-        .getOrElse(f)) ++ adds)
+    val next = LakeTable.evolvedSchema(cur, incoming)
+    if (next == cur) return base
+    val added = next.fieldNames.drop(cur.size).toSet
     commit(base, Nil, Set.empty, None, None,
-      schemaUpdate = Some((base.currentSchemaVersion + 1, newSchema)))
+      schemaUpdate = Some((base.currentSchemaVersion + 1, next)),
+      newColumnDocs = docs.filter { case (c, _) => added.contains(c) })
   }
 
   /** Expire old snapshots and delete data files no snapshot references
@@ -1855,17 +1825,6 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       }
     }
     removed
-  }
-
-  /** Type widening (int→long, float→double, …). Old files upcast at read. */
-  def widenColumn(name: String, dt: DataType): Snapshot = {
-    val base = snapshot
-    val old = base.userSchema(name).dataType
-    require(canWiden(old, dt), s"cannot widen $old -> $dt for $name")
-    val v = base.currentSchemaVersion + 1
-    val newSchema = StructType(base.userSchema.fields.map(f =>
-      if (f.name == name) f.copy(dataType = dt) else f))
-    commit(base, Nil, Set.empty, None, None, schemaUpdate = Some((v, newSchema)))
   }
 }
 
@@ -1984,6 +1943,34 @@ object LakeTable {
       .eval(null).asInstanceOf[Int]
     ((h % nBuckets) + nBuckets) % nBuckets
   }
+
+  /** The one schema-evolution rule: `cur` evolved toward `incoming`.
+    * Names match case-insensitively, mirroring Spark's default analysis
+    * (a case variant must never fork a second column, which Spark then
+    * refuses to read or write), and the existing spelling is kept. An
+    * incoming column `cur` lacks is ADDED nullable at the end; a matching
+    * column whose type [[canWiden]] to the incoming one is WIDENED; a
+    * narrower incoming type is absorbed (the write path upcasts); any
+    * other type change is REFUSED with `IllegalArgumentException` — it
+    * must fail loud here, not resurface later as per-row cast nulls or
+    * errors. Pure: folding it over a sequence of changes and committing
+    * the result once equals committing each change in turn. */
+  def evolvedSchema(cur: StructType, incoming: StructType): StructType =
+    incoming.fields.foldLeft(cur) { (s, f) =>
+      s.fields.indexWhere(_.name.equalsIgnoreCase(f.name)) match {
+        case -1 => s.add(StructField(f.name, f.dataType, nullable = true))
+        case i =>
+          val old = s.fields(i)
+          if (canWiden(f.dataType, old.dataType)) s // same or narrower
+          else if (canWiden(old.dataType, f.dataType))
+            StructType(s.fields.updated(i, old.copy(dataType = f.dataType)))
+          else throw new IllegalArgumentException(
+            s"incompatible type change for column ${old.name}: " +
+              s"${old.dataType.simpleString} -> ${f.dataType.simpleString} " +
+              "is neither a widening nor a narrowing — rewrite the feed " +
+              "or migrate with replaceSchema")
+      }
+    }
 
   def canWiden(from: DataType, to: DataType): Boolean = (from, to) match {
     case (a, b) if a == b => true

@@ -519,9 +519,8 @@ class LakeTableSourceProvider extends StreamSourceProvider
     // poison-event policy (MergeConfig.invalidRows): a long-running tail
     // usually wants "quarantine" — one malformed event must not kill the
     // stream — while the default "fail" keeps the strict posture
-    val invalid = parameters.getOrElse("invalidRows", "fail")
-    require(Set("fail", "quarantine", "off").contains(invalid),
-      s"invalidRows must be fail, quarantine, or off, got '$invalid'")
+    val invalid = graft.cdc.MergeConfig.checkInvalidRows(
+      parameters.getOrElse("invalidRows", "fail"))
     new LakeTableSink(sqlContext, d,
       graft.cdc.MergeConfig(txnApp = txnApp, invalidRows = invalid))
   }

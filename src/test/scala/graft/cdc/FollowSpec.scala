@@ -1,6 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.gen.{ChangeLogGen, GenConfig}
@@ -79,22 +80,23 @@ class FollowSpec extends SparkSpec {
     assert(state(dst).exists(_.conv_id == "c2"))
   }
 
+  private val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+  private def batch(rows: Seq[(Long, String, String, Int, String)]) =
+    rows.toDF("lsn", "op", "conv_id", "turn_idx", "text")
+      .withColumn("role", lit("user")).withColumn("tool", lit(null).cast("string"))
+      .withColumn("ts", lit(ts))
+  private def cols(fs: (String, DataType)*) =
+    StructType(fs.map { case (n, t) => StructField(n, t) })
+
   test("follow propagates source schema evolution, column docs included") {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     val src = LakeTable.createTable(spark, tmpDir("fle-src"), Schemas.transcript, 2)
     val dst = LakeTable.createTable(spark, tmpDir("fle-dst"), Schemas.transcript, 2)
-    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    def batch(rows: Seq[(Long, String, String, Int, String)]) =
-      rows.toDF("lsn", "op", "conv_id", "turn_idx", "text")
-        .withColumn("role", lit("user")).withColumn("tool", lit(null).cast("string"))
-        .withColumn("ts", lit(ts))
-
     MergeApply.merge(src, batch(Seq((1L, "I", "c1", 0, "hello"),
       (2L, "I", "c2", 0, "world"))), 0L)
     CdcPipeline.followOnce(src, dst)
 
     // source adds a scored column with a doc; values arrive next epoch
-    src.addColumn("score", IntegerType, "quality score")
+    src.evolveSchema(cols("score" -> IntegerType), Map("score" -> "quality score"))
     MergeApply.merge(src, batch(Seq((3L, "U", "c1", 0, "hello!")))
       .withColumn("score", lit(7)), 1L)
     assert(CdcPipeline.followOnce(src, dst).applied)
@@ -102,7 +104,7 @@ class FollowSpec extends SparkSpec {
     assert(dst.snapshot.columnDocs("score") == "quality score")
 
     // source widens it; a value only the wide type can hold flows down
-    src.widenColumn("score", LongType)
+    src.evolveSchema(cols("score" -> LongType))
     MergeApply.merge(src, batch(Seq((4L, "U", "c2", 0, "world!")))
       .withColumn("score", lit(5000000000L)), 2L)
     assert(CdcPipeline.followOnce(src, dst).applied)
@@ -112,6 +114,44 @@ class FollowSpec extends SparkSpec {
       .collect().map(r => r.toSeq).sortBy(_.toString)
     assert(rows(dst).toSeq == rows(src).toSeq)
     assert(rows(dst).exists(_.contains(5000000000L)))
+  }
+
+  test("follow lands two source columns as one schema commit with both docs") {
+    val src = LakeTable.createTable(spark, tmpDir("fl2-src"), Schemas.transcript, 2)
+    val dst = LakeTable.createTable(spark, tmpDir("fl2-dst"), Schemas.transcript, 2)
+    MergeApply.merge(src, batch(Seq((1L, "I", "c1", 0, "hello"))), 0L)
+    CdcPipeline.followOnce(src, dst)
+    // two source schema commits, one column each
+    src.evolveSchema(cols("score" -> IntegerType), Map("score" -> "quality score"))
+    src.evolveSchema(cols("meta" -> StringType), Map("meta" -> "free-form"))
+    MergeApply.merge(src, batch(Seq((2L, "U", "c1", 0, "hello!")))
+      .withColumn("score", lit(3)).withColumn("meta", lit("m")), 1L)
+    val schemasBefore = dst.snapshot.schemas.size
+    assert(CdcPipeline.followOnce(src, dst).applied)
+    val snap = dst.snapshot
+    assert(snap.schemas.size == schemasBefore + 1)
+    assert(snap.columnDocs.get("score").contains("quality score"))
+    assert(snap.columnDocs.get("meta").contains("free-form"))
+    assert(dst.read().select("score", "meta").as[(Int, String)].collect()
+      .toSeq == Seq((3, "m")))
+  }
+
+  test("follow refuses an incompatible destination type before merging") {
+    val src = LakeTable.createTable(spark, tmpDir("flx-src"), Schemas.transcript, 2)
+    val dst = LakeTable.createTable(spark, tmpDir("flx-dst"), Schemas.transcript, 2)
+    MergeApply.merge(src, batch(Seq((1L, "I", "c1", 0, "hello"))), 0L)
+    CdcPipeline.followOnce(src, dst)
+    // int neither widens to nor from boolean
+    src.evolveSchema(cols("score" -> IntegerType))
+    dst.evolveSchema(cols("score" -> BooleanType))
+    MergeApply.merge(src, batch(Seq((2L, "U", "c1", 0, "hello!")))
+      .withColumn("score", lit(1)), 1L)
+    val before = dst.snapshot
+    intercept[IllegalArgumentException](CdcPipeline.followOnce(src, dst))
+    val after = dst.snapshot
+    assert(after.version == before.version)
+    assert(after.maxCommittedEpoch == before.maxCommittedEpoch)
+    assert(after.userSchema("score").dataType == BooleanType)
   }
 
   test("follow transform: declarative silver-layer cleanup on the way down") {

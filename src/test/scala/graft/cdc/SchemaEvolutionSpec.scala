@@ -125,10 +125,51 @@ class SchemaEvolutionSpec extends SparkSpec {
     // crash between schema apply and data commit, redelivery re-applies
     // the FIRST step against the already-double schema; it must no-op,
     // not throw (the poison-batch loop)
-    assert(SchemaRegistry(table, """{"widen":{"name":"score","type":"long"}}"""))
-    assert(SchemaRegistry(table, """{"widen":{"name":"score","type":"double"}}"""))
-    assert(!SchemaRegistry(table, """{"widen":{"name":"score","type":"long"}}"""))
+    assert(SchemaRegistry(table, Seq("""{"widen":{"name":"score","type":"long"}}""")))
+    assert(SchemaRegistry(table, Seq("""{"widen":{"name":"score","type":"double"}}""")))
+    assert(!SchemaRegistry(table, Seq("""{"widen":{"name":"score","type":"long"}}""")))
     assert(table.snapshot.userSchema("score").dataType == DoubleType)
+  }
+
+  test("a case-variant registry add is absorbed: one column, the batch merges") {
+    val table = LakeTable.createTable(spark, tmpDir("evo-case"),
+      Schemas.transcript, nBuckets = 2)
+    MergeApply.merge(table, v2(Seq(
+      (1L, "S", null, 0, """{"add":{"name":"score","type":"int"}}""", null, null),
+      (2L, "I", "c1", 0, "a", "user", Map("score" -> "5")))), 0L)
+    // a second column differing only in case would make Spark refuse
+    // every later read (AMBIGUOUS_REFERENCE) and write of the table
+    val r = MergeApply.merge(table, v2(Seq(
+      (10L, "S", null, 0, """{"add":{"name":"Score","type":"int"}}""", null, null),
+      (11L, "I", "c2", 0, "b", "user", Map("score" -> "9")))), 1L)
+    assert(r.applied && r.rowsApplied == 1L)
+    assert(table.snapshot.userSchema.fieldNames
+      .filter(_.equalsIgnoreCase("score")).toSeq == Seq("score"))
+    val got = table.read().select("conv_id", "score").as[(String, Int)]
+      .collect().toMap
+    assert(got == Map("c1" -> 5, "c2" -> 9))
+  }
+
+  test("a batch's registry events land as ONE schema commit plus its data") {
+    val table = LakeTable.createTable(spark, tmpDir("evo-one-commit"),
+      Schemas.transcript, nBuckets = 2)
+    MergeApply.merge(table, v2(Seq(
+      (1L, "I", "c1", 0, "a", "user", null))), 0L)
+    val before = table.snapshot
+    val r = MergeApply.merge(table, v2(Seq(
+      (10L, "S", null, 0, """{"add":{"name":"score","type":"int"}}""", null, null),
+      (11L, "S", null, 0, """{"widen":{"name":"score","type":"long"}}""", null, null),
+      (12L, "S", null, 0, """{"widen":{"name":"score","type":"double"}}""", null, null),
+      (13L, "I", "c2", 0, "b", "user", Map("score" -> "2.5")))), 1L)
+    assert(r.applied && r.rowsApplied == 1L)
+    val after = table.snapshot
+    assert(after.schemas.size == before.schemas.size + 1)
+    assert(after.version == before.version + 2) // the schema, then the data
+    assert(after.userSchema("score").dataType == DoubleType)
+    val got = table.read().select("conv_id", "score").collect()
+      .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      .toMap
+    assert(got == Map("c1" -> None, "c2" -> Some(2.5)))
   }
 
   test("registry application is idempotent under epoch redelivery") {

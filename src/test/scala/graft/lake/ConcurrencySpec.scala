@@ -85,7 +85,9 @@ class ConcurrencySpec extends SparkSpec {
   test("a data commit racing a schema change conflicts (schema edits serialize)") {
     val t = fresh("occ-schema")
     val base = t.snapshot
-    t.addColumn("extra", org.apache.spark.sql.types.IntegerType, "racer")
+    t.evolveSchema(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("extra",
+        org.apache.spark.sql.types.IntegerType))), Map("extra" -> "racer"))
     intercept[CommitConflictException] {
       t.commit(base, Seq(DataFileEntry("x", 0, 1L, 0)), Set.empty, Some(0L), None)
     }

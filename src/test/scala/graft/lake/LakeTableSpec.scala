@@ -74,7 +74,8 @@ class LakeTableSpec extends SparkSpec {
   test("addColumn: old files project with nulls, new writes carry it") {
     val t = freshTable()
     val before = t.read().count()
-    t.addColumn("meta", StringType, doc = "free-form metadata")
+    t.evolveSchema(StructType(Seq(StructField("meta", StringType))),
+      docs = Map("meta" -> "free-form metadata"))
     assert(t.read().columns.contains("meta"))
     assert(t.read().filter(col("meta").isNotNull).count() == 0)
     assert(t.read().count() == before)
@@ -90,14 +91,34 @@ class LakeTableSpec extends SparkSpec {
     assert(t.read().count() == before + 1)
   }
 
-  test("widenColumn int->long reads old files upcast") {
+  test("evolveSchema widens int->long: old files read upcast") {
     val t = freshTable()
     val before = t.read().agg(sum(col("turn_idx"))).as[Long].head()
-    t.widenColumn("turn_idx", LongType)
+    t.evolveSchema(StructType(Seq(StructField("turn_idx", LongType))))
     assert(t.snapshot.userSchema("turn_idx").dataType == LongType)
     val after = t.read().agg(sum(col("turn_idx"))).as[Long].head()
     assert(before == after)
-    intercept[IllegalArgumentException] { t.widenColumn("turn_idx", IntegerType) }
+    // a narrower incoming type commits nothing; an incompatible one throws
+    val v = t.snapshot.version
+    t.evolveSchema(StructType(Seq(StructField("turn_idx", IntegerType))))
+    assert(t.snapshot.version == v)
+    assert(t.snapshot.userSchema("turn_idx").dataType == LongType)
+    intercept[IllegalArgumentException] {
+      t.evolveSchema(StructType(Seq(StructField("turn_idx", StringType))))
+    }
+    assert(t.snapshot.version == v)
+  }
+
+  test("an empty arrival window plans as a provably empty relation") {
+    val t = freshTable()
+    val df = t.arrivalsSince(t.snapshot.version)
+    val plan = df.queryExecution.optimizedPlan
+    // an empty-RDD frame survives optimization as a LogicalRDD scan;
+    // an empty local relation lets PropagateEmptyRelation drop it
+    assert(plan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r }.isEmpty, plan)
+    assert(df.count() == 0L)
+    assert(df.columns.toSeq == t.readFiles(t.snapshot, t.snapshot.files).columns.toSeq)
   }
 
   test("time travel: old snapshot versions stay readable") {

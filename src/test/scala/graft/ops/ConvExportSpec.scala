@@ -61,7 +61,9 @@ class ConvExportSpec extends SparkSpec {
     val dir = tmpDir("cx-evo")
     val table = LakeTable.createTable(spark, dir, Schemas.transcript, 2)
     MergeApply.merge(table, batch(Seq((1L, "I", "a", 0, "x"))), 0L)
-    table.addColumn("score", org.apache.spark.sql.types.IntegerType)
+    table.evolveSchema(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("score",
+        org.apache.spark.sql.types.IntegerType))))
     MergeApply.merge(table, batch(Seq((2L, "I", "b", 0, "y")))
       .withColumn("score", lit(7)), 1L)
     val out = tmpDir("cx-evo-out") + "/conv"

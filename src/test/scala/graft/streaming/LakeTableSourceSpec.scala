@@ -27,6 +27,11 @@ class LakeTableSourceSpec extends SparkSpec {
       .withColumn("ts", lit(ts))
   }
 
+  /** The one-column schema the evolution cases add. */
+  private val rating = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("rating",
+      org.apache.spark.sql.types.IntegerType)))
+
   private def state(t: LakeTable): Set[(String, Int, String)] =
     t.read().select("conv_id", "turn_idx", "text").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
@@ -184,7 +189,7 @@ class LakeTableSourceSpec extends SparkSpec {
     drain(srcDir, dst, ckpt)
 
     // stream is DOWN; the table evolves and new data lands
-    src.addColumn("rating", org.apache.spark.sql.types.IntegerType, "later")
+    src.evolveSchema(rating, Map("rating" -> "later"))
     MergeApply.merge(src, batch(Seq((2L, "U", "c2", 0, "y"))), 1L, MergeConfig())
 
     // the restarted stream replays the committed range against its OLD
@@ -528,8 +533,7 @@ class LakeTableSourceSpec extends SparkSpec {
       "graft-table", params)
     val o1 = running.getOffset.get
     // … then the table evolves and more data lands
-    src.addColumn("rating", org.apache.spark.sql.types.IntegerType,
-      "added mid-stream")
+    src.evolveSchema(rating, Map("rating" -> "added mid-stream"))
     MergeApply.merge(src, batch(Seq((2L, "U", "c1", 1, "y"))), 1L,
       MergeConfig())
     val o2 = running.getOffset.get
