@@ -146,20 +146,31 @@ object MergeApply {
 
   private val KEY = Schemas.keyCols
 
+  /** The raw value of user column `name` in a frame with columns
+    * `present`: the top-level column, else the `extras` entry by exact
+    * key, else by a key equal ignoring case (a registry `add` of a case
+    * variant keeps the table's spelling, the feed keeps its own). Shared
+    * by [[normalize]] and validation. */
+  private def rawOf(present: Set[String], name: String): Option[Column] =
+    if (present.contains(name)) Some(col(name))
+    else if (present.contains("extras")) {
+      val extras = col("extras")
+      Some(when(map_contains_key(extras, name), element_at(extras, name))
+        .otherwise(try_element_at(map_values(map_filter(extras,
+          (k, _) => lower(k) === lower(lit(name)))), lit(1))))
+    } else None
+
   /** Normalize a raw change-event frame to the on-disk layout: user
     * columns + `__lsn` + `__op` (I and U both become upsert `U`). Columns
     * the table gained through schema-registry evolution are not top-level
     * envelope fields — they are projected out of the open `extras` map
-    * (cast from string to the registered type); a feed without `extras`
-    * yields nulls for them. */
+    * ([[rawOf]], cast from string to the registered type); a feed without
+    * `extras` yields nulls for them. */
   def normalize(batch: DataFrame, userSchema: StructType): DataFrame = {
     val present = batch.columns.toSet
-    val cols = userSchema.fields.toSeq.map { f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else if (present.contains("extras"))
-        element_at(col("extras"), f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
+    val cols = userSchema.fields.toSeq.map(f =>
+      rawOf(present, f.name).getOrElse(lit(null))
+        .cast(f.dataType).as(f.name))
     batch.select(cols ++ Seq(
       col("lsn").cast(LongType).as("__lsn"),
       when(col("op") === "D", lit("D")).otherwise(lit("U")).as("__op")): _*)
@@ -224,12 +235,12 @@ object MergeApply {
   /** The one commit seam every outcome funnels through: publish it, or —
     * under [[MergeConfig.wapId]] — park it as a staged WAP intent.
     * Maintenance commits (`epochId < 0`: compaction, rebucket) carry no
-    * epoch and are never staged. Returns (resulting version, staged?);
-    * staged outcomes leave the table at `snap.version`. */
+    * epoch and are never staged. Returns the committed snapshot, or None
+    * when staged (the table stays at `snap`). */
   private def stageOrCommit(table: LakeTable, snap: Snapshot,
       files: Seq[DataFileEntry], replaced: Set[Int], epochId: Long,
       cfg: MergeConfig, entry: LineageEntry,
-      newNBuckets: Option[Int]): (Long, Boolean) = {
+      newNBuckets: Option[Int]): Option[Snapshot] = {
     val (eid, txn) =
       if (epochId < 0) (None, None)
       else cfg.txnApp match {
@@ -242,24 +253,25 @@ object MergeApply {
           snap.nBuckets, files, replaced.toSeq.sorted, eid,
           txn.map(_._1), txn.map(_._2), Some(entry),
           System.currentTimeMillis()))
-        (snap.version, true)
+        None
       case None =>
-        (table.commit(snap, files, replaced, eid, Some(entry), txn = txn,
-          newNBuckets = newNBuckets).version, false)
+        Some(table.commit(snap, files, replaced, eid, Some(entry), txn,
+          newNBuckets))
     }
   }
 
   /** The one epoch-outcome path: build the lineage row for `files`
     * (retiring the `replaced` buckets) on top of `snap`, commit or stage
-    * it, and return the [[MergeResult]]. `applies = false` records a
-    * withheld batch — checksum skip, audit quarantine: its rows count in
-    * `rowsInBatch` but none are applied, and the result reports
+    * it, and return the [[MergeResult]] with the table's snapshot after
+    * it: the committed one, or `snap` when staged. `applies = false`
+    * records a withheld batch — checksum skip, audit quarantine: its rows
+    * count in `rowsInBatch` but none are applied, and the result reports
     * `applied = false` although the epoch id lands. */
   private def outcome(table: LakeTable, snap: Snapshot, epochId: Long,
       cfg: MergeConfig, t0: Long, files: Seq[DataFileEntry] = Nil,
       replaced: Set[Int] = Set.empty, stats: BatchStats = BatchStats(),
       checksum: String = "", rejected: Long = 0L, applies: Boolean = true,
-      newNBuckets: Option[Int] = None): MergeResult = {
+      newNBuckets: Option[Int] = None): (MergeResult, Snapshot) = {
     val applied = if (applies) stats.rows else 0L
     val entry = LineageEntry(epochId, snap.version + 1, stats.rows, applied,
       stats.buckets, files.size,
@@ -268,10 +280,12 @@ object MergeApply {
       rejectedEvents = rejected, minLsn = stats.minLsn,
       partitions = stats.partitions, inputChecksum = checksum,
       watermarkCol = stats.watermarkCol)
-    val (v, staged) = stageOrCommit(table, snap, files, replaced, epochId,
+    val committed = stageOrCommit(table, snap, files, replaced, epochId,
       cfg, entry, newNBuckets)
-    MergeResult(applies && !staged, v, stats.rows, applied, stats.buckets,
-      elapsedMs(t0), staged = staged, rejectedEvents = rejected)
+    val after = committed.getOrElse(snap)
+    (MergeResult(applies && committed.nonEmpty, after.version, stats.rows,
+      applied, stats.buckets, elapsedMs(t0), staged = committed.isEmpty,
+      rejectedEvents = rejected), after)
   }
 
   /** The result of an epoch that changed nothing: already committed,
@@ -288,7 +302,7 @@ object MergeApply {
       cfg: MergeConfig, t0: Long, staged: MergeResult): MergeResult =
     try outcome(table, table.snapshot, epochId, cfg.copy(wapId = None), t0,
       stats = BatchStats(staged.rowsInBatch), rejected = staged.rejectedEvents,
-      applies = false)
+      applies = false)._1
     catch {
       case _: graft.lake.EpochSupersededException =>
         noop(table.snapshot.version, t0)
@@ -311,20 +325,15 @@ object MergeApply {
     * code. Covers the event IDENTITY — `lsn` non-null and castable, `op`
     * inside {I, U, D}, every key column present, non-null, and castable —
     * plus castability of every envelope value [[normalize]] will
-    * ANSI-cast (raw column or `extras` fallback, the same resolution
-    * normalize uses), so a quarantined feed can never crash the merge
-    * plan mid-write. Pure codegen'd expressions; no UDF. */
+    * ANSI-cast (raw column or `extras` fallback: [[rawOf]], the
+    * resolution normalize uses), so a quarantined feed can never crash
+    * the merge plan mid-write. Pure codegen'd expressions; no UDF. */
   private def invalidReasonExpr(batch: DataFrame, userSchema: StructType)
       : Column = {
     val present = batch.columns.toSet
-    def rawOf(name: String): Option[Column] =
-      if (present.contains(name)) Some(col(name))
-      else if (present.contains("extras"))
-        Some(element_at(col("extras"), name))
-      else None
     val keySet = KEY.toSet
     val fieldChecks = userSchema.fields.toSeq.flatMap { f =>
-      rawOf(f.name).toSeq.flatMap { c =>
+      rawOf(present, f.name).toSeq.flatMap { c =>
         val uncastable = c.isNotNull && c.try_cast(f.dataType).isNull
         if (keySet.contains(f.name))
           Seq(c.isNull -> s"null_key:${f.name}",
@@ -334,7 +343,7 @@ object MergeApply {
     }
     // a key column absent from BOTH the envelope and extras is null for
     // every row of the batch
-    val missingKeys = KEY.filter(rawOf(_).isEmpty)
+    val missingKeys = KEY.filter(rawOf(present, _).isEmpty)
       .map(k => lit(true) -> s"null_key:$k")
     val checks = Seq(
       col("lsn").isNull -> "null_lsn",
@@ -533,7 +542,7 @@ object MergeApply {
         }
         if (fp.nonEmpty && lastChecksum(snap).contains(fp))
           return outcome(table, snap, epochId, cfg, t0,
-            stats = BatchStats(fpRows), checksum = fp, applies = false)
+            stats = BatchStats(fpRows), checksum = fp, applies = false)._1
         return mergeGuarded(table, batch, epochId, cfg, t0, fp, replaceAll)
       } catch {
         case _: graft.lake.EpochSupersededException =>
@@ -709,7 +718,7 @@ object MergeApply {
       if (sevE.nonEmpty) return Left(sevE) // nothing written: no cleanup
       return Right(outcome(table, snap, epochId, cfg, t0, replaced = replaced,
         checksum = checksum,
-        rejected = validation.rejected(Nil, zeroOutput = true)))
+        rejected = validation.rejected(Nil, zeroOutput = true))._1)
     }
     // Otherwise files exist, so tasks ran and the observations are
     // authoritative: fail mode reclaims the written files and throws,
@@ -720,8 +729,8 @@ object MergeApply {
     // the written files hold exactly this batch (LWW-resolved under
     // replace), so the manifest entries ARE the per-partition applied
     // rows + LSN ranges (footer stats)
-    val res = outcome(table, snap, epochId, cfg, t0, written, replaced,
-      BatchStats(metric(m, "rows", 0L), bucketsOf(written),
+    val (res, committed) = outcome(table, snap, epochId, cfg, t0, written,
+      replaced, BatchStats(metric(m, "rows", 0L), bucketsOf(written),
         metric(m, "maxLsn", -1L), metric(m, "minLsn", -1L),
         Option(m("maxTs")).fold("")(_.toString), metric(m, "late", 0L),
         partitionsOf(written), snap.eventTimeColumn.getOrElse("")),
@@ -730,18 +739,22 @@ object MergeApply {
     // threshold) in the first post-publish epoch's sweep
     if (res.staged || replaceAll) return Right(res)
 
-    // amortized compaction: fold over-threshold buckets back to base
-    val now = table.snapshot
-    val toCompact = now.files.groupBy(_.bucket).collect {
+    // amortized compaction: fold over-threshold buckets back to base,
+    // counted on this epoch's committed snapshot (files a concurrent
+    // writer lands later count in the next epoch's check)
+    val toCompact = committed.files.groupBy(_.bucket).collect {
       case (b, fs) if fs.size > cfg.maxDeltaFilesPerBucket => b
     }.toSet
     val version =
-      if (toCompact.isEmpty) now.version
+      if (toCompact.isEmpty) committed.version
       // compaction is state-neutral housekeeping: if a concurrent writer
       // lands a delta in a bucket mid-fold, yield — the ingest wins, and
       // the still-over-threshold bucket retriggers next epoch
-      else try compactBuckets(table, toCompact, cfg, at = Some(now)).version
-      catch { case _: graft.lake.CommitConflictException => now.version }
+      else try compactBuckets(table, toCompact, cfg, at = Some(committed))
+        .version
+      catch {
+        case _: graft.lake.CommitConflictException => committed.version
+      }
     Right(res.copy(version = version, durationMs = elapsedMs(t0)))
   }
 
@@ -802,8 +815,8 @@ object MergeApply {
       // a bucket whose rows all dropped (purge) retires: no zero-row
       // file is ever registered in its place
       .filter(_.rows > 0)
-    table.snapshotAt(outcome(table, snap, -1L, cfg, t0, files, buckets,
-      BatchStats(buckets = buckets.toSeq.sorted)).version)
+    outcome(table, snap, -1L, cfg, t0, files, buckets,
+      BatchStats(buckets = buckets.toSeq.sorted))._2
   }
 
   /** Change the table's bucket count — partition-layout evolution, the
@@ -843,9 +856,9 @@ object MergeApply {
       if (snap.files.isEmpty) Seq.empty
       else foldToBase(table, table.readFiles(snap, snap.files), snap, newN,
         cfg, "rebucket")
-    table.snapshotAt(outcome(table, snap, -1L, cfg, t0, files,
+    outcome(table, snap, -1L, cfg, t0, files,
       snap.files.map(_.bucket).toSet, BatchStats(buckets = bucketsOf(files)),
-      newNBuckets = Some(newN)).version)
+      newNBuckets = Some(newN))._2
   }
 
   /** The fold [[compactBuckets]] and [[rebucket]] share, as one Spark

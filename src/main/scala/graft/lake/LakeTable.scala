@@ -45,8 +45,9 @@ final case class DataFileEntry(
     minLsn: Long = -1L,
     maxLsn: Long = -1L,
     /** Snapshot version whose commit introduced this file — stamped by
-      * `commitOnce` (the only place the final version is known; rebase
-      * retries re-stamp). This is the table's ARRIVAL order, the correct
+      * `nextSnapshot`, the data commit's edit (the only place the final
+      * version is known; an edit applied again after a lost race
+      * re-stamps). This is the table's ARRIVAL order, the correct
       * cut for incremental change windows: an LSN cut silently loses a
       * key whose winning event arrives out-of-order BELOW an
       * already-consumed LSN high-water mark (the event is in no
@@ -295,10 +296,13 @@ final case class Snapshot(
   * the Iceberg-shaped core the sandbox forces us to build ourselves (no
   * Iceberg/Delta jar is available offline). Guarantees:
   *
-  *   - **Atomic commit**: a snapshot file `vN.json` is created with
-  *     overwrite=false (optimistic concurrency: a second writer racing on N
-  *     fails), then the `CURRENT` pointer is swapped with an atomic rename.
-  *     Readers only ever see a fully-written snapshot.
+  *   - **Atomic commit**: every snapshot (data, schema, property, tag)
+  *     is an edit of a base published by ONE loop, [[commit]]: create
+  *     `vN.json` if absent (the optimistic-concurrency arbiter), then swap
+  *     `CURRENT` with an atomic rename; readers only see whole snapshots.
+  *     A lost race is only a refused create: the edit is applied again to
+  *     the winner, data commits after the rebase rules. A failure after
+  *     this writer's own create throws, deleting nothing.
   *   - **Epoch idempotence**: each commit records its `epochId`; replaying
   *     a committed epoch is a no-op (exactly-once sink on top of
   *     at-least-once delivery). The record is a high-watermark + bounded
@@ -493,23 +497,26 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       schemas = Map("0" -> schema.json), columnDocs = columnDocs,
       manifests = Nil, epochWatermark = -1L, recentEpochs = Map.empty,
       lineage = Nil, properties = properties)
-    writeSnapshot(snap)
+    require(writeSnapshot(snap), s"table already exists at $dir")
     this
   }
 
   // --------------------------------------------------------------- commit
 
-  /** Atomically publish a new snapshot. Fails if `snap.version` was already
-    * committed by someone else (optimistic concurrency). The in-memory
-    * `files` view is stripped — only the bounded manifest refs persist. */
-  private[graft] def writeSnapshot(snap: Snapshot): Unit = {
+  /** Create `vN.json` if absent (the commit race arbiter), write it and
+    * swap CURRENT to it. Returns false, having written nothing, when the
+    * version is already on disk (a lost race); any other failure throws.
+    * Only the bounded manifest refs persist, not the `files` view. */
+  private def writeSnapshot(snap: Snapshot): Boolean = {
     implicit val fmt: Formats = DefaultFormats
+    val bytes = Serialization.write(snap.copy(files = Nil)).getBytes("UTF-8")
     val p = new Path(snapsPath, versionFile(snap.version))
-    // atomic create-if-absent (the commit race arbiter)
-    val out = createExclusive(p)
-    try out.write(Serialization.write(snap.copy(files = Nil)).getBytes("UTF-8"))
-    finally out.close()
+    val out =
+      try createExclusive(p)
+      catch { case _: java.io.IOException if fs.exists(p) => return false }
+    try out.write(bytes) finally out.close()
     swapPointer(p.getName, s"tmp.${snap.version}")
+    true
   }
 
   /** Crash recovery: roll the table forward past a commit that died
@@ -566,16 +573,13 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * [[LakeTable.manifestCompactThreshold]] commits the manifest list is
     * consolidated into one (amortized O(liveFiles/threshold) per commit).
     *
-    * **Snapshot isolation across writers** (the Iceberg commit model): the
-    * version-file create is the race arbiter; on losing it the commit
-    * REBASES onto the winner and retries — metadata only, the data files
-    * are already on disk and stay valid — unless it genuinely conflicts:
-    *  - a bucket this commit REPLACES changed under it (a compaction
-    *    fold or a replace built on a stale view)
-    *    → [[CommitConflictException]];
-    *  - the schema changed under it, or it carries a schema change itself
-    *    → [[CommitConflictException]] (schema edits are serialized);
-    *  - its `epochId` landed via a concurrent writer
+    * **Snapshot isolation across writers** (the Iceberg commit model): an
+    * edit of `base` through the one commit loop; on a lost race it
+    * REBASES onto the winner — metadata only, the data files stay valid —
+    * unless it genuinely conflicts ([[rebase]]):
+    *  - the bucket layout, the schema, or a bucket this commit REPLACES
+    *    changed under it, or it is a rebucket → [[CommitConflictException]];
+    *  - its `epochId` or `txn` landed via a concurrent writer
     *    → [[EpochSupersededException]] (exactly-once across writers).
     * Pure additions (MoR delta appends, inserts: `replacedBuckets` empty)
     * therefore always rebase cleanly — concurrent MoR ingest just works,
@@ -586,51 +590,70 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       replacedBuckets: Set[Int],
       epochId: Option[Long],
       lineage: Option[LineageEntry],
-      schemaUpdate: Option[(Int, StructType)] = None,
-      newColumnDocs: Map[String, String] = Map.empty,
       txn: Option[(String, Long)] = None,
       newNBuckets: Option[Int] = None): Snapshot = {
-    var attemptBase = base
-    var attempts = 0
-    var committed: Snapshot = null
-    while (committed == null) {
-      try committed = commitOnce(attemptBase, newFiles, replacedBuckets,
-        epochId, lineage, schemaUpdate, newColumnDocs, txn, newNBuckets)
-      catch {
-        case e: java.io.IOException
-            if versionTaken(attemptBase.version + 1) =>
-          attempts += 1
-          if (attempts > maxCommitRetries)
-            throw new CommitConflictException(
-              s"gave up after $attempts rebase attempts at $dir", e)
-          attemptBase = awaitBaseBeyond(attemptBase.version) match {
-            case Some(nb) =>
-              rebase(attemptBase, nb, replacedBuckets, epochId,
-                schemaUpdate, txn, newNBuckets)
-            // the blocking version file was a torn crash leftover and was
-            // reclaimed: retry on the SAME base — the create-if-absent
-            // will now succeed
-            case None => attemptBase
-          }
-      }
-    }
-    // the lineage mirror is written AFTER the snapshot is published and
-    // OUTSIDE the retried region: an IOException here used to re-enter
-    // the lost-race retry (versionTaken is true — we created the version
-    // ourselves), rebase onto our own commit, and surface as
-    // EpochSupersededException — reporting applied=false for a commit
-    // that landed while silently swallowing the mirror failure. Out here
-    // it propagates as itself (the commit HAS landed; the caller learns
-    // the audit row is missing), honoring the mirror's
-    // append-only-and-complete contract.
+    val committed = commit(base,
+      rebase(_, _, replacedBuckets, epochId, txn, newNBuckets))(
+      nextSnapshot(_, newFiles, replacedBuckets, epochId, lineage, txn,
+        newNBuckets))
+    // the lineage mirror is written after the snapshot is published: a
+    // failure here propagates as itself (the commit HAS landed; the
+    // caller learns the audit row is missing), honoring the mirror's
+    // append-only-and-complete contract
     lineage.foreach(writeLineageMirror(_, committed.version))
     committed
   }
 
-  /** True when `vN.json` already exists — the only way `commitOnce` can
-    * fail with the version already on disk is losing the create-if-absent
-    * race (or this writer's own torn write, which the rebase path then
-    * surfaces as a conflict after its read deadline). */
+  /** The one commit loop — besides [[create]] and [[recover]], the only
+    * code that creates a version file or swaps CURRENT. `edit` derives
+    * the next snapshot (version `base.version + 1`) and may write
+    * manifests; returning its base unchanged commits nothing. A lost race
+    * is only a refused create: the attempt's new manifests are deleted
+    * and `onLostRace(attemptBase, winner)` names the next base, or throws.
+    * A failure after this attempt's create throws as itself and deletes
+    * nothing: [[recover]] rolls CURRENT forward to that version, and the
+    * next commit rebases onto it. */
+  private[graft] def commit(base: Snapshot,
+      onLostRace: (Snapshot, Snapshot) => Snapshot)(
+      edit: Snapshot => Snapshot): Snapshot = {
+    var attemptBase = base
+    var attempts = 0
+    while (true) {
+      val snap = edit(attemptBase)
+      if (snap eq attemptBase) return attemptBase
+      def reclaimManifests(): Unit =
+        (snap.manifests.map(_.path).toSet - "")
+          .diff(attemptBase.manifests.map(_.path).toSet)
+          .foreach { m =>
+            try { fs.delete(new Path(m), false); manifestCache.remove(m) }
+            catch { case _: java.io.IOException => () }
+          }
+      val won =
+        try writeSnapshot(snap)
+        catch {
+          // the create never happened: nothing references the manifests
+          case e if scala.util.control.NonFatal(e) &&
+              !versionTaken(snap.version) =>
+            reclaimManifests(); throw e
+        }
+      if (won) return snap
+      reclaimManifests()
+      attempts += 1
+      if (attempts > maxCommitRetries)
+        throw new CommitConflictException(
+          s"gave up after $attempts rebase attempts at $dir")
+      // None: the blocking version file was a torn crash leftover and was
+      // reclaimed — retry on the SAME base, the create will now succeed
+      attemptBase = awaitBaseBeyond(attemptBase.version)
+        .fold(attemptBase)(onLostRace(attemptBase, _))
+    }
+    sys.error("unreachable")
+  }
+
+  /** [[commit]]'s lost-race rule for metadata and schema edits, pure
+    * functions of their base: apply the edit again to the winner. */
+  private val reapply: (Snapshot, Snapshot) => Snapshot = (_, winner) => winner
+
   private def versionTaken(version: Long): Boolean =
     fs.exists(new Path(snapsPath, versionFile(version)))
 
@@ -687,12 +710,11 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     sys.error("unreachable")
   }
 
-  /** Decide whether a commit built on `base` may replay on top of `nb`.
-    * Conflict detection is exact, from the two snapshots' materialized
-    * file views — no reliance on the (bounded) lineage log. */
+  /** A data commit's lost-race rule: may a commit built on `base` apply
+    * on top of the winner `nb`? Conflict detection is exact, from the two
+    * snapshots' materialized file views — not the bounded lineage log. */
   private def rebase(base: Snapshot, nb: Snapshot,
       replacedBuckets: Set[Int], epochId: Option[Long],
-      schemaUpdate: Option[(Int, StructType)],
       txn: Option[(String, Long)],
       newNBuckets: Option[Int]): Snapshot = {
     // bucket-layout edits are serialized, both ways: a commit built in
@@ -713,9 +735,9 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         throw new EpochSupersededException(
           s"txn ($app, $b) was committed by a concurrent writer (table now at v${nb.version})")
       }
-    if (schemaUpdate.nonEmpty || nb.currentSchemaVersion != base.currentSchemaVersion)
+    if (nb.currentSchemaVersion != base.currentSchemaVersion)
       throw new CommitConflictException(
-        s"schema changed concurrently (v${base.version} -> v${nb.version}) — schema edits are serialized, recompute from current")
+        s"schema changed concurrently (v${base.version} -> v${nb.version}) — files written under the old schema, recompute from current")
     if (replacedBuckets.nonEmpty) {
       def sig(s: Snapshot) = s.files.iterator
         .filter(f => replacedBuckets.contains(f.bucket)).map(_.path).toSet
@@ -726,14 +748,14 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     nb
   }
 
-  private def commitOnce(
+  /** A data commit's edit of `base`; writes its manifest delta (or a
+    * consolidated manifest). */
+  private def nextSnapshot(
       base: Snapshot,
       newFiles: Seq[DataFileEntry],
       replacedBuckets: Set[Int],
       epochId: Option[Long],
       lineage: Option[LineageEntry],
-      schemaUpdate: Option[(Int, StructType)],
-      newColumnDocs: Map[String, String],
       txn: Option[(String, Long)],
       newNBuckets: Option[Int]): Snapshot = {
     val v = base.version + 1
@@ -811,7 +833,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         }
     }
 
-    val snap = base.copy(
+    base.copy(
       version = v,
       nBuckets = newNBuckets.getOrElse(base.nBuckets),
       manifests = manifests,
@@ -833,31 +855,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         }
       },
       lineage = (base.lineage ++ lineage.map(_.copy(version = v)))
-        .takeRight(maxLineageInSnapshot),
-      currentSchemaVersion =
-        schemaUpdate.map(_._1).getOrElse(base.currentSchemaVersion),
-      schemas = base.schemas ++
-        schemaUpdate.map { case (sv, s) => sv.toString -> s.json }.toMap,
-      columnDocs = base.columnDocs ++ newColumnDocs)
-    try writeSnapshot(snap)
-    catch {
-      // NonFatal only: under a VM error the reclaim loop itself is unsafe;
-      // crash leftovers are vacuumOrphans' job.
-      case e if scala.util.control.NonFatal(e) =>
-        // commit lost the optimistic-concurrency race (or failed): the
-        // manifests written this attempt were never published and no
-        // later vacuum would find them — reclaim before rethrowing
-        (manifests.map(_.path).toSet - "")
-          .diff(base.manifests.map(_.path).toSet)
-          .foreach { m =>
-            try { fs.delete(new Path(m), false); manifestCache.remove(m) }
-            catch { case _: java.io.IOException => () }
-          }
-        throw e
-    }
-    // NOTE: the lineage mirror row is written by [[commit]] after this
-    // returns — outside the lost-race retry region (see commit()).
-    snap
+        .takeRight(maxLineageInSnapshot))
   }
 
   /** Append the commit's lineage row to the `_lineage` mirror table as a
@@ -1411,43 +1409,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
 
   /** Set one table property in a metadata-only commit. */
   def setProperty(key: String, value: String): Snapshot =
-    publishMeta(base => base.copy(version = base.version + 1,
-      properties = base.properties + (key -> value)),
-      applied = _.properties.get(key).contains(value))
-
-  /** Publish a metadata-only snapshot derived from the CURRENT base,
-    * with the same lost-race semantics as [[commit]]: on losing the
-    * create-if-absent arbiter, wait for the winner's snapshot and
-    * re-derive from it (the edit is a pure function of the base, so the
-    * rebase is just re-application) instead of surfacing a raw
-    * FileAlreadyExistsException to the caller.
-    *
-    * `applied` is the self-race guard: when a writeSnapshot fails AFTER
-    * its version file became durable (e.g. the pointer swap threw), the
-    * retry can adopt the writer's OWN snapshot as the new base — without
-    * the guard it would re-apply the edit on top of itself, burning a
-    * duplicate version (and for replaceSchema, a duplicate schema
-    * entry). commit() guards the same class of race with its epoch/txn
-    * checks. */
-  private def publishMeta(make: Snapshot => Snapshot,
-      applied: Snapshot => Boolean): Snapshot = {
-    var base = snapshot
-    var attempts = 0
-    while (true) {
-      val snap = make(base)
-      try { writeSnapshot(snap); return snap }
-      catch {
-        case e: java.io.IOException if versionTaken(snap.version) =>
-          attempts += 1
-          if (attempts > maxCommitRetries)
-            throw new CommitConflictException(
-              s"gave up after $attempts rebase attempts at $dir", e)
-          base = awaitBaseBeyond(base.version).getOrElse(base)
-          if (applied(base)) return base
-      }
-    }
-    sys.error("unreachable")
-  }
+    commit(snapshot, reapply)(base => base.copy(version = base.version + 1,
+      properties = base.properties + (key -> value)))
 
   /** Register a URL-only linked resource in the table properties — data
     * stays where it is, only the catalog entry moves (≈ the reference's
@@ -1491,14 +1454,14 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     snapshotAt(v) // target must be a real, readable snapshot
     val key = s"tag.$name"
     if (snapshot.properties.get(key).contains(v.toString)) return snapshot
-    val s2 = publishMeta(base => {
+    val s2 = commit(snapshot, reapply) { base =>
       val existing = base.properties.get(key)
       require(replace || existing.forall(_ == v.toString),
         s"tag '$name' already points at v${existing.getOrElse("?")}; " +
           "pass replace = true to move it")
       base.copy(version = base.version + 1,
         properties = base.properties + (key -> v.toString))
-    }, applied = _.properties.get(key).contains(v.toString))
+    }
     if (scala.util.Try(snapshotAt(v)).isFailure) {
       scala.util.Try(dropTag(name))
       throw new IllegalStateException(s"tag '$name' lost a race with a " +
@@ -1512,9 +1475,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   def dropTag(name: String): Snapshot = {
     val key = s"tag.$name"
     require(snapshot.properties.contains(key), s"no tag '$name'")
-    publishMeta(base => base.copy(version = base.version + 1,
-      properties = base.properties - key),
-      applied = b => !b.properties.contains(key))
+    commit(snapshot, reapply)(base => base.copy(version = base.version + 1,
+      properties = base.properties - key))
   }
 
   /** Tag name → pinned version. Malformed `tag.*` values (reachable only
@@ -1688,13 +1650,11 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * are preserved for columns that still exist — the data-dictionary
     * restore (reference: engine/etl_util.py:87-115). */
   def replaceSchema(schema: StructType): Snapshot =
-    // destructive by intent (clear_first): on a lost race the retry
-    // still clears everything, including the racer's freshly-landed
-    // commit — the same outcome as that commit landing a moment earlier.
-    // applied: an adopted base that is already empty under this exact
-    // schema needs no re-clear (the self-race case, or a racer that ran
-    // the identical clear_first)
-    publishMeta(base => {
+    // destructive by intent (clear_first): on a lost race the edit is
+    // applied again and still clears everything, including the racer's
+    // freshly-landed commit — the same outcome as that commit landing a
+    // moment earlier
+    commit(snapshot, reapply) { base =>
       val keptDocs = base.columnDocs.filter { case (c, _) =>
         schema.fieldNames.contains(c) }
       val v = base.currentSchemaVersion + 1
@@ -1709,8 +1669,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
         // possibly a departed column) — drop it like truncate does
         properties =
           base.properties - LakeTable.TsHwmColProp - LakeTable.TsHwmProp)
-    }, applied = b => b.files.isEmpty && b.manifests.isEmpty &&
-      b.userSchema == schema)
+    }
 
   /** Evolve the schema toward `incoming` by [[LakeTable.evolvedSchema]]
     * in at most ONE commit, whatever the number of added or widened
@@ -1718,6 +1677,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * `docs` (column name -> doc) are recorded for the columns this call
     * ADDS only — an existing column keeps its doc. Dropping columns is
     * out of scope (shrinking is [[replaceSchema]]'s destructive job).
+    * On a lost race the rule is applied again to the winner's schema, so
+    * a concurrent data commit never fails a schema edit.
     * The one verb that adds or widens a column; its callers:
     *  - the batch writer's `mergeSchema` ([[GraftBatchWrite]]);
     *  - the op="S" registry events of a merge batch, folded in LSN order
@@ -1725,16 +1686,25 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     *  - each follow round, toward the source's schema and docs
     *    ([[graft.cdc.CdcPipeline.followOnce]]). */
   def evolveSchema(incoming: StructType,
-      docs: Map[String, String] = Map.empty): Snapshot = {
-    val base = snapshot
-    val cur = base.userSchema
-    val next = LakeTable.evolvedSchema(cur, incoming)
-    if (next == cur) return base
-    val added = next.fieldNames.drop(cur.size).toSet
-    commit(base, Nil, Set.empty, None, None,
-      schemaUpdate = Some((base.currentSchemaVersion + 1, next)),
-      newColumnDocs = docs.filter { case (c, _) => added.contains(c) })
-  }
+      docs: Map[String, String] = Map.empty): Snapshot =
+    evolveSchemaFrom(snapshot, incoming, docs)
+
+  /** [[evolveSchema]] as an edit of `base` (which may already be stale). */
+  private[graft] def evolveSchemaFrom(base: Snapshot, incoming: StructType,
+      docs: Map[String, String]): Snapshot =
+    commit(base, reapply) { b =>
+      val cur = b.userSchema
+      val next = LakeTable.evolvedSchema(cur, incoming)
+      if (next == cur) b
+      else {
+        val sv = b.currentSchemaVersion + 1
+        val added = next.fieldNames.drop(cur.size).toSet
+        b.copy(version = b.version + 1, currentSchemaVersion = sv,
+          schemas = b.schemas + (sv.toString -> next.json),
+          columnDocs = b.columnDocs ++
+            docs.filter { case (c, _) => added.contains(c) })
+      }
+    }
 
   /** Expire old snapshots and delete data files no snapshot references
     * anymore — the maintenance operation every snapshot-log table needs

@@ -150,6 +150,24 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(got == Map("c1" -> 5, "c2" -> 9))
   }
 
+  test("extras keys resolve case-insensitively: a case-variant column carries its value") {
+    val table = LakeTable.createTable(spark, tmpDir("evo-case-extras"),
+      Schemas.transcript, nBuckets = 2)
+    MergeApply.merge(table, v2(Seq(
+      (1L, "S", null, 0, """{"add":{"name":"score","type":"int"}}""", null, null),
+      (2L, "I", "c1", 0, "a", "user", Map("score" -> "5")))), 0L)
+    // the feed announces and sends its own spelling; the add is absorbed
+    // into `score`, and the value must still land there
+    val r = MergeApply.merge(table, v2(Seq(
+      (10L, "S", null, 0, """{"add":{"name":"Score","type":"int"}}""", null, null),
+      (11L, "I", "c2", 0, "b", "user", Map("Score" -> "9")))), 1L)
+    assert(r.applied && r.rowsApplied == 1L)
+    val got = table.read().select("conv_id", "score").collect()
+      .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getInt(1))))
+      .toMap
+    assert(got == Map("c1" -> Some(5), "c2" -> Some(9)))
+  }
+
   test("a batch's registry events land as ONE schema commit plus its data") {
     val table = LakeTable.createTable(spark, tmpDir("evo-one-commit"),
       Schemas.transcript, nBuckets = 2)

@@ -94,6 +94,25 @@ class ConcurrencySpec extends SparkSpec {
     assert(t.snapshot.userSchema.fieldNames.contains("extra"))
   }
 
+  test("a schema edit that lost the race to a delta commit lands on top of it") {
+    val t = fresh("occ-schema-edit")
+    val base = t.snapshot
+    // a delta commit takes v1 first …
+    t.commit(base, Seq(DataFileEntry("d1", 0, 1L, 0, "delta")), Set.empty, Some(0L), None)
+    // … so the schema edit built on v0 is refused v1 and is applied again
+    // to the winner, evolving the winner's schema
+    val s = t.evolveSchemaFrom(base, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("extra",
+        org.apache.spark.sql.types.IntegerType))), Map("extra" -> "late"))
+    assert(s.version == 2L)
+    val cur = t.snapshot
+    assert(cur.version == 2L)
+    assert(cur.userSchema.fieldNames.contains("extra"))
+    assert(cur.columnDocs.get("extra").contains("late"))
+    assert(cur.files.map(_.path) == Seq("d1"))
+    assert(cur.isCommitted(0L))
+  }
+
   // ---------------------------------------------------------- end-to-end
 
   private val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")

@@ -159,6 +159,49 @@ class SnapshotBoundsSpec extends SparkSpec {
     assert(t.snapshot.version == 3L)
   }
 
+  /** Make the CURRENT swap to version `v` fail after `vN.json` is fully
+    * written: a non-empty directory squats on the swap's temp file name.
+    * Returns the undo. */
+  private def blockSwap(t: LakeTable, v: Long): () => Unit = {
+    val block = new java.io.File(s"${t.dir}/_snapshots/.CURRENT.tmp.$v")
+    val child = new java.io.File(block, "squat")
+    assert(child.mkdirs())
+    () => assert(child.delete() && block.delete())
+  }
+
+  test("a failed CURRENT swap throws at once, deletes nothing; recover rolls forward") {
+    val t = LakeTable.createTable(spark, tmpDir("bounds-swap"), Schemas.transcript, 4)
+    t.commit(t.snapshot, Seq(DataFileEntry("a", 0, 1L, 0)), Set.empty, Some(0L), None)
+    val unblock = blockSwap(t, 2L)
+    val t0 = System.nanoTime()
+    intercept[java.io.IOException] {
+      t.commit(t.snapshot, Seq(DataFileEntry("b", 1, 1L, 0)), Set.empty, Some(1L), None)
+    }
+    // the failure surfaces as itself, not after the lost-race await
+    val ms = (System.nanoTime() - t0) / 1000000L
+    assert(ms < 5000L, s"failed swap took $ms ms to surface")
+    assert(t.snapshot.version == 1L)
+    // v2 stays readable: its manifest was not reclaimed
+    assert(t.snapshotAt(2L).files.map(_.path).toSet == Set("a", "b"))
+    unblock()
+    assert(t.recover(0L) == 2L)
+    assert(t.snapshot.isCommitted(1L))
+    val c = t.commit(t.snapshot, Seq(DataFileEntry("c", 2, 1L, 0)),
+      Set.empty, Some(2L), None)
+    assert(c.version == 3L)
+    assert(t.snapshot.files.map(_.path).toSet == Set("a", "b", "c"))
+  }
+
+  test("setProperty: a failed CURRENT swap throws; recover publishes the property") {
+    val t = LakeTable.createTable(spark, tmpDir("bounds-swap-prop"), Schemas.transcript, 4)
+    val unblock = blockSwap(t, 1L)
+    intercept[java.io.IOException](t.setProperty("owner", "ingest"))
+    assert(!t.snapshot.properties.contains("owner"))
+    unblock()
+    assert(t.recover(0L) == 1L)
+    assert(t.snapshot.properties.get("owner").contains("ingest"))
+  }
+
   test("a crashed writer's torn next-version file cannot wedge subsequent commits") {
     val t = LakeTable.createTable(spark, tmpDir("bounds-wedge"), Schemas.transcript, 4)
     t.commit(t.snapshot, Seq(DataFileEntry("a", 0, 1L, 0)), Set.empty, Some(0L), None)
