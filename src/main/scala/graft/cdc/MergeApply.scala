@@ -543,7 +543,8 @@ object MergeApply {
         if (fp.nonEmpty && lastChecksum(snap).contains(fp))
           return outcome(table, snap, epochId, cfg, t0,
             stats = BatchStats(fpRows), checksum = fp, applies = false)._1
-        return mergeGuarded(table, batch, epochId, cfg, t0, fp, replaceAll)
+        return mergeGuarded(table, snap, batch, epochId, cfg, t0, fp,
+          replaceAll)
       } catch {
         case _: graft.lake.EpochSupersededException =>
           return noop(table.snapshot.version, t0)
@@ -557,12 +558,15 @@ object MergeApply {
     sys.error("unreachable")
   }
 
-  private def mergeGuarded(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, checksum: String,
+  /** One attempt against `snap`, the snapshot [[runEpoch]] just guarded
+    * the epoch with; only the schema-registry redo re-reads, because its
+    * schema commit moved the table. */
+  private def mergeGuarded(table: LakeTable, snap: Snapshot, batch: DataFrame,
+      epochId: Long, cfg: MergeConfig, t0: Long, checksum: String,
       replaceAll: Boolean): MergeResult = {
     val hasExtras = batch.columns.contains("extras")
     val attempt =
-      try mergeAttempt(table, batch, epochId, cfg, t0, probe = hasExtras,
+      try mergeAttempt(table, snap, batch, epochId, cfg, t0, probe = hasExtras,
         checksum = checksum, replaceAll = replaceAll)
       catch {
         case e: Throwable
@@ -589,8 +593,8 @@ object MergeApply {
         // attempt under the new schema. Nothing from the first attempt
         // was committed.
         SchemaRegistry(table, events.sortBy(_._1).map(_._2))
-        mergeAttempt(table, batch, epochId, cfg, t0, probe = false,
-          checksum = checksum, replaceAll = replaceAll)
+        mergeAttempt(table, table.snapshot, batch, epochId, cfg, t0,
+          probe = false, checksum = checksum, replaceAll = replaceAll)
           .getOrElse(throw new IllegalStateException(
             "schema probe fired on the retry attempt"))
     }
@@ -648,8 +652,9 @@ object MergeApply {
     * one version per key lands as `base` files; the commit retires every
     * bucket, and no compaction sweep follows (the fresh table holds one
     * file per bucket). */
-  private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String,
+  private def mergeAttempt(table: LakeTable, snap: Snapshot,
+      batch: DataFrame, epochId: Long, cfg: MergeConfig, t0: Long,
+      probe: Boolean, checksum: String,
       replaceAll: Boolean): AttemptResult = {
     val hasExtras = batch.columns.contains("extras")
     val (dataBatch, probeObs) =
@@ -660,7 +665,6 @@ object MergeApply {
           col("op") === "S", struct(col("lsn"), col("text")))).as("sevents"))
         (observed.filter(col("op") =!= "S"), Some(obs))
       } else (batch.filter(col("op") =!= "S"), None)
-    val snap = table.snapshot
     val validation = new Validation(table, snap, epochId, cfg, dataBatch)
     val obs = org.apache.spark.sql.Observation()
     val aggs = statAggs(snap)

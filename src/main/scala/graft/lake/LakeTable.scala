@@ -285,7 +285,8 @@ final case class Snapshot(
     epochId <= epochWatermark || recentEpochs.contains(epochId.toString)
   /** Highest committed epoch id (-1 on a fresh table). For a destination
     * fed exclusively by [[graft.cdc.CdcPipeline.followOnce]] — whose epoch
-    * ids are source LSN cuts — this is the consumed-LSN high-watermark. */
+    * ids are source snapshot versions — this is the consumed-source-version
+    * watermark. */
   def maxCommittedEpoch: Long =
     recentEpochs.keysIterator.foldLeft(epochWatermark)((a, k) =>
       math.max(a, k.toLong))

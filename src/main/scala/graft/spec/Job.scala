@@ -124,7 +124,8 @@ final case class JobSpec(
       * per run): a merge reads nothing existing, so insert has no faster
       * path. The insert-only `CsvDir` destination requires "insert". */
     method: String = "upsert",
-    /** Truncate the destination before loading (always_wipe_data). */
+    /** Replace the destination's rows with this run's, in one atomic
+      * commit (always_wipe_data). */
     alwaysWipeData: Boolean = false,
     /** Drop + recreate the destination schema before loading
       * (always_clear_first). */
@@ -462,7 +463,6 @@ object JobRunner {
             "replay into a fresh table or set alwaysClearFirst")
       }
       if (spec.alwaysClearFirst) table.replaceSchema(userSchema)
-      else if (spec.alwaysWipeData) table.truncate()
       if (!table.snapshot.properties.get(KeyPackProp).contains(wantStamp))
         table.setProperty(KeyPackProp, wantStamp): Unit
       val epoch = table.snapshot.maxCommittedEpoch + 1
@@ -471,8 +471,13 @@ object JobRunner {
       // leaving duplicate keys in the batch would make the read-time LWW
       // winner plan-order-dependent — the opposite of the total-order
       // determinism dedupKeys establishes. (Across runs, the later
-      // epoch's higher lsn still wins.)
-      val res = MergeApply.merge(table, dedupKeys(batch), epoch, spec.merge)
+      // epoch's higher lsn still wins.) wipe_data is the atomic replace:
+      // ONE commit, so a failing load leaves the old rows in place and
+      // readers never see the table empty
+      val res =
+        if (spec.alwaysWipeData)
+          MergeApply.replace(table, dedupKeys(batch), epoch, spec.merge)
+        else MergeApply.merge(table, dedupKeys(batch), epoch, spec.merge)
       // applied=false here means the derived epoch was already committed
       // (a replayed run, or a concurrent job on the same table won the
       // epoch) — surface it as a skip, like the checksum gate does

@@ -57,14 +57,6 @@ object GraftOffset {
           s"not a graft-table offset: $j")
       }
     }
-
-  /** Strict progress order: does `a` cover more of the table than `b`?
-    * By version first; within one version the sealed (version-complete)
-    * form covers every catch-up cut. */
-  private[streaming] def isBeyond(a: GraftOffset, b: GraftOffset): Boolean =
-    a.version > b.version ||
-      (a.version == b.version && !b.versionComplete &&
-        (a.versionComplete || a.lsn > b.lsn))
 }
 
 /** `spark.readStream.format("graft-table").option("path", dir).load()` —
@@ -114,15 +106,15 @@ object GraftOffset {
   *    committed batch) align up losslessly — null-filled added columns,
   *    upcast widened ones — so evolution never wedges a checkpoint.
   *  - `.option("startingLsn", n | "latest")` starts a fresh checkpoint
-  *    after the given cut instead of bootstrapping the full table;
-  *    "latest" is resolved once and frozen in the stream's metadata
-  *    directory so restarts keep the same cut. The cut applies only to
-  *    the attach-time snapshot — the attach VERSION is frozen beside the
-  *    cut, and bootstrap pins it, so a commit landing between attach and
-  *    the first trigger is delivered as a version-window arrival even
-  *    when its LSNs sit below the cut. From there the stream tails by
-  *    commit version, so late low-LSN arrivals AFTER attach are
-  *    delivered.
+  *    after the given cut instead of bootstrapping the full table. The
+  *    cut applies to the snapshot the stream's first batch plans
+  *    against ("latest" = that snapshot's high LSN), and batch 0's end
+  *    offset records that version in Spark's offset log — so a restart
+  *    derives the same cut, and the source keeps no durable state of its
+  *    own. Every commit after that snapshot is a version-window arrival,
+  *    delivered even when its LSNs sit below the cut. On an empty table
+  *    batch 0 still seals (an empty batch), so "latest" never skips the
+  *    table's first commits.
   *  - a `followOnce`-driven table uses consumed-source-versions as epoch
   *    ids; this source uses Spark's own micro-batch ids — don't mix the
   *    two sync mechanisms on one destination table.
@@ -142,9 +134,8 @@ object GraftOffset {
   */
 class LakeTableSource(sqlContext: SQLContext, tableDir: String,
     maxLsnsPerTrigger: Option[Long] = None,
-    startingLsn: Option[Long] = None,
-    maxRowsPerTrigger: Option[Long] = None,
-    attachVersion: Option[Long] = None)
+    startingLsn: Option[String] = None,
+    maxRowsPerTrigger: Option[Long] = None)
     extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -154,14 +145,6 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
   private val startSchema: StructType = table.snapshot.userSchema
 
   override val schema: StructType = LakeTableSourceProvider.changeSchema(startSchema)
-
-  /** Latest end offset handed out or consumed — only the legacy
-    * [[getOffset]] path needs it (the engine replays the last committed
-    * range through `getBatch` on restart, re-seating this cursor); the
-    * admission-control path receives its start offset explicitly. Kept
-    * as a full offset so a metadata-only commit (new version, same LSN)
-    * re-serves the SAME json and never looks like new data. */
-  @volatile private var lastKnown: Option[GraftOffset] = None
 
   /** Snapshot frozen by [[prepareForTriggerAvailableNow]]: an
     * AvailableNow run drains up to here in rate-limited batches and then
@@ -184,72 +167,60 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
   override def reportLatestOffset(): OffsetV2 = targetSnap()
     .map(s => GraftOffset(s.version, GraftOffset.VersionComplete)).orNull
 
-  /** The engine's offset negotiation (it prefers this over the legacy
-    * [[getOffset]] because the source declares admission control, and —
-    * crucially — uses the source NATIVELY under Trigger.AvailableNow
-    * instead of wrapping it in a one-shot-getOffset wrapper that would
-    * freeze a rate-limited cut as the final target).
+  /** The engine's offset negotiation (the source declares admission
+    * control, so the engine never calls [[getOffset]], and it runs the
+    * source natively under Trigger.AvailableNow instead of wrapping it
+    * in a one-shot wrapper that would freeze a rate-limited cut as the
+    * final target).
     *
     * Returning `start` verbatim (json-equal) signals no new data; a
     * purely-metadata commit advances the offset once with an empty
     * batch, then the stream re-quiesces. */
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val snap = targetSnap().getOrElse(return start)
+    // a fresh checkpoint with a startingLsn seals batch 0 even on an
+    // empty table: its end offset records where "from now on" begins
+    val snap = preparedTarget.getOrElse(Some(table.snapshot))
+      .filter(s => s.files.nonEmpty ||
+        (start == null && startingLsn.nonEmpty))
+      .getOrElse(return start)
     Option(start).map(GraftOffset.parse) match {
       case None =>
-        // fresh checkpoint: bootstrap the pinned snapshot's winners.
-        // startingLsn (attach-without-bootstrap, Delta's startingVersion
-        // analog; "latest" resolved/frozen at source creation) cuts ONLY
-        // the ATTACH snapshot — frozen by version at source creation,
-        // NOT the first-trigger snapshot: a commit landing between
-        // attach and the first trigger may carry an out-of-order LSN
-        // BELOW the frozen cut, and cutting the newer snapshot would
-        // drop it from every window forever. Pinning the attach version
-        // delivers it as a commit-version arrival instead.
-        val pin = attachVersion.filter(_ < snap.version).map { av =>
-          try table.snapshotAt(av)
-          catch {
-            // ONLY a missing snapshot means vacuumed — rewording a
-            // transient read error with discard-the-checkpoint advice
-            // would talk an operator into abandoning the frozen cut (and
-            // the gap it protects) over a blip a retry survives
-            case e: Exception
-                if Iterator.iterate(e: Throwable)(_.getCause)
-                  .takeWhile(_ != null).take(16)
-                  .exists(_.isInstanceOf[java.io.FileNotFoundException]) =>
-              throw new IllegalStateException(
-                s"the attach snapshot v$av frozen for startingLsn has " +
-                  "been vacuumed before batch 0 sealed; keep " +
-                  "vacuumKeepSnapshots above the bootstrap window, or " +
-                  "start a NEW checkpoint (a fresh metadata dir " +
-                  "re-freezes the cut at the live snapshot)", e)
-          }
-        }.getOrElse(snap)
-        val high = table.highLsn(pin) // manifest stats only — no job
-        val from = startingLsn.getOrElse(-1L)
-        if (high <= from)
-          // nothing beyond the attach cut: seal the snapshot so the
-          // checkpoint RECORDS the starting point — otherwise a restart
-          // re-resolves "latest" and silently skips the gap
-          return GraftOffset(pin.version, GraftOffset.VersionComplete)
-        val cut = maxLsnsPerTrigger.fold(high)(m => math.min(high, from + m))
-        if (cut >= high) GraftOffset(pin.version, GraftOffset.VersionComplete)
-        else GraftOffset(pin.version, cut)
+        // fresh checkpoint: bootstrap the winners of the snapshot read
+        // HERE, past startCut. Spark logs this end offset before batch 0
+        // runs, so a restart replays the same pinned version and derives
+        // the same cut; every later commit is a version-window arrival
+        catchUp(snap, startCut(snap))
       case Some(s) if !s.versionComplete =>
         // catch-up pinned to s.version (also: checkpoints written by the
         // LSN-cut era of this source resume here and seal losslessly)
-        val pin = if (snap.version == s.version) snap
-          else table.snapshotAt(s.version)
-        val high = table.highLsn(pin)
-        val cut = maxLsnsPerTrigger.fold(high)(m => math.min(high, s.lsn + m))
-        if (cut >= high) GraftOffset(s.version, GraftOffset.VersionComplete)
-        else GraftOffset(s.version, cut)
+        catchUp(if (snap.version == s.version) snap
+          else table.snapshotAt(s.version), s.lsn)
       case Some(s) =>
         // steady state: commit-version arrival windows
-        if (snap.version <= s.version) return start
-        GraftOffset(nextWindowEnd(snap, s.version),
+        if (snap.version <= s.version) start
+        else GraftOffset(nextWindowEnd(snap, s.version),
           GraftOffset.VersionComplete)
     }
+  }
+
+  /** Where a fresh checkpoint's bootstrap starts within `pin`: past the
+    * `startingLsn` cut, else from the beginning (-1). "latest" is `pin`'s
+    * own high LSN — a pure function of the version that batch 0's end
+    * offset records. */
+  private def startCut(pin: Snapshot): Long = startingLsn match {
+    case None => -1L
+    case Some("latest") => table.highLsn(pin) // manifest stats only — no job
+    case Some(n) => n.toLong
+  }
+
+  /** The next catch-up end offset through `pin`'s winners past LSN
+    * `from`: the `maxLsnsPerTrigger` cut, sealed to version-complete once
+    * it reaches the snapshot's high LSN. */
+  private def catchUp(pin: Snapshot, from: Long): GraftOffset = {
+    val high = table.highLsn(pin)
+    val cut = maxLsnsPerTrigger.filter(_ < high - from).fold(high)(from + _)
+    if (cut >= high) GraftOffset(pin.version, GraftOffset.VersionComplete)
+    else GraftOffset(pin.version, cut)
   }
 
   /** End version of the next arrival window after `sinceV` against the
@@ -283,25 +254,15 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
     math.max(endV, sinceV + 1)
   }
 
-  /** Legacy DSv1 negotiation — kept correct for direct users of the
-    * Source API; the engine itself routes through [[latestOffset]]. The
-    * start handed to [[latestOffset]] is the cached last end offset
-    * VERBATIM, so a quiescent table (including metadata-only version
-    * bumps) re-serves identical json and triggers nothing. */
-  override def getOffset: Option[V1Offset] = {
-    val o = Option(latestOffset(lastKnown.orNull, getDefaultReadLimit))
-      .map(GraftOffset.parse)
-    lastKnown = o.orElse(lastKnown)
-    o
-  }
+  /** Refused, as Spark's own `FileStreamSource` refuses it: the engine
+    * negotiates through [[latestOffset]]. */
+  override def getOffset: Option[V1Offset] =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
-  override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
-    val endO = GraftOffset.parse(end)
-    if (lastKnown.forall(o => GraftOffset.isBeyond(endO, o)))
-      lastKnown = Some(endO)
+  override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame =
     GraftStreamShim.asStreamingBatch(
-      batchPlan(start.map(GraftOffset.parse), endO))
-  }
+      batchPlan(start.map(GraftOffset.parse), GraftOffset.parse(end)))
 
   /** The plain (non-streaming-flagged) plan behind [[getBatch]] — split
     * out so tests can execute a range directly. */
@@ -316,13 +277,12 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
         // catch-up form: the pinned snapshot's winners in (from, end.lsn]
         // — the LSN filter is the rate-limit cut (a key whose winner lies
         // beyond it is deferred to the batch that covers the winner)
-        val from = startO.map(_.lsn).orElse(startingLsn).getOrElse(-1L)
-        table.readSinceSnap(from, snap)
+        table.readSinceSnap(startO.fold(startCut(snap))(_.lsn), snap)
           .filter(col("__lsn") <= endO.lsn)
       } else startO match {
         case None =>
           // bootstrap sealed in one window: winners at the snapshot
-          table.readSinceSnap(startingLsn.getOrElse(-1L), snap)
+          table.readSinceSnap(startCut(snap), snap)
         case Some(s) if !s.versionComplete =>
           // seal transition: finish the pinned snapshot past the last
           // LSN cut, plus every arrival in commits after it (aligned to
@@ -531,8 +491,7 @@ class LakeTableSourceProvider extends StreamSourceProvider
     require(schema.isEmpty, "graft-table derives its schema from the table")
     val t = LakeTable.load(sqlContext.sparkSession, dir(parameters))
     // same fail-fast as the sink: a typo'd path would otherwise die in
-    // the snapshot read with a bare FileNotFoundException — after
-    // resolveOnce may already have frozen stream metadata
+    // the snapshot read with a bare FileNotFoundException
     require(t.exists, s"no lake table at ${dir(parameters)} — create it " +
       "first (LakeTable.createTable)")
     (shortName(), LakeTableSourceProvider.changeSchema(t.snapshot.userSchema))
@@ -548,105 +507,13 @@ class LakeTableSourceProvider extends StreamSourceProvider
     require(limit.forall(_ > 0), "maxLsnsPerTrigger must be positive")
     val rowLimit = parameters.get("maxRowsPerTrigger").map(_.toLong)
     require(rowLimit.forall(_ > 0), "maxRowsPerTrigger must be positive")
-    // startingLsn: first batch of a FRESH checkpoint starts after this
-    // cut instead of bootstrapping the full table; "latest" = tail only
-    // changes committed from now on. The resolved value is PERSISTED in
-    // the stream's metadata directory: batch 0's start offset is always
-    // None in the checkpoint, so replay determinism requires the same
-    // resolved cut on every restart — re-resolving "latest" against the
-    // live table would silently skip everything committed while batch 0
-    // sat unfinished in the offset log.
-    // the attach VERSION is frozen WITH the cut, from ONE snapshot read,
-    // in ONE record: the cut applies only to the attach-time snapshot,
-    // so bootstrap must pin that snapshot — cutting whatever snapshot
-    // the first trigger happens to see would permanently lose a low-LSN
-    // out-of-order arrival committed between attach and trigger one.
-    // Resolving cut and version from two separate snapshot reads (or two
-    // separate arbiter files) re-opens the same hole one level down: a
-    // commit landing between the reads has version <= attachV but LSNs
-    // <= cut — inside the pinned snapshot yet filtered from bootstrap,
-    // and in no later window; a crash between two file writes would
-    // re-resolve the second value against the live table. "cut:version"
-    // in a single atomically-published file closes both.
-    val (startLsn, attachV): (Option[Long], Option[Long]) =
-      parameters.get("startingLsn") match {
-        case None => (None, None)
-        case Some("latest") =>
-          val rec = resolveOnce(sqlContext, metadataPath,
-            "graft-starting-lsn") {
-              val t = LakeTable.load(sqlContext.sparkSession, dir(parameters))
-              val snap = t.snapshot // ONE read feeds both fields
-              s"${t.highLsn(snap)}:${snap.version}"
-            }
-          rec.split(':') match {
-            case Array(l, v) => (Some(l.toLong), Some(v.toLong))
-            case _ => throw new IllegalStateException(
-              s"$metadataPath/graft-starting-lsn holds '$rec', not a " +
-                "'cut:version' record — restart the stream from a fresh " +
-                "checkpoint")
-          }
-        case Some(n) =>
-          // numeric cut: the value is the user's, only the version needs
-          // freezing (any pre-attach commit below a user-chosen cut is
-          // excluded BY that choice, not by a resolution race)
-          val v = resolveOnce(sqlContext, metadataPath,
-            "graft-attach-version") {
-              LakeTable.load(sqlContext.sparkSession, dir(parameters))
-                .snapshot.version.toString
-            }
-          (Some(n.toLong), Some(v.toLong))
-      }
-    new LakeTableSource(sqlContext, dir(parameters), limit, startLsn,
-      rowLimit, attachV)
-  }
-
-  /** Resolve a per-stream record exactly once: first call writes `live`
-    * under the stream's metadata path (create-if-absent = the arbiter);
-    * every later call — including after a restart — reads that value
-    * back. Used to freeze the `startingLsn=latest` cut + attach version
-    * (one combined record — atomicity matters, see createSource).
-    * Direct Source-API users with no metadata path get a live resolve
-    * (single-instance use). */
-  private def resolveOnce(sqlContext: SQLContext, metadataPath: String,
-      name: String)(live: => String): String = {
-    if (metadataPath == null || metadataPath.isEmpty) return live
-    val p = new org.apache.hadoop.fs.Path(metadataPath, name)
-    val fs = p.getFileSystem(
-      sqlContext.sparkSession.sessionState.newHadoopConf())
-    def read(): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    if (fs.exists(p)) return read()
-    val v = live
-    // atomic publish, two phases: (1) the value lands COMPLETE in a temp
-    // file — a create-then-write under the final name could be killed
-    // mid-write and leave a torn file that wedges every restart; (2) the
-    // temp enters under the final name through an arbiter that REFUSES
-    // an existing destination — local rename(2) silently replaces, so on
-    // the local fs the arbiter is an atomic hard link (EEXIST = lost the
-    // race); HDFS-like stores get rename, which fails on an existing
-    // destination there. Either way the loser defers to the winner's
-    // complete value, and the temp is reclaimed on every exit path.
-    val tmp = new org.apache.hadoop.fs.Path(metadataPath,
-      s"$name.tmp-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(p.getParent)
-    val local = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    try {
-      if (local) {
-        val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
-        java.nio.file.Files.write(tmpNio, v.getBytes("UTF-8"))
-        try { java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(p.toUri.getPath), tmpNio); v }
-        catch { case _: java.nio.file.FileAlreadyExistsException => read() }
-      } else {
-        val out = fs.create(tmp, true)
-        try out.write(v.getBytes("UTF-8")) finally out.close()
-        if (fs.rename(tmp, p)) v else read()
-      }
-    } finally { try fs.delete(tmp, false) catch { case _: java.io.IOException => () } }
+    // startingLsn: a FRESH checkpoint bootstraps past this cut instead of
+    // the full table; "latest" = only changes after the first batch's
+    // snapshot (see LakeTableSource.startCut)
+    val start = parameters.get("startingLsn")
+    require(start.forall(s => s == "latest" || s.toLongOption.nonEmpty),
+      s"""startingLsn must be an LSN or "latest", got ${start.orNull}""")
+    new LakeTableSource(sqlContext, dir(parameters), limit, start, rowLimit)
   }
 }
 

@@ -100,7 +100,7 @@ class JobRunnerSpec extends SparkSpec {
     JobRunner.run(spark, base)
     assert(t.read().count() == 3, "append of same keys must LWW-resolve")
 
-    // wipe_data: truncate then load -> exactly this run's rows
+    // wipe_data: one atomic replace -> exactly this run's rows
     JobRunner.run(spark, base.copy(alwaysWipeData = true))
     assert(t.read().count() == 3)
     assert(t.lineage.nonEmpty)
@@ -115,6 +115,35 @@ class JobRunnerSpec extends SparkSpec {
     val cols = t.read().columns.toSet
     assert(cols == Set("conv_id", "turn_idx", "license_id", "breed"))
     assert(t.read().count() == 3)
+  }
+
+  test("wipe_data loads in one commit: a poisoned wipe run leaves the old rows") {
+    val work = tmpDir("job-wipe")
+    val lake = s"$work/lake"
+    def spec(name: String, lines: Seq[String]) = JobSpec(
+      jobCode = "turns",
+      source = JobSource.LocalFile(writeCsv(work, name,
+        "conv_id,turn_idx,text" +: lines)),
+      stagingDir = s"$work/staging",
+      extractor = JobExtractor.Csv(),
+      destination = JobDestination.Lake(lake, nBuckets = 4),
+      schema = Seq(
+        Projection.Field("conv_id", "conv_id"),
+        Projection.Field("turn_idx", "turn_idx", Some(IntegerType)),
+        Projection.Field("text", "text")),
+      keyFields = Seq("conv_id", "turn_idx"))
+    JobRunner.run(spark, spec("a.csv", Seq("c1,0,a", "c1,1,b", "c2,0,c")))
+    val t = LakeTable.load(spark, lake)
+    assert(t.snapshot.version == 1 && t.read().count() == 3)
+    // a wipe run whose only row has an empty key: the load must fail
+    // before ANY commit — a truncate-then-merge wipe would already have
+    // published the empty table
+    intercept[graft.cdc.PoisonEventException] {
+      JobRunner.run(spark, spec("b.csv", Seq(",0,bad"))
+        .copy(alwaysWipeData = true))
+    }
+    assert(t.snapshot.version == 1, "the failed wipe committed something")
+    assert(t.read().count() == 3, "the failed wipe emptied the table")
   }
 
   test("native transcript key maps through unchanged; timeField registers watermark.column") {

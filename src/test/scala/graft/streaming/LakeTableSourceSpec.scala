@@ -63,12 +63,19 @@ class LakeTableSourceSpec extends SparkSpec {
   }
 
   test("offset json roundtrips through the checkpoint codec") {
-    val o = GraftOffset(12, 345678)
-    assert(GraftOffset.parse(o) == o)
-    val restored = new org.apache.spark.sql.connector.read.streaming.Offset {
-      override def json(): String = o.json
+    // both forms: catch-up (an LSN cut) and sealed (lsn = -2)
+    val catchUp = GraftOffset(12, 345678)
+    val sealedO = GraftOffset(12, GraftOffset.VersionComplete)
+    assert(catchUp.json == """{"version":12,"lsn":345678}""")
+    assert(sealedO.json == """{"version":12,"lsn":-2}""")
+    assert(!catchUp.versionComplete && sealedO.versionComplete)
+    Seq(catchUp, sealedO).foreach { o =>
+      assert(GraftOffset.parse(o) == o)
+      val restored = new org.apache.spark.sql.connector.read.streaming.Offset {
+        override def json(): String = o.json
+      }
+      assert(GraftOffset.parse(restored) == o)
     }
-    assert(GraftOffset.parse(restored) == o)
   }
 
   test("tailing a table replicates state exactly-once across restarts, deletes propagate") {
@@ -336,57 +343,26 @@ class LakeTableSourceSpec extends SparkSpec {
     assert(state(dst) == Set(("new", 0, "n1")))
   }
 
-  test("startingLsn=latest freezes ONCE in the stream metadata — restarts keep the cut") {
-    val srcDir = tmpDir("lts-frozen-src")
+  test("startingLsn=latest on an empty table delivers the table's first commits") {
+    val srcDir = tmpDir("lts-latest-empty")
     val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
-    MergeApply.merge(src, batch(Seq(
-      (1L, "U", "h", 0, "a"), (2L, "U", "h", 1, "b"))), 0L, MergeConfig())
-    val mp = tmpDir("lts-frozen-meta")
-    val p = new LakeTableSourceProvider()
-    def mk() = p.createSource(spark.sqlContext, mp, None, "graft-table",
-      Map("path" -> srcDir, "startingLsn" -> "latest"))
-    mk() // first incarnation freezes latest = 2
-    // data lands between the stream's incarnations (the crash window
-    // where batch 0 sits in the offset log unprocessed)
-    MergeApply.merge(src, batch(Seq((3L, "U", "n", 0, "c"))), 1L, MergeConfig())
-    val restarted = mk().asInstanceOf[LakeTableSource]
-    val o = restarted.getOffset
-    assert(o.nonEmpty,
-      "restart re-resolved 'latest' to the live high and skipped the gap")
-    val g = GraftOffset.parse(o.get)
-    // bootstrap seals at the frozen ATTACH version (not the live one):
-    // the cut belongs to the attach snapshot, the gap commit is a later
-    // version window
-    assert(g.versionComplete && g.version < src.snapshot.version)
-    assert(lsns(restarted.batchPlan(None, g)).isEmpty,
-      "the attach bootstrap must deliver nothing beyond the frozen cut")
-    val o2 = restarted.getOffset
-    assert(o2.nonEmpty)
-    val g2 = GraftOffset.parse(o2.get)
-    assert(g2.versionComplete && g2.version == src.snapshot.version)
-    val rows = lsns(restarted.batchPlan(Some(g), g2))
-    assert(rows == Set(3L), s"expected only the gap row, got $rows")
-  }
-
-  test("a bare-cut startingLsn record (no attach version) is refused") {
-    val srcDir = tmpDir("lts-barecut-src")
-    LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
-    val mp = tmpDir("lts-barecut-meta")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(mp, "graft-starting-lsn"), "7")
-    val e = intercept[IllegalStateException] {
-      new LakeTableSourceProvider().createSource(spark.sqlContext, mp, None,
-        "graft-table", Map("path" -> srcDir, "startingLsn" -> "latest"))
-    }
-    assert(e.getMessage.contains("cut:version"))
+    val dst = LakeTable.createTable(spark, tmpDir("lts-latest-empty-dst"),
+      Schemas.transcript, 2)
+    val ckpt = tmpDir("lts-latest-empty-ckpt")
+    val first = drain(srcDir, dst, ckpt, Map("startingLsn" -> "latest"))
+    assert(first.forall(_.rowsApplied == 0))
+    MergeApply.merge(src, batch(Seq((1L, "U", "c1", 0, "x"))), 0L, MergeConfig())
+    drain(srcDir, dst, ckpt, Map("startingLsn" -> "latest"))
+    assert(state(dst) == Set(("c1", 0, "x")),
+      "the first commit after attach was skipped by 'latest'")
   }
 
   test("low-LSN arrival inside the batch-0 crash window survives the frozen cut") {
-    // the attach-version freeze's reason to exist: a commit landing
-    // between source creation and the first trigger whose LSNs sit BELOW
-    // the frozen cut. Cutting the first-trigger snapshot would exclude it
-    // from the bootstrap AND from every later version window — lost
-    // forever; pinning the attach snapshot delivers it as an arrival.
+    // batch 0's end offset is the stream's only record of where it
+    // attached: a commit landing after batch 0 was planned — here while
+    // batch 0 sat unfinished in the offset log — is a version-window
+    // arrival even when its LSNs sit BELOW the cut
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val srcDir = tmpDir("lts-ooo-attach")
     val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
     MergeApply.merge(src, batch(Seq(
@@ -396,17 +372,28 @@ class LakeTableSourceSpec extends SparkSpec {
     def mk() = p.createSource(spark.sqlContext, mp, None, "graft-table",
       Map("path" -> srcDir, "startingLsn" -> "latest"))
       .asInstanceOf[LakeTableSource]
-    mk() // freezes cut = 20 AND attach version
-    // crash window: a NEW key arrives with an LSN below the frozen cut
+    // instance 1 plans batch 0 (cut = 20), then the stream goes down
+    val end0 = GraftOffset.parse(mk().latestOffset(null, ReadLimit.allAvailable()))
+    // crash window: a NEW key arrives with an LSN below the cut
     MergeApply.merge(src, batch(Seq((5L, "U", "late", 0, "x"))), 1L,
       MergeConfig())
     val restarted = mk()
-    val g = GraftOffset.parse(restarted.getOffset.get)
-    assert(lsns(restarted.batchPlan(None, g)).isEmpty)
-    val g2 = GraftOffset.parse(restarted.getOffset.get)
-    val rows = lsns(restarted.batchPlan(Some(g), g2))
+    assert(lsns(restarted.batchPlan(None, end0)).isEmpty,
+      "replaying batch 0 must deliver nothing past the cut")
+    val end1 = GraftOffset.parse(
+      restarted.latestOffset(end0, ReadLimit.allAvailable()))
+    val rows = lsns(restarted.batchPlan(Some(end0), end1))
     assert(rows == Set(5L),
       s"low-LSN crash-window arrival was lost by the cut, got $rows")
+  }
+
+  test("the legacy getOffset is refused: latestOffset is the one offset path") {
+    val srcDir = tmpDir("lts-getoffset")
+    LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
+    val s = new LakeTableSourceProvider().createSource(spark.sqlContext, "",
+      None, "graft-table", Map("path" -> srcDir))
+    val e = intercept[UnsupportedOperationException](s.getOffset)
+    assert(e.getMessage.contains("latestOffset"))
   }
 
   test("arrival below the consumed LSN high water still reaches the stream") {
@@ -529,14 +516,17 @@ class LakeTableSourceSpec extends SparkSpec {
 
     MergeApply.merge(src, batch(Seq((1L, "U", "c1", 0, "x"))), 0L, MergeConfig())
     // a live source instance pinned its schema at creation …
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val running = provider.createSource(spark.sqlContext, "", None,
-      "graft-table", params)
-    val o1 = running.getOffset.get
+      "graft-table", params).asInstanceOf[LakeTableSource]
+    val o1 = GraftOffset.parse(
+      running.latestOffset(null, ReadLimit.allAvailable()))
     // … then the table evolves and more data lands
     src.evolveSchema(rating, Map("rating" -> "added mid-stream"))
     MergeApply.merge(src, batch(Seq((2L, "U", "c1", 1, "y"))), 1L,
       MergeConfig())
-    val o2 = running.getOffset.get
+    val o2 = GraftOffset.parse(
+      running.latestOffset(o1, ReadLimit.allAvailable()))
     val ex = intercept[IllegalStateException] {
       running.getBatch(Some(o1), o2)
     }
