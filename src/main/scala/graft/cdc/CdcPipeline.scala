@@ -125,23 +125,15 @@ object CdcPipeline {
   /** Start the ingest query. Caller stops it (or uses
     * `processAllAvailable` for a bounded replay). */
   def start(spark: SparkSession, feedDir: String, table: LakeTable,
-      cfg: PipelineConfig): StreamingQuery = {
-    readChangeFeed(spark, feedDir, cfg).writeStream
-      .queryName(s"cdc-ingest-${table.dir.hashCode.toHexString}")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger(cfg))
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyEpoch(table, cfg.preBatch(batch, epochId), epochId, cfg)
-      }
-      .start()
-  }
+      cfg: PipelineConfig): StreamingQuery =
+    startQuery(spark, feedDir, Seq(table), cfg,
+      s"cdc-ingest-${table.dir.hashCode.toHexString}")
 
   /** Bounded replay: process everything currently in the feed, then stop.
     * Returns the table's resulting snapshot version. */
   def replayAvailable(spark: SparkSession, feedDir: String, table: LakeTable,
       cfg: PipelineConfig): Long = {
-    val q = start(spark, feedDir, table, cfg)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    await(start(spark, feedDir, table, cfg))
     table.snapshot.version
   }
 
@@ -154,8 +146,20 @@ object CdcPipeline {
     * redelivery while the others catch up). */
   def startFanOut(spark: SparkSession, feedDir: String,
       dests: Seq[LakeTable], cfg: PipelineConfig): StreamingQuery =
+    startQuery(spark, feedDir, dests, cfg,
+      s"cdc-fanout-${feedDir.hashCode.toHexString}")
+
+  def replayFanOutAvailable(spark: SparkSession, feedDir: String,
+      dests: Seq[LakeTable], cfg: PipelineConfig): Unit =
+    await(startFanOut(spark, feedDir, dests, cfg))
+
+  /** The one ingest query behind [[start]] and [[startFanOut]]: `preBatch`
+    * once per batch, then one [[applyEpoch]] per destination. */
+  private def startQuery(spark: SparkSession, feedDir: String,
+      dests: Seq[LakeTable], cfg: PipelineConfig,
+      name: String): StreamingQuery =
     readChangeFeed(spark, feedDir, cfg).writeStream
-      .queryName(s"cdc-fanout-${feedDir.hashCode.toHexString}")
+      .queryName(name)
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(trigger(cfg))
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -163,7 +167,7 @@ object CdcPipeline {
         // each destination's merge runs 1-2 actions over the batch plan;
         // without a persist the source scan (and preBatch) re-executes
         // per sink — "one source scan" must hold at execution, not just
-        // plan construction. Single-sink fan-outs skip the cache (merge
+        // plan construction. Single-sink queries skip the cache (merge
         // itself is the only consumer there).
         val cached = if (dests.sizeIs > 1) b.persist() else b
         try dests.foreach(applyEpoch(_, cached, epochId, cfg))
@@ -171,121 +175,6 @@ object CdcPipeline {
       }
       .start()
 
-  def replayFanOutAvailable(spark: SparkSession, feedDir: String,
-      dests: Seq[LakeTable], cfg: PipelineConfig): Unit = {
-    val q = startFanOut(spark, feedDir, dests, cfg)
+  private def await(q: StreamingQuery): Unit =
     try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** Outcome of one [[followOnce]] round. `toVersion` is the destination's
-    * new consumed-source-VERSION watermark when applied (unchanged
-    * otherwise). */
-  final case class FollowResult(applied: Boolean, fromVersion: Long,
-      toVersion: Long, merge: Option[MergeResult])
-
-  /** One round of table-to-table incremental sync — the downstream-
-    * consumption half of CDC, chaining lake tables into multi-hop
-    * (bronze → silver) pipelines. This is the LSN-exact form of the
-    * reference's time-gap incremental pull: query the DESTINATION for how
-    * far it has consumed, fetch only the gap from the source (reference:
-    * engine/time_field_util.py:53-127, engine/payload/united_way/211.py:225-248
-    * — `max(time_field)` of the destination bounds the next fetch).
-    *
-    * Mechanics: the destination's committed-epoch guard doubles as the
-    * consumed-source-VERSION watermark — each round merges the source's
-    * window ARRIVALS (`src.arrivalsSince(last)`, pinned to one source
-    * snapshot) under `epochId = src.snapshot.version`, so a crashed or
-    * re-run round is a no-op and a fresh destination starts from -1
-    * (full copy). The commit-version cut makes rounds robust to
-    * arbitrarily out-of-order LSN arrival at the source — an LSN-cut
-    * round silently loses a key whose winning event lands below the
-    * already-consumed high water (which is why epoch ids are snapshot
-    * versions, NOT source LSNs). O(new data) per round: exact arrival
-    * files are pruned from the manifest alone; a compaction fold inside
-    * the window degrades to re-upserting that bucket's winners, which
-    * the destination's LWW merge absorbs (tombstone winners ride along
-    * as `op="D"`, so deletes still propagate). Don't mix `followOnce`
-    * with feed ingest on one destination table.
-    *
-    * `transform` runs over the change envelope (`lsn`, `op`, user columns)
-    * and must keep `lsn`/`op`/key columns; use it for declarative
-    * silver-layer cleanup (projection, scalar fixes). Row-filtering
-    * transforms drop those keys' changes entirely — including their
-    * deletes — so filter on IMMUTABLE key attributes only.
-    *
-    * With `evolveSchema` (default), source schema evolution propagates
-    * BEFORE the round's merge, by the one rule of
-    * [[LakeTable.evolveSchema]] in at most one schema commit: columns the
-    * source added arrive with their column docs (the reference's
-    * data-dictionary preservation, reference: engine/etl_util.py:87-115),
-    * type widenings are widened downstream, and destination-only columns
-    * are left alone — otherwise the destination's align would silently
-    * drop the new columns. A destination column whose type neither
-    * widens to nor from the source's fails the round with
-    * `IllegalArgumentException` before anything merges. Idempotent: a
-    * crash between evolution and merge redoes a no-op. Disable it when
-    * `transform` reshapes the columns and the destination schema is
-    * authored by hand. */
-  def followOnce(src: LakeTable, dst: LakeTable,
-      transform: DataFrame => DataFrame = identity,
-      cfg: MergeConfig = MergeConfig(),
-      evolveSchema: Boolean = true): FollowResult = {
-    // the consumed-source-VERSION watermark IS the destination's global
-    // epoch space (epoch ids are source snapshot versions — see the
-    // scaladoc above for why not LSN cuts). A txn-scoped config would commit
-    // into the txn slot instead: the watermark never advances, every
-    // round re-reads from -1 and re-plans an O(table) merge before the
-    // txn guard no-ops it — correct final state, quadratic work. Fail
-    // loudly rather than silently degrade the documented O(new data).
-    require(cfg.txnApp.isEmpty,
-      "followOnce tracks progress in the table's global epoch space; " +
-        "txn-scoped MergeConfig (txnApp) would silently make each round O(table)")
-    val dstSnap = dst.snapshot
-    // migration guard: a mirror synced under the legacy LSN epoch space
-    // has a huge watermark — every version-space round would silently
-    // no-op under it. Fail loudly; only a fresh mirror adopts this space.
-    val space = dstSnap.properties.get(FollowSpaceProp)
-    if (!space.contains("version")) {
-      if (dstSnap.maxCommittedEpoch >= 0 || dstSnap.txns.nonEmpty)
-        sys.error(s"destination ${dst.dir} has committed epochs outside " +
-          "the consumed-source-version space (a legacy LSN-space or " +
-          "stream-fed mirror) — rebuild it before following")
-      dst.setProperty(FollowSpaceProp, "version")
-    }
-    val snap = src.snapshot
-    // only a property may have been set since dstSnap was read
-    val last = dstSnap.maxCommittedEpoch
-    if (snap.version <= last)
-      return FollowResult(applied = false, last, last, None)
-    if (evolveSchema) dst.evolveSchema(snap.userSchema, snap.columnDocs)
-    val changes = src.arrivalsSinceSnap(last, snap)
-      .withColumnRenamed("__lsn", "lsn")
-      .withColumnRenamed("__op", "op")
-    val res = MergeApply.merge(dst, transform(changes), snap.version, cfg)
-    FollowResult(res.applied, last,
-      if (res.applied) snap.version else last, Some(res))
-  }
-
-  /** Table property recording that a destination's epoch watermark lives
-    * in the consumed-source-version space (followOnce's contract). */
-  val FollowSpaceProp = "graft.follow.space"
-
-  /** Drain: follow rounds until the destination has consumed everything
-    * currently in the source. Returns the rounds that applied data.
-    * `evolveSchema` passes through to every [[followOnce]] round — the
-    * drain loop must honor the same opt-out (hand-authored destination
-    * schema under a reshaping `transform`) or the first round would
-    * pollute it with every source column. */
-  def followAvailable(src: LakeTable, dst: LakeTable,
-      transform: DataFrame => DataFrame = identity,
-      cfg: MergeConfig = MergeConfig(),
-      evolveSchema: Boolean = true): Seq[FollowResult] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[FollowResult]
-    var r = followOnce(src, dst, transform, cfg, evolveSchema)
-    while (r.applied) {
-      out += r
-      r = followOnce(src, dst, transform, cfg, evolveSchema)
-    }
-    out.toSeq
-  }
 }

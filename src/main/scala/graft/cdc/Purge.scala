@@ -64,8 +64,8 @@ final case class PurgeResult(
   *  1. '''Tombstone merge''' — one ordinary batch of `D` events (key
   *     columns only, payload null) for the conversations' live turns at
   *     `lsn = highWater + 1` (the [[Revert]] compensation pattern,
-  *     `graft-purge` txn slot). Downstream — followers, the streaming
-  *     source, change-feed windows — converges through these ordinary
+  *     `graft-purge` txn slot). Downstream — the streaming source and
+  *     its mirrors, change-feed windows — converges through these ordinary
   *     deletes.
   *  2. '''History rewrite''' — a [[MergeApply.compactBuckets]] fold of
   *     exactly the conversations' hash buckets with a purge transform:

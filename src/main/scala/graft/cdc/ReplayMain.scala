@@ -88,68 +88,29 @@ object ReplayMain {
         else { println(s"MISMATCH got=${got.size} want=${oracle.size}"); sys.exit(1) }
       }
 
-      // GRAFT_FOLLOW=1: mirror into a downstream table via the
-      // incremental follow path (batch rounds over readSince).
-      // GRAFT_FOLLOW=stream: same mirror, but tailed through the
-      // `graft-table` Structured Streaming source + foreachBatch merge.
-      // Either way the mirror is held to the SAME sequential oracle —
-      // end-to-end evidence for the downstream-consumption surface at
-      // replay scale.
+      // GRAFT_FOLLOW=1: mirror the table into <workDir>/downstream with
+      // the `graft-table` source → sink one-liner and hold the mirror to
+      // the SAME sequential oracle — end-to-end evidence for the
+      // downstream-consumption surface at replay scale. The stream
+      // checkpoint carries the mirror's progress, so a re-run applies
+      // nothing.
       if (sys.env.contains("GRAFT_FOLLOW")) {
-        val streamed = sys.env("GRAFT_FOLLOW") == "stream"
-        val mode = if (streamed) "stream" else "batch"
-        val down = {
-          val d = LakeTable.load(spark, s"$workDir/downstream")
-          if (d.exists) {
-            // the two sync mechanisms use incompatible epoch-id spaces
-            // (follow: consumed source snapshot VERSIONS; stream: Spark
-            // micro-batch ids) — a
-            // mode switch on an existing mirror would silently no-op
-            // every merge under the old watermark. An unstamped mirror
-            // adopts the current mode ONLY while it has never committed
-            // an epoch (nothing to collide with); one that has already
-            // merged under an unknown mode is as unsafe as a mismatch.
-            val snap = d.snapshot
-            snap.properties.get("graft.follow.mode") match {
-              case Some(prev) if prev != mode => sys.error(
-                s"downstream at $workDir/downstream was built with " +
-                  s"GRAFT_FOLLOW mode '$prev' — delete it " +
-                  s"before switching to '$mode'")
-              case Some(_) => ()
-              case None if snap.maxCommittedEpoch < 0 && snap.txns.isEmpty =>
-                d.setProperty("graft.follow.mode", mode)
-              case None => sys.error(
-                s"downstream at $workDir/downstream has committed epochs " +
-                  s"but no recorded GRAFT_FOLLOW mode — delete it before " +
-                  s"running in '$mode' mode")
-            }
-            d
-          }
-          else LakeTable.createTable(spark, s"$workDir/downstream",
-            Schemas.transcript, math.max(4, nBuckets / 2),
-            properties = Map("graft.follow.mode" -> mode))
-        }
+        val downDir = s"$workDir/downstream"
+        if (!LakeTable.load(spark, downDir).exists)
+          LakeTable.createTable(spark, downDir, Schemas.transcript,
+            math.max(4, nBuckets / 2))
         val tF = System.nanoTime()
-        val what =
-          if (streamed) {
-            val q = spark.readStream.format("graft-table")
-              .option("path", tableDir).load()
-              .writeStream
-              .option("checkpointLocation", s"$workDir/downstream-ckpt")
-              .foreachBatch { (b: org.apache.spark.sql.DataFrame, e: Long) =>
-                MergeApply.merge(down, b, e, pcfg.merge): Unit
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
-            "streamed (graft-table source)"
-          } else {
-            val rounds = CdcPipeline.followAvailable(table, down)
-            s"${rounds.size} round(s)"
-          }
+        val q = spark.readStream.format("graft-table")
+          .option("path", tableDir).load()
+          .writeStream.format("graft-table").option("path", downDir)
+          .option("checkpointLocation", s"$workDir/downstream-ckpt")
+          .start()
+        try q.processAllAvailable() finally q.stop()
         val fSec = (System.nanoTime() - tF) / 1e9
-        print(f"[follow] $what in $fSec%.2f s; downstream vs oracle … ")
+        print(f"[follow] streamed (graft-table source → sink) in $fSec%.2f s; downstream vs oracle … ")
         import spark.implicits._
-        val got = down.read().as[graft.model.TranscriptRow]
+        val got = LakeTable.load(spark, downDir).read()
+          .as[graft.model.TranscriptRow]
           .collect().sortBy(r => (r.conv_id, r.turn_idx)).toSeq
         if (got == oracle) println("OK (exact match)")
         else { println(s"MISMATCH got=${got.size}"); sys.exit(1) }

@@ -11,8 +11,8 @@ import graft.lake.LakeTable
   *
   * Why not an Iceberg-style metadata rollback (repoint CURRENT at the old
   * manifest list)? A rollback is O(1), but it rewinds state WITHOUT
-  * producing change events: every incremental consumer — `followOnce`
-  * mirrors, the `graft-table` streaming source, `changeFeed` windows —
+  * producing change events: every incremental consumer — the
+  * `graft-table` streaming source and its mirrors, `changeFeed` windows —
   * sees the version counter advance while the un-done rows never appear
   * in any arrival window, so downstream tables silently diverge and must
   * be re-bootstrapped. A CDC engine's contract is that STATE IS THE FOLD

@@ -448,43 +448,7 @@ object GraftBatchWrite {
         nBucketsOpt.getOrElse(32))
     }
 
-    // schema evolution on write (Delta's mergeSchema): new columns are
-    // added (old rows read back null), compatibly-typed columns widen,
-    // incompatible changes fail loud — ONE schema commit for the whole
-    // diff ([[LakeTable.evolveSchema]], the same non-destructive
-    // evolution the op="S" registry events drive). The schema commit
-    // precedes the data commit as its own idempotent commit — the
-    // engine's evolution model everywhere (the streaming path applies
-    // op="S" events the same way): a failed data write leaves a valid
-    // evolved-but-unfilled schema, retried idempotently. Without the
-    // flag, unknown shapes are rejected below (a typo'd column must not
-    // silently vanish — the merge's alignment would drop it).
-    val writeData =
-      if (mergeSchema) {
-        // "extras" and the envelope are transport, never data columns
-        val incoming = StructType(data.schema.fields.filterNot(f =>
-          f.name == "lsn" || f.name == "op" || f.name == "extras"))
-        table.evolveSchema(incoming)
-        // align case-variant spellings to the canonical schema names:
-        // the merge's alignment matches exactly, and a variant would
-        // otherwise null-fill the real column and drop the data
-        val canon = table.snapshot.userSchema.fieldNames
-        data.columns.foldLeft(data) { (d, c) =>
-          canon.find(n => n.equalsIgnoreCase(c) && n != c)
-            .map(d.withColumnRenamed(c, _)).getOrElse(d)
-        }
-      } else {
-        // "extras" is the sanctioned in-envelope evolution channel (the
-        // op="S" registry path reads new-column values out of it)
-        val unknown = data.schema.fieldNames.filterNot(n =>
-          n == "lsn" || n == "op" || n == "extras" ||
-            table.snapshot.userSchema.fieldNames.contains(n))
-        require(unknown.isEmpty,
-          s"columns not in the table schema: ${unknown.mkString(", ")} — " +
-            """evolve the schema with .option("mergeSchema", "true") """ +
-            "or drop/rename them (silently discarding data is not an option)")
-        data
-      }
+    val writeData = conform(table, data, mergeSchema)
 
     val batch =
       if (hasEnvelope) writeData
@@ -516,5 +480,50 @@ object GraftBatchWrite {
       graft.cdc.MergeApply.replace(table, batch, batchId, cfg)
     else graft.cdc.MergeApply.merge(table, batch, batchId, cfg)
     new GraftBatchRelation(sqlContext, dir, None, parameters)
+  }
+
+  /** The column rule of both `graft-table` writers — this batch write and
+    * the streaming sink ([[graft.streaming.LakeTableSink]]) — checked
+    * before anything merges. The envelope (`lsn`, `op`) and `extras` (the
+    * op="S" registry's evolution channel) are transport, never data
+    * columns.
+    *
+    * With `mergeSchema` (Delta's schema evolution on write), the frame's
+    * columns evolve the table by [[LakeTable.evolveSchema]] in ONE schema
+    * commit for the whole diff: new columns are added (old rows read back
+    * null) with their field comments as column docs, compatibly-typed
+    * columns widen, incompatible changes fail loud. The schema commit
+    * precedes the data commit as its own idempotent commit — the engine's
+    * evolution model everywhere (op="S" events are applied the same way):
+    * a failed data write leaves a valid evolved-but-unfilled schema,
+    * retried idempotently. Case-variant spellings are renamed to the
+    * table's: the merge's alignment matches exactly, and a variant would
+    * otherwise null-fill the real column and drop the data.
+    *
+    * Without it, a column the table lacks is refused: a typo'd column
+    * must not silently vanish, which the merge's alignment would do. */
+  private[graft] def conform(table: LakeTable, data: DataFrame,
+      mergeSchema: Boolean): DataFrame = {
+    val transport = Set("lsn", "op", "extras")
+    if (mergeSchema) {
+      val incoming = StructType(data.schema.fields.filterNot(f =>
+        transport(f.name)))
+      val docs = incoming.fields
+        .flatMap(f => f.getComment().map(f.name -> _)).toMap
+      val canon = table.evolveSchema(incoming, docs).userSchema.fieldNames
+      data.columns.foldLeft(data) { (d, c) =>
+        canon.find(n => n.equalsIgnoreCase(c) && n != c)
+          .map(d.withColumnRenamed(c, _)).getOrElse(d)
+      }
+    } else {
+      val have = table.snapshot.userSchema.fieldNames
+      val unknown = data.schema.fieldNames.filterNot(n =>
+        transport(n) || have.contains(n))
+      require(unknown.isEmpty,
+        s"columns not in the table schema: ${unknown.mkString(", ")} — " +
+          """evolve the schema with .option("mergeSchema", "true") """ +
+          "or drop/rename them (silently discarding data is not an option)")
+      data
+    }
   }
 }

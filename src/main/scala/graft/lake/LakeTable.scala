@@ -183,8 +183,8 @@ final case class LineageEntry(
   * so auditors can read the staged state ([[LakeTable.readStaged]]) while
   * every other reader and incremental consumer still sees the table
   * without it; [[LakeTable.abortStaged]] discards it. Because the intent
-  * sits outside the chain, version-window consumers (change feed, follow,
-  * the streaming source) observe a published intent as ONE ordinary
+  * sits outside the chain, version-window consumers (change feed, the
+  * streaming source) observe a published intent as ONE ordinary
   * commit — no special cases downstream. */
 final case class StagedIntent(
     wapId: String,
@@ -283,10 +283,9 @@ final case class Snapshot(
     DataType.fromJson(schemas(v.toString)).asInstanceOf[StructType]
   def isCommitted(epochId: Long): Boolean =
     epochId <= epochWatermark || recentEpochs.contains(epochId.toString)
-  /** Highest committed epoch id (-1 on a fresh table). For a destination
-    * fed exclusively by [[graft.cdc.CdcPipeline.followOnce]] — whose epoch
-    * ids are source snapshot versions — this is the consumed-source-version
-    * watermark. */
+  /** Highest committed epoch id in the global epoch space (-1 on a fresh
+    * table; txn-slot commits are not counted). A job load
+    * ([[graft.spec.JobRunner]]) commits its run under the next one. */
   def maxCommittedEpoch: Long =
     recentEpochs.keysIterator.foldLeft(epochWatermark)((a, k) =>
       math.max(a, k.toLong))
@@ -1033,12 +1032,14 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       sinceLsn: Long): Seq[DataFileEntry] =
     snap.files.filter(f => f.maxLsn > sinceLsn || f.maxLsn < 0)
 
-  /** Incremental changes read — the downstream-consumption half of
-    * lineage: every key whose WINNING (max-`__lsn`) version carries
-    * `__lsn > sinceLsn`, emitted with `__lsn` and `__op` retained
-    * (tombstones included, so deletes propagate to the consumer). A
-    * poller chains calls with the `maxLsn` of the previous round's
-    * lineage entry, mirroring Iceberg's incremental read.
+  /** Incremental changes read over ONE snapshot: every key whose WINNING
+    * (max-`__lsn`) version carries `__lsn > sinceLsn`, emitted with
+    * `__lsn` and `__op` retained (tombstones included, so deletes
+    * propagate to the consumer). Do not chain calls by LSN cut across
+    * snapshots: a key whose winning event lands in a later commit BELOW
+    * the previous cut is in no `__lsn > cut` range and is lost silently.
+    * A poller tails the table with the `graft-table` stream source, or
+    * cuts by commit version with [[arrivalsSince]].
     *
     * Scale shape: the manifest LSN ranges prune the scan to candidate
     * files BEFORE any Spark job — O(new data), not O(table). The
@@ -1681,11 +1682,12 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * On a lost race the rule is applied again to the winner's schema, so
     * a concurrent data commit never fails a schema edit.
     * The one verb that adds or widens a column; its callers:
-    *  - the batch writer's `mergeSchema` ([[GraftBatchWrite]]);
+    *  - `mergeSchema` on both `graft-table` writers, the batch write and
+    *    the streaming sink, with the frame's field comments as `docs`
+    *    ([[GraftBatchWrite.conform]]) — a source-to-sink mirror carries
+    *    the source's schema evolution and docs this way;
     *  - the op="S" registry events of a merge batch, folded in LSN order
-    *    ([[graft.cdc.SchemaRegistry]]);
-    *  - each follow round, toward the source's schema and docs
-    *    ([[graft.cdc.CdcPipeline.followOnce]]). */
+    *    ([[graft.cdc.SchemaRegistry]]). */
   def evolveSchema(incoming: StructType,
       docs: Map[String, String] = Map.empty): Snapshot =
     evolveSchemaFrom(snapshot, incoming, docs)
@@ -1953,12 +1955,16 @@ object LakeTable {
   }
 
   /** Project `df` onto `target` schema: missing columns null-filled, type
-    * mismatches upcast, column order normalized. */
+    * mismatches upcast, column order normalized, field metadata (column
+    * comments) taken from `target`. A field without metadata keeps the
+    * plain alias every scan (`readFiles`) plans with. */
   def align(df: DataFrame, target: StructType): DataFrame = {
     val present = df.schema.fieldNames.toSet
     df.select(target.fields.toSeq.map { f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
+      val c = (if (present.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType)
+      if (f.metadata == Metadata.empty) c.as(f.name)
+      else c.as(f.name, f.metadata)
     }: _*)
   }
 

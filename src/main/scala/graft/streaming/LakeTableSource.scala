@@ -83,7 +83,8 @@ object GraftOffset {
   *     LSN-cut design of this source).
   *
   * Emitted columns are the merge-ready change envelope (user columns +
-  * `lsn` + `op`), so `foreachBatch` + [[graft.cdc.MergeApply]] gives
+  * `lsn` + `op`; a documented column carries its doc as the field's
+  * comment), so `foreachBatch` + [[graft.cdc.MergeApply]] gives
   * exactly-once table-to-table replication: the streaming checkpoint
   * replays offset ranges at-least-once, version-pinned `getBatch` makes
   * replays byte-identical, and the destination's epoch guard (plus
@@ -99,12 +100,15 @@ object GraftOffset {
   *  - vacuum retention bounds restartability — a checkpointed end
   *    version that has been expired fails `snapshotAt` with a clear
   *    error; keep `vacuumKeepSnapshots` above the worst-case downtime.
-  *  - schema is fixed at stream start; if the table evolves mid-stream
-  *    the source fails fast (restart picks up the new schema) rather
-  *    than silently dropping or miscasting the new columns. Ranges
+  *  - schema (column docs included) is fixed at stream start; if the
+  *    table evolves mid-stream the source fails fast (restart picks up
+  *    the new schema) rather than silently dropping or miscasting the
+  *    new columns. Ranges
   *    pinned to PRE-evolution snapshots (a restart's replay of its last
   *    committed batch) align up losslessly — null-filled added columns,
-  *    upcast widened ones — so evolution never wedges a checkpoint.
+  *    upcast widened ones — so evolution never wedges a checkpoint. The
+  *    `graft-table` sink with `mergeSchema` carries the adopted schema
+  *    and its docs on to the destination.
   *  - `.option("startingLsn", n | "latest")` starts a fresh checkpoint
   *    after the given cut instead of bootstrapping the full table. The
   *    cut applies to the snapshot the stream's first batch plans
@@ -115,9 +119,6 @@ object GraftOffset {
   *    delivered even when its LSNs sit below the cut. On an empty table
   *    batch 0 still seals (an empty batch), so "latest" never skips the
   *    table's first commits.
-  *  - a `followOnce`-driven table uses consumed-source-versions as epoch
-  *    ids; this source uses Spark's own micro-batch ids — don't mix the
-  *    two sync mechanisms on one destination table.
   *  - `.option("maxLsnsPerTrigger", n)` caps the LSN range per catch-up
   *    micro-batch (≈ an event cap for dense LSNs): a from-scratch
   *    bootstrap of a 10^10-event table arrives as bounded batches, not
@@ -142,9 +143,12 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
   import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit}
 
   private val table = LakeTable.load(sqlContext.sparkSession, tableDir)
-  private val startSchema: StructType = table.snapshot.userSchema
+  private val (startSchema, startDocs) = {
+    val s = table.snapshot
+    (s.userSchema, s.columnDocs)
+  }
 
-  override val schema: StructType = LakeTableSourceProvider.changeSchema(startSchema)
+  override val schema: StructType = LakeTableSourceProvider.changeSchema(startSchema, startDocs)
 
   /** Snapshot frozen by [[prepareForTriggerAvailableNow]]: an
     * AvailableNow run drains up to here in rate-limited batches and then
@@ -342,11 +346,17 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
   * epoch id, so checkpoint redelivery is a no-op — exactly-once end to
   * end; chaining a `graft-table` source into a `graft-table` sink is
   * complete table-to-table replication in one `readStream → writeStream`
-  * line.
+  * line (the reference's destination-bounded incremental pull,
+  * engine/time_field_util.py:53-127, with the stream checkpoint as the
+  * consumed watermark).
   * The batch must carry the change envelope (`lsn`, `op`, key/payload
-  * columns) — which is exactly what the source emits. */
+  * columns) — which is exactly what the source emits. Its columns pass
+  * the batch writer's rule ([[graft.lake.GraftBatchWrite.conform]])
+  * before the merge: with `mergeSchema` they evolve the destination in
+  * one schema commit, field comments becoming column docs; without it a
+  * column the destination lacks fails the batch. */
 class LakeTableSink(sqlContext: SQLContext, tableDir: String,
-    cfg: graft.cdc.MergeConfig)
+    cfg: graft.cdc.MergeConfig, mergeSchema: Boolean)
     extends org.apache.spark.sql.execution.streaming.Sink {
 
   private val table = LakeTable.load(sqlContext.sparkSession, tableDir)
@@ -354,8 +364,9 @@ class LakeTableSink(sqlContext: SQLContext, tableDir: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the engine hands a streaming-flagged frame; merge runs batch-only
     // operations (observe) on it — re-plan as a plain batch first
-    graft.cdc.MergeApply.merge(table, GraftStreamShim.asPlainBatch(data),
-      batchId, cfg)
+    val batch = graft.lake.GraftBatchWrite.conform(table,
+      GraftStreamShim.asPlainBatch(data), mergeSchema)
+    graft.cdc.MergeApply.merge(table, batch, batchId, cfg)
     ()
   }
 
@@ -444,7 +455,7 @@ class LakeTableSourceProvider extends StreamSourceProvider
     // sink's batch ids start at 0 per checkpoint, so they must live in
     // their own txn slot — in the GLOBAL epoch space they would collide
     // with epochs other writers already committed (a seeded or
-    // previously-followed destination) and SILENTLY no-op every batch.
+    // previously-mirrored destination) and SILENTLY no-op every batch.
     // That failure mode is why a missing identity is a hard error, not a
     // fallback: the checkpoint location canonicalized through its
     // filesystem ('ckpt' / '/abs/ckpt' / 'file:/abs/ckpt' agree) is the
@@ -482,7 +493,8 @@ class LakeTableSourceProvider extends StreamSourceProvider
     val invalid = graft.cdc.MergeConfig.checkInvalidRows(
       parameters.getOrElse("invalidRows", "fail"))
     new LakeTableSink(sqlContext, d,
-      graft.cdc.MergeConfig(txnApp = txnApp, invalidRows = invalid))
+      graft.cdc.MergeConfig(txnApp = txnApp, invalidRows = invalid),
+      parameters.get("mergeSchema").exists(_.toBoolean))
   }
 
   override def sourceSchema(sqlContext: SQLContext,
@@ -494,7 +506,9 @@ class LakeTableSourceProvider extends StreamSourceProvider
     // the snapshot read with a bare FileNotFoundException
     require(t.exists, s"no lake table at ${dir(parameters)} — create it " +
       "first (LakeTable.createTable)")
-    (shortName(), LakeTableSourceProvider.changeSchema(t.snapshot.userSchema))
+    val snap = t.snapshot
+    (shortName(),
+      LakeTableSourceProvider.changeSchema(snap.userSchema, snap.columnDocs))
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -519,9 +533,11 @@ class LakeTableSourceProvider extends StreamSourceProvider
 
 object LakeTableSourceProvider {
   /** The change envelope: user columns + (`lsn`, `op`) — the column
-    * contract [[graft.cdc.MergeApply.merge]] consumes directly. */
-  def changeSchema(user: StructType): StructType =
-    StructType(user.fields.toSeq :+
+    * contract [[graft.cdc.MergeApply.merge]] consumes directly. Each
+    * column with a doc in `docs` carries it as the field's comment, which
+    * the sink's `mergeSchema` records downstream. */
+  def changeSchema(user: StructType, docs: Map[String, String]): StructType =
+    StructType(user.fields.toSeq.map(f => docs.get(f.name).fold(f)(f.withComment)) :+
       StructField("lsn", LongType, nullable = false) :+
       StructField("op", StringType, nullable = false))
 }

@@ -84,20 +84,6 @@ class PurgeSpec extends SparkSpec {
     assert(t.fsck().isEmpty)
   }
 
-  test("purge converges followers through ordinary tombstones") {
-    val t = seeded("purge-follow-src")
-    val dst = LakeTable.createTable(spark, tmpDir("purge-follow-dst"),
-      Schemas.transcript, 4)
-    CdcPipeline.followOnce(t, dst)
-    val victims = someConvs(t, 2)
-    Purge.purgeConversations(t, victims)
-    CdcPipeline.followOnce(t, dst)
-    assert(dst.read().filter(col("conv_id").isInCollection(victims)).isEmpty,
-      "follower did not converge through the purge tombstones")
-    assert(dst.read().collect().map(_.toSeq).toSet ==
-      t.read().collect().map(_.toSeq).toSet)
-  }
-
   test("purge scrubs quarantined rejects, keeping null-keyed rows") {
     val t = seeded("purge-rejects")
     // quarantine two poison events: one attributable to the victim, one

@@ -3,7 +3,9 @@ package graft.streaming
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit, upper}
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -28,9 +30,7 @@ class LakeTableSourceSpec extends SparkSpec {
   }
 
   /** The one-column schema the evolution cases add. */
-  private val rating = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("rating",
-      org.apache.spark.sql.types.IntegerType)))
+  private val rating = StructType(Seq(StructField("rating", IntegerType)))
 
   private def state(t: LakeTable): Set[(String, Int, String)] =
     t.read().select("conv_id", "turn_idx", "text").collect()
@@ -62,6 +62,28 @@ class LakeTableSourceSpec extends SparkSpec {
     results.asScala.toSeq
   }
 
+  /** The source → sink one-liner from srcDir into dstDir on one
+    * checkpoint: drains what is new, then stops. `transform` runs over
+    * the source stream; `options` go to the sink. */
+  private def sink(srcDir: String, dstDir: String, ckpt: String,
+      options: Map[String, String] = Map.empty,
+      transform: DataFrame => DataFrame = identity): Unit = {
+    val q = transform(spark.readStream.format("graft-table")
+        .option("path", srcDir).load())
+      .writeStream.format("graft-table").option("path", dstDir)
+      .option("checkpointLocation", ckpt)
+      .options(options)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Every message along `e`'s cause chain. */
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.toString).toSeq
+
+  private def cols(fs: (String, DataType)*) =
+    StructType(fs.map { case (n, t) => StructField(n, t) })
+
   test("offset json roundtrips through the checkpoint codec") {
     // both forms: catch-up (an LSN cut) and sealed (lsn = -2)
     val catchUp = GraftOffset(12, 345678)
@@ -79,40 +101,48 @@ class LakeTableSourceSpec extends SparkSpec {
   }
 
   test("tailing a table replicates state exactly-once across restarts, deletes propagate") {
-    val srcDir = tmpDir("lts-src")
-    val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 4)
-    val dst = LakeTable.createTable(spark, tmpDir("lts-dst"), Schemas.transcript, 4)
-    val ckpt = tmpDir("lts-ckpt")
+    // the same bucket layout downstream, and a different one: the sync
+    // is layout-independent
+    Seq(4 -> 4, 8 -> 4).foreach { case (srcBuckets, dstBuckets) =>
+      val tag = s"$srcBuckets-$dstBuckets"
+      val srcDir = tmpDir(s"lts-src-$tag")
+      val src = LakeTable.createTable(spark, srcDir, Schemas.transcript,
+        srcBuckets)
+      val dst = LakeTable.createTable(spark, tmpDir(s"lts-dst-$tag"),
+        Schemas.transcript, dstBuckets)
+      val ckpt = tmpDir(s"lts-ckpt-$tag")
 
-    MergeApply.merge(src, batch(Seq(
-      (1L, "U", "c1", 0, "a"), (2L, "U", "c1", 1, "b"),
-      (3L, "U", "c2", 0, "c"))), 0L, MergeConfig())
-    MergeApply.merge(src, batch(Seq(
-      (4L, "U", "c2", 0, "c2"), (5L, "U", "c3", 0, "d"))), 1L, MergeConfig())
+      MergeApply.merge(src, batch(Seq(
+        (1L, "U", "c1", 0, "a"), (2L, "U", "c1", 1, "b"),
+        (3L, "U", "c2", 0, "c"))), 0L, MergeConfig())
+      MergeApply.merge(src, batch(Seq(
+        (4L, "U", "c2", 0, "c2"), (5L, "U", "c3", 0, "d"))), 1L, MergeConfig())
 
-    val first = drain(srcDir, dst, ckpt)
-    assert(first.count(_.applied) >= 1)
-    assert(state(dst) == state(src))
-    assert(state(dst) ==
-      Set(("c1", 0, "a"), ("c1", 1, "b"), ("c2", 0, "c2"), ("c3", 0, "d")))
+      val first = drain(srcDir, dst, ckpt)
+      assert(first.count(_.applied) >= 1)
+      assert(state(dst) == state(src))
+      assert(state(dst) ==
+        Set(("c1", 0, "a"), ("c1", 1, "b"), ("c2", 0, "c2"), ("c3", 0, "d")))
 
-    // nothing new: a restarted query must deliver no data batches
-    val idle = drain(srcDir, dst, ckpt)
-    assert(idle.forall(r => !r.applied || r.rowsApplied == 0))
-    val dstVersionAfterIdle = dst.snapshot.version
+      // nothing new: a restarted query must deliver no data batches
+      val idle = drain(srcDir, dst, ckpt)
+      assert(idle.forall(r => !r.applied || r.rowsApplied == 0))
+      val dstVersionAfterIdle = dst.snapshot.version
 
-    // upstream moves on: overwrite + delete land while the stream is down
-    MergeApply.merge(src, batch(Seq(
-      (6L, "U", "c1", 0, "a2"), (7L, "D", "c3", 0, ""))), 2L, MergeConfig())
+      // upstream moves on: overwrite + delete land while the stream is down
+      MergeApply.merge(src, batch(Seq(
+        (6L, "U", "c1", 0, "a2"), (7L, "D", "c3", 0, ""))), 2L, MergeConfig())
 
-    val second = drain(srcDir, dst, ckpt)
-    assert(second.count(r => r.applied && r.rowsApplied > 0) == 1,
-      "exactly one data batch for the missed range")
-    assert(state(dst) == state(src))
-    assert(state(dst) ==
-      Set(("c1", 0, "a2"), ("c1", 1, "b"), ("c2", 0, "c2")))
-    assert(!state(dst).exists(_._1 == "c3"), "tombstone did not propagate")
-    assert(dstVersionAfterIdle < dst.snapshot.version)
+      val second = drain(srcDir, dst, ckpt)
+      assert(second.count(r => r.applied && r.rowsApplied > 0) == 1,
+        "exactly one data batch for the missed range")
+      assert(state(dst) == state(src))
+      assert(state(dst) ==
+        Set(("c1", 0, "a2"), ("c1", 1, "b"), ("c2", 0, "c2")))
+      assert(!state(dst).exists(_._1 == "c3"), "tombstone did not propagate")
+      assert(dstVersionAfterIdle < dst.snapshot.version)
+      assert(dst.snapshot.nBuckets == dstBuckets)
+    }
   }
 
   test("maxLsnsPerTrigger bounds catch-up batches; rate-limited composition converges") {
@@ -221,14 +251,7 @@ class LakeTableSourceSpec extends SparkSpec {
     MergeApply.merge(src, batch(Seq(
       (1L, "U", "a", 0, "x"), (2L, "U", "b", 0, "y"))), 0L, MergeConfig())
 
-    def run(): Unit = {
-      val q = spark.readStream.format("graft-table").option("path", srcDir)
-        .load()
-        .writeStream.format("graft-table").option("path", dstDir)
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    def run(): Unit = sink(srcDir, dstDir, ckpt)
     run()
     val dst = LakeTable.load(spark, dstDir)
     assert(state(dst) == state(src))
@@ -243,6 +266,81 @@ class LakeTableSourceSpec extends SparkSpec {
     val v = dst.snapshot.version
     run()
     assert(dst.snapshot.version == v)
+  }
+
+  test("sink without mergeSchema refuses a column the destination lacks; nothing commits") {
+    val srcDir = tmpDir("lts-sink-narrow-src")
+    val dstDir = tmpDir("lts-sink-narrow-dst")
+    val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
+    val dst = LakeTable.createTable(spark, dstDir, Schemas.transcript, 2)
+    src.evolveSchema(rating)
+    MergeApply.merge(src, batch(Seq((1L, "U", "a", 0, "x")))
+      .withColumn("rating", lit(4)), 0L, MergeConfig())
+    val before = dst.snapshot.version
+    val e = intercept[StreamingQueryException](
+      sink(srcDir, dstDir, tmpDir("lts-sink-narrow-ckpt")))
+    assert(causes(e).exists(_.contains("columns not in the table schema: rating")),
+      causes(e).mkString("\n"))
+    assert(dst.snapshot.version == before, "the refused batch committed")
+    assert(dst.snapshot.userSchema == Schemas.transcript)
+  }
+
+  test("sink mergeSchema: two source columns, one widened, land as ONE commit with docs") {
+    val srcDir = tmpDir("lts-sink-evolve-src")
+    val dstDir = tmpDir("lts-sink-evolve-dst")
+    val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
+    val dst = LakeTable.createTable(spark, dstDir, Schemas.transcript, 2)
+    MergeApply.merge(src, batch(Seq((1L, "U", "c1", 0, "hello"),
+      (2L, "U", "c2", 0, "world"))), 0L, MergeConfig())
+    // three source schema commits: two documented columns, then a widening
+    src.evolveSchema(cols("score" -> IntegerType), Map("score" -> "quality score"))
+    src.evolveSchema(cols("meta" -> StringType), Map("meta" -> "free-form"))
+    MergeApply.merge(src, batch(Seq((3L, "U", "c1", 0, "hello!")))
+      .withColumn("score", lit(7)).withColumn("meta", lit("m")), 1L,
+      MergeConfig())
+    src.evolveSchema(cols("score" -> LongType))
+    // a value only the wide type can hold
+    MergeApply.merge(src, batch(Seq((4L, "U", "c2", 0, "world!")))
+      .withColumn("score", lit(5000000000L)), 2L, MergeConfig())
+
+    val schemasBefore = dst.snapshot.schemas.size
+    // declarative silver-layer cleanup on the way down
+    sink(srcDir, dstDir, tmpDir("lts-sink-evolve-ckpt"),
+      Map("mergeSchema" -> "true"), _.withColumn("role", upper(col("role"))))
+    val snap = dst.snapshot
+    assert(snap.schemas.size == schemasBefore + 1, "expected ONE schema commit")
+    assert(snap.userSchema("score").dataType == LongType)
+    assert(snap.userSchema("meta").dataType == StringType)
+    assert(snap.columnDocs.get("score").contains("quality score"))
+    assert(snap.columnDocs.get("meta").contains("free-form"))
+    def rows(t: LakeTable) = t.read()
+      .select("conv_id", "turn_idx", "text", "role", "score", "meta")
+      .collect().map(_.toSeq).toSet
+    val want = rows(src).map(_.updated(3, "USER"))
+    assert(rows(dst) == want)
+    assert(rows(dst).exists(_.contains(5000000000L)))
+  }
+
+  test("sink mergeSchema refuses an incompatible destination type before merging") {
+    val srcDir = tmpDir("lts-sink-clash-src")
+    val dstDir = tmpDir("lts-sink-clash-dst")
+    val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
+    val dst = LakeTable.createTable(spark, dstDir, Schemas.transcript, 2)
+    // int neither widens to nor from boolean
+    src.evolveSchema(cols("score" -> IntegerType))
+    dst.evolveSchema(cols("score" -> BooleanType))
+    MergeApply.merge(src, batch(Seq((1L, "U", "c1", 0, "hello")))
+      .withColumn("score", lit(1)), 0L, MergeConfig())
+    val before = dst.snapshot
+    val e = intercept[StreamingQueryException](
+      sink(srcDir, dstDir, tmpDir("lts-sink-clash-ckpt"),
+        Map("mergeSchema" -> "true")))
+    assert(causes(e).exists(_.contains("incompatible type change for column score")),
+      causes(e).mkString("\n"))
+    val after = dst.snapshot
+    assert(after.version == before.version)
+    assert(after.txns.isEmpty, "a batch merged")
+    assert(after.userSchema("score").dataType == BooleanType)
   }
 
   test("AvailableNow prepared on an EMPTY table stops: data landing mid-run is not chased") {
@@ -307,14 +405,7 @@ class LakeTableSourceSpec extends SparkSpec {
       (1L, "U", "a", 0, "x"), (2L, "U", "b", 0, "y"))), 0L, MergeConfig())
 
     val ckpt = tmpDir("lts-seeded-ckpt")
-    def run(): Unit = {
-      val q = spark.readStream.format("graft-table").option("path", srcDir)
-        .load()
-        .writeStream.format("graft-table").option("path", dstDir)
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    def run(): Unit = sink(srcDir, dstDir, ckpt)
     run()
     assert(state(dst) == Set(
       ("seed", 0, "s0"), ("seed", 1, "s1"), ("a", 0, "x"), ("b", 0, "y")),
