@@ -147,18 +147,21 @@ object MergeApply {
   private val KEY = Schemas.keyCols
 
   /** The raw value of user column `name` in a frame with columns
-    * `present`: the top-level column, else the `extras` entry by exact
-    * key, else by a key equal ignoring case (a registry `add` of a case
-    * variant keeps the table's spelling, the feed keeps its own). Shared
+    * `present`: the top-level column, else the `extras` entry; each by
+    * exact name, else by a name equal ignoring case (the table keeps its
+    * spelling, a feed or a written frame its own). Shared
     * by [[normalize]] and validation. */
   private def rawOf(present: Set[String], name: String): Option[Column] =
     if (present.contains(name)) Some(col(name))
-    else if (present.contains("extras")) {
-      val extras = col("extras")
-      Some(when(map_contains_key(extras, name), element_at(extras, name))
-        .otherwise(try_element_at(map_values(map_filter(extras,
-          (k, _) => lower(k) === lower(lit(name)))), lit(1))))
-    } else None
+    else present.find(_.equalsIgnoreCase(name)) match {
+      case Some(variant) => Some(col(variant))
+      case None if present.contains("extras") =>
+        val extras = col("extras")
+        Some(when(map_contains_key(extras, name), element_at(extras, name))
+          .otherwise(try_element_at(map_values(map_filter(extras,
+            (k, _) => lower(k) === lower(lit(name)))), lit(1))))
+      case None => None
+    }
 
   /** Normalize a raw change-event frame to the on-disk layout: user
     * columns + `__lsn` + `__op` (I and U both become upsert `U`). Columns

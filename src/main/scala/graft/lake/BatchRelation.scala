@@ -438,25 +438,19 @@ object GraftBatchWrite {
         s"lake table at $dir already exists (SaveMode.ErrorIfExists)")
     if (mode == SaveMode.Ignore && existed)
       return new GraftBatchRelation(sqlContext, dir, None, parameters)
-    if (!existed) {
-      val userSchema =
-        if (hasEnvelope)
-          StructType(data.schema.fields.filterNot(f =>
-            f.name == "lsn" || f.name == "op"))
-        else data.schema
-      table = LakeTable.createTable(spark, dir, userSchema,
+    if (!existed)
+      table = LakeTable.createTable(spark, dir, dataSchema(data),
         nBucketsOpt.getOrElse(32))
-    }
 
-    val writeData = conform(table, data, mergeSchema)
+    conform(table, data, mergeSchema)
 
     val batch =
-      if (hasEnvelope) writeData
+      if (hasEnvelope) data
       else {
         // partition-sparse but unique and strictly above the current
         // high-water: deterministic given the incoming partitioning
         val high = table.highLsn(table.snapshot)
-        writeData
+        data
           .withColumn("lsn", lit(high + 1L) + monotonically_increasing_id())
           .withColumn("op", lit("I"))
       }
@@ -482,48 +476,44 @@ object GraftBatchWrite {
     new GraftBatchRelation(sqlContext, dir, None, parameters)
   }
 
-  /** The column rule of both `graft-table` writers — this batch write and
-    * the streaming sink ([[graft.streaming.LakeTableSink]]) — checked
-    * before anything merges. The envelope (`lsn`, `op`) and `extras` (the
-    * op="S" registry's evolution channel) are transport, never data
-    * columns.
+  /** The frame's columns minus the transport ones — the envelope (`lsn`,
+    * `op`) and `extras` (the op="S" registry's evolution channel) — which
+    * [[conform]] checks and a missing table is created with. */
+  private def dataSchema(data: DataFrame): StructType =
+    StructType(data.schema.fields.filterNot(f =>
+      Set("lsn", "op", "extras").contains(f.name)))
+
+  /** The column check of both `graft-table` writers — this batch write and
+    * the streaming sink ([[graft.streaming.LakeTableSink]]) — run before
+    * anything merges, by the one schema rule [[LakeTable.evolvedSchema]]
+    * (names match ignoring case; an incompatible type fails loud).
     *
     * With `mergeSchema` (Delta's schema evolution on write), the frame's
     * columns evolve the table by [[LakeTable.evolveSchema]] in ONE schema
     * commit for the whole diff: new columns are added (old rows read back
     * null) with their field comments as column docs, compatibly-typed
-    * columns widen, incompatible changes fail loud. The schema commit
-    * precedes the data commit as its own idempotent commit — the engine's
-    * evolution model everywhere (op="S" events are applied the same way):
-    * a failed data write leaves a valid evolved-but-unfilled schema,
-    * retried idempotently. Case-variant spellings are renamed to the
-    * table's: the merge's alignment matches exactly, and a variant would
-    * otherwise null-fill the real column and drop the data.
+    * columns widen. The schema commit precedes the data commit as its own
+    * idempotent commit — the engine's evolution model everywhere (op="S"
+    * events are applied the same way): a failed data write leaves a valid
+    * evolved-but-unfilled schema, retried idempotently.
     *
-    * Without it, a column the table lacks is refused: a typo'd column
-    * must not silently vanish, which the merge's alignment would do. */
+    * Without it, the batch is refused unless the rule leaves the schema
+    * as it is: a typo'd column must not silently vanish, nor a wider
+    * value be cast down, which the merge's alignment would do. */
   private[graft] def conform(table: LakeTable, data: DataFrame,
-      mergeSchema: Boolean): DataFrame = {
-    val transport = Set("lsn", "op", "extras")
-    if (mergeSchema) {
-      val incoming = StructType(data.schema.fields.filterNot(f =>
-        transport(f.name)))
-      val docs = incoming.fields
-        .flatMap(f => f.getComment().map(f.name -> _)).toMap
-      val canon = table.evolveSchema(incoming, docs).userSchema.fieldNames
-      data.columns.foldLeft(data) { (d, c) =>
-        canon.find(n => n.equalsIgnoreCase(c) && n != c)
-          .map(d.withColumnRenamed(c, _)).getOrElse(d)
-      }
-    } else {
-      val have = table.snapshot.userSchema.fieldNames
-      val unknown = data.schema.fieldNames.filterNot(n =>
-        transport(n) || have.contains(n))
-      require(unknown.isEmpty,
-        s"columns not in the table schema: ${unknown.mkString(", ")} — " +
-          """evolve the schema with .option("mergeSchema", "true") """ +
-          "or drop/rename them (silently discarding data is not an option)")
-      data
+      mergeSchema: Boolean): Unit = {
+    val incoming = dataSchema(data)
+    if (mergeSchema)
+      table.evolveSchema(incoming, incoming.fields
+        .flatMap(f => f.getComment().map(f.name -> _)).toMap)
+    else {
+      val cur = table.snapshot.userSchema
+      val next = LakeTable.evolvedSchema(cur, incoming)
+      require(next == cur, "columns not in the table schema: " +
+        next.fields.filterNot(cur.fields.contains)
+          .map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ") +
+        """ — evolve the schema with .option("mergeSchema", "true") """ +
+        "or drop/rename them (silently discarding data is not an option)")
     }
   }
 }

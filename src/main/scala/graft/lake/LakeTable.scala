@@ -1687,7 +1687,9 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     *    ([[GraftBatchWrite.conform]]) — a source-to-sink mirror carries
     *    the source's schema evolution and docs this way;
     *  - the op="S" registry events of a merge batch, folded in LSN order
-    *    ([[graft.cdc.SchemaRegistry]]). */
+    *    ([[graft.cdc.SchemaRegistry]]).
+    * Without `mergeSchema` both writers, and the stream source, call the
+    * rule alone: a schema fits when the rule leaves it as it is. */
   def evolveSchema(incoming: StructType,
       docs: Map[String, String] = Map.empty): Snapshot =
     evolveSchemaFrom(snapshot, incoming, docs)
@@ -1945,10 +1947,11 @@ object LakeTable {
       }
     }
 
+  /** Transitively closed, so a fold of widenings applies in one step. */
   def canWiden(from: DataType, to: DataType): Boolean = (from, to) match {
     case (a, b) if a == b => true
     case (IntegerType, LongType) => true
-    case (ShortType, IntegerType | LongType) => true
+    case (ShortType, IntegerType | LongType | DoubleType) => true
     case (FloatType, DoubleType) => true
     case (IntegerType | LongType, DoubleType) => true
     case _ => false

@@ -321,9 +321,9 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
     * fast and a restart adopts the new schema. */
   private def alignToStart(changes: DataFrame, snap: Snapshot): DataFrame = {
     val have = snap.userSchema
-    val ancestor = have == startSchema || have.fields.forall(f =>
-      startSchema.fields.find(_.name == f.name).exists(g =>
-        LakeTable.canWiden(f.dataType, g.dataType)))
+    val ancestor =
+      try LakeTable.evolvedSchema(startSchema, have) == startSchema
+      catch { case _: IllegalArgumentException => false }
     if (!ancestor)
       throw new IllegalStateException(
         s"table $tableDir schema evolved under a running stream " +
@@ -351,10 +351,11 @@ class LakeTableSource(sqlContext: SQLContext, tableDir: String,
   * consumed watermark).
   * The batch must carry the change envelope (`lsn`, `op`, key/payload
   * columns) — which is exactly what the source emits. Its columns pass
-  * the batch writer's rule ([[graft.lake.GraftBatchWrite.conform]])
-  * before the merge: with `mergeSchema` they evolve the destination in
-  * one schema commit, field comments becoming column docs; without it a
-  * column the destination lacks fails the batch. */
+  * the batch writer's check ([[graft.lake.GraftBatchWrite.conform]],
+  * the one rule [[LakeTable.evolvedSchema]]) before the merge: with
+  * `mergeSchema` they evolve the destination in one schema commit, field
+  * comments becoming column docs; without it a batch that would evolve
+  * the destination fails. */
 class LakeTableSink(sqlContext: SQLContext, tableDir: String,
     cfg: graft.cdc.MergeConfig, mergeSchema: Boolean)
     extends org.apache.spark.sql.execution.streaming.Sink {
@@ -364,8 +365,8 @@ class LakeTableSink(sqlContext: SQLContext, tableDir: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the engine hands a streaming-flagged frame; merge runs batch-only
     // operations (observe) on it — re-plan as a plain batch first
-    val batch = graft.lake.GraftBatchWrite.conform(table,
-      GraftStreamShim.asPlainBatch(data), mergeSchema)
+    val batch = GraftStreamShim.asPlainBatch(data)
+    graft.lake.GraftBatchWrite.conform(table, batch, mergeSchema)
     graft.cdc.MergeApply.merge(table, batch, batchId, cfg)
     ()
   }

@@ -168,6 +168,18 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(got == Map("c1" -> Some(5), "c2" -> Some(9)))
   }
 
+  test("a top-level column differing only in case carries its value") {
+    val table = LakeTable.createTable(spark, tmpDir("evo-case-top"),
+      Schemas.transcript, nBuckets = 2)
+    // a rerun whose CSV header changed case: `Text` for the table's `text`
+    val r = MergeApply.merge(table,
+      v2(Seq((1L, "I", "c1", 0, "hello", "user", null)))
+        .withColumnRenamed("text", "Text"), 0L)
+    assert(r.applied && r.rowsApplied == 1L)
+    assert(table.read().select("text").as[String].collect().toSeq ==
+      Seq("hello"))
+  }
+
   test("a batch's registry events land as ONE schema commit plus its data") {
     val table = LakeTable.createTable(spark, tmpDir("evo-one-commit"),
       Schemas.transcript, nBuckets = 2)

@@ -323,6 +323,19 @@ class BatchRelationSpec extends SparkSpec {
     assert(spark.read.format("graft-table").load(dir)
       .filter(col("conv_id") === conv && col("turn_idx") === victim)
       .count() == 0)
+
+    // a v2 envelope creates a missing table from its data columns only:
+    // `extras` is transport, never a table column
+    val fresh = tmpDir("br-env-new")
+    Seq((1L, "I", "n1", 0, "user", "hi", null: String,
+      Timestamp.valueOf("2026-03-02 00:00:00"), Map("score" -> "3")))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts",
+        "extras")
+      .write.format("graft-table").save(fresh)
+    val created = LakeTable.load(spark, fresh)
+    assert(!created.snapshot.userSchema.fieldNames.contains("extras"))
+    assert(created.read().select("conv_id", "text").as[(String, String)]
+      .collect().toSeq == Seq(("n1", "hi")))
   }
 
   test("SaveMode contract: create, overwrite, errorIfExists, ignore") {
@@ -566,6 +579,48 @@ class BatchRelationSpec extends SparkSpec {
       .mode(SaveMode.Append).save(dir)
     assert(!t.snapshot.userSchema.fieldNames.contains("extras"))
     assert(t.read().filter(col("conv_id") === "e6").count() == 1)
+
+    // without mergeSchema the same rule checks types and letter case: an
+    // int onto the long turn_idx is absorbed, and `META` lands in `meta`
+    Seq(("e7", 1, "user", "v7", null: String,
+      Timestamp.valueOf("2026-03-10 00:00:06"), "m-7"))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "META")
+      .write.format("graft-table").mode(SaveMode.Append).save(dir)
+    assert(t.snapshot.userSchema.fieldNames.count(
+      _.equalsIgnoreCase("meta")) == 1)
+    assert(t.read().filter(col("conv_id") === "e7")
+      .select("turn_idx", "meta").as[(Long, String)].head() == ((1L, "m-7")))
+    // an int onto a boolean column fails before any commit, through
+    // df.write and through INSERT INTO a view that still declares the int
+    // it was created with
+    Seq(("e8", 0L, "user", "v8", null: String,
+      Timestamp.valueOf("2026-03-10 00:00:07"), "m-8", 1))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "meta", "flag")
+      .write.format("graft-table").option("mergeSchema", "true")
+      .mode(SaveMode.Append).save(dir)
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW lake_fit_v " +
+      s"USING `graft-table` OPTIONS (path '$dir')")
+    t.replaceSchema(org.apache.spark.sql.types.StructType(
+      t.snapshot.userSchema.map(f =>
+        if (f.name == "flag")
+          f.copy(dataType = org.apache.spark.sql.types.BooleanType)
+        else f)))
+    val vFit = t.snapshot.version
+    val e3 = intercept[IllegalArgumentException] {
+      Seq(("e9", 0L, "user", "v9", null: String,
+        Timestamp.valueOf("2026-03-10 00:00:08"), "m-9", 1))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "meta",
+          "flag")
+        .write.format("graft-table").mode(SaveMode.Append).save(dir)
+    }
+    assert(e3.getMessage.contains("incompatible type change for column flag"))
+    val e4 = intercept[IllegalArgumentException] {
+      spark.sql("INSERT INTO lake_fit_v VALUES ('e10', 0, 'user', 'v10', " +
+        "NULL, TIMESTAMP'2026-03-10 00:00:09', 'm-10', 1)")
+    }
+    assert(e4.getMessage.contains("incompatible type change for column flag"))
+    assert(t.snapshot.version == vFit)
+    assert(t.read().count() == 0)
   }
 
   test("txnAppId + batchId makes batch-write re-runs no-ops") {

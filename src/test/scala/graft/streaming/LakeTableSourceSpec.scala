@@ -285,6 +285,35 @@ class LakeTableSourceSpec extends SparkSpec {
     assert(dst.snapshot.userSchema == Schemas.transcript)
   }
 
+  test("sink without mergeSchema checks types: int onto boolean fails before any commit; int onto long and a case variant land") {
+    val srcDir = tmpDir("lts-sink-fit-src")
+    val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 2)
+    src.evolveSchema(cols("score" -> IntegerType, "Rank" -> IntegerType))
+    MergeApply.merge(src, batch(Seq((1L, "U", "c1", 0, "hello")))
+      .withColumn("score", lit(1)).withColumn("Rank", lit(2)), 0L,
+      MergeConfig())
+    // int neither widens to nor from boolean
+    val clashDir = tmpDir("lts-sink-fit-clash")
+    val clash = LakeTable.createTable(spark, clashDir, Schemas.transcript, 2)
+    clash.evolveSchema(cols("score" -> BooleanType, "rank" -> IntegerType))
+    val before = clash.snapshot.version
+    val e = intercept[StreamingQueryException](
+      sink(srcDir, clashDir, tmpDir("lts-sink-fit-clash-ckpt")))
+    assert(causes(e).exists(_.contains("incompatible type change for column score")),
+      causes(e).mkString("\n"))
+    assert(clash.snapshot.version == before, "the refused batch committed")
+    // a long column absorbs the int, and `Rank` lands in `rank`
+    val fitDir = tmpDir("lts-sink-fit-dst")
+    val fit = LakeTable.createTable(spark, fitDir, Schemas.transcript, 2)
+    fit.evolveSchema(cols("score" -> LongType, "rank" -> IntegerType))
+    val schema = fit.snapshot.userSchema
+    sink(srcDir, fitDir, tmpDir("lts-sink-fit-ckpt"))
+    assert(fit.snapshot.userSchema == schema)
+    assert(fit.read().select("conv_id", "score", "rank").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq ==
+      Seq(("c1", 1L, 2)))
+  }
+
   test("sink mergeSchema: two source columns, one widened, land as ONE commit with docs") {
     val srcDir = tmpDir("lts-sink-evolve-src")
     val dstDir = tmpDir("lts-sink-evolve-dst")
